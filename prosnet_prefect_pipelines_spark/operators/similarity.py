@@ -151,7 +151,7 @@ def _argmax_row(
 ) -> DataFrame:
     """One row per group: exactly the row ``row_number() OVER
     (PARTITION BY group ORDER BY score DESC, tie ASC) = 1`` keeps,
-    computed as a partial+final ``max(struct(score, -tie, ...))``
+    computed as a partial+final ``max(struct(score, ~tie, ...))``
     aggregate instead of an Exchange+Sort+Window over the full fan-out
     (opt r12, guide §2.3/§2.4 — aggregate before you shuffle: the
     map-side partial max collapses the n_cells-way assignment fan-out
@@ -161,14 +161,15 @@ def _argmax_row(
     the type reversed with NULLS LAST — i.e. exactly the reverse of the
     ASC order (NULL < -Inf < finite < +Inf < NaN) that struct-field
     comparison inside ``max`` also uses, so the aggregate picks the
-    identical row for NULL and NaN scores and for ties (the negated tie
-    column turns ``tie ASC`` into a max; ids are non-negative, so the
-    negation cannot overflow).
+    identical row for NULL and NaN scores and for ties (the bitwise-NOT
+    tie column turns ``tie ASC`` into a max: ``~x = -x-1`` is strictly
+    decreasing over the whole integral range, negative ids included, and
+    unlike negation cannot overflow at LONG_MIN).
     """
     packed = F.max(
         F.struct(
             F.col(score).alias("_s"),
-            (-F.col(tie)).alias("_nt"),
+            F.bitwise_not(F.col(tie)).alias("_nt"),
             *[F.col(c).alias(c) for c in [tie, *keep]],
         )
     ).alias("_am")
@@ -183,7 +184,7 @@ def _argmax_array(
     entries: Column, score, tie: Column | str = "cid"
 ) -> Column:
     """Per-ROW argmax over an array of candidate structs: returns the
-    struct ``max(struct(score, -tie, entry))`` would pick, computed by
+    struct ``max(struct(score, ~tie, entry))`` would pick, computed by
     ``array_max`` over ``transform(entries, ...)`` — no fan-out rows,
     no exchange (opt r12, guide §2.4: the carried-array twin of
     ``_argmax_row``; a Lloyd assignment pass with this shape shuffles
@@ -198,17 +199,18 @@ def _argmax_array(
     ``_argmax_row``'s).
 
     ``entries`` is an array<struct<...>>; ``score`` is a callable
-    entry -> Column; ``tie`` names the entry field whose ASCENDING
-    order breaks score ties (non-negative, so negation cannot
-    overflow). Returns a struct with fields ``_s`` (the score) and
-    ``_e`` (the winning entry); NULL for an empty/NULL array.
+    entry -> Column; ``tie`` names the integral entry field whose
+    ASCENDING order breaks score ties (any value: the bitwise-NOT key
+    cannot overflow, see ``_argmax_row``). Returns a struct with fields
+    ``_s`` (the score) and ``_e`` (the winning entry); NULL for an
+    empty/NULL array.
     """
     return F.array_max(
         F.transform(
             entries,
             lambda e: F.struct(
                 score(e).alias("_s"),
-                (-e[tie]).alias("_nt"),
+                F.bitwise_not(e[tie]).alias("_nt"),
                 e.alias("_e"),
             ),
         )
@@ -996,7 +998,6 @@ def pq_index(
     n_sub: int = 4,
     n_cells_coarse: int = 4,
     n_cells_code: int = 4,
-    protect: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(xcodes, assign, codebooks): the maintained IVF-PQ serving index —
     coarse cell assignments plus PQ codes pivoted to ONE row per vector
@@ -1014,18 +1015,8 @@ def pq_index(
     training rounds, the encode and the assignment scan run with full
     parallelism; assignment/codebooks/codes are each materialized once
     (id-sized metadata frames) because the chain re-derives kmeans per
-    reference without a barrier.
-
-    ``protect=True`` marks every materialized frame session-lifetime
-    (sweep-exempt) and ALSO eagerly checkpoints the assembled xcodes —
-    the memoized-serving-structure mode (batch-115 precedent): callers
-    that maintain ONE index per (session, dataset) pass it so the
-    between-query RDD sweep cannot evict the index the cached plan
-    references."""
-    from prosnet_prefect_pipelines_spark.session import (
-        fan_out,
-        protect_checkpoint,
-    )
+    reference without a barrier."""
+    from prosnet_prefect_pipelines_spark.session import fan_out
 
     df = fan_out(df)
     assign = ivf_assign(
@@ -1045,10 +1036,6 @@ def pq_index(
     xcodes = pq_codes_positional(codes, cbs).join(
         assign.select(F.col("id").alias("xid"), F.col("cell")), on="xid"
     )
-    if protect:
-        xcodes = xcodes.localCheckpoint(eager=True)
-        for frame in (assign, cbs, xcodes):
-            protect_checkpoint(frame)
     return xcodes, assign, cbs
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from prosnet_prefect_pipelines_spark.operators import dedup as D
 from prosnet_prefect_pipelines_spark.operators import graph as G
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 CORPUS_CTE = """
 corpus AS (
@@ -63,35 +63,17 @@ jac AS (
 """
 
 
-_CORPUS_CACHE: dict = register_memo_cache({})
-_PAIRS_CACHE: dict = register_memo_cache({})
-
-
-def _memoized(cache: dict, spark, sf_dir, build):
-    """Per-(session, sf) lazy-localCheckpoint memo, with eviction of
-    frames left over from stopped/restarted sessions (they hold
-    checkpoint blocks that can never be used again)."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-    out = build().localCheckpoint(eager=False)
-    # session-lifetime fixture: exempt from the harnesses' between-query
-    # checkpoint sweeps (session.sweep_persistent_rdds)
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
-
-    protect_checkpoint(out)
-    cache[key] = out
-    return out
+def _memoized(name, spark, sf_dir, build):
+    """Per-(session, sf) lazy-localCheckpoint memo (session.memo_fixture)."""
+    return memo_fixture(
+        spark, (name, sf_dir), lambda: build().localCheckpoint(eager=False)
+    )
 
 
 def corpus(spark, sf_dir):
     """Spark twin of CORPUS_CTE (memoized per session+sf, like
     tpch_graph.triples_from_tpch — six dedup queries share it)."""
-    return _memoized(_CORPUS_CACHE, spark, sf_dir, lambda: _build_corpus(spark, sf_dir))
+    return _memoized("corpus", spark, sf_dir, lambda: _build_corpus(spark, sf_dir))
 
 
 def lsh_pairs(spark, sf_dir):
@@ -100,7 +82,7 @@ def lsh_pairs(spark, sf_dir):
     view is the expensive stage (shingle explode + K minhashes), so the
     cluster pass reuses it instead of recomputing."""
     return _memoized(
-        _PAIRS_CACHE, spark, sf_dir,
+        "lsh_pairs", spark, sf_dir,
         lambda: D.minhash_lsh_pairs(
             corpus(spark, sf_dir), "id", "text",
             k=3, num_hashes=12, bands=4, threshold=0.5, hash_mode="portable",

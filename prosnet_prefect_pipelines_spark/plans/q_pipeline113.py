@@ -53,7 +53,7 @@ from prosnet_prefect_pipelines_spark.streaming.tuning import (
     staged_row_count,
     stream_partitioning,
 )
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture, unpersist_checkpoint
 
 _THRESHOLD = 0.5
 _BUCKET_CAP = 32
@@ -93,19 +93,14 @@ WHERE j.jaccard >= {_THRESHOLD}
 # mirrors that: first invocation builds (the cold cost stays honest),
 # later invocations probe the existing index — the same
 # session-lifetime-fixture pattern as q_dedup.corpus, sweep-protected.
-_INDEX_CACHE: dict = register_memo_cache({})
-
-
 def _static_index(spark, sf_dir):
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
+    return memo_fixture(
+        spark, ("neardup_static_index", sf_dir),
+        lambda: _build_static_index(spark, sf_dir),
+    )
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _INDEX_CACHE if k[0] != app_id]:
-        del _INDEX_CACHE[k]
+
+def _build_static_index(spark, sf_dir):
     static = corpus(spark, sf_dir).filter(F.col("id") % 2 == 0)
     index, sizes, band_ck = N.build_static_index(
         static, "id", "text", bucket_cap=_BUCKET_CAP, materialize=True,
@@ -114,12 +109,7 @@ def _static_index(spark, sf_dir):
     index = index.localCheckpoint(eager=True)
     sizes = sizes.localCheckpoint(eager=True)
     # the band table fed both derivations; once they are eager it is dead
-    from prosnet_prefect_pipelines_spark.session import unpersist_checkpoint
-
     unpersist_checkpoint(band_ck)
-    protect_checkpoint(index)
-    protect_checkpoint(sizes)
-    _INDEX_CACHE[key] = (index, sizes)
     return index, sizes
 
 

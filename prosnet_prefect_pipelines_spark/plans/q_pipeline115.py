@@ -47,7 +47,7 @@ from prosnet_prefect_pipelines_spark.operators import similarity as S
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_similarity import _cos
 from prosnet_prefect_pipelines_spark.streaming.staging import replay_stage
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 _N_CELLS = 8
 _NPROBE = 2
@@ -109,28 +109,24 @@ ranked AS (
 SELECT id, neighbor, cos FROM ranked WHERE rn <= {_K}
 """
 
+
 # the static IVF index is a MAINTAINED serving structure, not a per-run
 # rebuild — memoized per (session, sf) like the batch-113 LSH index
-_INDEX_CACHE: dict = register_memo_cache({})
-
-
 def _ivf_index(spark, sf_dir):
-    """-> (db DataFrame (neighbor, v, nv, cell), cents DataFrame).
+    """-> (db DataFrame (neighbor, v, nv, cell), cents DataFrame, carr
+    one-row centroid array, db row count).
 
     db is the even-half IVF index (home cells only), eagerly
     checkpointed and sweep-protected; cents is the (cid, cv, ncv)
     centroid table the probes rank against (carried as data via
     ``similarity.centroid_array`` so the plan cost is independent of
     n_cells — the production regime is thousands of cells)."""
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
+    return memo_fixture(
+        spark, ("ivf_index", sf_dir), lambda: _build_ivf_index(spark, sf_dir)
+    )
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _INDEX_CACHE if k[0] != app_id]:
-        del _INDEX_CACHE[k]
+
+def _build_ivf_index(spark, sf_dir):
     even = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") % 2 == 0)
@@ -141,7 +137,6 @@ def _ivf_index(spark, sf_dir):
         .select(F.col("id").alias("neighbor"), "v", "nv", "cell")
         .localCheckpoint(eager=True)
     )
-    protect_checkpoint(db)
     cents = (
         even.select(
             F.col("vec_id").alias("cid"),
@@ -152,17 +147,14 @@ def _ivf_index(spark, sf_dir):
         .limit(_N_CELLS)
         .localCheckpoint(eager=True)
     )
-    protect_checkpoint(cents)
     # the one-row centroid array the stream broadcasts is itself part
     # of the maintained index: checkpointing it here removes the two
     # collect_list aggregate jobs every micro-batch otherwise re-runs
     # (opt r11 — the array is rebuilt only when the index is)
     carr = S.centroid_array(cents).localCheckpoint(eager=True)
-    protect_checkpoint(carr)
     # index cardinality cached at build time so the width estimate
     # adds no job per plan construction (opt r12, same as q118)
-    _INDEX_CACHE[key] = (db, cents, carr, db.count())
-    return db, cents, carr, _INDEX_CACHE[key][3]
+    return db, cents, carr, db.count()
 
 
 def _query_stream(spark, sf_dir):

@@ -59,7 +59,7 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline10 import (
     _ivfpq_cos64,
 )
 from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import _query_stream
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 _K = 3
 _EVEN = "vec_id % 2 = 0"
@@ -200,9 +200,6 @@ SELECT qid, xid, adc_cos FROM (
 
 # the encoded index is a MAINTAINED serving structure — memoized per
 # (session, sf) and checkpoint-protected, like batch 115's IVF index
-_PQ_INDEX_CACHE: dict = register_memo_cache({})
-
-
 def _pq_serving_index(spark, sf_dir):
     """-> (xcodes (xid, cell, _xp, _xn2), carr one-row broadcast
     centroid array, cbarr one-row broadcast codebook array).
@@ -212,15 +209,13 @@ def _pq_serving_index(spark, sf_dir):
     the coarse centroid table as ONE array row so the per-batch probe
     plan is independent of n_cells; cbarr carries the codebook entries
     the per-query ADC lookup table is built from."""
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
+    return memo_fixture(
+        spark, ("pq_serving_index", sf_dir),
+        lambda: _build_pq_serving_index(spark, sf_dir),
+    )
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _PQ_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _PQ_INDEX_CACHE if k[0] != app_id]:
-        del _PQ_INDEX_CACHE[k]
+
+def _build_pq_serving_index(spark, sf_dir):
     even = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") % 2 == 0)
@@ -231,9 +226,7 @@ def _pq_serving_index(spark, sf_dir):
         n_sub=_PQ_SUB, n_cells_coarse=_PQ_CELLS, n_cells_code=_PQ_CELLS,
     )
     xcodes = xcodes.localCheckpoint(eager=True)
-    protect_checkpoint(xcodes)
     cbarr_df = S.pq_codebook_array(cbs).localCheckpoint(eager=True)
-    protect_checkpoint(cbarr_df)
     cents = (
         even.select(
             F.col("vec_id").alias("cid"),
@@ -244,13 +237,12 @@ def _pq_serving_index(spark, sf_dir):
         .limit(_PQ_CELLS)
         .localCheckpoint(eager=True)
     )
-    protect_checkpoint(cents)
     # checkpointed with the index: no per-batch re-aggregation of the
     # one-row centroid array (opt r11, same as batch 115)
     carr = S.centroid_array(cents).localCheckpoint(eager=True)
-    protect_checkpoint(carr)
-    _PQ_INDEX_CACHE[key] = (xcodes, carr, cbarr_df, xcodes.count())
-    return _PQ_INDEX_CACHE[key]
+    # cents is dead once carr is an eager checkpoint: released by the
+    # next sweep rather than kept as a protected fixture
+    return xcodes, carr, cbarr_df, xcodes.count()
 
 
 @register("stream_ann_ivfpq_monitor", oracle=IVFPQ_MONITOR_SQL,

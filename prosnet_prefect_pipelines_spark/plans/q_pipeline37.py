@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 _ROLE = "analyst_eu"
 
@@ -133,20 +133,11 @@ FROM ranked WHERE rn <= {_TOPK}
 # full-column distinct scan of events at every DataFrame construction,
 # blocking the driver — at 100 TB an extra corpus pass per plan build).
 # Reset by reset_memo_fixtures, so bench repeat-cold passes still pay it.
-_ETYPES_CACHE: dict = register_memo_cache({})
-
-
 def _event_types(ev, sf_dir: str) -> list[str]:
-    app_id = ev.sparkSession.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _ETYPES_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for stale in [k for k in _ETYPES_CACHE if k[0] != app_id]:
-        del _ETYPES_CACHE[stale]
-    etypes = sorted(r[0] for r in ev.select("event_type").distinct().collect())
-    _ETYPES_CACHE[key] = etypes
-    return etypes
+    return memo_fixture(
+        ev.sparkSession, ("event_types", sf_dir),
+        lambda: sorted(r[0] for r in ev.select("event_type").distinct().collect()),
+    )
 
 
 @register("session_similarity_topk", oracle=SESSION_SIM_SQL, covers=["J1", "A1", "O6"])

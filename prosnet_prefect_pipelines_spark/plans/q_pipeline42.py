@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_curation import _frac_sql
 from prosnet_prefect_pipelines_spark.plans.q_pipeline26 import _LINE_TOKENS, _lines_df
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 # the train-split block (stages 1-4) is a deterministic per-(session,
 # sf) fixture: its three load-bearing pins cost ~3 x 1.1 s of Catalyst
@@ -47,7 +47,6 @@ from prosnet_prefect_pipelines_spark.session import register_memo_cache
 # source, bucket) are session-protected; the text-bearing docs2 pin
 # stays transient inside one construction. reset_memo_fixtures drops
 # the fixture, so bench repeat-cold passes pay the full build.
-_SPLIT_CACHE: dict = register_memo_cache({})
 
 # DuckDB twin of the epoch-varying shuffle hash (48-bit md5 prefix of
 # doc_id || 'shuffle' || epoch)
@@ -163,14 +162,12 @@ def _train_split(spark, sf_dir):
     tertiles -> leakage-proof split), memoized per (session, sf): the
     narrow (doc_id, lang, source, bucket) train list behind a
     session-protected lazy pin. See the module-level note on why."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir)
-    cached = _SPLIT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    for k in [k for k in _SPLIT_CACHE if k[0] != app_id]:
-        del _SPLIT_CACHE[k]
+    return memo_fixture(
+        spark, ("train_split", sf_dir), lambda: _build_train_split(spark, sf_dir)
+    )
 
+
+def _build_train_split(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     # 1. line dedup + rebuild
@@ -271,17 +268,12 @@ def _train_split(spark, sf_dir):
     cl = fp.groupBy("fingerprint").agg(F.min("doc_id").alias("rep"))
     from prosnet_prefect_pipelines_spark.operators.sampling import portable_fraction
 
-    split = (
+    return (
         fp.join(cl, "fingerprint")
         .filter(portable_fraction(F.col("rep"), "split") >= 0.2)
         .select("doc_id", "lang", "source", "bucket")
         .localCheckpoint(eager=False)  # feeds per-source plan and expansion
     )
-    from prosnet_prefect_pipelines_spark.session import protect_checkpoint
-
-    protect_checkpoint(split)
-    _SPLIT_CACHE[key] = split
-    return split
 
 
 @register("llm_corpus_pipeline_v2", oracle=V2_SQL, covers=["J9", "J1", "J7", "A2", "O1", "O6"])

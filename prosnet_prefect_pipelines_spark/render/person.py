@@ -29,18 +29,17 @@ from prosnet_prefect_pipelines_spark.render.templates import (
     node,
     prepare_templates,
 )
-from prosnet_prefect_pipelines_spark.session import register_memo_cache
+from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 APIS_BASE = "https://apis.acdh.oeaw.ac.at"
 
-# Per-SparkContext memo of the static template expression trees (opt r11,
-# guide §1.2 step 2). The ~45 conditional-struct Columns reference only
-# field names — no data, no plan, no session state — but building them
-# costs thousands of py4j round trips: measured 1.6 s of driver time per
-# render_person call at sf0.1 against 1.1 s of actual execution. Keyed by
-# applicationId per the repo memo convention; reset_memo_fixtures clears
-# it, so bench cold passes still pay (and measure) full construction.
-_EXPR_CACHE: dict = register_memo_cache({})
+# render_person memoizes the static template expression trees per
+# session (opt r11, guide §1.2 step 2). The ~45 conditional-struct
+# Columns reference only field names — no data, no plan, no session
+# state — but building them costs thousands of py4j round trips:
+# measured 1.6 s of driver time per render_person call at sf0.1 against
+# 1.1 s of actual execution. reset_memo_fixtures clears the memo, so
+# bench cold passes still pay (and measure) full construction.
 
 
 def _fstr(c: Column) -> Column:
@@ -179,12 +178,7 @@ def render_person(persons: DataFrame) -> DataFrame:
     One narrow pass for scalar templates + two explodes for the
     profession/sameAs list fields, unioned, then distinct.
     """
-    key = persons.sparkSession.sparkContext.applicationId
-    exprs = _EXPR_CACHE.get(key)
-    if exprs is None:
-        for stale in [a for a in _EXPR_CACHE if a != key]:
-            del _EXPR_CACHE[stale]
-        exprs = _EXPR_CACHE[key] = _person_exprs()
+    exprs = memo_fixture(persons.sparkSession, ("render_person",), _person_exprs)
     # Precompute every node URI / shared label ONCE in an explicit
     # projection: templates then reference plain columns. Without this the
     # concat chains repeat inside ~45 conditional structs and the

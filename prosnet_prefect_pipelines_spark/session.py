@@ -15,7 +15,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "prosnet_spark", cpus: int | None = None) -> SparkSession:
@@ -101,6 +102,15 @@ def fan_out(df, spark: SparkSession | None = None):
     return df.repartition(sess.sparkContext.defaultParallelism)
 
 
+def _checkpoint_rdd(df):
+    """The RDD behind a ``localCheckpoint``-ed frame (its analyzed plan
+    is a ``LogicalRDD``), or None for any other frame."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        return None
+    return plan.rdd()
+
+
 def unpersist_checkpoint(df) -> None:
     """Release the storage blocks behind a ``localCheckpoint``-ed frame.
 
@@ -112,13 +122,11 @@ def unpersist_checkpoint(df) -> None:
     it has been eagerly materialized or collected. Unpersisting while a
     lazy child still needs the blocks is unrecoverable (localCheckpoint
     truncates lineage; there is nothing to recompute from).
-    Best-effort: silently ignores frames that are not checkpoint-backed.
+    Frames that are not checkpoint-backed are left alone.
     """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        plan.rdd().unpersist(False)
-    except Exception:
-        pass
+    rdd = _checkpoint_rdd(df)
+    if rdd is not None:
+        rdd.unpersist(False)
 
 
 # (app_id, rdd_id) pairs of SESSION-LIFETIME checkpointed fixtures
@@ -133,39 +141,54 @@ def unpersist_checkpoint(df) -> None:
 # (r12 ADVICE finding).
 _PROTECTED_CKPT_IDS: set[tuple[str, int]] = set()
 
-# registered memoized-fixture caches (plan modules' per-(app_id, sf)
-# dicts of checkpointed serving structures). Central registry so a
-# harness can reset ALL memoized state to first-touch conditions in
-# one call — see :func:`reset_memo_fixtures`.
-_MEMO_CACHES: list[dict] = []
-
-
-def register_memo_cache(cache: dict) -> dict:
-    """Register a plan module's memoized-fixture dict; returns it so
-    modules can write ``_CACHE: dict = register_memo_cache({})``."""
-    _MEMO_CACHES.append(cache)
-    return cache
-
-
-def _app_id(spark_or_df) -> str:
-    sess = getattr(spark_or_df, "sparkSession", spark_or_df)
-    return sess.sparkContext.applicationId
+# session-lifetime memoized fixtures, keyed (app_id, *key) — see
+# :func:`memo_fixture`; one store, so reset_memo_fixtures clears them all
+_MEMO_FIXTURES: dict[tuple, object] = {}
 
 
 def protect_checkpoint(df) -> None:
-    """Mark a checkpointed fixture as session-lifetime (sweep-exempt)."""
-    try:
-        _PROTECTED_CKPT_IDS.add(
-            (_app_id(df), int(df._jdf.queryExecution().analyzed().rdd().id()))
-        )
-    except Exception:
-        pass
+    """Mark a checkpointed fixture as session-lifetime (sweep-exempt).
+
+    Raises ValueError for a frame that is not checkpoint-backed: there
+    is no RDD to exempt, and a fixture the sweep may still drop would
+    fail its next reader with a lineage-truncated read."""
+    rdd = _checkpoint_rdd(df)
+    if rdd is None:
+        raise ValueError("protect_checkpoint: frame is not localCheckpoint-backed")
+    app = df.sparkSession.sparkContext.applicationId
+    _PROTECTED_CKPT_IDS.add((app, int(rdd.id())))
+
+
+def memo_fixture(spark: SparkSession, key: tuple, build):
+    """Session-lifetime memo of a fixture shared across catalog queries.
+
+    Returns the stored ``build()`` result for ``(applicationId, *key)``.
+    On a miss it first evicts entries of other applications (frames of
+    stopped/restarted sessions hold checkpoint blocks that can never be
+    used again), then calls ``build()`` and marks every DataFrame in the
+    result — a single value or a tuple — with :func:`protect_checkpoint`,
+    so those frames must be ``localCheckpoint``-ed by ``build`` (eagerly
+    or lazily, the builder's choice). Lists, Columns and counts are
+    stored as they are.
+    """
+    app = spark.sparkContext.applicationId
+    full = (app, *key)
+    if full in _MEMO_FIXTURES:
+        return _MEMO_FIXTURES[full]
+    for k in [k for k in _MEMO_FIXTURES if k[0] != app]:
+        del _MEMO_FIXTURES[k]
+    out = build()
+    for v in out if isinstance(out, tuple) else (out,):
+        if isinstance(v, DataFrame):
+            protect_checkpoint(v)
+    _MEMO_FIXTURES[full] = out
+    return out
 
 
 def reset_memo_fixtures(spark: SparkSession) -> int:
     """Reset every memoized serving structure to first-touch state.
 
-    Clears all registered memo caches (:func:`register_memo_cache`),
+    Clears the one :func:`memo_fixture` store,
     drops every checkpoint protection, and sweeps the now-unprotected
     blocks; returns the number of RDDs unpersisted. After this call the
     session measures like a fresh one for fixture/index build purposes:
@@ -175,8 +198,7 @@ def reset_memo_fixtures(spark: SparkSession) -> int:
     paid (r10 ADVICE: memoized indexes made repeat 'cold' medians
     biased low and hid index-build regressions from the gate).
     """
-    for cache in _MEMO_CACHES:
-        cache.clear()
+    _MEMO_FIXTURES.clear()
     _PROTECTED_CKPT_IDS.clear()
     return sweep_persistent_rdds(spark)
 
@@ -188,7 +210,7 @@ def sweep_persistent_rdds(spark: SparkSession) -> int:
     blocks fall into exactly three classes: (1) ``localCheckpoint``
     fixpoint/stream state — dead once the owning query's result has
     been collected; (2) the memoized fixture views and serving indexes,
-    which register via :func:`protect_checkpoint` and are skipped; and
+    which :func:`memo_fixture` protects and the sweep skips; and
     (3) the lazy distrank range blocks (``operators/distrank.py
     _ranged_parts`` persists MEMORY_AND_DISK inside the returned plan)
     plus the near-dup monitor's foreachBatch barrier — both dead after
@@ -201,19 +223,16 @@ def sweep_persistent_rdds(spark: SparkSession) -> int:
     SparkContexts are pruned by app id — they can never match again.
     """
     n = 0
-    try:
-        app = spark.sparkContext.applicationId
-        stale = {t for t in _PROTECTED_CKPT_IDS if t[0] != app}
-        _PROTECTED_CKPT_IDS.difference_update(stale)
-        it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
-        while it.hasNext():
-            e = it.next()
-            if (app, int(e.getKey())) in _PROTECTED_CKPT_IDS:
-                continue
-            e.getValue().unpersist(False)
-            n += 1
-    except Exception:
-        pass
+    app = spark.sparkContext.applicationId
+    stale = {t for t in _PROTECTED_CKPT_IDS if t[0] != app}
+    _PROTECTED_CKPT_IDS.difference_update(stale)
+    it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
+    while it.hasNext():
+        e = it.next()
+        if (app, int(e.getKey())) in _PROTECTED_CKPT_IDS:
+            continue
+        e.getValue().unpersist(False)
+        n += 1
     return n
 
 
@@ -235,7 +254,7 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
     )
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:
+    except AnalysisException:
         pass  # static conf on some builds; get_spark sets it at build time
     if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
         # runtime-settable: StreamExecution clones the conf at query start

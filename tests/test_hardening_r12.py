@@ -93,7 +93,8 @@ def test_argmax_row_matches_window_on_null_nan_ties(spark):
     pick exactly the row row_number() OVER (ORDER BY score DESC, tie
     ASC) = 1 keeps, for every degenerate ordering case across Spark's
     total double order — NULL scores (zero-norm cosines), NaN scores,
-    +/-Inf, exact ties broken by tie id, and all-NULL groups."""
+    +/-Inf, exact ties broken by tie id (negative ids and LONG_MIN
+    included), and all-NULL groups."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
@@ -114,6 +115,8 @@ def test_argmax_row_matches_window_on_null_nan_ties(spark):
     rows += [(6, 60, -inf, "n"), (6, 61, None, "o")]
     # group 7: NaN ties -> lowest tie id
     rows += [(7, 70, nan, "p"), (7, 71, nan, "q")]
+    # group 8: ties across the full long range -> LONG_MIN wins
+    rows += [(8, -5, 0.3, "r"), (8, -(2**63), 0.3, "s"), (8, 2**63 - 1, 0.3, "t")]
     df = spark.createDataFrame(
         rows, "g int, cid long, score double, payload string"
     )
@@ -132,7 +135,7 @@ def test_argmax_row_matches_window_on_null_nan_ties(spark):
         ).collect()
     }
     assert got == want
-    assert len(got) == 7
+    assert len(got) == 8
 
 
 def test_jaccard_verify_set_cap_branch_equality(spark):
@@ -250,6 +253,8 @@ def test_argmax_array_matches_window_on_null_nan_ties(spark):
     rows += [(5, 50, inf, "k"), (5, 51, nan, "l"), (5, 52, 1.0, "m")]
     rows += [(6, 60, -inf, "n"), (6, 61, None, "o")]
     rows += [(7, 70, nan, "p"), (7, 71, nan, "q")]
+    # group 8: ties across the full long range -> LONG_MIN wins
+    rows += [(8, -5, 0.3, "r"), (8, -(2**63), 0.3, "s"), (8, 2**63 - 1, 0.3, "t")]
     df = spark.createDataFrame(
         rows, "g int, cid long, score double, payload string"
     )
@@ -278,4 +283,4 @@ def test_argmax_array_matches_window_on_null_nan_ties(spark):
     )
     got = {(r.g, r.cid, r.payload) for r in picked.collect()}
     assert got == want
-    assert len(got) == 7
+    assert len(got) == 8

@@ -12,10 +12,16 @@ from pyspark.sql import functions as F
 
 import prosnet_prefect_pipelines_spark.plans.q_pipeline116 as P116
 import prosnet_prefect_pipelines_spark.plans.q_pipeline117 as P117
+from prosnet_prefect_pipelines_spark.session import _MEMO_FIXTURES
 
 
 def _rows(df):
     return {tuple(r) for r in df.collect()}
+
+
+def _final_stats_keys():
+    """Session memo-store keys of the maintained monitor's final stats."""
+    return [k for k in _MEMO_FIXTURES if k[1] == "final_group_stats"]
 
 
 def test_margin_monitor_equals_batch_report(spark, sf_dir):
@@ -80,14 +86,15 @@ def test_monitors_share_one_maintained_state(spark, sf_dir):
     """The two metric queries read ONE maintained monitor (r11 opt):
     after the margin monitor runs, the length-bias monitor must not
     replay the stream — its rows derive from the memoized final stats."""
-    P117._FINAL_STATS_CACHE.clear()
+    for k in _final_stats_keys():
+        del _MEMO_FIXTURES[k]
     _rows(P117.q_stream_preference_margin_monitor(spark, sf_dir))
-    assert len(P117._FINAL_STATS_CACHE) == 1
-    cached_df = next(iter(P117._FINAL_STATS_CACHE.values()))
+    assert len(_final_stats_keys()) == 1
+    cached_df = _MEMO_FIXTURES[_final_stats_keys()[0]]
     got = _rows(P117.q_stream_length_bias_monitor(spark, sf_dir))
     # still the same single entry (no second replay), same frame object
-    assert len(P117._FINAL_STATS_CACHE) == 1
-    assert next(iter(P117._FINAL_STATS_CACHE.values())) is cached_df
+    assert len(_final_stats_keys()) == 1
+    assert _MEMO_FIXTURES[_final_stats_keys()[0]] is cached_df
     want = _rows(P116.q_length_bias_audit(spark, sf_dir))
     assert got == want
 
@@ -98,9 +105,9 @@ def test_memo_reset_forces_fresh_replay(spark, sf_dir):
     from prosnet_prefect_pipelines_spark.session import reset_memo_fixtures
 
     _rows(P117.q_stream_preference_margin_monitor(spark, sf_dir))
-    assert len(P117._FINAL_STATS_CACHE) == 1
+    assert len(_final_stats_keys()) == 1
     reset_memo_fixtures(spark)
-    assert len(P117._FINAL_STATS_CACHE) == 0
+    assert len(_final_stats_keys()) == 0
     got = _rows(P117.q_stream_preference_margin_monitor(spark, sf_dir))
     want = _rows(P116.q_preference_margin_report(spark, sf_dir))
     assert got == want

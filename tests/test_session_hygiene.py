@@ -14,10 +14,15 @@ registry existed).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.session import (
+    _MEMO_FIXTURES,
+    _PROTECTED_CKPT_IDS,
+    memo_fixture,
     protect_checkpoint,
+    reset_memo_fixtures,
     sweep_persistent_rdds,
     unpersist_checkpoint,
 )
@@ -41,6 +46,13 @@ def test_unpersist_checkpoint_ignores_plain_frames(spark):
     df = spark.range(10)
     unpersist_checkpoint(df)  # not checkpoint-backed: must not raise
     assert df.count() == 10
+
+
+def test_protect_checkpoint_rejects_plain_frames(spark):
+    """A protection that cannot take effect must fail loudly: a plain
+    frame has no checkpoint RDD to exempt from the sweep."""
+    with pytest.raises(ValueError):
+        protect_checkpoint(spark.range(10))
 
 
 def test_sweep_skips_protected_fixtures(spark):
@@ -74,8 +86,6 @@ def test_protection_is_app_scoped(spark):
     """Protected ids are keyed by application id (r12 ADVICE): a stale
     id recorded under a dead SparkContext must not exempt a fresh RDD
     with the colliding integer id from the sweep."""
-    from prosnet_prefect_pipelines_spark.session import _PROTECTED_CKPT_IDS
-
     sweep_persistent_rdds(spark)
     base = _n_persistent(spark)
     ck = spark.range(300).localCheckpoint()
@@ -95,49 +105,57 @@ def test_reset_memo_fixtures_forces_rebuild(spark, sf_dir):
     """reset_memo_fixtures returns the session to first-touch state:
     caches empty, protections dropped, blocks swept — the next corpus()
     call rebuilds rather than reusing a dangling checkpoint."""
-    from prosnet_prefect_pipelines_spark.plans.q_dedup import _CORPUS_CACHE, corpus
-    from prosnet_prefect_pipelines_spark.session import (
-        _PROTECTED_CKPT_IDS,
-        reset_memo_fixtures,
-    )
+    from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
 
     c = corpus(spark, sf_dir)
     n1 = c.count()
-    assert _CORPUS_CACHE  # memoized
+    assert any(k[1:] == ("corpus", sf_dir) for k in _MEMO_FIXTURES)  # memoized
     reset_memo_fixtures(spark)
-    assert not _CORPUS_CACHE
+    assert not _MEMO_FIXTURES
     assert not _PROTECTED_CKPT_IDS
     c2 = corpus(spark, sf_dir)
     assert c2 is not c  # rebuilt, not the dangling frame
     assert c2.count() == n1
 
 
-def test_all_plan_memo_caches_registered(spark):
-    """Every module-level *_CACHE dict in plans/ must be registered so
-    reset_memo_fixtures clears it (an unregistered cache would hand out
-    frames whose checkpoint blocks the reset just dropped)."""
-    import glob as _glob
-    import os as _os
-    import re as _re
+def test_memo_fixture_hits_evicts_and_resets(spark):
+    """One store for every memo: a hit returns the stored object, a miss
+    evicts entries of dead applications, every DataFrame of a result is
+    protected, and reset_memo_fixtures empties the store and drops the
+    protections."""
+    reset_memo_fixtures(spark)
+    app = spark.sparkContext.applicationId
+    builds = []
 
-    import prosnet_prefect_pipelines_spark.plans as plans_pkg
-    from prosnet_prefect_pipelines_spark.plans import catalog
-    from prosnet_prefect_pipelines_spark.session import _MEMO_CACHES
+    def frame():
+        builds.append("frame")
+        return spark.range(50).localCheckpoint(eager=False)
 
-    catalog.load()  # import every plan module so registrations ran
+    def pair():
+        builds.append("pair")
+        return spark.range(20).localCheckpoint(), 20
 
-    # scan the whole package: operator/render modules may declare
-    # registered caches too (e.g. render.person._EXPR_CACHE)
-    pkg_dir = _os.path.dirname(_os.path.dirname(plans_pkg.__file__))
-    declared = registered = 0
-    for path in _glob.glob(
-        _os.path.join(pkg_dir, "**", "*.py"), recursive=True
-    ):
-        if _os.path.basename(path) == "session.py":
-            continue  # the registry itself
-        src = open(path).read()
-        decls = _re.findall(r"^_[A-Z_]*CACHE[^=]*=.*$", src, flags=_re.M)
-        declared += len(decls)
-        registered += sum("register_memo_cache" in d for d in decls)
-    assert declared == registered, "cache dict declared without registration"
-    assert registered == len(_MEMO_CACHES) > 0
+    f1 = memo_fixture(spark, ("test_frame",), frame)
+    assert memo_fixture(spark, ("test_frame",), frame) is f1
+    _MEMO_FIXTURES[("app-from-a-dead-context", "test_frame")] = f1
+    p1 = memo_fixture(spark, ("test_pair", 1), pair)
+    assert memo_fixture(spark, ("test_pair", 1), pair) is p1
+    assert builds == ["frame", "pair"]
+    assert set(_MEMO_FIXTURES) == {(app, "test_frame"), (app, "test_pair", 1)}
+    protected = {
+        (app, int(df._jdf.queryExecution().analyzed().rdd().id()))
+        for df in (f1, p1[0])
+    }
+    assert protected <= _PROTECTED_CKPT_IDS
+
+    # a result frame that cannot be protected is an error, never stored
+    with pytest.raises(ValueError):
+        memo_fixture(spark, ("test_plain",), lambda: spark.range(3))
+    assert (app, "test_plain") not in _MEMO_FIXTURES
+
+    reset_memo_fixtures(spark)
+    assert not _MEMO_FIXTURES
+    assert not _PROTECTED_CKPT_IDS
+    assert memo_fixture(spark, ("test_frame",), frame) is not f1
+    assert builds == ["frame", "pair", "frame"]
+    reset_memo_fixtures(spark)
