@@ -1,18 +1,33 @@
-"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS].
+"""Benchmark: headline queries at $SPARK_GRAFT_SF_DIR, one straight pass.
 
-Prints ONE SHORT JSON line (metric/value/unit/sf/calibration/n_queries only —
-round 2's full per-query line exceeded the driver's tail capture and was
-truncated mid-line, losing the bench to scoring). Per-query timings, deltas
-vs the previous round, and a >25%+>0.3s regression gate are written to
-BENCH_DETAIL_r{N}.json (and BENCH_DETAIL.json) on disk instead.
+measure: every HEADLINE query once cold (``--repeat=N`` runs N cold
+passes and keeps each query's median; passes >= 2 reset the memoized
+fixtures first), then the N_WARM slowest again warm (min of two), then
+the streaming serving probes.
+compare: each query against the newest prior BENCH_DETAIL_r{N}.json
+that benched it, same measurement mode on both sides, flagged when
+slower by more than 25% and 0.3 s.
+report: the full record goes to BENCH_DETAIL_r{N}.json and
+BENCH_DETAIL.json (older rounds move into artifacts/); stdout ends with
+ONE short JSON line, because the bench's caller keeps only a
+2,000-character tail of its output (round 2's per-query line was
+truncated and lost).
+
+Wall time is reported as measured. Deterministic per-query counters
+(jobs, stages, tasks, plan operators) come from
+``perfbench/run.py --trace 1``.
+
+    python bench.py [--repeat=N]
 """
 
 from __future__ import annotations
 
+import gc
 import glob
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -130,1194 +145,292 @@ REGRESSION_ABS_S = 0.3
 # Slowest-N cold queries get a second (warm) run recorded in warm_s.
 N_WARM = 10
 
-# Root-cause notes for cross-round timing moves, recorded in the detail
-# file so a future round doesn't have to re-derive them.
-ATTRIBUTIONS = {
-    "knn_join_batch": (
-        "r2->r3 regression (1.88->4.08 s) attributed r4: commit ab7d5a2 "
-        "passed dim=64 to knn_join, unrolling dot+norms into ~600-node "
-        "expression trees whose Catalyst OPTIMIZATION cost ~2 s per call "
-        "against ~0.8 s of execution (measured 2.97 s unrolled vs 0.87 s "
-        "HOF fold at sf0.1, warm). r4 reverted the call site to the fold "
-        "and hoisted norms out of the pair stage; unrolling only pays on "
-        "flat plans where pair volume makes execution dominate (see "
-        "operators/similarity.py dot docstring)."
-    ),
-    "pagerank_nations": (
-        "r5 warm 3.9-4.2 s (x4 re-measure) vs r4 warm 2.75 s on a host "
-        "whose CPU calibration says only ~1.07-1.11x slower. No r5 commit "
-        "touched operators/graph.py or the query; the cost is the "
-        "corpus-sized edge-mining joins (lineitem x orders x dims), which "
-        "scale with shuffle/IO speed the pure-CPU calibration probe does "
-        "not capture. Tracked, not chased: same plan, same row counts."
-    ),
-    "r5_cold_variance": (
-        "r5's five beyond-host flags (knn_join_batch, ann_rhp_lsh_topk, "
-        "stream_tumbling_window, range_join, sql_tpch_q3; cold ratios "
-        "1.40-1.56 vs host 1.11) re-measured warm x3 in a fresh session: "
-        "min warm 1.02/2.57/1.52/0.77/0.97 s vs r4 warm-or-cold "
-        "0.95/2.65/1.49/1.08/1.07 s — steady state at or below r4; the "
-        "flags are single-shot cold Catalyst-planning variance, no code "
-        "regression (no r5 commit touched these operators)."
-    ),
-    "scc_components": (
-        "r5 flagged cold 1.075 (r4) -> 1.459 s without a warm re-measure "
-        "(verdict r5 item 2). Re-measured r6 in a fresh session at sf0.1: "
-        "warm x3 = 1.326/1.165/0.991 s — steady state at or below r4's "
-        "1.075 s cold number. No r5/r6 commit touched operators/graph.py "
-        "or plans/q_pipeline12.py (git log verified); the flag was "
-        "single-shot cold Catalyst-planning variance."
-    ),
-    "r6_cold_variance": (
-        "r6's residual cold flags (triangle_count 1.844->2.324, "
-        "cdc_apply 0.829->1.118) re-measured warm x3 in a fresh session: "
-        "triangle_count 1.581/1.459/1.594 s, cdc_apply 0.673/0.695/"
-        "0.618 s — both at or below their r5 cold numbers (1.844/0.829). "
-        "Single-shot cold planning variance; no r6 commit touched either "
-        "operator."
-    ),
-    "cold_variance_confirmed": (
-        "Auto-attributed by the in-bench confirm pass: this cold-mode "
-        "flag was re-run x2 in the same session and the best re-run "
-        "landed at or below the host-adjusted gate over the query's "
-        "prior WARM time when one was recorded (prev cold otherwise — "
-        "r7, ADVICE: warm-now-vs-cold-prev can hide warm-execution "
-        "regressions, so the prior warm is preferred and the re-runs "
-        "are recorded into warm_s for a warm-to-warm pairing next "
-        "round). The measured re-run times are in the flag's confirm_s "
-        "field; a real regression survives the re-runs and stays "
-        "unattributed."
-    ),
-    "fifo_allocation": (
-        "First benched r16 at 49.8 s cold / 50.1 s warm (sf0.1) — the "
-        "rotation did its job: the interval-overlap join was keyed on "
-        "the 20-value group alone, a per-group cartesian with a "
-        "post-filter (~4.5B pair evaluations). Fixed same round with "
-        "the range_join bucket-grid banding on (grp, bucket) + "
-        "canonical-first-shared-bucket emission (q_pipeline76.py): "
-        "5.6 s cold / 1.9 s warm measured, oracle hash unchanged. "
-        "r17+ numbers pair against the banded plan."
-    ),
-    "r15_fleet_residual": (
-        "BENCH_DETAIL_r15 carried fleet_residual_warning (calibration "
-        "ratio 1.231 vs median per-query ratio 1.034; shared-set wall "
-        "+8.9% vs r14). Root-caused r16: the r14 and r15 benches ran on "
-        "IDENTICAL engine code — git diff 56d2f93..7895fc5 over "
-        "prosnet_prefect_pipelines_spark/ + bench.py + __spark_entry__.py "
-        "is EMPTY (every commit between the two bench runs touched only "
-        "logs/artifacts/README) — so uniform code drift between r14 and "
-        "r15 is impossible by construction; the residual is host/session "
-        "variance. The suspects named in the r7 verdict (session.fan_out, "
-        "between-query sweep_persistent_rdds) landed BEFORE the r14 bench "
-        "(commits bb7f22b/33b8018) and sit on both sides of the "
-        "comparison, so they cannot explain an r14->r15 delta. Same-host "
-        "same-tree A/B evidence (artifacts/residual_ab_r16.json): the "
-        "identical 80-query shared set run twice back-to-back in fresh "
-        "sessions measured 111.1 vs 106.3 s — a 4.5% spread between "
-        "ADJACENT minutes; the r14 and r15 runs were hours apart in "
-        "different driver sessions, so the flagged 8.9% sits within "
-        "host/session drift, and no code explanation exists by "
-        "construction."
-    ),
-    "r11_distrank_protocol": (
-        "r11 moved this query's single-partition cumulation (a window "
-        "over a distinct-metric-value table — value-cardinality, "
-        "corpus-growing) onto the adaptive distributed prefix-sum "
-        "protocol (operators/distrank.py). The protocol pays one "
-        "plan-build materialization of the distinct-value aggregation "
-        "(lazy checkpoint + fused count/totals job) that the bare "
-        "window never paid; below the 1M-row threshold ranking itself "
-        "stays on the fast single-partition window, so the residual is "
-        "the bounded ~0.3-0.7 s protocol overhead, measured steady-state "
-        "(trimmed_mean 1.5 s / wilcoxon 1.1 s / pareto 1.2 s warm x3 vs "
-        "~0.8 s cold pre-conversion). Oracle hashes unchanged (21/21 "
-        "re-checked); what it buys is the removal of a latent 100 TB "
-        "scale cliff on every converted query — the r8 verdict's item 1 "
-        "applied catalog-wide."
-    ),
-    "r22_neardup_session_drift": (
-        "BENCH_DETAIL_r22 flagged stream_neardup_monitor warm 3.876 -> "
-        "4.693 (1.21x beyond host 0.956), confirm x2 reproducing. "
-        "Code-identical by construction: git diff over "
-        "streaming/neardup.py + plans/q_pipeline113.py between the r21 "
-        "and r22 bench trees is EMPTY (r11 touched neither), and a "
-        "FRESH session immediately after r22 measured warm x3 = "
-        "[4.76, 4.70] — the same magnitude outside the bench session, "
-        "so session accumulation is excluded too. The residual is host "
-        "drift within the same day (this round's sessions spread 2x on "
-        "sub-second queries and ~9 percent on adjacent full benches; "
-        "cf ATTRIBUTIONS['r15_fleet_residual'])."
-    ),
-    "r22_host_load_spike": (
-        "The r22 bench was re-run FOUR times on identical engine code "
-        "while a fleet neighbor bounced this host: totals 173.9 / "
-        "189.2 / 277.0 / 184.6 s (same 96 queries, empty engine diff "
-        "between runs) — a 1.6x environment spread, with the machine's "
-        "5-minute load average observed at 7.0 during the final run's "
-        "warm pass. The flagged streaming monitors (untouched by r11: "
-        "empty git diff over streaming/ + their plans since the r21 "
-        "bench) measured 4.2-5.0 s warm in the quiet 173.9 s run and "
-        "9.2-9.8 s in loaded passes with confirms at 5.4-6.8 s; the "
-        "0.849 start/end host factor underestimates mid-run load, so "
-        "the gate bar sits below what the loaded session could reach. "
-        "Magnitude bound 2.2x: a real multiplicative regression still "
-        "surfaces."
-    ),
-    "r23_preference_session_spike": (
-        "BENCH_DETAIL_r23 carried the round's one unattributed regression: "
-        "stream_preference_margin_monitor warm 5.165 -> 12.596 s vs r22 "
-        "(ratio 2.44, beyond the r22_host_load_spike 2.2x bound), confirms "
-        "6.68/8.52 s. Isolated r12 by the fresh-session x3 protocol "
-        "(scripts/isolate_query.py, artifacts/isolate_preference_r12.jsonl): "
-        "three fresh JVMs measured warm x3 floors 5.93/5.56/5.83 s — AT the "
-        "r22 baseline (5.165) within host noise, below the in-bench "
-        "confirms and below the driver round-8 measurement (8.66 s, "
-        "BENCH_DETAIL_r20). Code-identical by construction: git diff over "
-        "plans/q_pipeline117.py + streaming/ between the r8 close "
-        "(5bbddb0) and the r23 bench tree is empty. The r23 spike was "
-        "in-session accumulation/load transient, not a regression; r23's "
-        "recorded warm_s (6.676, the confirm floor) already pairs the next "
-        "round warm-to-warm at steady state."
-    ),
-    "r24_code_speedup_residual": (
-        "BENCH_DETAIL_r24 carries fleet_residual_warning with the "
-        "ratios INVERTED from every prior episode: blended host ratio "
-        "0.984 (same-speed host by both probes) vs median per-query "
-        "ratio 0.822 — the catalog ran 18% faster than r23 on an "
-        "unchanged host. The residual detector cannot distinguish "
-        "uniform code IMPROVEMENT from uniform drift; this one is "
-        "improvement, attributable commit-by-commit: the r12 lazy "
-        "distrank rewrite removed a ~0.5-1 s plan-build job from all "
-        "21 converted queries (trimmed_mean 1.72 -> 0.72, wilcoxon "
-        "1.04 -> 0.80, gini/ks/qte/etc. similar), the LUT ADC repack "
-        "cut the PQ paths (ann_ivf_pq_topk warm 4.42 -> 3.63, IVF-PQ "
-        "serving 0.58 -> 0.46), and the streaming monitors' r23 "
-        "session-spike baselines normalized (preference 12.6 -> ~5.5). "
-        "The warning is working as designed — it flags any uniform "
-        "move — and the gate correctly fell back to the capped median "
-        "(host_estimator: median_fallback), under which 0 regressions "
-        "were unattributed."
-    ),
-    "r26_length_bias_session_spike": (
-        "BENCH_DETAIL_r26 carried the round's one unattributed "
-        "regression: stream_length_bias_monitor warm 5.395 -> 8.116 s "
-        "vs r25 (ratio 1.50 beyond the 1.153 host factor), with the "
-        "in-bench confirm re-runs WORSENING to 9.19/9.32 s — the "
-        "pattern that survives the variance-confirm pass. Isolated r13 "
-        "by the fresh-session x3 protocol (scripts/isolate_query.py, "
-        "artifacts/isolate_length_bias_r13.jsonl): six fresh JVMs; "
-        "discarding the first (contaminated by a concurrent pytest, "
-        "load 17.9 recorded in-artifact), warm x3 floors were "
-        "6.20/5.58/8.43/6.82/5.60 s under sustained EXTERNAL host load "
-        "12-21 (1-minute load averages recorded per session) — two "
-        "independent sessions AT the r25 baseline (5.395) and every "
-        "session below the 9.2/9.3 in-bench confirms. Code-identical "
-        "by construction: plans/q_pipeline116.py + streaming/ "
-        "untouched since the r8 close. The r26 spike (and its "
-        "worsening confirms) was session accumulation under mid-run "
-        "fleet load, not a code regression; warm history 4.9-8.3 s "
-        "across r20-r26 brackets every fresh-session floor measured."
-    ),
-    "warm_variance_confirmed": (
-        "Auto-attributed by the in-bench confirm pass (r7): this "
-        "WARM-mode flag was re-run x2 in the same session and the best "
-        "re-run landed at or below prev_warm * host_factor * "
-        "(1+gate_pct). Warm single-shots after ~80 queries of session "
-        "accumulation carry one-off GC/maintenance spikes (r7 measured "
-        "render_person_triples 6.13 s in the warm pass vs 2.05-2.6 s "
-        "isolated x3); the confirm re-runs are the steady state. A "
-        "real warm regression survives both re-runs and stays "
-        "unattributed."
-    ),
-}
-
-# Static attributions explain a MEASURED historical magnitude; they must
-# not become permanent immunity (r7, ADVICE low: a future real
-# regression in an attributed query would be suppressed forever). A
-# flagged regression whose now/prev ratio exceeds this bound is
-# reported UNATTRIBUTED even if its query carries a static
-# ATTRIBUTION_OF entry — the documented causes top out around 1.5-1.6x
-# (pagerank_nations shuffle sensitivity 1.5x, cold-planning spikes
-# <=1.6x), so anything past 1.75x is a new, unexplained move.
-ATTRIBUTION_RATIO_BOUND = 1.75
-# Per-key overrides where the documented magnitude is legitimately
-# larger: the r11 distrank protocol adds a FIXED ~0.3-0.7 s plan-build
-# materialization, which on sub-second queries is a large RATIO while
-# staying a small absolute move (trimmed_mean 0.8 -> 1.5 s = 1.9x).
-# Bounded at 2.5x so a real multiplicative regression in these queries
-# still surfaces unattributed.
-ATTRIBUTION_RATIO_BOUND_OF = {
-    "r11_distrank_protocol": 2.5,
-    "r22_host_load_spike": 2.2,
-    "r23_preference_session_spike": 2.6,
-    "r26_length_bias_session_spike": 2.0,
-}
-
-# Attribution expiry (r9 ADVICE low: static attributions never expired,
-# so a genuine future regression below the widened bound in any mapped
-# query would be auto-attributed to a one-time r11/r22 event forever).
-# Each one-time key lists the LAST prior round it was measured against:
-# the attribution applies only while the query's comparison round is at
-# or before that round; once a clean post-event baseline exists the
-# widened bound stops applying and the standard gate takes over. Keys
-# absent here (knn_join_batch, pagerank_nations — documented PERMANENT
-# plan-shape sensitivities) never expire.
-ATTRIBUTION_MAX_PREV_ROUND = {
-    # cold-planning variance events: any post-event round pairs
-    # warm-to-warm against a recorded steady state
-    "r5_cold_variance": 6,
-    "r6_cold_variance": 7,
-    "scc_components": 7,
-    # the distrank protocol overhead entered the record across r21-r23;
-    # r12 removed the plan-build job entirely (lazy in-plan offsets),
-    # so comparisons against r23+ baselines need no widened bound
-    "r11_distrank_protocol": 23,
-    # one-time host/session events of the r22-r23 window
-    "r22_neardup_session_drift": 23,
-    "r22_host_load_spike": 23,
-    "r23_preference_session_spike": 23,
-    # the r26 in-bench spike is attributed (isolate_length_bias_r13);
-    # comparisons against r27+ baselines use the standard gate
-    "r26_length_bias_session_spike": 26,
-}
-
-# query -> ATTRIBUTIONS key. The r5 verdict found the headline counter
-# ignoring the attributions the detail file already carried (it only
-# looked at KNOWN_TRADEOFFS), so BENCH_r5 reported 2 unattributed
-# regressions that BENCH_DETAIL_r5 in fact explained. A regression is
-# "unattributed" only when it carries NEITHER a documented tradeoff NOR
-# an attribution. Attributions are not blanket excuses: each is backed
-# by a re-measurement (warm x3 / plan+rowcount diff) recorded in the
-# ATTRIBUTIONS text, and a query whose regression GROWS beyond the
-# attributed magnitude still shows in regressions_beyond_host with its
-# ratio for the next round's judge to re-examine.
-ATTRIBUTION_OF = {
-    "knn_join_batch": "knn_join_batch",
-    "pagerank_nations": "pagerank_nations",
-    "ann_rhp_lsh_topk": "r5_cold_variance",
-    "stream_tumbling_window": "r5_cold_variance",
-    "range_join": "r5_cold_variance",
-    "sql_tpch_q3": "r5_cold_variance",
-    "scc_components": "scc_components",
-    "triangle_count": "r6_cold_variance",
-    "cdc_apply": "r6_cold_variance",
-    # the 14 r11 distrank conversions (only the sub-second ones trip
-    # the absolute gate; all carry the same measured protocol overhead)
-    "trimmed_mean_orders": "r11_distrank_protocol",
-    "wilcoxon_signed_rank": "r11_distrank_protocol",
-    "gini_customer_spend": "r11_distrank_protocol",
-    "bowley_quartile_skew": "r11_distrank_protocol",
-    "equi_depth_histogram": "r11_distrank_protocol",
-    "qte_decile_gaps": "r11_distrank_protocol",
-    "cliffs_delta_returns": "r11_distrank_protocol",
-    "wasserstein1_returns": "r11_distrank_protocol",
-    "cvm_two_sample": "r11_distrank_protocol",
-    "energy_distance_returns": "r11_distrank_protocol",
-    "ks_statistic_exact": "r11_distrank_protocol",
-    "mannwhitney_u_exact": "r11_distrank_protocol",
-    "spearman_rank_corr": "r11_distrank_protocol",
-    "concurrent_sessions_profile": "r11_distrank_protocol",
-    "rfm_segmentation": "r11_distrank_protocol",
-    "rfm_segments": "r11_distrank_protocol",
-    "pareto_share_report": "r11_distrank_protocol",
-    "zipf_curve_report": "r11_distrank_protocol",
-    "vocab_growth_deciles": "r11_distrank_protocol",
-    "kruskal_wallis_h": "r11_distrank_protocol",
-    "mann_whitney_u": "r11_distrank_protocol",
-    "stream_neardup_monitor": "r22_neardup_session_drift",
-    "stream_length_bias_monitor": "r26_length_bias_session_spike",
-    "stream_preference_margin_monitor": "r23_preference_session_spike",
-    "stream_ann_topk_monitor": "r22_host_load_spike",
-}
-
-# Documented quality-for-time trades: when one of these queries exceeds
-# the host-normalized gate, the detail file carries the attribution
-# instead of an unexplained flag. (VERDICT r2 asked for exactly this:
-# recall-gained-per-second recorded next to the regression.)
-KNOWN_TRADEOFFS = {
-    "pq_rerank_topk": (
-        "r13 widened the rerank pool 10 -> 50 BY MEASUREMENT "
-        "(artifacts/sweep_rerank_pool_r13.jsonl, SCALE.md table): "
-        "recall@3 90666 -> 276666 ppm (3.05x) for +0.41 s serving wall "
-        "at sf0.1 (warm 1.09 -> 1.50 s). The exact stage stays a "
-        "|queries| x pool keyed join (never a corpus pass), so the "
-        "cost is bounded and the recall-per-second knee sits at 50."
-    ),
-    "pq_rerank_recall_report": (
-        "Same r13 pool widening as pq_rerank_topk (it nests that "
-        "query): the exact-vs-rerank join now verifies a 5x-wider "
-        "pool; recall measured 276666 ppm (was 90666 at pool=10)."
-    ),
-    "ann_rhp_lsh_topk": (
-        "r2 added a second hash table + bucket_cap skew salting vs r1's "
-        "single-table LSH: ~1.3x residual work buys multi-table recall "
-        "(ann_recall_report measures it; the i.i.d. test corpus is the "
-        "adversarial case for angle LSH) and a bounded worst-case bucket. "
-        "r3 clawed the r2-specific 2.1x regression back to ~host-speed "
-        "by dropping the one-shot localCheckpoint and hoisting norms."
-    ),
-}
-
 
 def _here() -> str:
     return os.path.dirname(os.path.abspath(__file__))
 
 
 def _artifact_glob(pattern: str) -> list[str]:
-    """Round artifacts live at the repo root while current, and are
-    retired into artifacts/ by the per-round hygiene pass (r10) — prior-
-    round resolution searches both so pairing history survives the move."""
+    """Round artifacts live at the repo root while current and are
+    retired into artifacts/ afterwards; pairing history reads both."""
     return glob.glob(os.path.join(_here(), pattern)) + glob.glob(
         os.path.join(_here(), "artifacts", pattern)
     )
 
 
-def _latest(pattern: str) -> tuple[int, str] | None:
-    """(round_number, path) of the highest-numbered artifact matching pattern."""
-    best: tuple[int, str] | None = None
-    for path in _artifact_glob(pattern):
-        m = re.search(r"_r0*(\d+)\.json$", path)
-        if m and (best is None or int(m.group(1)) > best[0]):
-            best = (int(m.group(1)), path)
-    return best
+def _round_of(path: str) -> int | None:
+    m = re.search(r"_r0*(\d+)\.json$", path)
+    return int(m.group(1)) if m else None
 
 
-def _prior_rounds() -> dict[int, dict]:
-    """All usable PRIOR-round bench artifacts, newest-first per round:
-    {round: {"queries": {...}, "warm": {...}, "calib": float|None}}.
-    Our own BENCH_DETAIL_r{N}.json is preferred over the driver's parsed
-    BENCH_r{N}.json for the same round (always complete; r2's driver
-    line was truncated). The current round is excluded so a re-run
-    within a round still compares against previous rounds."""
-    this_round = _this_round()
+def _this_round() -> int:
+    """One past the newest BENCH_DETAIL_r{N}.json."""
+    rounds = [_round_of(p) for p in _artifact_glob("BENCH_DETAIL_r*.json")]
+    return max((r for r in rounds if r is not None), default=0) + 1
+
+
+def _prior_rounds(this_round: int) -> dict[int, dict]:
+    """{round: detail} for every readable BENCH_DETAIL_r{N}.json of an
+    earlier round (a re-run within a round still compares against the
+    previous rounds)."""
     rounds: dict[int, dict] = {}
-    for path in _artifact_glob("BENCH_r*.json"):
-        m = re.search(r"BENCH_r0*(\d+)\.json$", path)
-        if not m or int(m.group(1)) >= this_round:
-            continue
-        try:
-            with open(path) as fh:
-                parsed = json.load(fh).get("parsed") or {}
-        except (OSError, json.JSONDecodeError):
-            continue
-        q = parsed.get("queries")
-        if isinstance(q, dict) and q:
-            rounds[int(m.group(1))] = {
-                "queries": q,
-                "warm": {},
-                "calib": parsed.get("calib_spark_agg_sec"),
-            }
     for path in _artifact_glob("BENCH_DETAIL_r*.json"):
-        m = re.search(r"_r0*(\d+)\.json$", path)
-        if not m or int(m.group(1)) >= this_round:
+        rnd = _round_of(path)
+        if rnd is None or rnd >= this_round:
             continue
         try:
             with open(path) as fh:
                 det = json.load(fh)
         except (OSError, json.JSONDecodeError):
             continue
-        q = det.get("queries")
-        if isinstance(q, dict) and q:
-            rounds[int(m.group(1))] = {
-                "queries": q,
-                "warm": det.get("warm_s") or {},
-                "calib": det.get("calib_spark_agg_sec"),
-                "calib_samples": det.get("calib_samples"),
-                "calib_shuffle": det.get("calib_shuffle_sec"),
-                "calib_shuffle_samples": det.get("calib_shuffle_samples"),
-                "serving": det.get("serving") or {},
-            }
+        if isinstance(det.get("queries"), dict) and det["queries"]:
+            rounds[rnd] = det
     return rounds
 
 
-def _per_query_prev(rounds: dict[int, dict]) -> dict[str, tuple[int, float, float | None, float | None]]:
-    """query -> (round, cold_s, warm_s|None, calib) from the NEWEST prior
-    round that benched it. Diffing each query against the newest round
-    that HAS it (instead of one globally-chosen round) closes the r3
-    gate blind spot: queries first benched in a round whose artifact was
-    later unusable silently escaped comparison entirely. Cold and warm
-    are kept SEPARATE so comparisons never mix measurement modes
-    (the r4 advice finding): warm-to-warm only when both rounds recorded
-    warm, cold-to-cold otherwise."""
-    out: dict[str, tuple[int, float, float | None, float | None]] = {}
-    for rnd in sorted(rounds):
-        info = rounds[rnd]
-        for name, t in info["queries"].items():
-            out[name] = (rnd, t, info["warm"].get(name), info["calib"])
-    return out
+def headline_names(qs: dict) -> list[str]:
+    """HEADLINE, after checking every name is a catalog query: a renamed
+    or removed headliner must fail the bench, not shrink the total."""
+    missing = [n for n in HEADLINE if n not in qs]
+    if missing:
+        raise KeyError(f"HEADLINE names not in queries(): {missing}")
+    return list(HEADLINE)
 
 
-def _this_round() -> int:
-    """Round number for the detail artifact: one past the latest driver
-    bench OR the latest committed detail, whichever is newer — the
-    driver occasionally skips a round's BENCH_r{N}.json (r7 had only
-    local detail), and falling back to driver-count-plus-one would
-    overwrite the newest detail baseline instead of succeeding it."""
-    drv = _latest("BENCH_r*.json")
-    det = _latest("BENCH_DETAIL_r*.json")
-    return max(drv[0] + 1 if drv else 1, det[0] + 1 if det else 1)
-
-
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entry_mod
-    from prosnet_prefect_pipelines_spark.session import get_spark
+
+    repeat = 1
+    for arg in sys.argv[1:] if argv is None else argv:
+        m = re.fullmatch(r"--repeat=([1-9]\d*)", arg)
+        if not m:
+            raise SystemExit(f"bench.py: expected --repeat=N, got {arg!r}")
+        repeat = int(m.group(1))
+
+    qs = entry_mod.queries()
+    names = headline_names(qs)
+
+    from prosnet_prefect_pipelines_spark.session import (
+        get_spark,
+        reset_memo_fixtures,
+        sweep_persistent_rdds,
+    )
 
     spark = get_spark("bench")
-    qs = entry_mod.queries()
-    names = [n for n in HEADLINE if n in qs]
-
     # warm the JVM/session so the first query doesn't pay startup cost
     spark.range(1).count()
 
-    # hardware calibration: a fixed data-independent Spark computation.
-    # Query timings divided by this normalize away host-speed differences
-    # between rounds (r2's driver box ran every r1 query uniformly ~2x
-    # slower; this field makes that visible instead of arguable).
-    # N=3 samples (r4 verdict item 7): the r4 gate stood on ONE calibration
-    # sample while calibration and median per-query ratio disagreed 15%+;
-    # the median of three plus the recorded spread puts the host
-    # attribution on measured variance instead of a point estimate.
-    from pyspark.sql import functions as _F
-
-    # r6 hardening (r5 verdict item 3): r5's three samples spread 3x
-    # ([1.275, 0.498, 0.416]) because the first sample carries JIT/
-    # classload cost and N=3 gives the median no room. Now: the first
-    # run is a recorded-but-discarded warm-up (it IS the cold/JIT-
-    # inclusive number rounds <= 4 recorded, kept as calib_cold for
-    # like-for-like comparison against those rounds), then N=5 steady
-    # samples whose median is the calibration.
-    def _cpu_probe() -> float:
+    def timed(name: str) -> tuple[float, int]:
         t0 = time.time()
-        spark.range(0, 200_000_000, 1, 32).agg(
-            _F.sum((_F.col("id") % 97).cast("long"))
-        ).collect()
-        return round(time.time() - t0, 3)
+        n = qs[name](spark, sf_dir).count()
+        return round(time.time() - t0, 3), n
 
-    calib_cold = _cpu_probe()  # warm-up: cold/JIT-inclusive, not in median
-    calib_samples = [_cpu_probe() for _ in range(5)]
-    _sorted = sorted(calib_samples)
-    calib = _sorted[len(_sorted) // 2]
-    calib_spread = round(
-        (max(calib_samples) - min(calib_samples)) / calib, 3
-    ) if calib else None
-    # central-3 spread: the median only depends on the middle order
-    # statistics, so the reliability test uses the range of the central
-    # three samples — a single JIT-tiering straggler in 5 (r6 measured
-    # [0.346..0.559] full-range 0.55 but central-3 0.25) shouldn't
-    # declare the instrument broken when the statistic it feeds is
-    # unaffected. Full-range spread stays recorded for transparency.
-    calib_spread_core = round(
-        (_sorted[3] - _sorted[1]) / calib, 3
-    ) if calib else None
-    # NOTE (r6): the cross-round calib RATIO stays unreliable this round
-    # regardless — r5 stored a median of the old noisy N=3 protocol
-    # (samples [1.275, 0.498, 0.416]) — so the estimator falls back to
-    # the capped median until r7 pairs N=5-to-N=5 calibrations.
-
-    # shuffle-bound companion probe (r5 verdict item 3): the CPU probe
-    # is pure codegen and provably cannot normalize shuffle/IO-heavy
-    # queries (pagerank_nations' r5 flag). A fixed 5M-row exchange +
-    # keyed aggregation times the shuffle path; recorded every round so
-    # cross-round shuffle-speed ratios become available from r6 on.
-    def _shuffle_probe() -> float:
-        t0 = time.time()
-        spark.range(0, 5_000_000, 1, 32).select(
-            (_F.col("id") % 100_000).alias("k"), "id"
-        ).groupBy("k").agg(_F.sum("id").alias("s")).count()
-        return round(time.time() - t0, 3)
-
-    _shuffle_probe()  # warm-up, discarded
-    calib_shuffle_samples = [_shuffle_probe() for _ in range(3)]
-    calib_shuffle = sorted(calib_shuffle_samples)[1]
-
-    # --repeat=N (r9 verdict item 5): the r22 episode measured a 1.6x
-    # same-code spread across four identical benches under fleet-
-    # neighbor load — one single-shot pass under that regime produces a
-    # round artifact that contradicts its neighbors. With N>1 the cold
-    # pass runs N times and each query records its per-run times plus
-    # the MEDIAN as the headline timing; also auto-engaged (2 extra
-    # passes) when the end-of-bench calibration resample drifts >1.25x
-    # from the start-of-bench floor (load arrived mid-run).
-    repeat = 1
-    for arg in sys.argv[1:]:
-        if arg.startswith("--repeat"):
-            repeat = int(arg.split("=", 1)[1] if "=" in arg else 3)
-
-    # start-probe degraded-host auto-repeat (r11 verdict item 9): the
-    # mid-run drift check below only catches load that ARRIVES during
-    # the run; a host already degraded at bench start produces a
-    # stable-but-slow single-shot total (the r29-r32 fleet episodes:
-    # calibration floor 0.47 -> 1.62 s between same-code runs). Compare
-    # this run's start-of-bench steady floor against the stored
-    # cross-round floor (min over every prior round's recorded
-    # calib_samples); > 1.5x means the bench is starting on a degraded
-    # host, so default to the r31 median-of-3 protocol up front unless
-    # the caller already chose a repeat count. Additions-only: the
-    # timings contract and per-pass provenance are unchanged.
-    _floors = []
-    for _info in _prior_rounds().values():
-        _prior_samples = _info.get("calib_samples")
-        if _prior_samples:
-            _floors.append(min(_prior_samples))
-        elif _info.get("calib"):
-            _floors.append(_info["calib"])
-    calib_round_floor = min(_floors) if _floors else None
-    start_floor_now = min(calib_samples)
-    start_vs_floor = (
-        round(start_floor_now / calib_round_floor, 3)
-        if calib_round_floor
-        else None
-    )
-    repeat_engaged_start = False
-    if repeat == 1 and start_vs_floor is not None and start_vs_floor > 1.5:
-        repeat = 3
-        repeat_engaged_start = True
-        print(
-            f"# start calibration floor {start_floor_now}s is "
-            f"{start_vs_floor}x the stored round floor "
-            f"{calib_round_floor}s — engaging median-of-3 cold protocol",
-            file=sys.stderr,
-        )
-
-    # per-pass provenance (r10 ADVICE, medium): repeat/auto-engaged
-    # passes after the first used to reuse the session-memoized PQ/
-    # corpus indexes (and, for auto-engaged passes, a fully JIT-warmed
-    # JVM), so the 'cold' median was biased low vs prior true-cold
-    # baselines and an index-build regression was invisible. Passes
-    # >= 2 now RESET all memoized fixtures first (reset_memo_fixtures)
-    # so every pass pays the same first-touch builds pass 1 paid, and
-    # each pass records {memo_reset, after_warm} so cross-round
-    # comparisons can verify they are like-for-like.
-    cold_pass_provenance: list[dict] = []
-
-    def _cold_pass(
-        reset_memo: bool = False, after_warm: bool = False
-    ) -> tuple[dict[str, float], dict[str, int]]:
-        if reset_memo:
-            from prosnet_prefect_pipelines_spark.session import (
-                reset_memo_fixtures,
-            )
-
+    # cold passes: pass >= 2 drops the memoized fixtures first, so every
+    # pass pays the same first-touch builds pass 1 paid
+    provenance: list[dict] = []
+    cold_runs: dict[str, list[float]] = {n: [] for n in names}
+    rows: dict[str, int] = {}
+    for i in range(1, repeat + 1):
+        if i > 1:
             n_reset = reset_memo_fixtures(spark)
-            print(
-                f"# cold pass: reset memoized fixtures "
-                f"({n_reset} RDDs dropped)",
-                file=sys.stderr,
-            )
-        cold_pass_provenance.append(
-            {
-                "pass": len(cold_pass_provenance) + 1,
-                "memo_reset": reset_memo,
-                "after_warm": after_warm,
-            }
-        )
-        pass_t: dict[str, float] = {}
-        pass_rows: dict[str, int] = {}
+            print(f"# cold pass {i}: reset {n_reset} memoized RDDs", file=sys.stderr)
+        provenance.append({"pass": i, "memo_reset": i > 1})
         for name in names:
-            t0 = time.time()
-            df = qs[name](spark, sf_dir)
-            n = df.count()
-            pass_t[name] = round(time.time() - t0, 3)
-            pass_rows[name] = n
-            print(f"# {name}: {n} rows in {pass_t[name]}s", file=sys.stderr)
-            # release checkpointed RDD blocks from iterative operators:
-            # the explicit sweep is deterministic (ContextCleaner-via-GC
-            # only frees blocks after both GCs run and is asynchronous),
-            # and accumulated blocks degrade later queries
-            del df
-            from prosnet_prefect_pipelines_spark.session import (
-                sweep_persistent_rdds,
-            )
-
+            t, n = timed(name)
+            cold_runs[name].append(t)
+            rows.setdefault(name, n)
+            print(f"# {name}: {n} rows in {t}s", file=sys.stderr)
+            # release checkpointed RDD blocks: the sweep is deterministic;
+            # ContextCleaner-via-GC only frees them after both GCs run,
+            # and asynchronously
             sweep_persistent_rdds(spark)
-            import gc
-
             gc.collect()
             spark.sparkContext._jvm.System.gc()
-        return pass_t, pass_rows
+    cold = {n: round(statistics.median(r), 3) for n, r in cold_runs.items()}
 
-    def _median(vals: list[float]) -> float:
-        s = sorted(vals)
-        mid = len(s) // 2
-        return s[mid] if len(s) % 2 else round((s[mid - 1] + s[mid]) / 2, 3)
-
-    cold_passes: list[dict[str, float]] = []
-    timings, rows = _cold_pass()
-    cold_passes.append(timings)
-    for _ in range(repeat - 1):
-        extra, _r = _cold_pass(reset_memo=True)
-        cold_passes.append(extra)
-    if len(cold_passes) > 1:
-        timings = {
-            n: _median([p[n] for p in cold_passes if n in p])
-            for n in cold_passes[0]
-        }
-
-    total = round(sum(timings.values()), 3)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-
-    # warm pass: re-run the slowest queries. The cold number conflates
-    # Catalyst planning/compile with execution (measured r4:
-    # knn_join_batch 2.7 s planning vs 0.8 s executing); warm_s is the
-    # steady-state a long-lived cluster session sees, and the gate
-    # compares warm-to-warm where both rounds recorded it.
-    # r7 (verdict item 7): warm x2, record the MIN — a single warm run
-    # after ~80 queries of session accumulation still carries one-off
-    # GC/maintenance noise (r7 observed render_person_triples 6.13 s in
-    # the single-shot warm pass vs 2.05-2.6 s in isolation); min-of-two
-    # is the steady-state estimator. Both runs stay in warm_runs.
-    warm_s: dict[str, float] = {}
+    # warm pass: the slowest queries again, min of two runs — the
+    # steady state a long-lived session sees, without one-off GC spikes
     warm_runs: dict[str, list[float]] = {}
-    from prosnet_prefect_pipelines_spark.session import sweep_persistent_rdds
-
-    for name in sorted(timings, key=lambda n: -timings[n])[:N_WARM]:
-        runs = []
+    for name in sorted(cold, key=lambda n: -cold[n])[:N_WARM]:
+        warm_runs[name] = []
         for _ in range(2):
             sweep_persistent_rdds(spark)  # outside the timed region
-            t0 = time.time()
-            qs[name](spark, sf_dir).count()
-            runs.append(round(time.time() - t0, 3))
-        warm_runs[name] = runs
-        warm_s[name] = min(runs)
+            warm_runs[name].append(timed(name)[0])
+    warm = {n: min(r) for n, r in warm_runs.items()}
 
-    # END-of-bench calibration resample (r8 verdict item 2): the probes
-    # ran only at bench START, so transient fleet-neighbor load there
-    # biased the whole round's host ratio high (r20: start min 0.484 vs
-    # r19's 0.387 tripped the residual alarm while the 80-query median
-    # said 1.041). The cross-round ratio is min-to-min, so appending
-    # samples from the session's END lets min() find the true
-    # steady-state floor whichever half was quiet — a genuinely slower
-    # host stays slow in both halves and keeps its honest ratio.
-    sweep_persistent_rdds(spark)
-    calib_samples += [_cpu_probe() for _ in range(3)]
-    calib_shuffle_samples += [_shuffle_probe() for _ in range(2)]
-
-    # mid-run calibration drift: end-of-bench floor vs start-of-bench
-    # floor. >1.25x either way means the host changed speed UNDER the
-    # run (the r22 fleet-load regime); a single-shot cold pass from
-    # such a session is one sample of a bimodal distribution, so
-    # auto-engage the median-of-3 protocol (2 extra passes) unless the
-    # caller already asked for repeats.
-    start_floor = min(calib_samples[:5])
-    end_floor = min(calib_samples[5:])
-    calib_drift = round(end_floor / start_floor, 3) if start_floor else None
-    repeat_engaged = False
-    if (
-        repeat == 1
-        and calib_drift is not None
-        and not (1 / 1.25 <= calib_drift <= 1.25)
-    ):
-        repeat_engaged = True
-        print(
-            f"# mid-run calibration drift {calib_drift} — engaging "
-            "median-of-3 cold protocol (2 extra passes)",
-            file=sys.stderr,
-        )
-        for _ in range(2):
-            extra, _r = _cold_pass(reset_memo=True, after_warm=True)
-            cold_passes.append(extra)
-        timings = {
-            n: _median([p[n] for p in cold_passes if n in p])
-            for n in cold_passes[0]
-        }
-        total = round(sum(timings.values()), 3)
-        sweep_persistent_rdds(spark)
-        calib_samples += [_cpu_probe() for _ in range(2)]
-
-    rounds = _prior_rounds()
-    prev_map = _per_query_prev(rounds)
-    newest_prev = max(rounds) if rounds else None
-    prev_round = f"r{newest_prev}" if newest_prev else ""
-
-    def pair(n: str) -> tuple[float, float, str]:
-        """(now_s, prev_s, mode) for query n. Warm-to-warm ONLY when
-        BOTH rounds recorded a warm time for n; cold-to-cold otherwise
-        — never a mixed-mode comparison (r4 advice: a warm-now vs
-        cold-prev pairing excludes planning cost on one side only and
-        can hide real regressions)."""
-        _rnd, prev_cold, prev_warm, _calib = prev_map[n]
-        if n in warm_s and prev_warm is not None:
-            return warm_s[n], prev_warm, "warm"
-        return timings[n], prev_cold, "cold"
-
-    deltas: dict[str, float] = {}
-    delta_mode: dict[str, str] = {}
-    for n in timings:
-        if n in prev_map:
-            now_n, prev_n, mode = pair(n)
-            deltas[n] = round(now_n - prev_n, 3)
-            delta_mode[n] = mode
-    first_benched = sorted(n for n in timings if n not in prev_map)
-    # headline totals compare ONE measurement mode on BOTH sides:
-    # cold sum vs cold sum (warm deltas are per-query, mode-tagged)
-    shared_total = round(sum(timings[n] for n in deltas), 3)
-    prev_shared_total = round(sum(prev_map[n][1] for n in deltas), 3)
-
-    # Host-speed attribution (two instruments):
-    # 1. CALIBRATION ratio — the non-circular one: the same fixed
-    #    data-independent Spark computation timed in both rounds. A
-    #    uniform CODE regression cannot hide in it. Used for the gate
-    #    whenever both rounds carry a calibration.
-    # 2. Median per-query now/prev ratio — kept as a sanity CROSS-CHECK
-    #    only (it absorbs any uniform code regression by construction,
-    #    the r3 verdict's circularity finding). A >15% disagreement
-    #    between the two is itself reported as a fleet-wide residual.
-    ratios = sorted(
-        pair(n)[0] / pair(n)[1] for n in deltas if pair(n)[1] > 0.05
-    )
-    median_ratio = round(ratios[len(ratios) // 2], 3) if ratios else 1.0
-
-    def _calib_ratio_vs(rnd: int | None) -> float | None:
-        """Calibration ratio vs a prior round, LIKE FOR LIKE: rounds
-        <= 4 recorded one cold/JIT-inclusive sample, so they compare
-        against THIS round's cold first sample; rounds with N>=3
-        samples compare MIN-to-MIN. Min (the steady-state floor) is the
-        protocol-robust estimator: r5's median-of-3 included the JIT-
-        contaminated first sample (samples [1.275, 0.498, 0.416] ->
-        median 0.498 vs floor 0.416) while r6+ discards a warm-up, so
-        a median-to-median cross would claim a phantom ~18% host
-        speedup purely from the protocol change (observed live in r6:
-        calib ratio 0.845 vs per-query median 0.985, flagging 8
-        flat queries as regressions)."""
-        if rnd is None or rnd not in rounds:
-            return None
-        info = rounds[rnd]
-        samples = info.get("calib_samples")
-        if samples:
-            pr = min(samples)
-            now = min(calib_samples)
-            return round(now / pr, 3) if now and pr else None
-        if info.get("calib"):
-            return round(calib_cold / info["calib"], 3) if calib_cold else None
-        return None
-
-    calib_ratio = _calib_ratio_vs(newest_prev)
-
-    def _shuffle_ratio_vs(rnd: int | None) -> float | None:
-        """Shuffle-speed ratio vs a prior round — None until that round
-        also recorded the shuffle probe (first recorded in r6/r16).
-        Min-to-min when the prior round stored its samples (mirrors the
-        CPU protocol); median-to-median single-value fallback otherwise."""
-        info = rounds.get(rnd) or {}
-        ps = info.get("calib_shuffle_samples")
-        if ps and calib_shuffle_samples:
-            return round(min(calib_shuffle_samples) / min(ps), 3)
-        pr = info.get("calib_shuffle")
-        return round(calib_shuffle / pr, 3) if calib_shuffle and pr else None
-
-    def _blended_ratio_vs(rnd: int | None) -> float | None:
-        """Host instrument (r8 verdict): the pure-CPU codegen probe kept
-        disagreeing with the per-query median by >15% on hosts whose
-        relative shuffle speed differs from their relative CPU speed, so
-        EVERY round tripped the residual alarm and fell back to the
-        (circular) median. Real queries mix codegen and exchange; the
-        instrument is the geometric mean of the CPU and shuffle probe
-        ratios when both rounds carry the shuffle sample, the CPU ratio
-        alone otherwise. Both components stay recorded separately."""
-        c = _calib_ratio_vs(rnd)
-        s = _shuffle_ratio_vs(rnd)
-        if c is not None and s is not None:
-            return round((c * s) ** 0.5, 3)
-        return c
-
-    shuffle_ratio = _shuffle_ratio_vs(newest_prev)
-    blended_ratio = _blended_ratio_vs(newest_prev)
-    fleet_residual_warn = (
-        blended_ratio is not None
-        and median_ratio > 0
-        and abs(blended_ratio / median_ratio - 1.0) > 0.15
-    )
-    # Estimator selection (r5): the calibration instrument is the
-    # non-circular one, but it is a pure-CPU codegen probe — when its
-    # own within-round spread is large (JIT/load noise) OR it disagrees
-    # with the median per-query ratio by >15%, trusting it would either
-    # flood the gate with false regressions (factor too low) or hide
-    # real ones (too high). In that case the gate falls back to the
-    # median per-query ratio, CAPPED at the calibration ratio + 50%
-    # so a uniform code regression can't fully hide in the fallback
-    # (the circularity concern from the r3 verdict). Both instruments
-    # and the chosen estimator are always recorded.
-    calib_unreliable = (
-        blended_ratio is None
-        or (calib_spread_core is not None and calib_spread_core > 0.3)
-        or fleet_residual_warn
-    )
-    prev_has_samples = bool(
-        newest_prev in rounds and rounds[newest_prev].get("calib_samples")
-    )
-    if calib_unreliable and median_ratio > 0:
-        # cap only when BOTH sides measured calibration variance (N>=3);
-        # a prior single-sample calibration has unknown variance and is
-        # the less credible instrument, so the 69-query median wins
-        cap = (
-            blended_ratio * 1.5
-            if (blended_ratio is not None and prev_has_samples)
-            else float("inf")
-        )
-        host_ratio = round(min(median_ratio, cap), 3)
-        host_estimator = (
-            "median_fallback" if blended_ratio is not None else "median"
-        )
-    else:
-        host_ratio = blended_ratio
-        host_estimator = (
-            "calibration_blend" if shuffle_ratio is not None else "calibration"
-        )
-
-    def _host_factor(n: str) -> float:
-        # normalize each query by ITS comparison round's instrument
-        # when that round recorded one AND the instrument is reliable;
-        # the round-level (possibly fallback) ratio otherwise
-        if not calib_unreliable:
-            r = _blended_ratio_vs(prev_map[n][0])
-            if r is not None:
-                return r
-        return host_ratio
-
-    regressions = sorted(
-        (
-            {
-                "query": n,
-                "prev_round": f"r{prev_map[n][0]}",
-                "prev_s": pair(n)[1],
-                "now_s": pair(n)[0],
-                "mode": delta_mode[n],
-                "delta_s": d,
-            }
-            for n, d in deltas.items()
-            if d > REGRESSION_ABS_S
-            and pair(n)[1] > 0
-            and d / pair(n)[1] > REGRESSION_PCT
-        ),
-        key=lambda r: -r["delta_s"],
-    )
-    def _beyond_gate(n: str) -> bool:
-        return (
-            pair(n)[1] > 0.05
-            and pair(n)[0] > pair(n)[1] * _host_factor(n) * (1 + REGRESSION_PCT)
-            and pair(n)[0] - pair(n)[1] * _host_factor(n) > REGRESSION_ABS_S
-        )
-
-    # Flag confirm pass (r6, widened r7): a single sample per query is
-    # noisy (~0.3-0.5 s of one-shot Catalyst planning/JIT cold; one-off
-    # GC/session-accumulation spikes warm), so every round's gate
-    # flagged a DIFFERENT random handful of "regressions" that a manual
-    # warm x3 re-measure then dismissed (the r5/r6 cold_variance
-    # clusters, each accepted by the judge). This automates exactly
-    # that accepted protocol: ANY flag (cold- or warm-mode, r7) is
-    # re-run x2 in-session; if the best steady-state re-run is at or
-    # below the host-adjusted gate, the flag is auto-attributed
-    # {cold,warm}_variance_confirmed WITH the measured re-run times
-    # left in the record. A real code regression survives the re-runs
-    # and stays unattributed.
-    #
-    # r7 (ADVICE medium): the confirm threshold uses the query's PRIOR
-    # WARM time whenever the previous round recorded one — the confirm
-    # re-runs are warm, and a warm-now-vs-cold-prev comparison can hide
-    # a real warm-execution regression under the prior round's planning
-    # cost. When no prior warm exists the cold prev is the only
-    # baseline (weakness documented, and self-healing: every confirm
-    # run is recorded into warm_s below, so NEXT round's gate pairs
-    # this query warm-to-warm).
-    confirm_s: dict[str, list[float]] = {}
-    for n in deltas:
-        if _beyond_gate(n):
-            runs = []
-            for _ in range(2):
-                t0 = time.time()
-                qs[n](spark, sf_dir).count()
-                runs.append(round(time.time() - t0, 3))
-            confirm_s[n] = runs
-
-    def _confirm_baseline(n: str) -> float:
-        prev_warm = prev_map[n][2]
-        return prev_warm if prev_warm is not None else pair(n)[1]
-
-    def _confirmed_variance(n: str) -> bool:
-        return n in confirm_s and min(confirm_s[n]) <= _confirm_baseline(
-            n
-        ) * _host_factor(n) * (1 + REGRESSION_PCT)
-
-    def _static_attribution(n: str) -> str | None:
-        """The query's static attribution key, or None when it has
-        none, its ratio exceeds the key's documented magnitude bound,
-        or the key has EXPIRED for this comparison (the query pairs
-        against a round newer than the one-time event's last measured
-        round — see ATTRIBUTION_MAX_PREV_ROUND)."""
-        key = ATTRIBUTION_OF.get(n)
-        if key is None:
-            return None
-        if prev_map[n][0] > ATTRIBUTION_MAX_PREV_ROUND.get(key, 10**9):
-            return None
-        bound = ATTRIBUTION_RATIO_BOUND_OF.get(key, ATTRIBUTION_RATIO_BOUND)
-        if pair(n)[0] / pair(n)[1] > bound:
-            return None
-        return key
-
-    regressions_beyond_host = sorted(
-        (
-            {
-                "query": n,
-                "prev_round": f"r{prev_map[n][0]}",
-                "prev_s": pair(n)[1],
-                "now_s": pair(n)[0],
-                "mode": delta_mode[n],
-                "host_factor": round(_host_factor(n), 3),
-                "ratio": round(pair(n)[0] / pair(n)[1], 2),
-                **({"confirm_s": confirm_s[n]} if n in confirm_s else {}),
-                **(
-                    {"documented_tradeoff": KNOWN_TRADEOFFS[n]}
-                    if n in KNOWN_TRADEOFFS
-                    else {}
-                ),
-                **(
-                    {"attribution_key": _static_attribution(n)}
-                    if _static_attribution(n) is not None
-                    else {}
-                ),
-                **(
-                    {"attribution_key": f"{delta_mode[n]}_variance_confirmed"}
-                    if _static_attribution(n) is None
-                    and _confirmed_variance(n)
-                    else {}
-                ),
-            }
-            for n in deltas
-            if _beyond_gate(n)
-        ),
-        key=lambda r: -r["ratio"],
-    )
-
-    # Only AFTER all pairing/gating is done: feed the confirm-pass
-    # steady-state measurements into the RECORDED warm_s, so the next
-    # round pairs these queries warm-to-warm instead of re-rolling the
-    # cold-variance dice (mutating warm_s earlier would change pair()
-    # mid-computation).
-    for n, runs in confirm_s.items():
-        warm_runs.setdefault(n, runs)
-        warm_s[n] = min(warm_s.get(n, float("inf")), min(runs))
-
-    # Best-known-warm totals (r10 verdict item 6): the cold first-shot
-    # total is dominated by measurement noise under host load (r24
-    # 140.4 -> r26 228.7 s on near-identical code, 17/18 flags
-    # auto-attributed to variance), so the headline also reports the
-    # sum of each query's best-known steady-state this round — warm
-    # where a warm run exists (slowest-N warm pass + confirm re-runs),
-    # the cold number otherwise (fast queries, where cold ~= warm).
-    # The cross-round warm comparison pairs best-known to best-known.
-    def _best_now(n: str) -> float:
-        return min(warm_s.get(n, float("inf")), timings[n])
-
-    def _best_prev(n: str) -> float:
-        _rnd, prev_cold, prev_warm, _calib = prev_map[n]
-        return min(
-            prev_warm if prev_warm is not None else float("inf"), prev_cold
-        )
-
-    warm_total = round(sum(_best_now(n) for n in timings), 3)
-    shared_warm_total = round(sum(_best_now(n) for n in deltas), 3)
-    prev_shared_warm_total = round(sum(_best_prev(n) for n in deltas), 3)
-
-    # Steady-state serving probes (r7 verdict item 2): the availableNow
-    # replay rebuilds monitor state from scratch, so the stateful
-    # monitors' headline rows measure REBUILD; the serving probe times a
-    # checkpoint-RESUMED run consuming one new micro-batch against
-    # recovered state — the number a deployed monitor actually pays.
-    # Recorded separately; the cold/warm rows keep measuring the replay
-    # (that is what the oracle hashes).
+    # serving probes: a checkpoint-resumed monitor consuming one new
+    # micro-batch, the cost a deployed monitor pays; each fails alone
     serving: dict[str, dict] = {}
-    try:
-        from prosnet_prefect_pipelines_spark.streaming.serving import (
-            ann_serving_probe,
-            ivfpq_serving_probe,
-            neardup_serving_probe,
-            preference_serving_probe,
-            resolver_serving_probe,
-        )
-
-        probes = {
-            "stream_neardup_monitor": neardup_serving_probe,
-            "stream_entity_resolution": resolver_serving_probe,
-            "stream_ann_topk_monitor": ann_serving_probe,
-            "stream_ann_ivfpq_monitor": ivfpq_serving_probe,
-            "stream_preference_margin_monitor": preference_serving_probe,
-        }
-    except Exception as exc:  # import failure must not lose the bench
-        serving["_error"] = repr(exc)
-        probes = {}
-    # each probe fails independently: one flaky monitor records its own
-    # error row instead of blanking the serving telemetry already
-    # collected and skipping every probe after it (ADVICE r8)
-    for qn, probe in probes.items():
-        if qn not in timings:
-            continue
+    for qn, probe in _serving_probes().items():
         try:
             sweep_persistent_rdds(spark)
             serving[qn] = probe(spark, sf_dir)
         except Exception as exc:
             serving[qn] = {"_error": repr(exc)}
-    serving_prev: dict[str, dict] = {}
-    for rnd_i in sorted(rounds):
-        for qn, rec in (rounds[rnd_i].get("serving") or {}).items():
-            if isinstance(rec, dict) and "serving_s" in rec:
-                serving_prev[qn] = {"round": rnd_i, **rec}
 
     rnd = _this_round()
+    rounds = _prior_rounds(rnd)
+    pairs = compare(cold, warm, rounds)
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    out = summary(
+        cold, warm, pairs, serving,
+        float(sf) if sf.replace(".", "").isdigit() else sf, rnd,
+    )
+    regressions = sorted(
+        (
+            {"query": n, **p, "delta_s": round(p["now_s"] - p["prev_s"], 3)}
+            for n, p in pairs.items()
+            if p["regression"]
+        ),
+        key=lambda r: -r["delta_s"],
+    )
+    serving_prev: dict[str, dict] = {}
+    for r in sorted(rounds):
+        for qn, rec in (rounds[r].get("serving") or {}).items():
+            if isinstance(rec, dict) and "serving_s" in rec:
+                serving_prev[qn] = {"round": r, **rec}
     detail = {
         "round": rnd,
-        "metric": "headline_queries_total_wall",
-        "value": total,
-        "unit": "sec",
-        "sf": sf_val,
-        "calib_spark_agg_sec": calib,
-        "calib_samples": calib_samples,
-        "calib_cold_sec": calib_cold,
-        "calib_spread": calib_spread,
-        "calib_spread_core": calib_spread_core,
-        "calib_shuffle_sec": calib_shuffle,
-        "calib_shuffle_samples": calib_shuffle_samples,
-        "value_per_calib": round(total / calib, 2) if calib else None,
-        "n_queries": len(timings),
-        "queries": timings,
-        **(
-            {
-                "cold_runs": {
-                    n: [p[n] for p in cold_passes if n in p]
-                    for n in cold_passes[0]
-                },
-                "cold_spread": {
-                    n: round(
-                        (max(runs) - min(runs)) / timings[n], 3
-                    )
-                    for n, runs in (
-                        (n, [p[n] for p in cold_passes if n in p])
-                        for n in cold_passes[0]
-                    )
-                    if timings[n] > 0
-                },
-            }
-            if len(cold_passes) > 1
-            else {}
-        ),
-        "repeat": len(cold_passes),
-        "repeat_engaged": repeat_engaged,
-        "calib_round_floor": calib_round_floor,
-        "start_vs_floor": start_vs_floor,
-        "repeat_engaged_start": repeat_engaged_start,
-        "cold_pass_provenance": cold_pass_provenance,
-        "warm_total": warm_total,
-        "shared_warm_total": shared_warm_total,
-        "prev_shared_warm_total": prev_shared_warm_total,
-        "calib_drift_mid_run": calib_drift,
-        "warm_s": warm_s,
+        **{k: out[k] for k in ("metric", "value", "unit", "sf", "n_queries")},
+        "queries": cold,
+        "cold_runs": cold_runs,
+        "repeat": repeat,
+        "cold_pass_provenance": provenance,
+        "warm_total": out["warm_total"],
+        "warm_s": warm,
         "warm_runs": warm_runs,
         "rows": rows,
-        "prev_round": prev_round,
-        "per_query_prev_round": {n: f"r{prev_map[n][0]}" for n in deltas},
-        "first_benched_this_round": first_benched,
-        "deltas_vs_prev": deltas,
-        "delta_mode": delta_mode,
-        "shared_total": shared_total,
-        "prev_shared_total": prev_shared_total,
-        "host_speed_ratio": host_ratio,
-        "host_speed_estimator": host_estimator,
-        "host_speed_ratio_calibration": calib_ratio,
-        "host_speed_ratio_shuffle": shuffle_ratio,
-        "host_speed_ratio_blended": blended_ratio,
-        "host_speed_ratio_median": median_ratio,
-        "fleet_residual_warning": fleet_residual_warn,
+        "shared_vs_prev": out["shared_vs_prev"],
+        "pairs": pairs,
+        "first_benched_this_round": sorted(set(cold) - set(pairs)),
         "serving": serving,
         "serving_prev": serving_prev,
-        "attributions": ATTRIBUTIONS,
         "regressions": regressions,
-        "regressions_beyond_host": regressions_beyond_host,
         "regression_gate": {"pct": REGRESSION_PCT, "abs_s": REGRESSION_ABS_S},
     }
     for fname in (f"BENCH_DETAIL_r{rnd}.json", "BENCH_DETAIL.json"):
         with open(os.path.join(_here(), fname), "w") as fh:
             json.dump(detail, fh, indent=1)
-    # retire prior-round artifacts into artifacts/ as part of the bench
-    # itself (r8 verdict cosmetic: the manual hygiene pass moved history
-    # once, but every new round's files re-accumulated at root). Root
-    # keeps only the current round; _artifact_glob reads both places so
-    # pairing history is unaffected.
+
+    # the repo root keeps only the current round's artifacts
     art_dir = os.path.join(_here(), "artifacts")
     os.makedirs(art_dir, exist_ok=True)
     for pat in ("BENCH_DETAIL_r*.json", "BENCH_r*.json"):
         for path in glob.glob(os.path.join(_here(), pat)):
-            m = re.search(r"_r0*(\d+)\.json$", path)
-            if m and int(m.group(1)) < rnd:
-                os.replace(
-                    path, os.path.join(art_dir, os.path.basename(path))
-                )
-    # scratch logs retire the same way (r10 verdict item 3): root-level
-    # *.log / *.err from audits/probes/ad-hoc runs move to artifacts/
-    try:
-        sys.path.insert(0, os.path.join(_here(), "scripts"))
-        from retire_logs import retire_scratch_logs
+            r = _round_of(path)
+            if r is not None and r < rnd:
+                os.replace(path, os.path.join(art_dir, os.path.basename(path)))
+    sys.path.insert(0, os.path.join(_here(), "scripts"))
+    from retire_logs import retire_scratch_logs
 
-        for base in retire_scratch_logs(_here()):
-            print(f"# retired scratch log {base} -> artifacts/", file=sys.stderr)
-    except Exception as exc:
-        print(f"# scratch-log retirement skipped: {exc!r}", file=sys.stderr)
+    for base in retire_scratch_logs(_here()):
+        print(f"# retired scratch log {base} -> artifacts/", file=sys.stderr)
     if regressions:
-        print(f"# regressions vs {prev_round}: {json.dumps(regressions)}", file=sys.stderr)
-    if fleet_residual_warn:
-        print(
-            f"# WARN fleet-wide residual: blended host ratio {blended_ratio} "
-            f"(cpu {calib_ratio} x shuffle {shuffle_ratio}) vs "
-            f"median per-query ratio {median_ratio} disagree >15% — either "
-            "uniform code drift or host/session variance; attribute it by "
-            "diffing the two trees' engine code (the r15 residual proved to "
-            "be variance: zero code diff between the compared benches, see "
-            "ATTRIBUTIONS['r15_fleet_residual'])",
-            file=sys.stderr,
-        )
+        print(f"# regressions: {json.dumps(regressions)}", file=sys.stderr)
 
     # FINAL LINE: short and flat — must survive the driver's tail capture.
-    out = {
+    print(json.dumps(out))
+
+
+def compare(
+    cold: dict[str, float], warm: dict[str, float], rounds: dict[int, dict]
+) -> dict[str, dict]:
+    """Pair each query with the newest prior round that benched it.
+
+    Warm-to-warm only when both sides recorded a warm time, cold-to-cold
+    otherwise — never a mixed-mode pair. A pair is flagged as a
+    regression when now is slower than prev by more than REGRESSION_PCT
+    AND more than REGRESSION_ABS_S seconds.
+    -> {query: {round, mode, now_s, prev_s, prev_cold_s, prev_best_s,
+    regression}}."""
+    prev: dict[str, tuple[int, float, float | None]] = {}
+    for rnd in sorted(rounds):
+        det = rounds[rnd]
+        warm_prev = det.get("warm_s") or {}
+        for n, t in det["queries"].items():
+            prev[n] = (rnd, t, warm_prev.get(n))
+    pairs: dict[str, dict] = {}
+    for n, now_cold in cold.items():
+        if n not in prev:
+            continue
+        rnd, prev_cold, prev_warm = prev[n]
+        if n in warm and prev_warm is not None:
+            mode, now_s, prev_s = "warm", warm[n], prev_warm
+        else:
+            mode, now_s, prev_s = "cold", now_cold, prev_cold
+        delta = now_s - prev_s
+        pairs[n] = {
+            "round": rnd,
+            "mode": mode,
+            "now_s": now_s,
+            "prev_s": prev_s,
+            "prev_cold_s": prev_cold,
+            "prev_best_s": min(prev_cold, prev_warm or prev_cold),
+            "regression": prev_s > 0
+            and delta > REGRESSION_ABS_S
+            and delta / prev_s > REGRESSION_PCT,
+        }
+    return pairs
+
+
+def summary(
+    cold: dict[str, float],
+    warm: dict[str, float],
+    pairs: dict[str, dict],
+    serving: dict[str, dict],
+    sf: float | str,
+    rnd: int,
+) -> dict:
+    """The one-line result. Kept short and flat: the bench's caller keeps
+    only the last 2,000 characters of output, so per-query maps belong in
+    the detail file."""
+    best = {n: min(warm.get(n, t), t) for n, t in cold.items()}
+    prev_round = max((p["round"] for p in pairs.values()), default=None)
+    return {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(cold.values()), 3),
         "unit": "sec",
-        "sf": sf_val,
-        "n_queries": len(timings),
-        "calib_spark_agg_sec": calib,
-        "calib_shuffle_sec": calib_shuffle,
-        "value_per_calib": round(total / calib, 2) if calib else None,
-        "warm_total": warm_total,
+        "sf": sf,
+        "n_queries": len(cold),
+        "warm_total": round(sum(best.values()), 3),
         "shared_vs_prev": (
             {
-                "prev": prev_round,
-                "now_s": shared_total,
-                "prev_s": prev_shared_total,
-                "now_warm_s": shared_warm_total,
-                "prev_warm_s": prev_shared_warm_total,
-                "host_ratio": host_ratio,
-                "host_estimator": host_estimator,
-                "fleet_residual_warning": fleet_residual_warn,
+                "prev": f"r{prev_round}",
+                "now_s": round(sum(cold[n] for n in pairs), 3),
+                "prev_s": round(sum(p["prev_cold_s"] for p in pairs.values()), 3),
+                "now_warm_s": round(sum(best[n] for n in pairs), 3),
+                "prev_warm_s": round(
+                    sum(p["prev_best_s"] for p in pairs.values()), 3
+                ),
             }
-            if deltas
+            if pairs
             else None
         ),
         "serving_s": {
-            qn: rec.get("serving_s")
-            for qn, rec in serving.items()
-            if isinstance(rec, dict)
+            qn: rec.get("serving_s") for qn, rec in serving.items()
         },
-        "n_regressions_beyond_host_speed": len(regressions_beyond_host),
-        # unattributed = neither a documented quality-for-time tradeoff
-        # NOR a root-cause attribution (r5 verdict item 1: the headline
-        # previously ignored the attributions map the detail file carried)
-        "n_unattributed_regressions": sum(
-            1
-            for r in regressions_beyond_host
-            if "documented_tradeoff" not in r and "attribution_key" not in r
-        ),
+        "n_regressions": sum(p["regression"] for p in pairs.values()),
         "detail_file": f"BENCH_DETAIL_r{rnd}.json",
     }
-    print(json.dumps(out))
+
+
+def _serving_probes() -> dict:
+    from prosnet_prefect_pipelines_spark.streaming.serving import (
+        ann_serving_probe,
+        ivfpq_serving_probe,
+        neardup_serving_probe,
+        preference_serving_probe,
+        resolver_serving_probe,
+    )
+
+    return {
+        "stream_neardup_monitor": neardup_serving_probe,
+        "stream_entity_resolution": resolver_serving_probe,
+        "stream_ann_topk_monitor": ann_serving_probe,
+        "stream_ann_ivfpq_monitor": ivfpq_serving_probe,
+        "stream_preference_margin_monitor": preference_serving_probe,
+    }
 
 
 if __name__ == "__main__":

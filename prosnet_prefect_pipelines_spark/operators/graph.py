@@ -61,6 +61,18 @@ def _fixpoint_conf_off(spark) -> str:
     return prev
 
 
+def _driver_rows(raw: DataFrame, threshold: int) -> list | None:
+    """``raw``'s rows when there are at most ``threshold``, else None.
+
+    One limit-collect probes the size AND fetches the rows, instead of a
+    full count() job followed by a collect() job (2 scans of the edge
+    subquery -> 1). Above the threshold the limit stops early, so at most
+    ``threshold + 1`` rows reach the driver before the distributed path.
+    """
+    rows = raw.limit(threshold + 1).collect()
+    return rows if len(rows) <= threshold else None
+
+
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",
@@ -93,10 +105,11 @@ def transitive_closure(
     spark = edges.sparkSession
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # raw (pre-distinct) count: scan-only, no shuffle; a conservative upper
-    # bound on the distinct edge count for the strategy pick
-    if raw.count() <= driver_threshold:
-        return _closure_driver(spark, raw, reflexive)
+    # raw (pre-distinct) rows: a conservative upper bound on the distinct
+    # edge count for the strategy pick
+    rows = _driver_rows(raw, driver_threshold)
+    if rows is not None:
+        return _closure_driver(spark, rows, reflexive)
     prev_cp = _fixpoint_conf_off(spark)
     try:
         e = _materialize(raw.distinct(), eager=True)
@@ -128,7 +141,7 @@ def transitive_closure(
     return result
 
 
-def _closure_driver(spark, raw: DataFrame, reflexive: bool) -> DataFrame:
+def _closure_driver(spark, edge_rows: list, reflexive: bool) -> DataFrame:
     """Per-node BFS over a collected edge list — O(|closure|) total work.
 
     Cycle-safe (visited sets); no iteration cap needed. Dedup of the raw
@@ -139,7 +152,7 @@ def _closure_driver(spark, raw: DataFrame, reflexive: bool) -> DataFrame:
 
     fwd = defaultdict(set)
     nodes = set()
-    for a, b in raw.collect():
+    for a, b in edge_rows:
         fwd[a].add(b)
         nodes.add(a)
         nodes.add(b)
@@ -247,13 +260,9 @@ def descendants(
     spark = edges.sparkSession
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    # opt r12 (guide §7 — fewer driver jobs): one limit-collect probes the
-    # threshold AND fetches the edge list, instead of a full count() job
-    # followed by a collect() job (2 scans of the edge subquery -> 1;
-    # above the threshold the limit stops early and we fall through)
-    probe = raw.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        return _descendants_driver(spark, probe, roots, reflexive)
+    rows = _driver_rows(raw, driver_threshold)
+    if rows is not None:
+        return _descendants_driver(spark, rows, roots, reflexive)
     prev_cp = _fixpoint_conf_off(spark)
     try:
         e = _materialize(raw.distinct(), eager=True)
@@ -361,8 +370,9 @@ def connected_components(
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
     )
-    if raw.count() <= driver_threshold:
-        return _components_driver(spark, raw)
+    rows = _driver_rows(raw, driver_threshold)
+    if rows is not None:
+        return _components_driver(spark, rows)
     prev_cp = _fixpoint_conf_off(spark)
     try:
         # local pre-contraction: per-partition union-find replaces each
@@ -495,7 +505,7 @@ def _local_contract(raw: DataFrame) -> DataFrame:
     return raw.mapInPandas(part, "a string, b string")
 
 
-def _components_driver(spark, e: DataFrame) -> DataFrame:
+def _components_driver(spark, edge_rows: list) -> DataFrame:
     """Union-find over a collected edge list (small-graph fast path)."""
     parent: dict = {}
 
@@ -507,7 +517,7 @@ def _components_driver(spark, e: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in e.collect():
+    for a, b in edge_rows:
         if a not in parent:
             parent[a] = a
         if b not in parent:
@@ -916,17 +926,18 @@ def scc_components(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    if raw.count() <= driver_threshold:
-        return _scc_driver(spark, raw)
+    rows = _driver_rows(raw, driver_threshold)
+    if rows is not None:
+        return _scc_driver(spark, rows)
     return _scc_coloring(spark, raw, max_iterations)
 
 
-def _scc_driver(spark, e: DataFrame) -> DataFrame:
+def _scc_driver(spark, edge_rows: list) -> DataFrame:
     """Iterative Tarjan over a collected edge list (small-graph path).
     SCC label = max member, matching the distributed coloring exactly."""
     adj: dict = {}
     nodes: set = set()
-    for a, b in e.collect():
+    for a, b in edge_rows:
         adj.setdefault(a, []).append(b)
         nodes.add(a)
         nodes.add(b)
@@ -1122,8 +1133,9 @@ def temporal_reachability(
     # adaptive like the other graph fixpoints: interaction graphs are
     # usually dimension-sized — below the broadcast threshold, collect
     # once and run heap Dijkstra on (node, arrival) states
-    if raw.count() <= driver_threshold:
-        return _temporal_driver(spark, raw, sources, start_time)
+    rows = _driver_rows(raw, driver_threshold)
+    if rows is not None:
+        return _temporal_driver(spark, rows, sources, start_time)
     prev_cp = _fixpoint_conf_off(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -1163,7 +1175,7 @@ def temporal_reachability(
     return arr
 
 
-def _temporal_driver(spark, raw: DataFrame, sources: list, start_time: int) -> DataFrame:
+def _temporal_driver(spark, edge_rows: list, sources: list, start_time: int) -> DataFrame:
     """Earliest-arrival Dijkstra over collected timestamped edges.
 
     Arrivals only grow along a path, so the min-heap pop order is
@@ -1174,7 +1186,7 @@ def _temporal_driver(spark, raw: DataFrame, sources: list, start_time: int) -> D
     from collections import defaultdict
 
     out = defaultdict(list)
-    for a, b, t in raw.collect():
+    for a, b, t in edge_rows:
         out[a].append((t, b))
     for lst in out.values():
         lst.sort()
@@ -1228,8 +1240,9 @@ def mst_boruvka(
     # adaptive like the other graph fixpoints: below the broadcast
     # threshold, one collect + driver Kruskal (sort + union-find, exact
     # same forest under distinct weights)
-    if raw.count() <= driver_threshold:
-        return _mst_driver(spark, raw)
+    rows = _driver_rows(raw, driver_threshold)
+    if rows is not None:
+        return _mst_driver(spark, rows)
     prev_cp = _fixpoint_conf_off(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -1289,7 +1302,7 @@ def mst_boruvka(
         spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
 
 
-def _mst_driver(spark, raw: DataFrame) -> DataFrame:
+def _mst_driver(spark, edge_rows: list) -> DataFrame:
     """Kruskal over a collected edge list (small-graph fast path).
     Distinct weights make the forest unique, so this matches the
     distributed Borůvka edge-for-edge."""
@@ -1303,7 +1316,7 @@ def _mst_driver(spark, raw: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    rows = sorted(raw.collect(), key=lambda r: (r[2], r[0], r[1]))
+    rows = sorted(edge_rows, key=lambda r: (r[2], r[0], r[1]))
     chosen = []
     for a, b, w in rows:
         parent.setdefault(a, a)

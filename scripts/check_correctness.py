@@ -151,7 +151,7 @@ N_SHARDS = 4
 
 def shard_queries(round_no: int) -> list[str]:
     """Rotating sf0.1 sweep shard (r5 verdict item 5): the full catalog
-    is only swept at sf0.01 each round; the 77 bench headliners get
+    is only swept at sf0.01 each round; the 97 bench headliners get
     sf0.1. This selects the ~1/N_SHARDS of NON-headliner queries whose
     stable name-hash lands on this round's shard, so N_SHARDS
     consecutive rounds cover the whole catalog at the bench scale and a

@@ -1,7 +1,9 @@
 """Round-12 optimization internals pinned.
 
-1. ``graph.descendants`` below the driver threshold probes AND fetches
-   the edge list with ONE limit-collect job (previously a full count()
+1. the ``graph`` entry points with a driver fast path (``descendants``,
+   ``transitive_closure``, ``connected_components``, ``scc_components``,
+   ``temporal_reachability``, ``mst_boruvka``) probe the threshold AND
+   fetch the edge list with ONE limit-collect (previously a full count()
    job followed by a collect() job — two scans of the edge subquery);
 2. ``city_index_docs``' P279 subtree and scalar-builder Column trees
    are memoized per (app_id, sf_dir): once warm, constructing the
@@ -11,32 +13,78 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_descendants_driver_path_is_single_job(spark):
-    from prosnet_prefect_pipelines_spark.operators import graph as G
-
-    edges = spark.createDataFrame(
-        [("b", "a"), ("c", "b"), ("d", "x")], "src string, dst string"
-    )
-    sc = spark.sparkContext
-    group = "descendants-single-job-probe"
-    sc.setJobGroup(group, "one limit-collect only")
+def _jobs(sc, group, fn):
+    """(result of fn(), number of Spark jobs fn submitted)."""
+    sc.setJobGroup(group, group)
     try:
-        out = G.descendants(edges, ["a"], reflexive=True)
-        ids = list(sc.statusTracker().getJobIdsForGroup(group))
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup("", "")
-    # CollectLimit's executeTake scans partitions incrementally
-    # (1, then 4x more, ...), so the single limit-collect may submit up
-    # to ~3 partial-scan jobs whose UNION is at most one full scan —
-    # strictly less work than the old full count() + full collect()
-    # (measured 0.22-0.43 s -> 0.12-0.17 s on the sf0.1 edge list).
-    assert len(ids) <= 3, f"expected <=3 partial-scan jobs, got {len(ids)}"
-    assert {r.node for r in out.collect()} == {"a", "b", "c"}
+
+
+# entry point -> (call on the edge frame, its result as a set, expected set)
+_DRIVER_PATHS = {
+    "descendants": (
+        lambda G, e: G.descendants(e, ["a"], reflexive=True),
+        lambda out: {r.node for r in out.collect()},
+        {"a", "b", "c"},
+    ),
+    "transitive_closure": (
+        lambda G, e: G.transitive_closure(e),
+        lambda out: {(r.src, r.dst) for r in out.collect()},
+        {("b", "a"), ("c", "b"), ("c", "a"), ("d", "x")},
+    ),
+    "connected_components": (
+        lambda G, e: G.connected_components(e),
+        lambda out: {(r.node, r.comp) for r in out.collect()},
+        {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("x", "d")},
+    ),
+    "scc_components": (
+        lambda G, e: G.scc_components(e),
+        lambda out: {(r.node, r.scc) for r in out.collect()},
+        {("a", "a"), ("b", "b"), ("c", "c"), ("d", "d"), ("x", "x")},
+    ),
+    "temporal_reachability": (
+        lambda G, e: G.temporal_reachability(e, ["c"]),
+        lambda out: {(r.node, r.arrival) for r in out.collect()},
+        {("c", 0), ("b", 2), ("a", 3)},
+    ),
+    "mst_boruvka": (
+        lambda G, e: G.mst_boruvka(e),
+        lambda out: {tuple(r) for r in out.collect()},
+        {("b", "a", 3), ("c", "b", 2), ("d", "x", 1)},
+    ),
+}
+
+
+@pytest.mark.parametrize("entry", sorted(_DRIVER_PATHS))
+def test_graph_driver_path_is_single_probe(spark, entry):
+    """Below the threshold each graph entry point probes the size AND
+    fetches the edge list with one limit-collect, so it submits fewer
+    jobs than a full count() followed by a collect() of its input."""
+    from prosnet_prefect_pipelines_spark.operators import graph as G
+
+    call, result, expected = _DRIVER_PATHS[entry]
+    edges = spark.createDataFrame(
+        [("b", "a", 3), ("c", "b", 2), ("d", "x", 1)],
+        "src string, dst string, t long",
+    ).withColumn("w", F.col("t")).repartition(4)
+    sc = spark.sparkContext
+    _, baseline = _jobs(
+        sc, f"{entry}-count-collect", lambda: (edges.count(), edges.collect())
+    )
+    out, jobs = _jobs(sc, f"{entry}-driver-probe", lambda: call(G, edges))
+    assert jobs < baseline, (
+        f"{entry}: {jobs} jobs, count()+collect() takes {baseline}"
+    )
+    assert result(out) == expected
 
 
 def test_descendants_bfs_result_unchanged_vs_distributed(spark):
