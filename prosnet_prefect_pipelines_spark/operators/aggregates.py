@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from prosnet_prefect_pipelines_spark.session import local_frame
+
 
 def group_concat(col: str | Column, separator: str = " ") -> Column:
     """GROUP_CONCAT(?x) — bag semantics, deterministic sorted order (A3).
@@ -101,7 +103,7 @@ def exact_quantiles(
     ranked = df.select(
         group_col, value_col, tiebreak_col
     ).withColumn("_rn", F.row_number().over(w))
-    pdf = df.sparkSession.createDataFrame([(p,) for p in probs], "p double")
+    pdf = local_frame(df.sparkSession, [(p,) for p in probs], "p double")
     return (
         ranked.join(n, group_col)
         .join(F.broadcast(pdf), F.col("_rn") == F.ceil(F.col("p") * F.col("_n")))

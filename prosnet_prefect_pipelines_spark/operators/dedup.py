@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from prosnet_prefect_pipelines_spark.session import local_frame
+
 PRIME = 2_147_483_647  # 2^31 - 1 (Mersenne), standard minhash modulus
 
 
@@ -670,7 +672,7 @@ def simhash_signatures(
     else:
         tok = tok.select("id", (F.abs(F.xxhash64("token")) % PRIME).alias("tid"))
     bits_rows = [(h, 31 * h + 7, 113 * h + 41) for h in range(bits)]
-    bdf = tok.sparkSession.createDataFrame(bits_rows, "h int, a long, b long")
+    bdf = local_frame(tok.sparkSession, bits_rows, "h int, a long, b long")
     per_bit = (
         tok.join(F.broadcast(bdf))
         .withColumn("sign", ((F.col("tid") * F.col("a") + F.col("b")) % PRIME % 2) * 2 - 1)

@@ -30,6 +30,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
+
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 
 def _materialize(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -174,7 +177,7 @@ def _closure_driver(spark, edge_rows: list, reflexive: bool) -> DataFrame:
         # a cycle already yields (n, n) — don't emit the zero-length
         # path a second time (bag semantics)
         pairs.extend((n, n) for n in nodes if n not in self_reaching)
-    return spark.createDataFrame(pairs, "src string, dst string")
+    return local_frame(spark, pairs, "src string, dst string")
 
 
 def _closure_frontier(e: DataFrame, max_iterations: int) -> DataFrame:
@@ -269,7 +272,7 @@ def descendants(
         n_edges = e.count()
         if n_edges < 10 * driver_threshold:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
-        seed = spark.createDataFrame([(r,) for r in roots], "node string")
+        seed = local_frame(spark, [(r,) for r in roots], "node string")
         reached = [_materialize(seed, eager=True)]
         frontier = reached[0]
 
@@ -301,7 +304,7 @@ def descendants(
         spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
     if not reflexive:
         result = result.join(
-            spark.createDataFrame([(r,) for r in roots], "node string"),
+            local_frame(spark, [(r,) for r in roots], "node string"),
             on="node",
             how="left_anti",
         )
@@ -327,7 +330,7 @@ def _descendants_driver(
                 dq.append(child)
     if not reflexive:
         seen -= set(roots)
-    return spark.createDataFrame([(x,) for x in sorted(seen)], "node string")
+    return local_frame(spark, [(x,) for x in sorted(seen)], "node string")
 
 
 def connected_components(
@@ -530,10 +533,7 @@ def _components_driver(spark, edge_rows: list) -> DataFrame:
             parent[hi] = lo
 
     rows = [(node, find(node)) for node in parent]
-    out = spark.createDataFrame(rows, "node string, comp string")
-    # parallelize() slices tiny row lists into 1-2 partitions; leave as-is —
-    # downstream joins broadcast a frame this size anyway
-    return out
+    return local_frame(spark, rows, "node string, comp string")
 
 
 def bfs_levels(
@@ -564,7 +564,7 @@ def bfs_levels(
         )
         if e.count() < 2_000_000:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
-        seed = spark.createDataFrame([(r,) for r in roots], "node string")
+        seed = local_frame(spark, [(r,) for r in roots], "node string")
         levels = [_materialize(seed.withColumn("hops", F.lit(0).cast("long")), eager=True)]
         frontier = levels[0]
 
@@ -663,6 +663,10 @@ def triangle_count(
     return closed.agg(F.count(F.lit(1)).alias("triangles"))
 
 
+# edge count up to which sssp_weighted runs heap Dijkstra on the driver
+_SSSP_DRIVER_EDGES = 2_000_000
+
+
 def sssp_weighted(
     edges: DataFrame,
     sources: list,
@@ -678,8 +682,8 @@ def sssp_weighted(
     ONLY the frontier (nodes whose distance improved last round) against
     the edge set — one equi-join + one min-aggregation per round, both
     keyed — then merges into the running distance table via min. State
-    is checkpoint-truncated every round, shuffle partitioning is scoped
-    down for small frames (the graph.py fixpoint conventions). Rounds <=
+    is checkpoint-truncated every round (the graph.py fixpoint
+    conventions). Rounds <=
     the weighted-hop diameter; work per round is proportional to the
     frontier's out-edges, not the whole graph — on power-law graphs the
     frontier collapses after a few rounds and later iterations are
@@ -688,38 +692,37 @@ def sssp_weighted(
     Negative weights are rejected (Bellman-Ford detects cycles only with
     |V|-round full relaxation — a different, full-scan contract).
 
-    Adaptive like the other graph fixpoints: below the broadcast-scale
-    edge threshold the whole edge set collects to the driver and runs
-    heap Dijkstra — sparse graphs can have weighted-hop diameters near
-    |V|, which costs the distributed loop one round of fixed job
-    overhead per hop (minutes for a 300-edge chain!) while the driver
-    answers in microseconds. The distributed delta rounds are for edge
+    Adaptive like the other graph fixpoints: up to ``_SSSP_DRIVER_EDGES``
+    edges the whole edge set collects to the driver and runs heap
+    Dijkstra — sparse graphs can have weighted-hop diameters near |V|,
+    which costs the distributed loop one round of fixed job overhead per
+    hop (minutes for a 300-edge chain!) while the driver answers in
+    microseconds. The distributed delta rounds are for edge
     sets that don't fit one machine.
     """
     spark = edges.sparkSession
     if not sources:
         raise ValueError("sssp_weighted: sources must be non-empty")
+    raw = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(weight).cast("long").alias("w"),
+    )
+    rows = _driver_rows(raw, _SSSP_DRIVER_EDGES)
+    if rows is not None:
+        if any(w is not None and w < 0 for _, _, w in rows):
+            raise ValueError("sssp_weighted: negative weights unsupported")
+        return _sssp_driver(spark, rows, sources)
+    # the sibling fixpoints scope shuffles to 8 partitions below 2M
+    # edges; past the driver cut this edge set is larger, so the rounds
+    # keep the session's partitions
     prev_cp = _fixpoint_conf_off(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        e = _materialize(
-            edges.select(
-                F.col(src).alias("src"),
-                F.col(dst).alias("dst"),
-                F.col(weight).cast("long").alias("w"),
-            ),
-            eager=True,
-        )
+        e = _materialize(raw, eager=True)
         if e.filter(F.col("w") < 0).limit(1).count() > 0:
             raise ValueError("sssp_weighted: negative weights unsupported")
-        if e.count() < 2_000_000:
-            return _sssp_driver(spark, e, sources)
-        if e.count() < 2_000_000:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
         dist = _materialize(
-            spark.createDataFrame(
-                [(s, 0) for s in sources], "node string, dist long"
-            ),
+            local_frame(spark, [(s, 0) for s in sources], "node string, dist long"),
             eager=True,
         )
         frontier = dist
@@ -752,19 +755,18 @@ def sssp_weighted(
             )
         return dist
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
 
 
-def _sssp_driver(spark, e: DataFrame, sources: list) -> DataFrame:
+def _sssp_driver(spark, edge_rows: list, sources: list) -> DataFrame:
     """Heap Dijkstra on collected edges — the broadcast-scale fast path.
     Same (node, dist) contract and tie-behavior as the distributed
     rounds (min distance is unique; no tie-breaks needed)."""
     import heapq
 
     adj: dict = {}
-    for r in e.collect():
-        adj.setdefault(r.src, []).append((r.dst, r.w))
+    for a, b, w in edge_rows:
+        adj.setdefault(a, []).append((b, w))
     dist: dict = {}
     heap = [(0, s) for s in sources]
     heapq.heapify(heap)
@@ -776,9 +778,7 @@ def _sssp_driver(spark, e: DataFrame, sources: list) -> DataFrame:
         for nxt, w in adj.get(node, ()):
             if nxt not in dist:
                 heapq.heappush(heap, (d + w, nxt))
-    return spark.createDataFrame(
-        [(n, d) for n, d in dist.items()], "node string, dist long"
-    )
+    return local_frame(spark, list(dist.items()), "node string, dist long")
 
 
 def kcore_peel(
@@ -990,7 +990,7 @@ def _scc_driver(spark, edge_rows: list) -> DataFrame:
                 low[u] = min(low[u], low[v])
 
     rows = [(n, max(comp)) for comp in sccs for n in comp]
-    return spark.createDataFrame(rows, "node string, scc string")
+    return local_frame(spark, rows, "node string, scc string")
 
 
 def _scc_coloring(spark, e: DataFrame, max_iterations: int) -> DataFrame:
@@ -1130,21 +1130,24 @@ def temporal_reachability(
         F.col(dst).alias("dst"),
         F.col(time_col).cast("long").alias("t"),
     )
+    # one (node, arrival) schema for both paths, node typed like the edges
+    schema = StructType([
+        StructField("node", raw.schema["src"].dataType),
+        StructField("arrival", LongType()),
+    ])
     # adaptive like the other graph fixpoints: interaction graphs are
     # usually dimension-sized — below the broadcast threshold, collect
     # once and run heap Dijkstra on (node, arrival) states
     rows = _driver_rows(raw, driver_threshold)
     if rows is not None:
-        return _temporal_driver(spark, rows, sources, start_time)
+        return _temporal_driver(spark, rows, sources, start_time, schema)
     prev_cp = _fixpoint_conf_off(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         e = _materialize(raw, eager=True)
         if e.count() < 10 * driver_threshold:
             spark.conf.set("spark.sql.shuffle.partitions", "8")
-        arr = spark.createDataFrame(
-            [(s, int(start_time)) for s in sources], ["node", "arrival"]
-        )
+        arr = local_frame(spark, [(s, int(start_time)) for s in sources], schema)
         frontier = arr
         for _ in range(max_iterations):
             relaxed = (
@@ -1175,7 +1178,9 @@ def temporal_reachability(
     return arr
 
 
-def _temporal_driver(spark, edge_rows: list, sources: list, start_time: int) -> DataFrame:
+def _temporal_driver(
+    spark, edge_rows: list, sources: list, start_time: int, schema: StructType
+) -> DataFrame:
     """Earliest-arrival Dijkstra over collected timestamped edges.
 
     Arrivals only grow along a path, so the min-heap pop order is
@@ -1206,8 +1211,7 @@ def _temporal_driver(spark, edge_rows: list, sources: list, start_time: int) -> 
         for et, w in lst[i:]:
             if w not in arr:
                 heapq.heappush(heap, (et, w))
-    rows = list(arr.items())
-    return spark.createDataFrame(rows, ["node", "arrival"])
+    return local_frame(spark, list(arr.items()), schema)
 
 
 def mst_boruvka(
@@ -1242,7 +1246,9 @@ def mst_boruvka(
     # same forest under distinct weights)
     rows = _driver_rows(raw, driver_threshold)
     if rows is not None:
-        return _mst_driver(spark, rows)
+        # the edge frame's own types, so an empty forest has the
+        # distributed path's schema
+        return _mst_driver(spark, rows, raw.schema)
     prev_cp = _fixpoint_conf_off(spark)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -1302,7 +1308,7 @@ def mst_boruvka(
         spark.conf.set("spark.sql.constraintPropagation.enabled", prev_cp)
 
 
-def _mst_driver(spark, edge_rows: list) -> DataFrame:
+def _mst_driver(spark, edge_rows: list, schema: StructType) -> DataFrame:
     """Kruskal over a collected edge list (small-graph fast path).
     Distinct weights make the forest unique, so this matches the
     distributed Borůvka edge-for-edge."""
@@ -1325,4 +1331,4 @@ def _mst_driver(spark, edge_rows: list) -> DataFrame:
         if ra != rb:
             parent[rb] = ra
             chosen.append((a, b, w))
-    return spark.createDataFrame(chosen, ["a", "b", "w"])
+    return local_frame(spark, chosen, schema)

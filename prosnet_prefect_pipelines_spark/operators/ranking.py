@@ -19,8 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from prosnet_prefect_pipelines_spark.operators.graph import _materialize
+from prosnet_prefect_pipelines_spark.operators.graph import _driver_rows, _materialize
 from prosnet_prefect_pipelines_spark.operators.textstats import tokens
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 PR_SCALE = 1_000_000_000_000  # 1e12: rank = rank_scaled / PR_SCALE
 
@@ -161,8 +162,9 @@ def _pagerank_driver(
         }
     from pyspark.sql.types import LongType, StructField, StructType
 
-    out = spark.createDataFrame(
-        [(node, rv) for node, rv in r.items()],
+    out = local_frame(
+        spark,
+        list(r.items()),
         StructType(
             [StructField("node", node_type), StructField("r", LongType())]
         ),
@@ -205,10 +207,9 @@ def pagerank(
     # 2 shuffle barriers x iterations of scheduling for a driver-sized
     # edge list is pure overhead (measured 2.9 -> ~1 s warm at sf0.1 on
     # the 25-node trade graph). Large graphs take the loop below.
-    # bounded probe: limit(k+1).count() never scans past k+1 rows, so a
-    # 100 TB edge list doesn't pay a full count just to learn it is big
-    if e.limit(driver_threshold + 1).count() <= driver_threshold:
-        rows = [(row[0], row[1]) for row in e.collect()]
+    # one bounded limit-collect probes the size AND fetches the edges
+    rows = _driver_rows(e, driver_threshold)
+    if rows is not None:
         if rows:
             return _pagerank_driver(
                 e.sparkSession, rows, e.schema["src"].dataType,
@@ -218,7 +219,7 @@ def pagerank(
         # universe; return an explicit empty frame instead of letting
         # the distributed loop divide by n = 0
         return (
-            e.sparkSession.createDataFrame([], e.schema)
+            local_frame(e.sparkSession, [], e.schema)
             .select(
                 F.col("src").alias("node"),
                 F.lit(0).cast("long").alias("rank_scaled"),

@@ -20,7 +20,7 @@ from prosnet_prefect_pipelines_spark.operators import graph as G
 from prosnet_prefect_pipelines_spark.operators import relational as R
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.tpch_graph import TRIPLES_CTE, triples_from_tpch
-from prosnet_prefect_pipelines_spark.session import memo_fixture
+from prosnet_prefect_pipelines_spark.session import local_frame, memo_fixture
 
 CITY_ROOT = "urn:class/7"
 
@@ -151,7 +151,8 @@ def q_city_index_docs(spark, sf_dir):
     # filtered all-pairs closure: O(|subtree|) work instead of
     # O(|V| * depth) — the plan that survives a 100x scale-up
     # (memoized per (app, sf_dir) — see _city_subtree_cls)
-    subtree = spark.createDataFrame(
+    subtree = local_frame(
+        spark,
         [(c,) for c in _city_subtree_cls(spark, triples, sf_dir)], "cls string"
     )
 

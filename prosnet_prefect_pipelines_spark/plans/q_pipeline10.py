@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.session import memo_fixture
+from prosnet_prefect_pipelines_spark.session import local_frame, memo_fixture
 
 # ---------------------------------------------------------------------------
 # k-anonymity audit
@@ -291,7 +291,8 @@ def q_manifest_snapshot_roundtrip(spark, sf_dir):
     manifest_commit(docs.filter(F.col("doc_id") % 3 == 1), table)
     s1 = read_snapshot(spark, table, 1).count()
     s2 = read_snapshot(spark, table, 2).count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(1, s1), (2, s2)], "snapshot int, n_rows long"
     )
 
@@ -1395,7 +1396,7 @@ def q_ann_autotune_plan(spark, sf_dir):
         .select("qid", "xid", "qrank", adc_cos_lut(_PQ_SUB).alias("adc_cos"))
     )
 
-    configs = spark.createDataFrame(_AUTOTUNE_CONFIGS, "np int, pool int")
+    configs = local_frame(spark, _AUTOTUNE_CONFIGS, "np int, pool int")
     cand_all = scored.join(
         F.broadcast(configs), F.col("qrank") <= F.col("np")
     ).select("np", "pool", "qid", "xid", "adc_cos")

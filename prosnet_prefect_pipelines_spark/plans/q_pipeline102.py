@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # first-significant-digit Benford probabilities log10(1 + 1/d),
 # rounded to 6 dp ONCE here and embedded as literals on both engines
@@ -78,7 +79,7 @@ def _first_digit_counts(spark, sf_dir):
 
 
 def _benford_dim(spark):
-    return spark.createDataFrame(_BENFORD_P, "digit int, p double")
+    return local_frame(spark, _BENFORD_P, "digit int, p double")
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # per-order score and label (the batch-105/106 model, order-granular)
 _SCORED_CTE = """
@@ -177,7 +178,7 @@ def q_precision_recall_at_k(spark, sf_dir):
     Ref semantics: SURVEY §2 O1/A2/J4 (extension X-PRATK)."""
     sc = _scored(spark, sf_dir)
     top = _topk_a(spark, sf_dir, 50)
-    ks = spark.createDataFrame([(1,), (5,), (10,), (20,), (50,)], "k long")
+    ks = local_frame(spark, [(1,), (5,), (10,), (20,), (50,)], "k long")
     tot = sc.agg(F.sum("y").alias("n_rel"))
     j = top.crossJoin(F.broadcast(ks)).crossJoin(F.broadcast(tot))
     hits = F.sum(F.when(F.col("pos") <= F.col("k"), F.col("y")).otherwise(0))
@@ -361,7 +362,7 @@ def q_rbo_truncated_10(spark, sf_dir):
         F.coalesce(F.col("ra"), F.lit(11)).alias("ra"),
         F.coalesce(F.col("rb"), F.lit(11)).alias("rb"),
     )
-    wdim = spark.createDataFrame(_RBO_W, "d long, wt double")
+    wdim = local_frame(spark, _RBO_W, "d long, wt double")
     depth = (
         both.crossJoin(F.broadcast(wdim))
         .groupBy("d", "wt")

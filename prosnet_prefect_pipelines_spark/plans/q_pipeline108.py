@@ -41,6 +41,7 @@ from prosnet_prefect_pipelines_spark.operators.sampling import (
 )
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_curation import _frac_sql
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 _SALT = "conf"
 
@@ -208,7 +209,8 @@ def q_quantile_calibration_report(spark, sf_dir):
     Ref semantics: SURVEY §2 A2/O1/J4 (extension X-QCALIB)."""
     _, _, cal, test = _split_model(spark, sf_dir)
     caln = cal.agg(F.count(F.lit(1)).alias("nc"))
-    levels = spark.createDataFrame(
+    levels = local_frame(
+        spark,
         [(0.5,), (0.75,), (0.9,), (0.95,), (0.99,)], "lv double"
     )
     ks = levels.crossJoin(F.broadcast(caln)).select(

@@ -34,6 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # labeled distinct-value table (X = returned, Y = kept), batch-110 shape
 _VALS_SQL = """
@@ -226,7 +227,7 @@ def q_qte_decile_gaps(spark, sf_dir):
         vals, [F.col("x").asc()], {"cc1": F.col("c1"), "cc2": F.col("c2")}
     )
     cum = cum.select("x", "cc1", "cc2")
-    dims = spark.createDataFrame([(d,) for d in range(1, 10)], "d long")
+    dims = local_frame(spark, [(d,) for d in range(1, 10)], "d long")
     j = cum.crossJoin(F.broadcast(dims)).crossJoin(F.broadcast(tot))
     q = j.groupBy("d").agg(
         F.min(

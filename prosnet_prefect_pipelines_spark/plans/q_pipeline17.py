@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # --- embedding drift ---------------------------------------------------------------------
 
@@ -119,7 +120,8 @@ def q_mixture_budget_plan(spark, sf_dir):
     t = F.trim(F.col("text"))
     tokens = F.length(t) - F.length(F.regexp_replace(t, " ", "")) + 1
     avail = docs.groupBy("source").agg(F.sum(tokens).cast("long").alias("tokens"))
-    weights = spark.createDataFrame(
+    weights = local_frame(
+        spark,
         [("src0", 50), ("src1", 30), ("src2", 15), ("src3", 5)], "source string, weight long"
     )
     budget = avail.agg(F.expr("sum(tokens) div 2").alias("total"))

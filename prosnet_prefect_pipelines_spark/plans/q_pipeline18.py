@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # --- stream-static join ------------------------------------------------------------------
 
@@ -44,7 +45,8 @@ def q_stream_static_join(spark, sf_dir):
     )
 
     ev = _events_stream(spark, sf_dir)
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("view", "passive"), ("click", "active"), ("purchase", "active"),
          ("signup", "active"), ("logout", "passive")],
         "event_type string, category string",

@@ -15,6 +15,7 @@ from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.operators import graph as G
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 
 def mst_edges(spark, sf_dir):
@@ -210,5 +211,5 @@ def q_fk_integrity_audit(spark, sf_dir):
         audit("lineitem->part", li, "l_partkey", part, "p_partkey"),
     ]
     return (
-        li.sparkSession.createDataFrame(rows, "fk string, orphans long, n_child long")
+        local_frame(li.sparkSession, rows, "fk string, orphans long, n_child long")
     )

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 _WIN = 16
 _STRIDE = 12
@@ -168,7 +169,8 @@ def q_observed_metrics(spark, sf_dir):
     )
     observed.count()  # the action that populates the observation
     row = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(row["n_rows"]),

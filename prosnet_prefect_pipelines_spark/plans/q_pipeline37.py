@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.session import memo_fixture
+from prosnet_prefect_pipelines_spark.session import local_frame, memo_fixture
 
 _ROLE = "analyst_eu"
 
@@ -68,7 +68,8 @@ def q_rls_masked_view(spark, sf_dir):
     segment filter into the scan and the mask is one CASE projection;
     no per-row callback, no enforcement UDF."""
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    policy = spark.createDataFrame(
+    policy = local_frame(
+        spark,
         _POLICY, "role string, segment string, see_balance boolean"
     ).filter(F.col("role") == _ROLE)
     return cust.join(

@@ -34,6 +34,7 @@ from prosnet_prefect_pipelines_spark.plans.q_dedup import (
     lsh_pairs,
 )
 from prosnet_prefect_pipelines_spark.plans.q_pipeline2 import _EXPECTED_CTE, _spark_urls
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 RECALL_SQL = f"""
 WITH {MINHASH_PAIR_CTES},
@@ -110,7 +111,7 @@ def q_domain_blocklist_filter(spark, sf_dir):
     urls = _spark_urls(spark, sf_dir)
     host = F.lower(W.url_host(F.col("url")))
     hosts = urls.select("doc_id", "url", host.alias("host"))
-    bl = spark.createDataFrame([(d,) for d in _BLOCKLIST], "d string")
+    bl = local_frame(spark, [(d,) for d in _BLOCKLIST], "d string")
     joined = hosts.join(
         F.broadcast(bl),
         (F.col("host") == F.col("d"))
@@ -174,7 +175,7 @@ def q_domain_blocklist_prefix_join(spark, sf_dir):
         F.reverse(host).alias("rhost"),
         F.substring(F.reverse(host), 1, 2).alias("bucket"),
     )
-    bl = spark.createDataFrame([(d,) for d in _BLOCKLIST], "d string").select(
+    bl = local_frame(spark, [(d,) for d in _BLOCKLIST], "d string").select(
         "d",
         F.reverse("d").alias("rd"),
         F.substring(F.reverse("d"), 1, 2).alias("bucket"),

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 _US_HOUR = 3_600_000_000
 
@@ -186,7 +187,8 @@ def q_point_in_polygon(spark, sf_dir):
         F.expr("CAST(event_id % 29 - 6 AS BIGINT)").alias("x"),
         F.expr("CAST((event_id * 7) % 31 - 3 AS BIGINT)").alias("y"),
     )
-    edges = spark.createDataFrame(
+    edges = local_frame(
+        spark,
         [(i, ax, ay, bx, by) for i, (ax, ay, bx, by) in enumerate(_EDGES)],
         "eid int, ax long, ay long, bx long, by_ long",
     )

@@ -32,6 +32,7 @@ from pyspark.sql.window import Window
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_pipeline15 import _hash48, _hash48_sql
 from prosnet_prefect_pipelines_spark.plans.q_pipeline28 import _GRAPH_SQL, _und_edges
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 DIVERSITY_SQL = """
 WITH per AS (
@@ -113,7 +114,7 @@ def q_rich_club(spark, sf_dir):
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
-    ks = spark.createDataFrame([(k,) for k in _KS], "k int")
+    ks = local_frame(spark, [(k,) for k in _KS], "k int")
     club = (
         ks.join(deg, deg.d > ks.k, "left")
         .groupBy("k")

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 FD_SQL = """
 WITH fd1 AS (
@@ -146,7 +147,7 @@ def q_candidate_key_profile(spark, sf_dir):
     for name, cols in _COMBOS:
         nd = li.select(*cols).distinct().count()
         outs.append((name, n_rows, nd))
-    df = spark.createDataFrame(outs, "combo string, n_rows long, n_distinct long")
+    df = local_frame(spark, outs, "combo string, n_rows long, n_distinct long")
     return df.select(
         "combo",
         "n_rows",

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from prosnet_prefect_pipelines_spark.operators import sampling as SA
 from prosnet_prefect_pipelines_spark.operators.aggregates import exact_quantiles
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # blocked record linkage (Fellegi-Sunter-shaped integer scoring)
@@ -218,7 +219,8 @@ def q_bpe_vocab(spark, sf_dir):
     values on a golden corpus."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     merges = LM.bpe_train(docs, "text", n_merges=_BPE_MERGES)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, l, rt, c) for r, l, rt, c in merges],
         "rank int, left string, right string, pair_count long",
     )

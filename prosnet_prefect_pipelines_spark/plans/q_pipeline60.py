@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from prosnet_prefect_pipelines_spark.operators.sampling import portable_fraction
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_curation import _frac_sql
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 N_BUCKETS = 10
 BUCKET_W = 50.0
@@ -186,7 +187,7 @@ def q_consistent_hash_moves(spark, sf_dir):
     )
 
     def nodes_df(names):
-        df = spark.createDataFrame([(n,) for n in names], "name string")
+        df = local_frame(spark, [(n,) for n in names], "name string")
         return df.select(
             "name", portable_fraction(F.col("name"), "#ring").alias("pos")
         )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # deletion-impact cascade (right-to-erasure planning).
@@ -74,7 +75,8 @@ def q_deletion_impact_report(spark, sf_dir):
         t = total_df.count()
         n = affected_df.count()
         rows.append((tbl, n, t, n * 1_000_000 // t))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "tbl string, n_affected long, n_total long, share_ppm long"
     )
 
@@ -142,7 +144,8 @@ def q_pseudonymize_consistent(spark, sf_dir):
         .count()
     )
     ok_flag = 1 if (n_raw == n_pseudo and n_coll == 0) else 0
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_raw, n_pseudo, n_coll, ok_flag)],
         "n_join_raw long, n_join_pseudo long, n_surrogate_collisions long,"
         " referentially_consistent int",

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.model import read_events
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # CUPED variance reduction: pre-period covariate adjustment.
@@ -348,4 +349,4 @@ def q_funnel_strict_windows(spark, sf_dir):
         ("click_within_7d", c.count()),
         ("purchase_within_7d", p.count()),
     ]
-    return spark.createDataFrame(rows, "step string, n_users long")
+    return local_frame(spark, rows, "step string, n_users long")

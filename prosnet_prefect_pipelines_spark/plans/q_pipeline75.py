@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # ABC / XYZ classification.
@@ -159,7 +160,7 @@ def q_roc_points_fixed(spark, sf_dir):
         F.when(F.col("lang") == "en", 1).otherwise(0).alias("label"),
         score.alias("score"),
     )
-    th = spark.createDataFrame([(1,), (2,), (3,), (5,), (8,)], "thr long")
+    th = local_frame(spark, [(1,), (2,), (3,), (5,), (8,)], "thr long")
     fan = scored.join(F.broadcast(th))
     return fan.groupBy("thr").agg(
         F.sum(F.when((F.col("score") >= F.col("thr")) & (F.col("label") == 1), 1).otherwise(0)).cast("long").alias("tp"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # NULL ordering matrix.
@@ -136,7 +137,7 @@ def q_timezone_conversion_matrix(spark, sf_dir):
         ("2024-07-04 00:00:00",),
         ("2024-11-03 05:30:00",),
     ]
-    src = spark.createDataFrame(rows, "label string").select(
+    src = local_frame(spark, rows, "label string").select(
         "label", F.to_timestamp("label").alias("ts")
     )
     fmt = "yyyy-MM-dd HH:mm:ss"

@@ -108,7 +108,7 @@ GROUP BY lang
 # text-bearing keep2 stays unpinned (the r11 block-manager judgment)
 # and dbb stays transient inside one build. reset_memo_fixtures drops
 # the fixture, so bench repeat-cold passes pay the full build.
-from prosnet_prefect_pipelines_spark.session import memo_fixture  # noqa: E402
+from prosnet_prefect_pipelines_spark.session import local_frame, memo_fixture  # noqa: E402
 
 
 def _v3_keep3(spark, sf_dir):
@@ -371,4 +371,4 @@ def q_dedup_funnel_report(spark, sf_dir):
         ("exact_dedup", exact_kept.count()),
         ("quality_gate", quality_kept.count()),
     ]
-    return spark.createDataFrame(rows, "stage string, n long")
+    return local_frame(spark, rows, "stage string, n long")

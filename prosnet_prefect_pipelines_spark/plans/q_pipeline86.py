@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # shared graph: the orders-derived co-residue graph (same family as
 # triangle_count / edge_triangle_support).
@@ -247,7 +248,8 @@ def q_network_robustness_report(spark, sf_dir):
     before = e.count()
     after = survivors.count()
     hub_deg = hub.collect()[0].d
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(before, after, hub_deg, before - after)],
         "edges_before long, edges_after long, hub_degree long, edges_lost long",
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # category mix trend.
@@ -192,7 +193,8 @@ def q_pareto_share_report(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("_pn"),
         F.sum("cents").cast("long").alias("_ptot"),
     )
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(1,), (5,), (10,), (20,), (50,)], "pct long"
     ).crossJoin(F.broadcast(stats))
     j = F.broadcast(spine).join(
@@ -249,7 +251,8 @@ def q_vocab_growth_curve(spark, sf_dir):
     ).filter(F.col("term") != "")
     first_seen = toks.groupBy("term").agg(F.min("doc_id").alias("d0"))
     nd = toks.agg(F.max("doc_id").alias("max_doc"))
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(2,), (4,), (6,), (8,), (10,)], "decile long"
     )
     fan = F.broadcast(spine).crossJoin(first_seen.join(F.broadcast(nd)))

@@ -13,6 +13,7 @@ from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.model import read_events
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # local clustering coefficient per node.
@@ -364,7 +365,8 @@ def q_topk_stability_report(spark, sf_dir):
     t2 = ranked.filter(F.col("half") == 2).select("grp")
     n1, n2 = t1.count(), t2.count()
     k = t1.join(t2, "grp", "left_semi").count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n1, n2, k, k * 1_000_000 // (n1 + n2 - k))],
         "n_top1 long, n_top2 long, n_common long, jaccard_ppm long",
     )

@@ -20,6 +20,7 @@ from prosnet_prefect_pipelines_spark.model import GEONAMES_COLUMNS
 from prosnet_prefect_pipelines_spark.operators.relational import drop_url_templates
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.tpch_graph import TRIPLES_CTE, triples_from_tpch
+from prosnet_prefect_pipelines_spark.session import local_frame
 from prosnet_prefect_pipelines_spark.sources.geonames import build_place_docs, read_geonames_tsv
 
 FIXTURE_TSV = os.path.join(
@@ -254,7 +255,7 @@ def q_swagger_route_discovery(spark, sf_dir):
         {"paths": {p: {"get": {}} for t in types
                    for p in (f"/apis/api/{t}", "/apis/api/" + t + "/{id}")}}
     )
-    spec_df = spark.createDataFrame([(spec,)], "spec string")
+    spec_df = local_frame(spark, [(spec,)], "spec string")
     routes = spec_df.select(
         F.explode(
             F.json_object_keys(F.get_json_object("spec", "$.paths"))

@@ -6,7 +6,9 @@ nevertheless written for a multi-executor cluster at ~100 TB:
 - AQE on (runtime re-plan, skew-join splitting, partition coalescing)
 - shuffle partitions sized to cores locally; on a real cluster this is
   overridden by AQE's coalescing from a high initial number
-- Arrow enabled for the few pandas-UDF paths (dedup/multimodal)
+- Arrow enabled for the few pandas-UDF paths (dedup/multimodal); frames
+  built from driver-side rows go through Arrow too (:func:`local_frame`),
+  whatever the session's conf
 - session timezone pinned to UTC so timestamp semantics are stable and
   comparable with external oracles
 """
@@ -15,8 +17,11 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "prosnet_spark", cpus: int | None = None) -> SparkSession:
@@ -100,6 +105,91 @@ def fan_out(df, spark: SparkSession | None = None):
     frames)."""
     sess = spark or df.sparkSession
     return df.repartition(sess.sparkContext.defaultParallelism)
+
+
+def _int_text(v):
+    """An int in a string column as ``createDataFrame(list)`` stores it
+    (the JVM's decimal rendering, which ``str`` matches); other non-str
+    values raise rather than render differently from the JVM."""
+    if v is None or isinstance(v, str):
+        return v
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    raise TypeError(f"{type(v).__name__} value {v!r} for a string column")
+
+
+def _arrow_column(values, field: pa.Field) -> pa.Array:
+    """One typed Arrow column, checked like ``createDataFrame(list)``'s
+    verifier: a mistyped value, an int out of the column's range or a
+    null in a non-nullable column raises."""
+    if pa.types.is_integer(field.type):
+        # pa.array(values, type=int) would truncate a float silently;
+        # infer first, then a safe cast raises on overflow
+        arr = pa.array(values)
+        if not (pa.types.is_integer(arr.type) or pa.types.is_null(arr.type)):
+            raise TypeError(f"column {field.name}: {arr.type} values for {field.type}")
+        arr = arr.cast(field.type)
+    elif pa.types.is_string(field.type):
+        try:
+            arr = pa.array(values, type=field.type)
+        except pa.ArrowTypeError:
+            # integer node ids reach the graph operators' string columns
+            arr = pa.array([_int_text(v) for v in values], type=field.type)
+    elif pa.types.is_floating(field.type):
+        # pa.array(values, type=double) would take an int; the list path
+        # takes only float
+        bad = next((v for v in values if v is not None and type(v) is not float), None)
+        if bad is not None:
+            raise TypeError(f"column {field.name}: {type(bad).__name__} value for {field.type}")
+        arr = pa.array(values, type=field.type)
+    else:
+        arr = pa.array(values, type=field.type)
+    if not field.nullable and arr.null_count:
+        raise ValueError(f"column {field.name}: null in a non-nullable column")
+    return arr
+
+
+# Above this many rows a local_frame is a JVM RDD of Arrow batches, not
+# a LocalRelation: each scan of a LocalRelation re-serializes its rows
+# into the tasks, which past ~100k short rows is slower than the list
+# path it replaced (300k rows, 3 scans: 3.7-4.1 s vs 3.0 s; Arrow
+# batches 1.1-1.5 s; 4-core VM).
+_LOCAL_RELATION_ROWS = 100_000
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str | StructType) -> DataFrame:
+    """DataFrame of driver-side ``rows`` (tuples in ``schema``'s column
+    order), typed by a DDL string or a ``StructType``.
+
+    The one way the engine builds a frame from Python values. The rows
+    go to the JVM as one Arrow table. Up to ``_LOCAL_RELATION_ROWS``
+    rows the result is a ``LocalTableScan`` with exact size statistics;
+    above, a scan of the Arrow batches held in the JVM. Either way no
+    Python worker runs: ``createDataFrame(list)`` instead builds a
+    pickled ``parallelize`` RDD, and every scan of it runs in Python
+    worker processes.
+    """
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    width = len(arrow)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} values")
+    cols = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [_arrow_column(c, f) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    if len(rows) <= _LOCAL_RELATION_ROWS:
+        return spark.createDataFrame(table, schema)
+    # Spark picks the batch RDD over a LocalRelation by this threshold,
+    # read while the frame is created
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        return spark.createDataFrame(table, schema)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _checkpoint_rdd(df):

@@ -25,6 +25,8 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from prosnet_prefect_pipelines_spark.session import local_frame
+
 
 class TokenBucket:
     """Minimal token bucket: `rate` requests/sec, burst `capacity`."""
@@ -64,8 +66,8 @@ def paginated_fetch(
     (wikidata_index.py:129 models 6 x 30 s; tests shrink the constants).
     """
     offsets = list(range(0, total, page_size))
-    offsets_df = spark.createDataFrame(
-        [(o,) for o in offsets], "offset long"
+    offsets_df = local_frame(
+        spark, [(o,) for o in offsets], "offset long"
     ).repartition(min(num_partitions, max(len(offsets), 1)))
 
     def run(rows: Iterator[Row]) -> Iterator[Row]:

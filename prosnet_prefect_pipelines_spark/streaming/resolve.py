@@ -45,7 +45,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.operators.graph import connected_components
-from prosnet_prefect_pipelines_spark.session import unpersist_checkpoint
+from prosnet_prefect_pipelines_spark.session import local_frame, unpersist_checkpoint
+
+_MAPPING_SCHEMA = "node string, comp string"
 
 
 class IncrementalResolver:
@@ -85,8 +87,8 @@ class IncrementalResolver:
         """One-time promotion of the driver dict into the DataFrame
         state; later batches pay the distributed contraction path."""
         rows = [(n, self._find(n)) for n in self._parent]
-        self._mapping = self._spark.createDataFrame(
-            rows, "node string, comp string"
+        self._mapping = local_frame(
+            self._spark, rows, _MAPPING_SCHEMA
         ).localCheckpoint()
         self._parent = {}
         self._driver = False
@@ -198,10 +200,9 @@ class IncrementalResolver:
         """(node, comp) for every node seen so far (min-member labels)."""
         if self._driver:
             rows = [(n, self._find(n)) for n in self._parent]
-            return self._spark.createDataFrame(rows, "node string, comp string")
+            return local_frame(self._spark, rows, _MAPPING_SCHEMA)
         if self._mapping is None:
-            schema = "node string, comp string"
-            return self._spark.createDataFrame([], schema)
+            return local_frame(self._spark, [], _MAPPING_SCHEMA)
         return self._mapping
 
     def save(self, path: str) -> None:

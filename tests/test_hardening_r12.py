@@ -29,37 +29,53 @@ def _jobs(sc, group, fn):
         sc.setJobGroup("", "")
 
 
-# entry point -> (call on the edge frame, its result as a set, expected set)
+# entry point -> (call on the edge frame, its result as a set, expected set);
+# each call gets the graph and ranking operator modules
 _DRIVER_PATHS = {
     "descendants": (
-        lambda G, e: G.descendants(e, ["a"], reflexive=True),
+        lambda G, R, e: G.descendants(e, ["a"], reflexive=True),
         lambda out: {r.node for r in out.collect()},
         {"a", "b", "c"},
     ),
     "transitive_closure": (
-        lambda G, e: G.transitive_closure(e),
+        lambda G, R, e: G.transitive_closure(e),
         lambda out: {(r.src, r.dst) for r in out.collect()},
         {("b", "a"), ("c", "b"), ("c", "a"), ("d", "x")},
     ),
     "connected_components": (
-        lambda G, e: G.connected_components(e),
+        lambda G, R, e: G.connected_components(e),
         lambda out: {(r.node, r.comp) for r in out.collect()},
         {("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("x", "d")},
     ),
     "scc_components": (
-        lambda G, e: G.scc_components(e),
+        lambda G, R, e: G.scc_components(e),
         lambda out: {(r.node, r.scc) for r in out.collect()},
         {("a", "a"), ("b", "b"), ("c", "c"), ("d", "d"), ("x", "x")},
     ),
     "temporal_reachability": (
-        lambda G, e: G.temporal_reachability(e, ["c"]),
+        lambda G, R, e: G.temporal_reachability(e, ["c"]),
         lambda out: {(r.node, r.arrival) for r in out.collect()},
         {("c", 0), ("b", 2), ("a", 3)},
     ),
     "mst_boruvka": (
-        lambda G, e: G.mst_boruvka(e),
+        lambda G, R, e: G.mst_boruvka(e),
         lambda out: {tuple(r) for r in out.collect()},
         {("b", "a", 3), ("c", "b", 2), ("d", "x", 1)},
+    ),
+    "sssp_weighted": (
+        lambda G, R, e: G.sssp_weighted(e, ["c"]),
+        lambda out: {(r.node, r.dist) for r in out.collect()},
+        {("c", 0), ("b", 2), ("a", 5)},
+    ),
+    "pagerank": (
+        lambda G, R, e: R.pagerank(e, iterations=2),
+        lambda out: {(r.node, r.rank_scaled) for r in out.collect()},
+        # units of 1e-12, n = 5: r0 = 1/5, base = 0.15/5; each round a
+        # node gets base + 85% of its in-neighbour's rank (outdeg 1)
+        {
+            ("a", 200_000_000_000), ("b", 55_500_000_000), ("c", 30_000_000_000),
+            ("d", 30_000_000_000), ("x", 55_500_000_000),
+        },
     ),
 }
 
@@ -70,6 +86,7 @@ def test_graph_driver_path_is_single_probe(spark, entry):
     fetches the edge list with one limit-collect, so it submits fewer
     jobs than a full count() followed by a collect() of its input."""
     from prosnet_prefect_pipelines_spark.operators import graph as G
+    from prosnet_prefect_pipelines_spark.operators import ranking as R
 
     call, result, expected = _DRIVER_PATHS[entry]
     edges = spark.createDataFrame(
@@ -80,11 +97,35 @@ def test_graph_driver_path_is_single_probe(spark, entry):
     _, baseline = _jobs(
         sc, f"{entry}-count-collect", lambda: (edges.count(), edges.collect())
     )
-    out, jobs = _jobs(sc, f"{entry}-driver-probe", lambda: call(G, edges))
+    out, jobs = _jobs(sc, f"{entry}-driver-probe", lambda: call(G, R, edges))
     assert jobs < baseline, (
         f"{entry}: {jobs} jobs, count()+collect() takes {baseline}"
     )
     assert result(out) == expected
+
+
+def test_mst_and_temporal_paths_share_schema(spark):
+    """The driver fast paths type their result like the distributed
+    path: an empty edge set gives an empty forest (it used to raise
+    CANNOT_INFER_EMPTY_SCHEMA), and temporal arrivals keep the edge
+    frame's node type. driver_threshold=-1 forces the distributed path
+    even for an empty input."""
+    from prosnet_prefect_pipelines_spark.operators import graph as G
+
+    empty = spark.createDataFrame([], "src string, dst string, w long")
+    fast = G.mst_boruvka(empty)
+    slow = G.mst_boruvka(empty, driver_threshold=-1)
+    assert fast.count() == slow.count() == 0
+    assert fast.schema == slow.schema
+
+    edges = spark.createDataFrame(
+        [(1, 2, 5), (2, 3, 7), (2, 4, 1)], "src long, dst long, t long"
+    )
+    fast = G.temporal_reachability(edges, [1])
+    slow = G.temporal_reachability(edges, [1], driver_threshold=-1)
+    assert fast.schema == slow.schema
+    assert fast.schema.simpleString() == "struct<node:bigint,arrival:bigint>"
+    assert set(fast.collect()) == set(slow.collect()) == {(1, 0), (2, 5), (3, 7)}
 
 
 def test_descendants_bfs_result_unchanged_vs_distributed(spark):
@@ -109,6 +150,22 @@ def test_descendants_bfs_result_unchanged_vs_distributed(spark):
         r.node for r in G.descendants(edges, ["a"], reflexive=False).collect()
     }
     assert fast_nr == {"b", "c", "d", "e", "x"}
+
+
+def test_sssp_result_unchanged_vs_distributed(spark, monkeypatch):
+    """Heap Dijkstra on the driver and the distributed Bellman-Ford
+    rounds (forced by a zero driver cut) give the same distances."""
+    from prosnet_prefect_pipelines_spark.operators import graph as G
+
+    edges = spark.createDataFrame(
+        [("s", "t", 10), ("s", "a", 1), ("a", "b", 1), ("b", "t", 1),
+         ("t", "s", 1), ("x", "s", 1)],
+        "src string, dst string, w long",
+    )
+    fast = {(r.node, r.dist) for r in G.sssp_weighted(edges, ["s"]).collect()}
+    monkeypatch.setattr(G, "_SSSP_DRIVER_EDGES", 0)
+    slow = {(r.node, r.dist) for r in G.sssp_weighted(edges, ["s"]).collect()}
+    assert fast == slow == {("s", 0), ("a", 1), ("b", 2), ("t", 3)}
 
 
 def test_city_index_construction_job_free_after_memo(spark, monkeypatch):
