@@ -33,10 +33,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.plans.q_stream import (
-    _events_stream,
-    _run_to_memory,
-)
+from prosnet_prefect_pipelines_spark.plans.q_stream import _events_stream
+from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
 _V2 = "CAST(round(value * 100) AS BIGINT)"
 
@@ -107,7 +105,8 @@ def q_stream_moments_by_type(spark, sf_dir):
             "s4"
         ),
     )
-    out = _run_to_memory(sums, "moments")
+    q = run_available_now(sums, sink="memory", name="moments", output_mode="complete")
+    out = spark.table(q.name)
     n = F.col("n")
     d = out.select(
         "event_type",
@@ -197,7 +196,8 @@ def q_stream_kappa_2x2(spark, sf_dir):
         F.sum(((F.col("ra") == 0) & (F.col("rb") == 0)).cast("long")).alias("d"),
         F.count(F.lit(1)).alias("n"),
     )
-    out = _run_to_memory(cells, "kappa")
+    q = run_available_now(cells, sink="memory", name="kappa", output_mode="complete")
+    out = spark.table(q.name)
     pe_num = (F.col("a") + F.col("b")) * (F.col("a") + F.col("c")) + (
         F.col("c") + F.col("d")
     ) * (F.col("b") + F.col("d"))
@@ -259,7 +259,8 @@ def q_stream_cochran_trend(spark, sf_dir):
     grp = v.groupBy("s").agg(
         F.count(F.lit(1)).alias("ni"), F.sum("r").alias("ri")
     )
-    out = _run_to_memory(grp, "cochran")
+    q = run_available_now(grp, sink="memory", name="cochran", output_mode="complete")
+    out = spark.table(q.name)
     tot = out.agg(
         F.sum("ni").alias("n"),
         F.sum("ri").alias("rr"),
@@ -334,7 +335,8 @@ def q_stream_pbiserial(spark, sf_dir):
         F.sum(_dec(F.col("x")) * F.col("x")).alias("q"),
         F.sum(_dec(F.col("x"))).alias("s"),
     )
-    out = _run_to_memory(agg, "pbis")
+    q = run_available_now(agg, sink="memory", name="pbis", output_mode="complete")
+    out = spark.table(q.name)
     d = F.col("s1") * F.col("n0") - F.col("s0") * F.col("n1")
     var_num = F.col("n") * F.col("q") - F.col("s") * F.col("s")
     r_pb = (

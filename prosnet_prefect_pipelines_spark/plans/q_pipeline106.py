@@ -34,10 +34,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
-from prosnet_prefect_pipelines_spark.plans.q_stream import (
-    _events_stream,
-    _run_to_memory,
-)
+from prosnet_prefect_pipelines_spark.plans.q_stream import _events_stream
+from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
 
 def _lineitem_stream(spark, sf_dir):
@@ -73,7 +71,8 @@ def _stream_cells(spark, sf_dir):
         F.count(F.lit(1)).alias("c"),
         F.sum((F.col("l_returnflag") == "R").cast("int")).alias("pos"),
     )
-    return _run_to_memory(agg, "mon_cells")
+    q = run_available_now(agg, sink="memory", name="mon_cells", output_mode="complete")
+    return spark.table(q.name)
 
 
 # ---------------------------------------------------------------------------
@@ -269,7 +268,8 @@ def q_stream_psi_buckets(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    cells = _run_to_memory(agg, "psi_cells")
+    q = run_available_now(agg, sink="memory", name="psi_cells", output_mode="complete")
+    cells = spark.table(q.name)
     # reference-binned pivot: one row per bucket seen in the REFERENCE
     # period (no self-join of the memory-sink table — conflicting
     # attribute references)

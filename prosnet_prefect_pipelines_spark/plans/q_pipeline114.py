@@ -29,6 +29,7 @@ from prosnet_prefect_pipelines_spark import resolve
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_graph import RESOLUTION_SQL
 from prosnet_prefect_pipelines_spark.streaming.resolve import IncrementalResolver
+from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
 
 @register("stream_entity_resolution", oracle=RESOLUTION_SQL,
@@ -66,15 +67,10 @@ def q_stream_entity_resolution(spark, sf_dir):
     )
 
     resolver = IncrementalResolver(spark)
-    q = (
-        edges.writeStream.foreachBatch(lambda b, _bid: resolver.update(b))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    run_available_now(
+        edges, sink=lambda b, _bid: resolver.update(b),
+        name="stream_entity_resolution",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise RuntimeError("stream_entity_resolution replay timed out (300 s)")
     # stage is intentionally retained for reuse by later invocations
 
     persons = cust.select(

@@ -178,48 +178,18 @@ def _query_stream(spark, sf_dir):
     return stream, stage
 
 
-# Two-phase top-k escalation (r7 verdict item 4): above this estimated
-# per-batch candidate volume the sink switches to a mapInPandas
-# partition-local prune that keeps <= _K rows per (query, partition)
-# BEFORE the exchange, so the final window shuffles <= k * n_partitions
-# rows per query instead of the full candidate matrix. Both sinks rank
-# by (cos desc, neighbor), and a partition-local top-k is a superset of
-# the global top-k under any partitioning, so the replay hash is
-# IDENTICAL either way (pinned by test_prune_sink_matches_window_sink).
-#
-# Default OFF: the crossover was hunted at the 200k-vector stress scale
-# (scripts/stress_ann_serving.py ... both; artifacts/
-# stress_ann_prune_r16.log) and DOES NOT EXIST on local[32] — window vs
-# prune measured 4.0/4.3 s at ~0.4M candidates per batch (bench scale),
-# 71.5/72.8 s at 10M, 265.7/337.1 s at 100M. Intra-node, the Arrow
-# transfer into Python scales with the same candidate count the
-# exchange does, at a higher per-row price. The prune is a
-# NETWORK-shuffle optimization: on a multi-node cluster where the
-# exchange crosses the fabric, set SPARK_GRAFT_ANN_PRUNE_THRESHOLD to
-# the measured per-batch candidate volume where fabric cost overtakes
-# the Arrow hop.
-_PRUNE_VOLUME_THRESHOLD = float(
-    os.environ.get("SPARK_GRAFT_ANN_PRUNE_THRESHOLD", "inf")
-)
-
-
 @register("stream_ann_topk_monitor", oracle=ANN_MONITOR_SQL,
           covers=["T1", "T3", "J1", "O6"])
 def q_stream_ann_topk_monitor(spark, sf_dir):
     """Streaming IVF serving: map-side centroid probe (broadcast
     centroid array, no window, no state), stream-static cell join, per-batch
     exact top-k — availableNow replay hash-matched against the batch
-    IVF SQL answer for any micro-batch slicing.
-
-    Top-k sink escalates by estimated candidate volume (see
-    ``_PRUNE_VOLUME_THRESHOLD``): plain window below, partition-local
-    mapInPandas prune + tiny window above — same ordering on both paths,
-    so the choice is invisible to the oracle."""
+    IVF SQL answer for any micro-batch slicing."""
     from pyspark.sql.window import Window
 
     from prosnet_prefect_pipelines_spark.streaming.tuning import (
         candidate_fanout,
-        pinned_partitions,
+        run_available_now,
         staged_row_count,
     )
 
@@ -249,7 +219,6 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
     # width (cap 4x parallelism)
     fan = candidate_fanout(spark, est_cands)
     src = stream.repartition(fan)
-    use_prune = est_cands >= _PRUNE_VOLUME_THRESHOLD
     # the centroid table rides along as ONE broadcast array row
     # (stream-static, append-legal); plan cost independent of n_cells.
     # carr comes pre-checkpointed from the index cache (no per-batch
@@ -290,21 +259,6 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
         # a query's candidates are complete within its own micro-batch
         # (each odd id arrives exactly once; neighbors come from the
         # static side), so the per-id ranking is exact batch-locally
-        if use_prune:
-            # partition-local top-k BEFORE the exchange (knn_join's
-            # two-phase shape): a batch-local head(k) per query is a
-            # superset of the global top-k under any partitioning, so
-            # the final window sees <= k rows per (query, partition)
-            # instead of the full candidate matrix
-            def _prune(batches):
-                for pdf in batches:
-                    pdf = pdf.sort_values(
-                        ["id", "cos", "neighbor"],
-                        ascending=[True, False, True],
-                    )
-                    yield pdf.groupby("id", sort=False).head(_K)
-
-            batch_df = batch_df.mapInPandas(_prune, batch_df.schema)
         (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= _K)
@@ -316,18 +270,9 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
 
     # the foreachBatch window exchange runs without AQE coalescing, so
     # pin its partition count to the same adaptive width for the replay
-    with pinned_partitions(spark, fan):
-        q = (
-            cands.writeStream.foreachBatch(_sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_ann_topk_monitor replay timed out (300 s)"
-            )
+    run_available_now(
+        cands, sink=_sink, name="stream_ann_topk_monitor", shuffle_partitions=fan
+    )
     return spark.read.schema("id long, neighbor long, cos double").parquet(out_dir)
 
 

@@ -56,7 +56,10 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline116 import (
 from prosnet_prefect_pipelines_spark.operators.textstats import tokens
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 from prosnet_prefect_pipelines_spark.streaming.staging import replay_stage
-from prosnet_prefect_pipelines_spark.streaming.tuning import stream_partitioning
+from prosnet_prefect_pipelines_spark.streaming.tuning import (
+    run_available_now,
+    stream_shuffle_partitions,
+)
 
 _OUT_SCHEMA = (
     "lang string, source string, n_pairs long, min_margin long, "
@@ -250,28 +253,18 @@ def _replay_final_stats(spark, stage):
         F.pmod(F.xxhash64("lang", "source"), F.lit(_N_SHARDS)).alias("_skey"),
     )
     out_dir = tempfile.mkdtemp(prefix="pref_monitor_")
-    with stream_partitioning(spark, est_rows, n_files):
-        q = (
-            scored.groupBy("_skey")
-            .applyInPandasWithState(
-                _group_stats,
-                outputStructType=_OUT_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(out_dir)
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream preference monitor replay timed out (300 s)"
-            )
+    run_available_now(
+        scored.groupBy("_skey").applyInPandasWithState(
+            _group_stats,
+            outputStructType=_OUT_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        ),
+        sink=lambda b, _i: b.write.mode("append").parquet(out_dir),
+        name="stream_preference_monitor",
+        shuffle_partitions=stream_shuffle_partitions(spark, est_rows, n_files),
+    )
     sink = spark.read.schema(_OUT_SCHEMA).parquet(out_dir)
     w = Window.partitionBy("lang", "source").orderBy(F.col("seq").desc())
     return (

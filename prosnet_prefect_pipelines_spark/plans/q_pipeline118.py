@@ -257,7 +257,7 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
 
     from prosnet_prefect_pipelines_spark.streaming.tuning import (
         candidate_fanout,
-        pinned_partitions,
+        run_available_now,
         staged_row_count,
     )
 
@@ -340,18 +340,9 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
         )
 
     # foreachBatch window exchange runs without AQE coalescing — pin it
-    with pinned_partitions(spark, fan):
-        q = (
-            cands.writeStream.foreachBatch(_sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "stream_ann_ivfpq_monitor replay timed out (300 s)"
-            )
+    run_available_now(
+        cands, sink=_sink, name="stream_ann_ivfpq_monitor", shuffle_partitions=fan
+    )
     return spark.read.schema("qid long, xid long, adc_cos double").parquet(
         out_dir
     )

@@ -39,10 +39,8 @@ def q_stream_static_join(spark, sf_dir):
     its cached frame) before a streaming aggregation; drained with
     availableNow, the result must equal the batch algebra bit-for-bit.
     The production shape for slowly-changing lookup tables in streams."""
-    from prosnet_prefect_pipelines_spark.plans.q_stream import (
-        _events_stream,
-        _run_to_memory,
-    )
+    from prosnet_prefect_pipelines_spark.plans.q_stream import _events_stream
+    from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
     ev = _events_stream(spark, sf_dir)
     dim = local_frame(
@@ -59,7 +57,8 @@ def q_stream_static_join(spark, sf_dir):
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
         )
     )
-    out = _run_to_memory(agg, "sstatic")
+    q = run_available_now(agg, sink="memory", name="sstatic", output_mode="complete")
+    out = spark.table(q.name)
     return out.select("category", "n", "total_value")
 
 

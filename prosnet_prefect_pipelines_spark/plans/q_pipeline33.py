@@ -25,12 +25,11 @@ what makes an exact oracle possible at all.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.streaming.staging import symlink_stage
+from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
 _MIN_TOKENS = 20
 
@@ -94,16 +93,8 @@ def q_stream_corpus_curation(spark, sf_dir):
         )
     )
     fresh = cand.join(hist, "fingerprint", "left_anti")
-    name = "curation_" + uuid.uuid4().hex[:8]
-    q = (
-        fresh.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    accepted = spark.table(name)
+    q = run_available_now(fresh, sink="memory", name="curation")
+    accepted = spark.table(q.name)
     # keeper election over the replayed whole: deterministic min doc_id
     # per fingerprint (in live operation this is dropDuplicates state;
     # for the bounded replay the explicit keeper keeps the answer

@@ -58,10 +58,8 @@ def q_stream_hll_distinct(spark, sf_dir):
     registers. Raw HLL estimate (no small-range correction — see
     sketch.hll_estimate); the oracle recomputes the whole sketch in
     batch SQL and must match bit-for-bit."""
-    from prosnet_prefect_pipelines_spark.plans.q_stream import (
-        _events_stream,
-        _run_to_memory,
-    )
+    from prosnet_prefect_pipelines_spark.plans.q_stream import _events_stream
+    from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
     ev = _events_stream(spark, sf_dir)
     bucket, rank = SK.hll_register(F.col("user_id"))
@@ -72,7 +70,8 @@ def q_stream_hll_distinct(spark, sf_dir):
         )
         .agg(F.max(rank).alias("_rank"))
     )
-    out = _run_to_memory(agg, "hll")
+    q = run_available_now(agg, sink="memory", name="hll", output_mode="complete")
+    out = spark.table(q.name)
     regs = out.select(
         F.unix_micros(F.col("w.start")).alias("window_start"), "_b", "_rank"
     )

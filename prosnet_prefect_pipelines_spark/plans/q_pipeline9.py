@@ -20,10 +20,8 @@ def q_stream_session_window(spark, sf_dir):
     per (user, open session) and closes at the watermark — bounded by
     concurrent activity, not history. Must hash-match the batch
     lag/cumsum oracle bit-for-bit (the Dataflow-model claim, again)."""
-    from prosnet_prefect_pipelines_spark.plans.q_stream import (
-        _events_stream,
-        _run_to_memory,
-    )
+    from prosnet_prefect_pipelines_spark.plans.q_stream import _events_stream
+    from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
     ev = _events_stream(spark, sf_dir)
     agg = (
@@ -38,7 +36,8 @@ def q_stream_session_window(spark, sf_dir):
             ),
         )
     )
-    out = _run_to_memory(agg, "sess")
+    q = run_available_now(agg, sink="memory", name="sess", output_mode="complete")
+    out = spark.table(q.name)
     return out.select(
         "user_id",
         F.unix_micros(F.col("w.start")).alias("session_start"),

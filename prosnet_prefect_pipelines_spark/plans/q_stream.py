@@ -17,8 +17,6 @@ streaming partitions by input file; watermark state is per (window, key)
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
@@ -27,6 +25,7 @@ from prosnet_prefect_pipelines_spark.plans.q_streaming import (
     TUMBLING_SQL,
     US_HOUR,
 )
+from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
 
 
 def _events_stream(spark, sf_dir):
@@ -60,21 +59,6 @@ def _events_stream(spark, sf_dir):
     )
 
 
-def _run_to_memory(agg_df, name_prefix: str):
-    """Execute a streaming aggregation to completion; return the result."""
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg_df.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return agg_df.sparkSession.table(name)
-
-
 @register("stream_tumbling_window", oracle=TUMBLING_SQL, covers=["T1"])
 def q_stream_tumbling(spark, sf_dir):
     """Tumbling 1-hour windows via real Structured Streaming: readStream ->
@@ -89,8 +73,8 @@ def q_stream_tumbling(spark, sf_dir):
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
         )
     )
-    out = _run_to_memory(agg, "tumble")
-    return out.select(
+    q = run_available_now(agg, sink="memory", name="tumble", output_mode="complete")
+    return spark.table(q.name).select(
         (F.unix_micros(F.col("w.start"))).alias("window_start"),
         "event_type",
         "n",
@@ -114,8 +98,8 @@ def q_stream_sliding(spark, sf_dir):
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
         )
     )
-    out = _run_to_memory(agg, "slide")
-    return out.select(
+    q = run_available_now(agg, sink="memory", name="slide", output_mode="complete")
+    return spark.table(q.name).select(
         (F.unix_micros(F.col("w.start"))).alias("window_start"),
         "event_type",
         "n",
@@ -169,17 +153,8 @@ def q_stream_stream_join(spark, sf_dir):
             "AND purchase_time <= view_time + interval 1 hour"
         ),
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(name).select(
+    q = run_available_now(joined, sink="memory", name="ssjoin")
+    return spark.table(q.name).select(
         F.col("v_user").alias("user_id"),
         "view_id",
         "purchase_id",
@@ -228,9 +203,7 @@ def q_stream_foreach_batch_upsert(spark, sf_dir):
             batch_size=500,
         )
 
-    q = ev.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
-    q.awaitTermination()
-    q.stop()
+    run_available_now(ev, sink=handle, name="feb_upsert")
     docs = spark.read.schema(
         "user_id long, event_id long, event_type string, ts_us long"
     ).json(out_dir)
@@ -248,17 +221,8 @@ def q_stream_stateful_upsert(spark, sf_dir):
 
     ev = _events_stream(spark, sf_dir)
     winners = last_write_wins_state(ev)
-    name = f"lww_{uuid.uuid4().hex[:8]}"
-    q = (
-        winners.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    out = spark.table(name)
+    q = run_available_now(winners, sink="memory", name="lww", output_mode="update")
+    out = spark.table(q.name)
     # update-mode sinks append one row per key per batch that changed it;
     # collapse to the final winner (same policy, idempotent)
     from prosnet_prefect_pipelines_spark.streaming.incremental import upsert_dedup
@@ -289,14 +253,5 @@ def q_stream_dedup_keys(spark, sf_dir):
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"sdedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        dd.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    q.stop()
-    return spark.table(name).select("user_id", "event_type")
+    q = run_available_now(dd, sink="memory", name="sdedup")
+    return spark.table(q.name).select("user_id", "event_type")

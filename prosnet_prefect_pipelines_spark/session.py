@@ -34,57 +34,16 @@ def get_spark(app_name: str = "prosnet_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # events.parquet uses TIMESTAMP(NANOS); read as int64 nanos
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # fall back from whole-stage codegen when the generated method
-        # exceeds the JIT compile limit (8 KB bytecode): the triple-template
-        # renderers produce ~45-branch expressions whose generated method
-        # never JITs and whose Janino compile dominates runtime (observed
-        # 10-90s erratic vs ~2s after)
-        .config("spark.sql.codegen.hugeMethodLimit", "8000")
-        # whole-stage codegen OFF by default: every plan in this engine's
-        # query mix is executed cold (one action per unique plan), so the
-        # Janino compile of each fused stage is paid every time and never
-        # amortized — measured 12-15s per giant renderer plan and 91s -> 55s
-        # across the headline bench, with no query regressing (the hot
-        # expressions are string/struct munging where interpreted eval ties
-        # codegen even warm). On a long-lived cluster session re-running the
-        # same plans, flip SPARK_GRAFT_WSCG=true to amortize the compile.
-        .config(
-            "spark.sql.codegen.wholeStage",
-            os.environ.get("SPARK_GRAFT_WSCG", "false"),
-        )
         # Python Data Source filter pushdown (sources/rest_datasource.py)
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    # streaming state-store backend (opt r12, VERDICT r11 item 3): at
-    # 100 TB state sizes RocksDB + changelog checkpointing is the right
-    # backend (state >> heap; per-commit changelogs instead of full
-    # snapshots), so it is one env flip away — but it is NOT the local
-    # default because the A/B at bench state sizes (hundreds of state
-    # rows) measured flat-to-slower: cold x3 per monitor, HDFS-backed vs
-    # RocksDB+changelog — tumbling 1.3/1.3 vs 1.9/1.9 s, preference
-    # 4.2/3.9 vs 4.4/4.1 s, neardup/entity within noise
-    # (artifacts/statestore_ab_r12.json). The native store's open/commit
-    # overhead only amortizes when state outgrows the in-memory map.
-    if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        ).config(
-            "spark.sql.streaming.stateStore.rocksdb."
-            "changelogCheckpointing.enabled",
-            "true",
-        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return spark
+    return pin_session_conf(spark)
 
 
 def fan_out(df, spark: SparkSession | None = None):
@@ -327,18 +286,31 @@ def sweep_persistent_rdds(spark: SparkSession) -> int:
 
 
 def pin_session_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable conf we rely on, on a session we did not build.
+    """Apply the runtime-settable conf the engine relies on.
 
-    The driver hands us its own SparkSession; timestamp comparisons against
-    the DuckDB oracle (UTC-naive) require a UTC session timezone.
+    :func:`get_spark` calls it on the session it builds; catalog queries
+    call it on whatever session they are given. Timestamp comparisons
+    against the DuckDB oracle (UTC-naive) require a UTC session timezone.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
     # default; read the physical int64 and handle nanos ourselves
     # (model.read_events) — exact in both engines.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # fall back from whole-stage codegen when the generated method
+    # exceeds the JIT compile limit (8 KB bytecode): the triple-template
+    # renderers produce ~45-branch expressions whose generated method
+    # never JITs and whose Janino compile dominates runtime (observed
+    # 10-90s erratic vs ~2s after)
     spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
-    # cold-plan workload: skip whole-stage codegen compile (see get_spark)
+    # whole-stage codegen OFF by default: every plan in this engine's
+    # query mix is executed cold (one action per unique plan), so the
+    # Janino compile of each fused stage is paid every time and never
+    # amortized — measured 12-15s per giant renderer plan and 91s -> 55s
+    # across the headline bench, with no query regressing (the hot
+    # expressions are string/struct munging where interpreted eval ties
+    # codegen even warm). On a long-lived cluster session re-running the
+    # same plans, flip SPARK_GRAFT_WSCG=true to amortize the compile.
     spark.conf.set(
         "spark.sql.codegen.wholeStage", os.environ.get("SPARK_GRAFT_WSCG", "false")
     )
@@ -346,8 +318,18 @@ def pin_session_conf(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except AnalysisException:
         pass  # static conf on some builds; get_spark sets it at build time
+    # streaming state-store backend (opt r12, VERDICT r11 item 3): at
+    # 100 TB state sizes RocksDB + changelog checkpointing is the right
+    # backend (state >> heap; per-commit changelogs instead of full
+    # snapshots), so it is one env flip away — but it is NOT the local
+    # default because the A/B at bench state sizes (hundreds of state
+    # rows) measured flat-to-slower: cold x3 per monitor, HDFS-backed vs
+    # RocksDB+changelog — tumbling 1.3/1.3 vs 1.9/1.9 s, preference
+    # 4.2/3.9 vs 4.4/4.1 s, neardup/entity within noise
+    # (artifacts/statestore_ab_r12.json). The native store's open/commit
+    # overhead only amortizes when state outgrows the in-memory map.
+    # Runtime-settable: StreamExecution clones the conf at query start.
     if os.environ.get("SPARK_GRAFT_STATESTORE", "").lower() == "rocksdb":
-        # runtime-settable: StreamExecution clones the conf at query start
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state."

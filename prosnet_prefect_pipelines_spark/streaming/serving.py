@@ -36,6 +36,8 @@ import time
 
 from pyspark.sql import functions as F
 
+from prosnet_prefect_pipelines_spark.streaming.tuning import run_available_now
+
 
 def _publish_file(df, stage: str, name: str) -> None:
     """Write df as ONE parquet file named ``name`` inside stage (the
@@ -48,13 +50,59 @@ def _publish_file(df, stage: str, name: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _serving_protocol(spark, kind, rows, key, slices, query, count_out, timeout_s):
+    """Run the protocol above for one monitor in a fresh work directory,
+    removed afterwards even when a run raises.
+
+    ``rows`` is the monitor's input; its four replay files are the rows
+    matching each of ``slices``, and the increment is the first file's
+    rows with ``key`` shifted to new ids. ``query(src, out_dir)`` builds
+    ``(streaming frame, foreachBatch sink)`` over the file stream ``src``;
+    ``count_out(out_dir)`` counts the probe's output. Returns
+    ``(rebuild_s, serving_s, increment_rows, output_rows)``."""
+    work = tempfile.mkdtemp(prefix=f"{kind}_serving_")
+    stage, ckpt, out_dir = (os.path.join(work, d) for d in ("stage", "ckpt", "out"))
+    try:
+        for i, cond in enumerate(slices):
+            _publish_file(rows.filter(cond), stage, f"f{i}.parquet")
+
+        def _run() -> float:
+            src = (
+                spark.readStream.schema(rows.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(stage)
+            )
+            df, sink = query(src, out_dir)
+            t0 = time.time()
+            run_available_now(
+                df, sink=sink, name=f"{kind}_serving_probe", checkpoint=ckpt,
+                timeout_s=timeout_s,
+            )
+            return round(time.time() - t0, 3)
+
+        rebuild_s = _run()
+        # one micro-batch of NEW rows (fresh ids, one file's worth)
+        increment = rows.filter(slices[0]).withColumn(key, F.col(key) + 10_000_000)
+        n_inc = increment.count()
+        _publish_file(increment, stage, "f4.parquet")
+        serving_s = _run()
+        return rebuild_s, serving_s, n_inc, count_out(out_dir)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _odd_slices(key: str) -> list:
+    """The four replay files of an odd-id input: ``key % 8`` = 1, 3, 5, 7."""
+    return [F.col(key) % 8 == r for r in (1, 3, 5, 7)]
+
+
 def neardup_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     """{'rebuild_s', 'serving_s', 'increment_docs', 'candidate_rows'} for
     the near-dup monitor: fingerprint -> witness state -> static-index
     probe per micro-batch, resumed from checkpoint for the increment."""
     from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
     from prosnet_prefect_pipelines_spark.plans.q_pipeline113 import (
-        _BUCKET_CAP,
+        _neardup_sink,
         _static_index,
     )
     from prosnet_prefect_pipelines_spark.streaming import neardup as N
@@ -62,74 +110,20 @@ def neardup_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     index, sizes = _static_index(spark, sf_dir)
     odd = corpus(spark, sf_dir).filter(F.col("id") % 2 == 1).select("id", "text")
 
-    work = tempfile.mkdtemp(prefix="nd_serving_")
-    stage = os.path.join(work, "stage")
-    ckpt = os.path.join(work, "ckpt")
-    out_dir = os.path.join(work, "out")
-
-    # the standard 4-micro-batch replay layout
-    for i in range(4):
-        _publish_file(
-            odd.filter(F.col("id") % 8 == 2 * i + 1), stage, f"f{i}.parquet"
-        )
-
-    def _run() -> float:
-        src = (
-            spark.readStream.schema("id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    def query(src, out_dir):
         bands = N.stream_band_table(
             src, "id", "text", fanout=spark.sparkContext.defaultParallelism
         )
-
-        def _sink(batch_df, _bid):
-            batch_df.persist()
-            batch_df.count()
-            try:
-                pairs = batch_df.filter(F.col("bkey").isNull()).select("a", "b")
-                probes = batch_df.filter(F.col("bkey").isNotNull()).select(
-                    F.col("a").alias("id"),
-                    F.split(F.col("bkey"), r"\|", 2)
-                    .getItem(0)
-                    .cast("int")
-                    .alias("band"),
-                    F.split(F.col("bkey"), r"\|", 2).getItem(1).alias("bucket"),
-                )
-                cands = N.static_probe_candidates(probes, index, sizes)
-                pairs.unionByName(cands).coalesce(4).write.mode("append").parquet(
-                    out_dir
-                )
-            finally:
-                batch_df.unpersist()
-
-        t0 = time.time()
-        q = (
-            N.stream_state_candidates(bands, emit_bands=True)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        return (
+            N.stream_state_candidates(bands, emit_bands=True),
+            _neardup_sink(index, sizes, out_dir),
         )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError("neardup serving probe timed out")
-        return round(time.time() - t0, 3)
 
-    rebuild_s = _run()
-
-    # one micro-batch of NEW documents (fresh odd ids, one file's worth)
-    increment = odd.filter(F.col("id") % 8 == 1).select(
-        (F.col("id") + 10_000_000).alias("id"), "text"
+    rebuild_s, serving_s, n_inc, n_cands = _serving_protocol(
+        spark, "nd", odd, "id", _odd_slices("id"), query,
+        lambda out: spark.read.schema("a long, b long").parquet(out).count(),
+        timeout_s,
     )
-    n_inc = increment.count()
-    _publish_file(increment, stage, "f4.parquet")
-    serving_s = _run()
-
-    n_cands = spark.read.schema("a long, b long").parquet(out_dir).count()
-    shutil.rmtree(work, ignore_errors=True)
-    _ = _BUCKET_CAP  # probe shares the monitor's index (cap baked in)
     return {
         "rebuild_s": rebuild_s,
         "serving_s": serving_s,
@@ -160,25 +154,12 @@ def ann_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    work = tempfile.mkdtemp(prefix="ann_serving_")
-    stage = os.path.join(work, "stage")
-    ckpt = os.path.join(work, "ckpt")
-    out_dir = os.path.join(work, "out")
-    for i in range(4):
-        _publish_file(odd.filter(F.col("vec_id") % 8 == 2 * i + 1), stage,
-                      f"f{i}.parquet")
-
     w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
 
-    def _run() -> float:
-        src = (
-            spark.readStream.schema(odd.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
+    def query(src, out_dir):
         cands = (
-            src.select(
+            src.repartition(spark.sparkContext.defaultParallelism)
+            .select(
                 F.col("vec_id").alias("id"),
                 F.col("embedding").alias("qv"),
                 S.norm(F.col("embedding")).alias("qn"),
@@ -215,30 +196,14 @@ def ann_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
                 .parquet(out_dir)
             )
 
-        t0 = time.time()
-        q = (
-            cands.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError("ann serving probe timed out")
-        return round(time.time() - t0, 3)
+        return cands, _sink
 
-    rebuild_s = _run()
-    increment = odd.filter(F.col("vec_id") % 8 == 1).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
+    rebuild_s, serving_s, n_inc, n_out = _serving_protocol(
+        spark, "ann", odd, "vec_id", _odd_slices("vec_id"), query,
+        lambda out: spark.read.schema("id long, neighbor long, cos double")
+        .parquet(out).count(),
+        timeout_s,
     )
-    n_inc = increment.count()
-    _publish_file(increment, stage, "f4.parquet")
-    serving_s = _run()
-    n_out = spark.read.schema("id long, neighbor long, cos double").parquet(
-        out_dir
-    ).count()
-    shutil.rmtree(work, ignore_errors=True)
     # rebalance trigger (r9 verdict item 6): the serving probe runs the
     # |cells|-sized occupancy x traffic decision frame
     # (q_pipeline115.ann_rebalance_plan — the oracle-paired twin) and
@@ -291,25 +256,12 @@ def ivfpq_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    work = tempfile.mkdtemp(prefix="ivfpq_serving_")
-    stage = os.path.join(work, "stage")
-    ckpt = os.path.join(work, "ckpt")
-    out_dir = os.path.join(work, "out")
-    for i in range(4):
-        _publish_file(odd.filter(F.col("vec_id") % 8 == 2 * i + 1), stage,
-                      f"f{i}.parquet")
-
     w = Window.partitionBy("qid").orderBy(F.col("adc_cos").desc(), F.col("xid"))
 
-    def _run() -> float:
-        src = (
-            spark.readStream.schema(odd.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
+    def query(src, out_dir):
         cands = (
-            src.select(
+            src.repartition(spark.sparkContext.defaultParallelism)
+            .select(
                 F.col("vec_id").alias("qid"),
                 F.col("embedding").alias("qv"),
                 S.norm(F.col("embedding")).alias("qn"),
@@ -348,30 +300,14 @@ def ivfpq_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
                 .parquet(out_dir)
             )
 
-        t0 = time.time()
-        q = (
-            cands.writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError("ivfpq serving probe timed out")
-        return round(time.time() - t0, 3)
+        return cands, _sink
 
-    rebuild_s = _run()
-    increment = odd.filter(F.col("vec_id") % 8 == 1).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
+    rebuild_s, serving_s, n_inc, n_out = _serving_protocol(
+        spark, "ivfpq", odd, "vec_id", _odd_slices("vec_id"), query,
+        lambda out: spark.read.schema("qid long, xid long, adc_cos double")
+        .parquet(out).count(),
+        timeout_s,
     )
-    n_inc = increment.count()
-    _publish_file(increment, stage, "f4.parquet")
-    serving_s = _run()
-    n_out = spark.read.schema("qid long, xid long, adc_cos double").parquet(
-        out_dir
-    ).count()
-    shutil.rmtree(work, ignore_errors=True)
     return {
         "rebuild_s": rebuild_s,
         "serving_s": serving_s,
@@ -397,19 +333,8 @@ def preference_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    work = tempfile.mkdtemp(prefix="pref_serving_")
-    stage = os.path.join(work, "stage")
-    ckpt = os.path.join(work, "ckpt")
-    out_dir = os.path.join(work, "out")
-    for i in range(4):
-        _publish_file(docs.filter(F.col("doc_id") % 4 == i), stage, f"f{i}.parquet")
 
-    def _run() -> float:
-        src = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    def query(src, out_dir):
         scored = src.select(
             "lang",
             "source",
@@ -423,42 +348,22 @@ def preference_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
                 "_skey"
             ),
         )
-        t0 = time.time()
-        q = (
-            scored.groupBy("_skey")
-            .applyInPandasWithState(
-                _group_stats,
-                outputStructType=_OUT_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(out_dir)
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        stats = scored.groupBy("_skey").applyInPandasWithState(
+            _group_stats,
+            outputStructType=_OUT_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError("preference serving probe timed out")
-        return round(time.time() - t0, 3)
+        return stats, lambda b, _i: b.write.mode("append").parquet(out_dir)
 
-    rebuild_s = _run()
-    increment = docs.filter(F.col("doc_id") % 4 == 0).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"),
-        "text", "lang", "source", "n_chars",
+    rebuild_s, serving_s, n_inc, n_groups = _serving_protocol(
+        spark, "pref", docs, "doc_id",
+        [F.col("doc_id") % 4 == r for r in range(4)], query,
+        lambda out: spark.read.schema(_OUT_SCHEMA).parquet(out)
+        .select("lang", "source").distinct().count(),
+        timeout_s,
     )
-    n_inc = increment.count()
-    _publish_file(increment, stage, "f4.parquet")
-    serving_s = _run()
-    n_groups = (
-        spark.read.schema(_OUT_SCHEMA).parquet(out_dir)
-        .select("lang", "source").distinct().count()
-    )
-    shutil.rmtree(work, ignore_errors=True)
     return {
         "rebuild_s": rebuild_s,
         "serving_s": serving_s,
@@ -478,21 +383,9 @@ def resolver_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_acctbal"
     )
-    work = tempfile.mkdtemp(prefix="ser_serving_")
-    stage = os.path.join(work, "stage")
-    ckpt = os.path.join(work, "ckpt")
-
-    for i in range(4):
-        _publish_file(cust.filter(F.col("c_custkey") % 4 == i), stage, f"f{i}.parquet")
-
     resolver = IncrementalResolver(spark)
 
-    def _run() -> float:
-        src = (
-            spark.readStream.schema(cust.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+    def query(src, _out_dir):
         edges = src.where(
             (F.col("c_custkey") % 10 != 1) & (F.col("c_acctbal") >= 0)
         ).select(
@@ -503,30 +396,14 @@ def resolver_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
                 F.lit("urn:cust/"), (F.col("c_custkey") - 1).cast("string")
             ).alias("dst"),
         )
-        t0 = time.time()
-        q = (
-            edges.writeStream.foreachBatch(lambda b, _i: resolver.update(b))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise RuntimeError("resolver serving probe timed out")
-        return round(time.time() - t0, 3)
+        return edges, lambda b, _i: resolver.update(b)
 
-    rebuild_s = _run()
-
-    increment = cust.filter(F.col("c_custkey") % 4 == 0).select(
-        (F.col("c_custkey") + 10_000_000).alias("c_custkey"), "c_acctbal"
+    rebuild_s, serving_s, n_inc, n_map = _serving_protocol(
+        spark, "ser", cust, "c_custkey",
+        [F.col("c_custkey") % 4 == r for r in range(4)], query,
+        lambda _out: resolver.mapping().count(),
+        timeout_s,
     )
-    n_inc = increment.count()
-    _publish_file(increment, stage, "f4.parquet")
-    serving_s = _run()
-
-    n_map = resolver.mapping().count()
-    shutil.rmtree(work, ignore_errors=True)
     return {
         "rebuild_s": rebuild_s,
         "serving_s": serving_s,

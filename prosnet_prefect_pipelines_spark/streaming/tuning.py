@@ -1,4 +1,9 @@
-"""Scale-adaptive shuffle/state partitioning for streaming replays.
+"""One bounded ``availableNow`` replay runner and its adaptive partitioning.
+
+Every replay in the package goes through :func:`run_available_now`:
+start the query with ``trigger(availableNow=True)``, wait a bounded
+time, stop and raise on a timeout. It is also the one place that pins
+``spark.sql.shuffle.partitions`` for a replay.
 
 AQE partition coalescing is unavailable inside Structured Streaming
 (``ResolveWriteToStream`` force-disables it), so a streaming query's
@@ -12,15 +17,14 @@ rows it holds (guide §2: make partitioning scale-adaptive, derive from
 input size, rather than a constant tuned for either local mode or the
 cluster).
 
-:func:`stream_shuffle_partitions` derives the partition count from the
-*measured* staged input (rows per micro-batch), clamped to a floor that
-keeps multi-core parallelism and a ceiling that scales with the
-cluster (4x default parallelism by default). At bench scale
-(~1-2k rows/batch) this lands at the floor; at 100 TB the per-batch row
-estimate pushes it to the ceiling, so a cluster run keeps full-width
-state partitioning. Both dials are env-overridable for production
-tuning (``SPARK_GRAFT_STREAM_ROWS_PER_PARTITION``,
-``SPARK_GRAFT_STREAM_MAX_PARTITIONS``).
+:func:`stream_shuffle_partitions` (state rows per batch) and
+:func:`candidate_fanout` (ANN candidates per batch) derive the count
+from the *measured* staged input, clamped to a floor that keeps
+multi-core parallelism and a ceiling that scales with the cluster (4x
+default parallelism, or ``SPARK_GRAFT_STREAM_MAX_PARTITIONS`` — the
+cluster-width deployment setting). At bench scale (~1-2k rows/batch)
+this lands at the floor; at 100 TB the per-batch estimate pushes it to
+the ceiling, so a cluster run keeps full-width state partitioning.
 
 Measured (r11 opt round, sf0.1 preference monitor, local[32], warm):
 32 state partitions 5.58-5.67 s -> 8 partitions 3.85-4.05 s per replay;
@@ -32,11 +36,18 @@ from __future__ import annotations
 
 import math
 import os
-from contextlib import contextmanager
+import uuid
 
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 _MIN_PARTITIONS = 8
+_ROWS_PER_PARTITION = 2000
+# 250k dim-64 cosines per task keeps tasks ~0.25-1 s at the measured
+# ~1M cands/s/task rate (scripts/stress_ann_serving.py: 200M
+# candidates/batch ran 6 s at 32 partitions = 6.25M/task); below that,
+# task-launch overhead dominates
+_CANDS_PER_PARTITION = 250_000
+
 
 # opt r12: the monitors' width ESTIMATES were fed by spark.read.parquet(
 # path).count() jobs at every plan construction — at 100 TB a corpus
@@ -51,13 +62,10 @@ def staged_row_count(spark, path: str) -> int:
     )
 
 
-def stream_shuffle_partitions(spark, est_rows: int, n_batches: int = 4) -> int:
-    """Partition count for a replay stream: rows-per-batch / target,
-    clamped to [8, max(4 x defaultParallelism, session default)]."""
-    rows_per_batch = max(1, int(est_rows) // max(1, n_batches))
-    target = int(
-        os.environ.get("SPARK_GRAFT_STREAM_ROWS_PER_PARTITION", "2000")
-    )
+def _clamped_partitions(spark, units: float, per_partition: int) -> int:
+    """ceil(units / per_partition), clamped to
+    [8, max(4 x defaultParallelism, session default)] — the ceiling
+    overridable by ``SPARK_GRAFT_STREAM_MAX_PARTITIONS``."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cap = int(
         os.environ.get(
@@ -65,61 +73,63 @@ def stream_shuffle_partitions(spark, est_rows: int, n_batches: int = 4) -> int:
             str(max(4 * spark.sparkContext.defaultParallelism, default)),
         )
     )
-    return max(_MIN_PARTITIONS, min(cap, math.ceil(rows_per_batch / target)))
+    return max(_MIN_PARTITIONS, min(cap, math.ceil(units / per_partition)))
+
+
+def stream_shuffle_partitions(spark, est_rows: int, n_batches: int = 4) -> int:
+    """Partition count for a stateful replay: state rows per batch over
+    a 2000-row target, clamped."""
+    rows_per_batch = max(1, int(est_rows) // max(1, n_batches))
+    return _clamped_partitions(spark, rows_per_batch, _ROWS_PER_PARTITION)
 
 
 def candidate_fanout(spark, est_cands_per_batch: float) -> int:
     """Fan-out width for a stateless compute-bound replay batch (ANN
     candidate scoring): candidates-per-task is the unit of work, not
     state rows, so the per-partition target is orders of magnitude
-    higher than the state-store target above. 250k dim-64 cosines per
-    task keeps tasks ~0.25-1 s at the measured ~1M cands/s/task rate
-    (scripts/stress_ann_serving.py: 200M candidates/batch ran 6 s at 32
-    partitions = 6.25M/task); below that, task-launch overhead
-    dominates. Clamped like the state count: floor 8 keeps multi-core
-    parallelism locally, ceiling 4x parallelism restores full width at
-    cluster candidate volumes. Env-overridable for production tuning."""
-    target = int(
-        os.environ.get("SPARK_GRAFT_STREAM_CANDS_PER_PARTITION", "250000")
+    higher than the state-store target. Clamped like the state count."""
+    return _clamped_partitions(
+        spark, max(1.0, est_cands_per_batch), _CANDS_PER_PARTITION
     )
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cap = int(
-        os.environ.get(
-            "SPARK_GRAFT_STREAM_MAX_PARTITIONS",
-            str(max(4 * spark.sparkContext.defaultParallelism, default)),
+
+
+def run_available_now(
+    df,
+    *,
+    sink,
+    name: str,
+    output_mode: str = "append",
+    shuffle_partitions: int | None = None,
+    checkpoint: str | None = None,
+    timeout_s: float = 300,
+):
+    """Run ``df`` as one bounded ``availableNow`` replay; return the
+    finished ``StreamingQuery``.
+
+    ``sink`` is a ``foreachBatch`` function or ``"memory"``; the query is
+    named ``f"{name}_{uuid8}"``, so a memory-sink result is
+    ``spark.table(q.name)``. ``shuffle_partitions`` pins
+    ``spark.sql.shuffle.partitions`` for the replay and is restored
+    afterwards (``StreamExecution`` clones the session conf at query
+    start, so batch work after the replay keeps the session default,
+    where AQE coalescing applies). A replay still running after
+    ``timeout_s`` is stopped and raises ``RuntimeError``; errors of the
+    query itself propagate."""
+    spark = df.sparkSession
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    if shuffle_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(int(shuffle_partitions)))
+    try:
+        w = df.writeStream.outputMode(output_mode).queryName(
+            f"{name}_{uuid.uuid4().hex[:8]}"
         )
-    )
-    return max(
-        _MIN_PARTITIONS,
-        min(cap, math.ceil(max(1.0, est_cands_per_batch) / target)),
-    )
-
-
-@contextmanager
-def pinned_partitions(spark, n: int):
-    """Pin ``spark.sql.shuffle.partitions`` to an explicit count for a
-    replay (same restore discipline as :func:`stream_partitioning`, for
-    callers that derived the count themselves)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
-    try:
-        yield int(n)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-@contextmanager
-def stream_partitioning(spark, est_rows: int, n_batches: int = 4):
-    """Pin ``spark.sql.shuffle.partitions`` to the adaptive count for
-    the duration of a replay (set -> start -> awaitTermination ->
-    restore). ``StreamExecution`` clones the session conf at query
-    start, so the restore never races the running stream; batch work
-    outside the ``with`` block keeps the session default (where AQE
-    coalescing applies)."""
-    n = stream_shuffle_partitions(spark, est_rows, n_batches)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield n
+        w = w.format("memory") if sink == "memory" else w.foreachBatch(sink)
+        if checkpoint is not None:
+            w = w.option("checkpointLocation", checkpoint)
+        q = w.trigger(availableNow=True).start()
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise RuntimeError(f"{q.name} replay timed out ({timeout_s} s)")
+        return q
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

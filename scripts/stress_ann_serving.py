@@ -14,9 +14,10 @@ Usage: python scripts/stress_ann_serving.py [n_index] [n_queries] [k_batches] [m
        # defaults 200,000 index vectors, 100,000 queries, 4 batches,
        # mode=window (window | prune | both), target_cell=2000
        # mode=both replays twice against the SAME index — once per
-       # top-k sink — to measure the two-phase-prune crossover
-       # (q_pipeline115._PRUNE_VOLUME_THRESHOLD) at production cell
-       # sizes; per-batch candidate volume ~= (n_queries/k_batches) *
+       # top-k sink — to measure the crossover of a two-phase prune
+       # against the monitor's window sink at production cell sizes
+       # (none found on one node, so q_pipeline115 keeps the window);
+       # per-batch candidate volume ~= (n_queries/k_batches) *
        # NPROBE * target_cell.
 """
 
@@ -132,16 +133,11 @@ def main() -> None:
 
     w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
     est_cands = (n_queries / k_batches) * NPROBE * target_cell
-    print(
-        f"estimated candidate volume per batch: {est_cands:,.0f} "
-        f"(threshold knob: q_pipeline115._PRUNE_VOLUME_THRESHOLD)",
-        flush=True,
-    )
+    print(f"estimated candidate volume per batch: {est_cands:,.0f}", flush=True)
 
     def _rank(bdf, prune: bool):
         if prune:
-            # the monitor's escalated sink (q_pipeline115): partition-
-            # local top-k before the exchange
+            # two-phase sink: partition-local top-k before the exchange
             def _prune(batches):
                 for pdf in batches:
                     pdf = pdf.sort_values(

@@ -76,7 +76,6 @@ SLOW_TESTS = frozenset({
     "test_stats_property.py::test_series_diagnostics_match_naive_loops",
     "test_stats_property.py::test_trimmed_mean_matches_sorted_slice",
     "test_stats_property.py::test_wilcoxon_matches_naive_ranking",
-    "test_streaming_ann.py::test_prune_sink_matches_window_sink",
     "test_streaming_ann.py::test_replay_slicing_insensitive",
     "test_streaming_ivfpq.py::test_ivfpq_monitor_resumes_exactly_once",
     "test_streaming_ivfpq.py::test_monitor_equals_batch_ivfpq_split",

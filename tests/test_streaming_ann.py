@@ -146,29 +146,6 @@ def test_replay_slicing_insensitive(spark, sf_dir, tmp_path):
     assert got == ref
 
 
-def test_prune_sink_matches_window_sink(spark, sf_dir):
-    """The two-phase mapInPandas prune sink (escalated above
-    _PRUNE_VOLUME_THRESHOLD) is hash-invisible: partition-local top-k
-    is a superset of the global top-k under any partitioning, so the
-    replayed answer must be IDENTICAL to the plain window sink's."""
-    import prosnet_prefect_pipelines_spark.plans.q_pipeline115 as P115
-
-    ref = {
-        (r.id, r.neighbor, r.cos)
-        for r in P115.q_stream_ann_topk_monitor(spark, sf_dir).collect()
-    }
-    orig = P115._PRUNE_VOLUME_THRESHOLD
-    P115._PRUNE_VOLUME_THRESHOLD = 0  # force the prune path
-    try:
-        got = {
-            (r.id, r.neighbor, r.cos)
-            for r in P115.q_stream_ann_topk_monitor(spark, sf_dir).collect()
-        }
-    finally:
-        P115._PRUNE_VOLUME_THRESHOLD = orig
-    assert got == ref
-
-
 def test_monitor_equals_batch_ivf_split(spark, sf_dir, emb):
     """The replayed answer equals the batch IVF top-k over the same
     odd-probes-even-index split, computed without any streaming."""
