@@ -5,7 +5,9 @@ The reference dispatches postprocessors by *name* via
 wikidata_index.py:194-205) with names arriving as config strings
 (prefect.yaml:126-129). Here the registry maps the same names to native
 ``Column -> Column`` expressions so config stays data and execution stays
-inside Catalyst/codegen — no Python UDFs in the hot path.
+inside Catalyst/codegen — no Python UDFs in the hot path. The helpers the
+triple templates share (``wkt_point_literal``, ``time_span_bounds``,
+``name_appellation``) take and return SQL expression text instead.
 """
 
 from prosnet_prefect_pipelines_spark.functions.scalar import (

@@ -5,6 +5,11 @@ Each function reproduces the observable semantics of a reference function
 Python UDFs. Inputs the reference would crash on (e.g. ``None``) map to
 NULL here; that is the only intended deviation (documented per function).
 
+The helpers the triple templates call (F11 time-span bounds and label,
+F12 WKT literal, F19 capitalize, F20 appellation) take and return Spark
+SQL expression text, like the templates (render/templates.py); Column
+callers wrap the result in ``F.expr``.
+
 Null-vs-absent: the reference consumes dict rows where SPARQL OPTIONAL
 variables are *absent* keys; in the DataFrame model an absent binding is a
 NULL column value (SURVEY §1 model #1), so ``x is None`` checks and
@@ -207,77 +212,71 @@ def wikidata_id_rebuild(uri: Column) -> Column:
 
 
 # --- F11 ----------------------------------------------------------------------
-def time_span_bounds(kind: str, date_written: Column, date_col: Column) -> dict[str, Column]:
-    """CIDOC time-span bound literals for a start/end date.
+def time_span_bounds(kind: str, date_written: str, date_col: str) -> dict[str, str]:
+    """CIDOC time-span bound literals for a start/end date, as SQL text
+    over the SQL expressions ``date_written`` and ``date_col``.
 
     Year-only strings (len == 4) expand to the closed year interval; full
     dates get T00:00:00 / T23:59:59 suffixes from the machine date column.
     Returns the predicate->literal mapping this kind emits.
     Reference: pfp-prefect-pipelines/get_data_apis_vanilla.py:32-112.
     """
-    is_year = F.length(date_written) == 4
-    lo = F.concat(date_written, F.lit("-01-01T00:00:00"))
-    hi = F.concat(date_written, F.lit("-12-31T23:59:59"))
+    is_year = f"length({date_written}) = 4"
+    lo = f"concat({date_written}, '-01-01T00:00:00')"
+    hi = f"concat({date_written}, '-12-31T23:59:59')"
     if kind == "start":
         return {
-            "crm:P82a_begin_of_the_begin": F.when(is_year, lo).otherwise(
-                F.concat(date_col, F.lit("T00:00:00"))
-            ),
-            "crm:P81a_end_of_the_begin": F.when(is_year, hi),
+            "crm:P82a_begin_of_the_begin":
+                f"CASE WHEN {is_year} THEN {lo} ELSE concat({date_col}, 'T00:00:00') END",
+            "crm:P81a_end_of_the_begin": f"CASE WHEN {is_year} THEN {hi} END",
         }
     if kind == "end":
         return {
-            "crm:P82b_end_of_the_end": F.when(is_year, hi).otherwise(
-                F.concat(date_col, F.lit("T23:59:59"))
-            ),
-            "crm:P81b_begin_of_the_end": F.when(is_year, lo),
+            "crm:P82b_end_of_the_end":
+                f"CASE WHEN {is_year} THEN {hi} ELSE concat({date_col}, 'T23:59:59') END",
+            "crm:P81b_begin_of_the_end": f"CASE WHEN {is_year} THEN {lo} END",
         }
     raise ValueError(f"kind must be start|end, got {kind!r}")
 
 
-def time_span_label(start_written: Column, end_written: Column) -> Column:
-    """`start[ - end]` label; NULL when start is NULL/empty.
+def time_span_label(start_written: str, end_written: str) -> str:
+    """`start[ - end]` label (SQL text); NULL when start is NULL/empty.
 
     Reference: get_data_apis_vanilla.py:34-41.
     """
-    has_start = start_written.isNotNull() & (F.length(start_written) > 0)
-    has_end = end_written.isNotNull() & (F.length(end_written) > 0)
-    return F.when(
-        has_start,
-        F.concat(start_written, _opt(has_end, F.concat(F.lit(" - "), end_written))),
+    return (
+        f"CASE WHEN {start_written} IS NOT NULL AND length({start_written}) > 0 "
+        f"THEN concat({start_written}, CASE WHEN {end_written} IS NOT NULL "
+        f"AND length({end_written}) > 0 THEN concat(' - ', {end_written}) ELSE '' END) END"
     )
 
 
 # --- F12 ----------------------------------------------------------------------
-def wkt_point_literal(lng: Column, lat: Column) -> Column:
-    """`Point ( {+lng} {+lat} )` with explicit + sign for positives.
+def wkt_point_literal(lng: str, lat: str) -> str:
+    """`Point ( {+lng} {+lat} )` (SQL text) with explicit + sign for positives.
 
     Zero gets no sign (reference uses ``> 0``).
     Reference: get_data_apis_vanilla.py:876-891.
     """
-    sign = lambda v: F.when(v > 0, F.lit("+")).otherwise(_EMPTY())  # noqa: E731
-    return F.when(
-        lng.isNotNull() & lat.isNotNull(),
-        F.concat(
-            F.lit("Point ( "),
-            sign(lng), lng.cast("string"),
-            F.lit(" "),
-            sign(lat), lat.cast("string"),
-            F.lit(" )"),
-        ),
+    def signed(v: str) -> str:
+        return f"CASE WHEN {v} > 0 THEN '+' ELSE '' END, CAST({v} AS STRING)"
+
+    return (
+        f"CASE WHEN {lng} IS NOT NULL AND {lat} IS NOT NULL "
+        f"THEN concat('Point ( ', {signed(lng)}, ' ', {signed(lat)}, ' )') END"
     )
 
 
 # --- F19 ----------------------------------------------------------------------
-def gender_capitalize(c: Column) -> Column:
-    """`male` -> `Male` (str.capitalize; get_data_apis_vanilla.py:630)."""
-    return F.concat(F.upper(F.substring(c, 1, 1)), F.lower(c.substr(F.lit(2), F.length(c))))
+def gender_capitalize(c: str) -> str:
+    """`male` -> `Male` (str.capitalize, SQL text; get_data_apis_vanilla.py:630)."""
+    return f"concat(upper(substring({c}, 1, 1)), lower(substring({c}, 2, length({c}))))"
 
 
 # --- F20 ----------------------------------------------------------------------
-def name_appellation(name: Column, first_name: Column) -> Column:
-    """`"{name or -}, {first_name or -}"` (get_data_apis_vanilla.py:546-549)."""
-    return F.concat_ws(", ", F.coalesce(name, F.lit("-")), F.coalesce(first_name, F.lit("-")))
+def name_appellation(name: str, first_name: str) -> str:
+    """`"{name or -}, {first_name or -}"` (SQL text; get_data_apis_vanilla.py:546-549)."""
+    return f"concat_ws(', ', coalesce({name}, '-'), coalesce({first_name}, '-'))"
 
 
 # --- Registry (SURVEY §2.11): config strings -> Catalyst expressions ----------

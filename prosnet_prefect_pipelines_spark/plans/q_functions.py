@@ -209,7 +209,7 @@ def q_geopoint_wkt(spark, sf_dir):
         "s_suppkey",
         F.element_at(gp, 1).alias("geopoint_lat"),
         F.element_at(gp, 2).alias("geopoint_lng"),
-        scalar.wkt_point_literal(F.col("lng"), F.col("lat")).alias("wkt_literal"),
+        F.expr(scalar.wkt_point_literal("lng", "lat")).alias("wkt_literal"),
     )
 
 
@@ -326,15 +326,16 @@ def q_timespan_expand(spark, sf_dir):
                .otherwise(F.date_format(end_ts, "yyyy-MM-dd"))).alias("end_date_written"),
         F.date_format(end_ts, "yyyy-MM-dd").alias("end_date"),
     )
-    start = scalar.time_span_bounds("start", F.col("start_date_written"), F.col("start_date"))
-    end = scalar.time_span_bounds("end", F.col("end_date_written"), F.col("end_date"))
+    start = scalar.time_span_bounds("start", "start_date_written", "start_date")
+    end = scalar.time_span_bounds("end", "end_date_written", "end_date")
     return inputs.select(
         "o_orderkey",
-        start["crm:P82a_begin_of_the_begin"].alias("begin_of_begin"),
-        start["crm:P81a_end_of_the_begin"].alias("end_of_begin"),
-        F.when(F.col("end_date_written").isNotNull(), end["crm:P82b_end_of_the_end"]).alias("end_of_end"),
-        end["crm:P81b_begin_of_the_end"].alias("begin_of_end"),
-        scalar.time_span_label(F.col("start_date_written"), F.col("end_date_written")).alias("span_label"),
+        F.expr(start["crm:P82a_begin_of_the_begin"]).alias("begin_of_begin"),
+        F.expr(start["crm:P81a_end_of_the_begin"]).alias("end_of_begin"),
+        F.when(F.col("end_date_written").isNotNull(), F.expr(end["crm:P82b_end_of_the_end"]))
+        .alias("end_of_end"),
+        F.expr(end["crm:P81b_begin_of_the_end"]).alias("begin_of_end"),
+        F.expr(scalar.time_span_label("start_date_written", "end_date_written")).alias("span_label"),
     )
 
 
@@ -365,11 +366,11 @@ def q_string_format(spark, sf_dir):
             F.col("c_name"), F.concat(F.lit("N"), F.col("c_nationkey").cast("string")), F.col("c_mktsegment")
         ).alias("geo_label"),
         scalar.geonames_id_uri(k).alias("geo_uri"),
-        scalar.gender_capitalize(F.lower(F.col("c_mktsegment"))).alias("gender_cap"),
-        scalar.name_appellation(
-            F.when(k % 5 != 0, F.col("c_name")),
-            F.when(k % 3 != 0, F.concat(F.lit("First_"), k.cast("string"))),
-        ).alias("appellation"),
+        F.expr(scalar.gender_capitalize("lower(c_mktsegment)")).alias("gender_cap"),
+        F.expr(scalar.name_appellation(
+            "CASE WHEN c_custkey % 5 != 0 THEN c_name END",
+            "CASE WHEN c_custkey % 3 != 0 THEN concat('First_', CAST(c_custkey AS STRING)) END",
+        )).alias("appellation"),
     )
 
 

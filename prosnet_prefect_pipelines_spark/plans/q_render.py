@@ -8,75 +8,53 @@ via the template-explode machinery, and compared as (s, p, o, o_lang) sets.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.render.person import materialize_inverses, render_person
-from prosnet_prefect_pipelines_spark.session import memo_fixture
+
+_YEAR = "CAST(1900 + c_custkey % 100 AS STRING)"
+_YEAR2 = "CAST(1930 + c_custkey % 100 AS STRING)"
+_FULL = f"concat({_YEAR}, '-03-15')"
+_FULL2 = f"concat({_YEAR2}, '-06-20')"
+_TEXT_URL = "named_struct('url', concat('http://t/', CAST(c_custkey AS STRING), '{}'))"
+
+# the person entity columns, as SQL text over customer's columns
+_PERSON_COLS = [
+    "c_custkey AS id",
+    "CASE WHEN c_custkey % 17 != 0 THEN c_name END AS name",
+    "CASE WHEN c_custkey % 3 != 0 THEN concat('First_', CAST(c_custkey AS STRING)) END AS first_name",
+    f"CASE WHEN c_custkey % 5 != 0 THEN {_FULL} END AS start_date",
+    f"CASE WHEN c_custkey % 5 != 0 THEN CASE WHEN c_custkey % 3 = 0 THEN {_YEAR} ELSE {_FULL} END END"
+    " AS start_date_written",
+    f"CASE WHEN c_custkey % 7 != 0 THEN {_FULL2} END AS end_date",
+    f"CASE WHEN c_custkey % 7 != 0 THEN CASE WHEN c_custkey % 11 = 0 THEN {_YEAR2} ELSE {_FULL2} END END"
+    " AS end_date_written",
+    "CASE WHEN c_custkey % 16 = 0 THEN '' WHEN c_custkey % 4 != 0 THEN lower(c_mktsegment) END AS gender",
+    """array_compact(array(
+        CASE WHEN c_custkey % 2 = 0 THEN named_struct(
+            'id', c_custkey * 10 + 1,
+            'label', concat('prof_', lower(c_mktsegment)),
+            'parent_id', CASE WHEN c_custkey % 4 = 0 THEN CAST(900 + c_nationkey AS BIGINT) END) END,
+        CASE WHEN c_custkey % 6 = 0 THEN named_struct(
+            'id', c_custkey * 10 + 2, 'label', 'prof_x', 'parent_id', CAST(NULL AS BIGINT)) END
+    )) AS profession""",
+    """array_compact(array(
+        concat('http://d-nb.info/gnd/', CAST(c_custkey AS STRING)),
+        CASE WHEN c_custkey % 9 = 0 THEN concat('http://viaf.org/', CAST(c_custkey AS STRING)) END
+    )) AS sameAs""",
+    f"""array_compact(array(
+        CASE WHEN c_custkey % 6 = 0 THEN {_TEXT_URL.format('/1')}
+             WHEN c_custkey % 13 = 0 THEN {_TEXT_URL.format('/only')} END,
+        CASE WHEN c_custkey % 6 = 0 THEN {_TEXT_URL.format('/2')} END
+    )) AS `text`""",
+]
 
 
 def persons_from_tpch(spark, sf_dir):
     """APIS person entities (model.APIS_PERSON_SCHEMA) from customer rows.
 
     Twin of the ``person`` CTE in RENDER_PERSON_SQL — keep in lockstep.
-    The select-expression trees are memoized per session (opt r11: the
-    ~0.4 s/call of py4j Column construction is session-invariant — same
-    pattern as render.person.render_person).
     """
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return customer.select(*memo_fixture(spark, ("persons_from_tpch",), _person_cols))
-
-
-def _person_cols():
-    k = F.col("c_custkey")
-    year = (F.lit(1900) + k % 100).cast("string")
-    year2 = (F.lit(1930) + k % 100).cast("string")
-    full = F.concat(year, F.lit("-03-15"))
-    full2 = F.concat(year2, F.lit("-06-20"))
-    cols = [
-        k.alias("id"),
-        F.when(k % 17 != 0, F.col("c_name")).alias("name"),
-        F.when(k % 3 != 0, F.concat(F.lit("First_"), k.cast("string"))).alias("first_name"),
-        F.when(k % 5 != 0, full).alias("start_date"),
-        F.when(k % 5 != 0, F.when(k % 3 == 0, year).otherwise(full)).alias("start_date_written"),
-        F.when(k % 7 != 0, full2).alias("end_date"),
-        F.when(k % 7 != 0, F.when(k % 11 == 0, year2).otherwise(full2)).alias("end_date_written"),
-        F.when(k % 16 == 0, F.lit("")).when(k % 4 != 0, F.lower("c_mktsegment")).alias("gender"),
-        F.array_compact(
-            F.array(
-                F.when(
-                    k % 2 == 0,
-                    F.struct(
-                        (k * 10 + 1).alias("id"),
-                        F.concat(F.lit("prof_"), F.lower("c_mktsegment")).alias("label"),
-                        F.when(k % 4 == 0, (F.lit(900) + F.col("c_nationkey")).cast("long")).alias("parent_id"),
-                    ),
-                ),
-                F.when(
-                    k % 6 == 0,
-                    F.struct(
-                        (k * 10 + 2).alias("id"),
-                        F.lit("prof_x").alias("label"),
-                        F.lit(None).cast("long").alias("parent_id"),
-                    ),
-                ),
-            )
-        ).alias("profession"),
-        F.array_compact(
-            F.array(
-                F.concat(F.lit("http://d-nb.info/gnd/"), k.cast("string")),
-                F.when(k % 9 == 0, F.concat(F.lit("http://viaf.org/"), k.cast("string"))),
-            )
-        ).alias("sameAs"),
-        F.array_compact(
-            F.array(
-                F.when(k % 6 == 0, F.struct(F.concat(F.lit("http://t/"), k.cast("string"), F.lit("/1")).alias("url")))
-                .when(k % 13 == 0, F.struct(F.concat(F.lit("http://t/"), k.cast("string"), F.lit("/only")).alias("url"))),
-                F.when(k % 6 == 0, F.struct(F.concat(F.lit("http://t/"), k.cast("string"), F.lit("/2")).alias("url"))),
-            )
-        ).alias("text"),
-    ]
-    return cols
+    return spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(*_PERSON_COLS)
 
 
 # The DuckDB twin renders every template as one UNION ALL branch over the

@@ -3,12 +3,13 @@ prefix expansion, oracle-checked line-for-line."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.tpch_graph import TRIPLES_CTE, triples_from_tpch
 from prosnet_prefect_pipelines_spark.render import namespaces
-from prosnet_prefect_pipelines_spark.sources.rdf import triples_to_ntriples
+from prosnet_prefect_pipelines_spark.sources.rdf import triples_to_ntriples, triples_to_turtle_blocks
+
+# the triples view's URI objects (SQL predicate): its other objects are literals
+_OBJECT_IS_URI = "o_lang IS NULL AND (startswith(o, 'urn:') OR startswith(o, 'ex:'))"
 
 _EXPAND_SQL = """
 CASE WHEN {x} LIKE 'ex:%' THEN 'https://example.org/schema/' || substr({x}, 4)
@@ -37,18 +38,14 @@ def q_ntriples_serialize(spark, sf_dir):
     """K4: triples -> N-Triples lines with R11 prefix expansion — the RDF
     writer's exact formatting, checked line-for-line (serialize_graph,
     get_data_apis_vanilla.py:1050-1074)."""
-    t = triples_from_tpch(spark, sf_dir)
-    expanded = t.select(
-        namespaces.expand(F.col("s")).alias("s"),
-        namespaces.expand(F.col("p")).alias("p"),
-        F.when(
-            F.col("o_lang").isNull() & (F.col("o").startswith("urn:") | F.col("o").startswith("ex:")),
-            namespaces.expand(F.col("o")),
-        ).otherwise(F.col("o")).alias("o"),
-        F.col("o_lang"),
-        (F.col("o_lang").isNull() & (F.col("o").startswith("urn:") | F.col("o").startswith("ex:"))).alias("_is_uri"),
+    expanded = triples_from_tpch(spark, sf_dir).selectExpr(
+        f"{namespaces.expand('s')} AS s",
+        f"{namespaces.expand('p')} AS p",
+        f"CASE WHEN {_OBJECT_IS_URI} THEN {namespaces.expand('o')} ELSE o END AS o",
+        "o_lang",
+        f"{_OBJECT_IS_URI} AS _is_uri",
     )
-    return triples_to_ntriples(expanded, object_is_uri=F.col("_is_uri"))
+    return triples_to_ntriples(expanded, object_is_uri="_is_uri")
 
 
 _PNAME_SQL = "regexp_matches({x}, '^[A-Za-z][A-Za-z0-9_-]*:[A-Za-z0-9_.-]+$')"
@@ -92,10 +89,4 @@ def q_turtle_serialize(spark, sf_dir):
     prefixed-name compaction (graph.serialize(format='ttl'),
     get_data_from_apis_instance.py:97-102) — deterministic (p,o) sort per
     block, checked block-for-block."""
-    from prosnet_prefect_pipelines_spark.sources.rdf import triples_to_turtle_blocks
-
-    t = triples_from_tpch(spark, sf_dir)
-    is_uri = F.col("o_lang").isNull() & (
-        F.col("o").startswith("urn:") | F.col("o").startswith("ex:")
-    )
-    return triples_to_turtle_blocks(t, object_is_uri=is_uri)
+    return triples_to_turtle_blocks(triples_from_tpch(spark, sf_dir), object_is_uri=_OBJECT_IS_URI)

@@ -22,7 +22,8 @@ Content mirrors FIXTURES.md A1:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from prosnet_prefect_pipelines_spark.render.templates import explode_structs, node, sql_lit
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 # DuckDB-side definition. MUST stay semantically identical to
@@ -159,92 +160,67 @@ def _build_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
 
-    def tb(s, p, o, lang=None, cond=None):
-        """One template branch: a struct, or null when cond is false."""
-        st = F.struct(
-            s.alias("s"),
-            F.lit(p).alias("p"),
-            o.alias("o"),
-            F.lit(lang).cast("string").alias("o_lang"),
-        )
-        return st if cond is None else F.when(cond, st)
+    def tb(s: str, p: str, o: str, lang: str | None = None, cond: str | None = None) -> str:
+        """One template branch (SQL text): a struct, or null when cond is false."""
+        st = f"named_struct('s', {s}, 'p', {sql_lit(p)}, 'o', {o}, 'o_lang', {sql_lit(lang)})"
+        return st if cond is None else f"CASE WHEN {cond} THEN {st} END"
 
-    def explode_templates(df: DataFrame, branches: list) -> DataFrame:
-        return df.select(
-            F.explode(F.array_compact(F.array(*branches))).alias("t")
-        ).select("t.s", "t.p", "t.o", "t.o_lang")
+    nat_s = node("urn:nation/", "n_nationkey")
+    reg_s = node("urn:region/", "r_regionkey")
+    cust_s = node("urn:cust/", "c_custkey")
+    ck = "c_custkey"
+    rank_arr = f"array({', '.join(sql_lit(x) for x in FEATURE_CODES_RANK)})"
+    sup_s = node("urn:sup/", "s_suppkey")
+    sk = "s_suppkey"
 
-    nat_s = F.concat(F.lit("urn:nation/"), F.col("n_nationkey").cast("string"))
-    reg_s = F.concat(F.lit("urn:region/"), F.col("r_regionkey").cast("string"))
-    cust_s = F.concat(F.lit("urn:cust/"), F.col("c_custkey").cast("string"))
-    ck = F.col("c_custkey")
-    rank_arr = F.array(*[F.lit(x) for x in FEATURE_CODES_RANK])
-    sup_s = F.concat(F.lit("urn:sup/"), F.col("s_suppkey").cast("string"))
-    sk = F.col("s_suppkey")
-
-    nation_t = explode_templates(nation, [
-        tb(nat_s, "rdf:type", F.lit("ex:Nation")),
-        tb(nat_s, "ex:label", F.col("n_name"), "en"),
-        tb(nat_s, "ex:label", F.concat(F.lit("DE "), F.col("n_name")), "de",
-           cond=F.col("n_nationkey") % 2 == 0),
-        tb(nat_s, "ex:inRegion",
-           F.concat(F.lit("urn:region/"), F.col("n_regionkey").cast("string"))),
+    nation_t = explode_structs(nation, [
+        tb(nat_s, "rdf:type", sql_lit("ex:Nation")),
+        tb(nat_s, "ex:label", "n_name", "en"),
+        tb(nat_s, "ex:label", "concat('DE ', n_name)", "de", cond="n_nationkey % 2 = 0"),
+        tb(nat_s, "ex:inRegion", node("urn:region/", "n_regionkey")),
     ])
-    region_t = explode_templates(region, [
-        tb(reg_s, "rdf:type", F.lit("ex:Region")),
-        tb(reg_s, "ex:label", F.col("r_name"), "en"),
+    region_t = explode_structs(region, [
+        tb(reg_s, "rdf:type", sql_lit("ex:Region")),
+        tb(reg_s, "ex:label", "r_name", "en"),
     ])
-    customer_t = explode_templates(customer, [
-        tb(cust_s, "rdf:type", F.lit("ex:Person")),
-        tb(cust_s, "ex:label", F.col("c_name")),
-        tb(cust_s, "ex:nation",
-           F.concat(F.lit("urn:nation/"), F.col("c_nationkey").cast("string"))),
-        tb(cust_s, "ex:segment", F.col("c_mktsegment"),
-           cond=F.col("c_mktsegment").isNotNull()),
-        tb(cust_s, "owl:sameAs",
-           F.concat(F.lit("urn:cust/"), (ck - 1).cast("string")),
-           cond=(ck % 10 != 1) & (F.col("c_acctbal") >= 0)),
-        tb(F.concat(F.lit("urn:proxy/"), ck.cast("string")), "pfp:proxy_for",
-           cust_s, cond=ck % 50 == 0),
+    customer_t = explode_structs(customer, [
+        tb(cust_s, "rdf:type", sql_lit("ex:Person")),
+        tb(cust_s, "ex:label", "c_name"),
+        tb(cust_s, "ex:nation", node("urn:nation/", "c_nationkey")),
+        tb(cust_s, "ex:segment", "c_mktsegment", cond="c_mktsegment IS NOT NULL"),
+        tb(cust_s, "owl:sameAs", node("urn:cust/", f"{ck} - 1"),
+           cond=f"{ck} % 10 != 1 AND c_acctbal >= 0"),
+        tb(node("urn:proxy/", ck), "pfp:proxy_for", cust_s, cond=f"{ck} % 50 = 0"),
         # city-index shape (wdt:P31 typing, feature codes, WKT coords)
-        tb(cust_s, "wdt:P31",
-           F.concat(F.lit("urn:class/"), (F.lit(1) + ck % 1999).cast("string"))),
+        tb(cust_s, "wdt:P31", node("urn:class/", f"1 + {ck} % 1999")),
         tb(cust_s, "wdt:P2452",
-           F.concat(F.lit("P."), F.element_at(rank_arr, (ck % 29 + 1).cast("int"))),
-           cond=ck % 3 != 0),
-        tb(cust_s, "wdt:P2452", F.lit("X.UNK"), cond=ck % 4 == 0),
+           f"concat('P.', element_at({rank_arr}, CAST({ck} % 29 + 1 AS INT)))",
+           cond=f"{ck} % 3 != 0"),
+        tb(cust_s, "wdt:P2452", sql_lit("X.UNK"), cond=f"{ck} % 4 = 0"),
         tb(cust_s, "wdt:P625",
-           F.concat(F.lit("Point("), ((ck % 360) - 180 + 0.5).cast("double").cast("string"),
-                    F.lit(" "), ((ck % 180) - 90 + 0.25).cast("double").cast("string"),
-                    F.lit(")")),
-           cond=ck % 6 != 0),
+           f"concat('Point(', CAST(CAST(({ck} % 360) - 180 + 0.5D AS DOUBLE) AS STRING), ' ', "
+           f"CAST(CAST(({ck} % 180) - 90 + 0.25D AS DOUBLE) AS STRING), ')')",
+           cond=f"{ck} % 6 != 0"),
     ])
-    part_t = part.filter(F.col("p_partkey") >= 2).select(
-        F.concat(F.lit("urn:class/"), F.col("p_partkey").cast("string")).alias("s"),
-        F.lit("wdt:P279").alias("p"),
-        F.concat(
-            F.lit("urn:class/"), F.floor(F.col("p_partkey") / 2).cast("long").cast("string")
-        ).alias("o"),
-        F.lit(None).cast("string").alias("o_lang"),
+    part_t = part.filter("p_partkey >= 2").selectExpr(
+        f"{node('urn:class/', 'p_partkey')} AS s",
+        "'wdt:P279' AS p",
+        f"{node('urn:class/', 'CAST(floor(p_partkey / 2) AS BIGINT)')} AS o",
+        "CAST(NULL AS STRING) AS o_lang",
     )
     # organization-index shape over suppliers
-    supplier_t = explode_templates(supplier, [
-        tb(sup_s, "rdf:type", F.lit("ex:Organization")),
-        tb(sup_s, "wdt:P31", F.concat(F.lit("ex:orgtype"), (sk % 9).cast("string"))),
-        tb(sup_s, "ex:label", F.col("s_name"), "en"),
-        tb(sup_s, "ex:label", F.concat(F.lit("DE "), F.col("s_name")), "de",
-           cond=sk % 3 == 0),
-        tb(sup_s, "ex:country",
-           F.concat(F.lit("urn:nation/"), F.col("s_nationkey").cast("string"))),
-        tb(sup_s, "wdt:P571",
-           F.concat((F.lit(1800) + sk % 150).cast("string"), F.lit("-01-01T00:00:00Z")),
-           cond=sk % 2 == 0),
-        tb(sup_s, "wdt:P571",
-           F.concat((F.lit(1810) + sk % 150).cast("string"), F.lit("-06-15T00:00:00Z")),
-           cond=sk % 10 == 0),
-        tb(sup_s, "wdt:P576",
-           F.concat((F.lit(1900) + sk % 120).cast("string"), F.lit("-12-31T00:00:00Z")),
-           cond=sk % 4 == 0),
+    supplier_t = explode_structs(supplier, [
+        tb(sup_s, "rdf:type", sql_lit("ex:Organization")),
+        tb(sup_s, "wdt:P31", node("ex:orgtype", f"{sk} % 9")),
+        tb(sup_s, "ex:label", "s_name", "en"),
+        tb(sup_s, "ex:label", "concat('DE ', s_name)", "de", cond=f"{sk} % 3 = 0"),
+        tb(sup_s, "ex:country", node("urn:nation/", "s_nationkey")),
+        tb(sup_s, "wdt:P571", f"concat(CAST(1800 + {sk} % 150 AS STRING), '-01-01T00:00:00Z')",
+           cond=f"{sk} % 2 = 0"),
+        tb(sup_s, "wdt:P571", f"concat(CAST(1810 + {sk} % 150 AS STRING), '-06-15T00:00:00Z')",
+           cond=f"{sk} % 10 = 0"),
+        tb(sup_s, "wdt:P576", f"concat(CAST(1900 + {sk} % 120 AS STRING), '-12-31T00:00:00Z')",
+           cond=f"{sk} % 4 = 0"),
     ])
     out = nation_t
     for p in (region_t, customer_t, part_t, supplier_t):

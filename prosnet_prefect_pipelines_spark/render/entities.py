@@ -20,13 +20,19 @@ get_data_apis_vanilla.py with quirks preserved:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.functions import scalar
-from prosnet_prefect_pipelines_spark.render.person import APIS_BASE
-from prosnet_prefect_pipelines_spark.render.templates import Template, explode_templates, node
+from prosnet_prefect_pipelines_spark.render.person import APIS_BASE, fstr
+from prosnet_prefect_pipelines_spark.render.templates import (
+    Template,
+    explode_templates,
+    node,
+    sql_lit,
+    with_nodes,
+)
 
-E33 = "crm:E33_E41_Linguistic_Appellation"
+E33 = sql_lit("crm:E33_E41_Linguistic_Appellation")
+E52 = sql_lit("crm:E52_Time-Span")
 
 
 def render_place(places: DataFrame) -> DataFrame:
@@ -34,44 +40,39 @@ def render_place(places: DataFrame) -> DataFrame:
 
     Reference: get_data_apis_vanilla.py:834-895.
     """
-    pid = F.col("id")
-    places = places.withColumns(
-        {
-            "_plc": node("idmapis:place.", pid),
-            "_app": node("idmapis:placeappellation.", pid),
-            "_ident": node("idmapis:placeidentifier.", pid),
-            "_space": node("idmapis:spaceprimitive.", pid),
-        }
-    ).localCheckpoint(eager=False)
-    plc, app, ident, space = (F.col(c) for c in ["_plc", "_app", "_ident", "_space"])
-    has_coords = F.col("lat").isNotNull() & F.col("lng").isNotNull()
+    places = with_nodes(places, {
+        "_plc": node("idmapis:place.", "id"),
+        "_app": node("idmapis:placeappellation.", "id"),
+        "_ident": node("idmapis:placeidentifier.", "id"),
+        "_space": node("idmapis:spaceprimitive.", "id"),
+    })
+    has_coords = "lat IS NOT NULL AND lng IS NOT NULL"
     ts = [
-        Template(plc, "rdfs:label", F.col("name"), lang="de"),
-        Template(plc, "rdf:type", F.lit("crm:E53_Place")),
-        Template(plc, "crm:P1_is_identified_by", app),
-        Template(app, "rdf:type", F.lit(E33)),
-        Template(app, "rdfs:label", F.col("name"), lang="de"),
-        Template(plc, "owl:sameAs", node(f"{APIS_BASE}/entity/", pid)),
-        Template(plc, "crm:P1_is_identified_by", ident),
+        Template("_plc", "rdfs:label", "name", lang="de"),
+        Template("_plc", "rdf:type", sql_lit("crm:E53_Place")),
+        Template("_plc", "crm:P1_is_identified_by", "_app"),
+        Template("_app", "rdf:type", E33),
+        Template("_app", "rdfs:label", "name", lang="de"),
+        Template("_plc", "owl:sameAs", node(f"{APIS_BASE}/entity/", "id")),
+        Template("_plc", "crm:P1_is_identified_by", "_ident"),
         # reference typo kept: E_42_Identifier (:871)
-        Template(ident, "rdf:type", F.lit("crm:E_42_Identifier")),
-        Template(ident, "rdfs:label", pid.cast("string")),
+        Template("_ident", "rdf:type", sql_lit("crm:E_42_Identifier")),
+        Template("_ident", "rdfs:label", "CAST(id AS STRING)"),
         # space primitive (F12 WKT literal, geo:wktLiteral)
-        Template(plc, "crm:P168_place_is_defined_by", space, cond=has_coords),
-        Template(space, "rdf:type", F.lit("crm:E94_Space_Primitive"), cond=has_coords),
+        Template("_plc", "crm:P168_place_is_defined_by", "_space", cond=has_coords),
+        Template("_space", "rdf:type", sql_lit("crm:E94_Space_Primitive"), cond=has_coords),
         Template(
-            space,
+            "_space",
             "crm:P168_place_is_defined_by",
-            scalar.wkt_point_literal(F.col("lng"), F.col("lat")),
+            scalar.wkt_point_literal("lng", "lat"),
             cond=has_coords,
             datatype="geo:wktLiteral",
         ),
     ]
     scalar_triples = explode_templates(places, ts, include_datatype=True)
-    same = places.select(F.col("_plc").alias("plc"), F.explode("sameAs").alias("uri"))
     same_triples = explode_templates(
-        same,
-        [Template(F.col("plc"), "owl:sameAs", F.col("uri"))],
+        places.selectExpr("_plc AS plc", "explode(sameAs) AS uri"),
+        [Template("plc", "owl:sameAs", "uri")],
         include_datatype=True,
     )
     return scalar_triples.unionByName(same_triples).distinct()
@@ -82,51 +83,46 @@ def render_organization(orgs: DataFrame) -> DataFrame:
 
     Reference: get_data_apis_vanilla.py:699-779.
     """
-    oid = F.col("id")
-    orgs = orgs.withColumns(
-        {
-            "_org": node("idmapis:groupproxy.", oid),
-            "_app": node("idmapis:groupappellation.", oid),
-            "_start": node("idmapis:groupstart.", oid),
-            "_start_span": node("idmapis:groupstart.timespan.", oid),
-            "_end": node("idmapis:groupend.", oid),
-            "_end_span": node("idmapis:groupend.timespan.", oid),
-        }
-    ).localCheckpoint(eager=False)
-    org, app = F.col("_org"), F.col("_app")
+    orgs = with_nodes(orgs, {
+        "_org": node("idmapis:groupproxy.", "id"),
+        "_app": node("idmapis:groupappellation.", "id"),
+        "_start": node("idmapis:groupstart.", "id"),
+        "_start_span": node("idmapis:groupstart.timespan.", "id"),
+        "_end": node("idmapis:groupend.", "id"),
+        "_end_span": node("idmapis:groupend.timespan.", "id"),
+    })
     ts = [
-        Template(org, "rdf:type", F.lit("crm:E74_Group")),
-        Template(org, "rdf:type", F.lit("idmcore:Group")),
-        Template(org, "owl:sameAs", node(f"{APIS_BASE}/entity/", oid)),
-        Template(org, "crm:P1_is_identified_by", app),
-        Template(app, "rdfs:label", F.col("name"), lang="de"),
-        Template(app, "rdf:type", F.lit(E33)),
+        Template("_org", "rdf:type", sql_lit("crm:E74_Group")),
+        Template("_org", "rdf:type", sql_lit("idmcore:Group")),
+        Template("_org", "owl:sameAs", node(f"{APIS_BASE}/entity/", "id")),
+        Template("_org", "crm:P1_is_identified_by", "_app"),
+        Template("_app", "rdfs:label", "name", lang="de"),
+        Template("_app", "rdf:type", E33),
     ]
-    for kind, ev_col, span_col, ev_type, link in [
+    for kind, ev, span, ev_type, link in [
         ("start", "_start", "_start_span", "crm:E63_Beginning_of_Existence", "crm:P92_brought_into_existence"),
         ("end", "_end", "_end_span", "crm:E64_End_of_Existence", "crm:P93_took_out_of_existence"),
     ]:
-        written = F.col(f"{kind}_date_written")
-        date = F.col(f"{kind}_date")
-        gate = written.isNotNull() & (F.length(written) >= 4)
-        ev, span = F.col(ev_col), F.col(span_col)
+        written, date = f"{kind}_date_written", f"{kind}_date"
+        gate = f"{written} IS NOT NULL AND length({written}) >= 4"
+        # time-span only when the machine date also exists (:729-740)
+        dated = f"{gate} AND {date} IS NOT NULL"
         ts += [
-            Template(ev, "rdf:type", F.lit(ev_type), cond=gate),
-            Template(ev, link, org, cond=gate),
-            # time-span only when the machine date also exists (:729-740)
-            Template(ev, "crm:P4_has_time-span", span, cond=gate & date.isNotNull()),
-            Template(span, "rdf:type", F.lit("crm:E52_Time-Span"), cond=gate & date.isNotNull()),
+            Template(ev, "rdf:type", sql_lit(ev_type), cond=gate),
+            Template(ev, link, "_org", cond=gate),
+            Template(ev, "crm:P4_has_time-span", span, cond=dated),
+            Template(span, "rdf:type", E52, cond=dated),
         ]
         bounds = scalar.time_span_bounds(kind, written, date)
         for pred, literal in bounds.items():
-            ts.append(Template(span, pred, literal, cond=gate & date.isNotNull() & literal.isNotNull()))
+            ts.append(Template(span, pred, literal, cond=f"{dated} AND ({literal}) IS NOT NULL"))
         if kind == "start":
-            label = scalar.time_span_label(F.col("start_date_written"), F.col("end_date_written"))
-            ts.append(Template(span, "rdfs:label", label, cond=gate & date.isNotNull() & label.isNotNull()))
+            label = scalar.time_span_label("start_date_written", "end_date_written")
+            ts.append(Template(span, "rdfs:label", label, cond=f"{dated} AND ({label}) IS NOT NULL"))
     scalar_triples = explode_templates(orgs, ts)
-    same = orgs.select(F.col("_org").alias("org"), F.explode("sameAs").alias("uri"))
     same_triples = explode_templates(
-        same, [Template(F.col("org"), "owl:sameAs", F.col("uri"))]
+        orgs.selectExpr("_org AS org", "explode(sameAs) AS uri"),
+        [Template("org", "owl:sameAs", "uri")],
     )
     return scalar_triples.unionByName(same_triples).distinct()
 
@@ -138,44 +134,40 @@ def _event_templates(event_type: str) -> list[Template]:
     related_place (struct), start/end dates. The duplicate role-label add
     in the reference collapses under set semantics -> one template.
     """
-    rid = F.col("id")
-    ev = node(f"idmapis:event.{event_type}.", rid)
-    role = node(f"idmapis:{event_type}.eventrole.", rid)
-    pers = node("idmapis:personproxy.", F.col("related_person.id"))
-    roletype = node("idmrole:", F.col("relation_type.id"))
-    span = node(f"idmapis:{event_type}.timespan.", rid)
-    has_start = F.col("start_date").isNotNull()
-    has_end = has_start & F.col("end_date").isNotNull()
+    ev = node(f"idmapis:event.{event_type}.", "id")
+    role = node(f"idmapis:{event_type}.eventrole.", "id")
+    pers = node("idmapis:personproxy.", "related_person.id")
+    roletype = node("idmrole:", "relation_type.id")
+    span = node(f"idmapis:{event_type}.timespan.", "id")
+    has_start = "start_date IS NOT NULL"
+    has_end = f"{has_start} AND end_date IS NOT NULL"
     ts = [
         Template(role, "bioc:inheres_in", pers),
         Template(role, "rdf:type", roletype),
-        Template(roletype, "rdfs:subClassOf", F.lit("bioc:Event_Role")),
-        Template(roletype, "rdfs:label", F.col("relation_type.label"), lang="de"),
+        Template(roletype, "rdfs:subClassOf", sql_lit("bioc:Event_Role")),
+        Template(roletype, "rdfs:label", "relation_type.label", lang="de"),
         Template(ev, "bioc:had_participant_in_role", role),
-        Template(ev, "rdf:type", F.lit("crm:E5_Event")),
-        Template(role, "rdfs:label", F.col("relation_type.label"), lang="de"),
+        Template(ev, "rdf:type", sql_lit("crm:E5_Event")),
+        Template(role, "rdfs:label", "relation_type.label", lang="de"),
         Template(
             ev,
             "rdfs:label",
             # f-string semantics: NULL renders as 'None' (:823-826)
-            F.concat(
-                F.coalesce(F.col("related_person.label"), F.lit("None")), F.lit(" "),
-                F.coalesce(F.col("relation_type.label"), F.lit("None")), F.lit(" "),
-                F.coalesce(F.col("related_place.label"), F.lit("None")),
-            ),
+            f"concat({fstr('related_person.label')}, ' ', {fstr('relation_type.label')}, ' ', "
+            f"{fstr('related_place.label')})",
             lang="de",
         ),
         Template(ev, "crm:P4_has_time-span", span, cond=has_start),
-        Template(span, "rdf:type", F.lit("crm:E52_Time-Span"), cond=has_start),
+        Template(span, "rdf:type", E52, cond=has_start),
     ]
-    start = scalar.time_span_bounds("start", F.col("start_date_written"), F.col("start_date"))
+    start = scalar.time_span_bounds("start", "start_date_written", "start_date")
     for pred, literal in start.items():
-        ts.append(Template(span, pred, literal, cond=has_start & literal.isNotNull()))
-    label = scalar.time_span_label(F.col("start_date_written"), F.col("end_date_written"))
-    ts.append(Template(span, "rdfs:label", label, cond=has_start & label.isNotNull()))
-    end = scalar.time_span_bounds("end", F.col("end_date_written"), F.col("end_date"))
+        ts.append(Template(span, pred, literal, cond=f"{has_start} AND ({literal}) IS NOT NULL"))
+    label = scalar.time_span_label("start_date_written", "end_date_written")
+    ts.append(Template(span, "rdfs:label", label, cond=f"{has_start} AND ({label}) IS NOT NULL"))
+    end = scalar.time_span_bounds("end", "end_date_written", "end_date")
     for pred, literal in end.items():
-        ts.append(Template(span, pred, literal, cond=has_end & literal.isNotNull()))
+        ts.append(Template(span, pred, literal, cond=f"{has_end} AND ({literal}) IS NOT NULL"))
     return ts
 
 
@@ -188,29 +180,22 @@ def render_personplace_relations(rels: DataFrame) -> tuple[DataFrame, DataFrame]
     Reference: get_data_apis_vanilla.py:115-162.
     """
     rels = rels.localCheckpoint(eager=False)
-    place_uri = node("idmapis:place.", F.col("related_place.id"))
-    rt = F.col("relation_type.id")
+    place_uri = node("idmapis:place.", "related_place.id")
+    generic = "NOT relation_type.id IN (595, 596)"
     p7 = [
-        Template(
-            node("idmapis:birthevent.", F.col("related_person.id")),
-            "crm:P7_took_place_at", place_uri, cond=rt == 595,
-        ),
-        Template(
-            node("idmapis:deathevent.", F.col("related_person.id")),
-            "crm:P7_took_place_at", place_uri, cond=rt == 596,
-        ),
-        Template(
-            node("idmapis:event.personplace.", F.col("id")),
-            "crm:P7_took_place_at", place_uri, cond=~rt.isin(595, 596),
-        ),
+        Template(node("idmapis:birthevent.", "related_person.id"),
+                 "crm:P7_took_place_at", place_uri, cond="relation_type.id = 595"),
+        Template(node("idmapis:deathevent.", "related_person.id"),
+                 "crm:P7_took_place_at", place_uri, cond="relation_type.id = 596"),
+        Template(node("idmapis:event.personplace.", "id"),
+                 "crm:P7_took_place_at", place_uri, cond=generic),
     ]
-    generic = rels.filter(~rt.isin(595, 596))
     triples = (
         explode_templates(rels, p7)
-        .unionByName(explode_templates(generic, _event_templates("personplace")))
+        .unionByName(explode_templates(rels.filter(generic), _event_templates("personplace")))
         .distinct()
     )
-    worklist = rels.select(F.col("related_place.id").alias("place_id")).distinct()
+    worklist = rels.selectExpr("related_place.id AS place_id").distinct()
     return triples, worklist
 
 
@@ -228,31 +213,31 @@ def render_personperson_relations(rels: DataFrame) -> tuple[DataFrame, DataFrame
     Returns (triples, personB worklist).
     """
     rels = rels.localCheckpoint(eager=False)
-    rt = F.col("relation_type.id")
-    is_family = rt.isin(FAMILY_RELATIONS)
-    rel_pred = F.when(is_family, F.lit("bioc:has_family_relation")).otherwise(
-        F.lit("bioc:has_person_relation")
+    # a NULL relation type is not a family relation
+    is_family = f"coalesce(relation_type.id IN ({', '.join(map(str, FAMILY_RELATIONS))}), false)"
+    role_cls = (
+        f"CASE WHEN {is_family} THEN 'bioc:Family_Relationship_Role' "
+        "ELSE 'bioc:Person_Relationship_Role' END"
     )
-    role_cls = F.when(is_family, F.lit("bioc:Family_Relationship_Role")).otherwise(
-        F.lit("bioc:Person_Relationship_Role")
-    )
-    pers_a = node("idmapis:personproxy.", F.col("related_person.id"))
-    pers_b = node("idmapis:personproxy.", F.col("related_personB.id"))
-    n_rel = node("idmapis:personrelation.", F.col("id"))
-    n_reltype = node("idmrelations:", rt)
-    parent = F.col("relation_type.parent_id")
-    n_parent = node("idmrelations:", parent)
+    pers_a = node("idmapis:personproxy.", "related_person.id")
+    pers_b = node("idmapis:personproxy.", "related_personB.id")
+    n_rel = node("idmapis:personrelation.", "id")
+    n_reltype = node("idmrelations:", "relation_type.id")
+    n_parent = node("idmrelations:", "relation_type.parent_id")
+    linked = f"({pers_a}) IS NOT NULL AND ({n_rel}) IS NOT NULL"
+    has_parent = "relation_type.parent_id IS NOT NULL"
     ts = [
-        Template(pers_a, rel_pred, n_rel),
+        Template(pers_a, "bioc:has_family_relation", n_rel, cond=f"{is_family} AND {linked}"),
+        Template(pers_a, "bioc:has_person_relation", n_rel, cond=f"NOT {is_family} AND {linked}"),
         Template(n_rel, "rdf:type", n_reltype),
-        Template(n_rel, "rdfs:label", F.col("relation_type.label"), lang="de"),
+        Template(n_rel, "rdfs:label", "relation_type.label", lang="de"),
         Template(pers_b, "bioc:bearer_of", n_rel),
-        Template(n_reltype, "rdfs:subClassOf", n_parent, cond=parent.isNotNull()),
-        Template(n_parent, "rdfs:subClassOf", role_cls, cond=parent.isNotNull()),
-        Template(n_reltype, "rdfs:subClassOf", role_cls, cond=parent.isNull()),
+        Template(n_reltype, "rdfs:subClassOf", n_parent, cond=has_parent),
+        Template(n_parent, "rdfs:subClassOf", role_cls, cond=has_parent),
+        Template(n_reltype, "rdfs:subClassOf", role_cls, cond="relation_type.parent_id IS NULL"),
     ]
     triples = explode_templates(rels, ts).distinct()
-    worklist = rels.select(F.col("related_personB.id").alias("person_id")).distinct()
+    worklist = rels.selectExpr("related_personB.id AS person_id").distinct()
     return triples, worklist
 
 
@@ -264,13 +249,13 @@ def render_organizationplace_relations(rels: DataFrame) -> tuple[DataFrame, Data
         rels,
         [
             Template(
-                node("idmapis:groupproxy.", F.col("related_institution.id")),
+                node("idmapis:groupproxy.", "related_institution.id"),
                 "crm:P74_has_current_or_former_residence",
-                node("idmapis:place.", F.col("related_place.id")),
+                node("idmapis:place.", "related_place.id"),
             )
         ],
     ).distinct()
-    worklist = rels.select(F.col("related_place.id").alias("place_id")).distinct()
+    worklist = rels.selectExpr("related_place.id AS place_id").distinct()
     return triples, worklist
 
 
@@ -293,79 +278,68 @@ def render_personinstitution_relations(
     Returns (triples, institution worklist).
     """
     rels = rels.localCheckpoint(eager=False)
-    rid = F.col("id")
-    rt = F.col("relation_type.id")
-    parent = F.col("relation_type.parent_id")
-    pers = node("idmapis:personproxy.", F.col("related_person.id"))
-    inst = node("idmapis:groupproxy.", F.col("related_institution.id"))
-    n_rel = node("idmapis:grouprelation.", rid)
+    rt, parent = "relation_type.id", "relation_type.parent_id"
+    pers = node("idmapis:personproxy.", "related_person.id")
+    inst = node("idmapis:groupproxy.", "related_institution.id")
+    n_rel = node("idmapis:grouprelation.", "id")
     grouprole_t = node("idmapis:grouprole.", rt)
-    career = node("idmapis:career.", rid)
-    span = node("idmapis:career.timespan.", rid)
-    persrole = node("idmapis:personrole.", rid, ".", F.col("related_person.id"))
+    career = node("idmapis:career.", "id")
+    span = node("idmapis:career.timespan.", "id")
+    persrole = node("idmapis:personrole.", "id", sql_lit("."), "related_person.id")
     persrole_t = node("idmapis:personrole.", rt)
-    grouprole_inst = node("idmapis:grouprole.", rid, ".", F.col("related_institution.id"))
-    fstr = lambda c: F.coalesce(c.cast("string"), F.lit("None"))  # noqa: E731
-    has_start = F.col("start_date").isNotNull()
-    has_end = F.col("end_date").isNotNull()
+    grouprole_inst = node("idmapis:grouprole.", "id", sql_lit("."), "related_institution.id")
+    has_parent = f"{parent} IS NOT NULL"
+    has_start, has_end = "start_date IS NOT NULL", "end_date IS NOT NULL"
     ts = [
         Template(pers, "bioc:has_group_relation", n_rel),
         Template(n_rel, "rdf:type", grouprole_t),
         Template(grouprole_t, "rdfs:subClassOf", node("idmapis:grouprole.", parent),
-                 cond=parent.isNotNull()),
-        Template(n_rel, "rdfs:label", F.col("relation_type.label"), lang="de"),
+                 cond=has_parent),
+        Template(n_rel, "rdfs:label", "relation_type.label", lang="de"),
         Template(n_rel, "bioc:inheres_in", inst),
-        Template(career, "rdf:type", F.lit("idmcore:Career")),
-        Template(F.lit("idmcore:Career"), "rdfs:subClassOf", F.lit("crm:E5_Event")),
+        Template(career, "rdf:type", sql_lit("idmcore:Career")),
+        Template(sql_lit("idmcore:Career"), "rdfs:subClassOf", sql_lit("crm:E5_Event")),
         Template(
             career, "rdfs:label",
-            F.concat(fstr(F.col("related_person.label")), F.lit(" "),
-                     fstr(F.col("relation_type.label")), F.lit(" "),
-                     fstr(F.col("related_institution.label"))),
+            f"concat({fstr('related_person.label')}, ' ', {fstr('relation_type.label')}, ' ', "
+            f"{fstr('related_institution.label')})",
             lang="de",
         ),
         Template(career, "bioc:had_participant_in_role", persrole),
         Template(pers, "bioc:bearer_of", persrole),
         Template(persrole, "rdf:type", persrole_t),
         # quirk: rdf:type (not subClassOf) toward the parent role (:433)
-        Template(persrole_t, "rdf:type", node("idmapis:personrole.", parent),
-                 cond=parent.isNotNull()),
+        Template(persrole_t, "rdf:type", node("idmapis:personrole.", parent), cond=has_parent),
         Template(career, "bioc:had_participant_in_role", grouprole_inst),
-        Template(grouprole_inst, "rdf:type", F.lit("bioc:Group_Relationship_Role")),
+        Template(grouprole_inst, "rdf:type", sql_lit("bioc:Group_Relationship_Role")),
         Template(grouprole_inst, "bioc:inheres_in", inst),
-        Template(career, "crm:P4_has_time-span", span, cond=has_start | has_end),
+        Template(career, "crm:P4_has_time-span", span, cond=f"{has_start} OR {has_end}"),
     ]
     for kind, cond in [("start", has_start), ("end", has_end)]:
-        bounds = scalar.time_span_bounds(
-            kind, F.col(f"{kind}_date_written"), F.col(f"{kind}_date")
-        )
+        bounds = scalar.time_span_bounds(kind, f"{kind}_date_written", f"{kind}_date")
         for pred, literal in bounds.items():
-            ts.append(Template(span, pred, literal, cond=cond & literal.isNotNull()))
+            ts.append(Template(span, pred, literal, cond=f"{cond} AND ({literal}) IS NOT NULL"))
         if kind == "start":
-            label = scalar.time_span_label(
-                F.col("start_date_written"), F.col("end_date_written")
-            )
-            ts.append(Template(span, "rdfs:label", label, cond=cond & label.isNotNull()))
+            label = scalar.time_span_label("start_date_written", "end_date_written")
+            ts.append(Template(span, "rdfs:label", label, cond=f"{cond} AND ({label}) IS NOT NULL"))
         # E52 typing comes from create_time_span_tripels for each kind
-        ts.append(Template(span, "rdf:type", F.lit("crm:E52_Time-Span"), cond=cond))
+        ts.append(Template(span, "rdf:type", E52, cond=cond))
     triples = explode_templates(rels, ts)
     if residence_triples is not None:
         # J8: copy the institution's residences onto the career as P7
         res = residence_triples.filter(
-            F.col("p") == "crm:P74_has_current_or_former_residence"
-        ).select(F.col("s").alias("_inst"), F.col("o").alias("_plc"))
+            "p = 'crm:P74_has_current_or_former_residence'"
+        ).selectExpr("s AS _inst", "o AS _plc")
         j8 = (
-            rels.select(career.alias("career"), inst.alias("_inst"))
+            rels.selectExpr(f"{career} AS career", f"{inst} AS _inst")
             .join(res, on="_inst")
-            .select(
-                F.col("career").alias("s"),
-                F.lit("crm:P7_took_place_at").alias("p"),
-                F.col("_plc").alias("o"),
-                F.lit(None).cast("string").alias("o_lang"),
+            .selectExpr(
+                "career AS s", "'crm:P7_took_place_at' AS p", "_plc AS o",
+                "CAST(NULL AS STRING) AS o_lang",
             )
         )
         triples = triples.unionByName(j8)
-    worklist = rels.select(F.col("related_institution.id").alias("institution_id")).distinct()
+    worklist = rels.selectExpr("related_institution.id AS institution_id").distinct()
     return triples.distinct(), worklist
 
 
@@ -380,16 +354,15 @@ def render_personroles(roles: DataFrame) -> tuple[DataFrame, DataFrame]:
       existence probe becomes a left_anti join (J7)
     """
     roles = roles.localCheckpoint(eager=False)
-    n_role = node("idmapis:personrole.", F.col("id"))
+    n_role = node("idmapis:personrole.", "id")
     ts = [
-        Template(n_role, "rdfs:label", F.col("label"), lang="de"),
-        Template(n_role, "rdf:type", F.lit("bioc:Actor_Role"),
-                 cond=F.col("parent_id").isNull()),
+        Template(n_role, "rdfs:label", "label", lang="de"),
+        Template(n_role, "rdf:type", sql_lit("bioc:Actor_Role"), cond="parent_id IS NULL"),
     ]
     triples = explode_templates(roles, ts).distinct()
-    known = roles.select(F.col("id").alias("parent_id")).distinct()
+    known = roles.selectExpr("id AS parent_id").distinct()
     worklist = (
-        roles.filter(F.col("parent_id").isNotNull())
+        roles.filter("parent_id IS NOT NULL")
         .select("parent_id")
         .distinct()
         .join(known, on="parent_id", how="left_anti")

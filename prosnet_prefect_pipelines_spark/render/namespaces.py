@@ -5,8 +5,7 @@ serializers expand them here."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from prosnet_prefect_pipelines_spark.render.templates import sql_lit
 
 PREFIXES: dict[str, str] = {
     "crm": "http://www.cidoc-crm.org/cidoc-crm/",
@@ -28,15 +27,17 @@ PREFIXES: dict[str, str] = {
 }
 
 
-def expand(term: Column) -> Column:
-    """Compact prefixed name -> full URI; terms that are already full URIs
-    (or have no known prefix) pass through unchanged."""
-    out = term
-    for prefix, uri in PREFIXES.items():
-        if prefix.startswith("urn:"):
-            continue
-        out = F.when(
-            term.startswith(prefix + ":"),
-            F.concat(F.lit(uri), term.substr(F.lit(len(prefix) + 2), F.length(term))),
-        ).otherwise(out)
-    return out
+# the prefixes declared in serialized output (urn: pseudo-prefixes are not)
+DECLARED: dict[str, str] = {p: uri for p, uri in PREFIXES.items() if not p.startswith("urn:")}
+
+
+def expand(term: str) -> str:
+    """Compact prefixed name -> full URI, as SQL text over the SQL
+    expression ``term``; terms that are already full URIs (or have no
+    known prefix) pass through unchanged."""
+    whens = " ".join(
+        f"WHEN startswith({term}, {sql_lit(p + ':')}) "
+        f"THEN concat({sql_lit(uri)}, substring({term}, {len(p) + 2}, length({term})))"
+        for p, uri in DECLARED.items()
+    )
+    return f"CASE {whens} ELSE {term} END"

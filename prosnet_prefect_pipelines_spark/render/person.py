@@ -19,157 +19,120 @@ sinks expand them via render.namespaces.PREFIXES (R11).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from prosnet_prefect_pipelines_spark.functions import scalar
 from prosnet_prefect_pipelines_spark.render.templates import (
     Template,
-    explode_prepared,
+    explode_templates,
     node,
-    prepare_templates,
+    sql_lit,
+    with_nodes,
 )
-from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 APIS_BASE = "https://apis.acdh.oeaw.ac.at"
 
-# render_person memoizes the static template expression trees per
-# session (opt r11, guide §1.2 step 2). The ~45 conditional-struct
-# Columns reference only field names — no data, no plan, no session
-# state — but building them costs thousands of py4j round trips:
-# measured 1.6 s of driver time per render_person call at sf0.1 against
-# 1.1 s of actual execution. reset_memo_fixtures clears the memo, so
-# bench cold passes still pay (and measure) full construction.
 
-
-def _fstr(c: Column) -> Column:
+def fstr(c: str) -> str:
     """Python f-string null rendering: None -> 'None' (quirk, :532)."""
-    return F.coalesce(c.cast("string"), F.lit("None"))
+    return f"coalesce(CAST({c} AS STRING), 'None')"
 
 
-def _person_exprs() -> dict:
-    """Build the static expression trees for render_person once.
+# node URIs and shared labels, computed once per person (templates.with_nodes)
+_NODES = {
+    "_pers": node("idmapis:personproxy.", "id"),
+    "_app": node("idmapis:appellation.label.", "id"),
+    "_app_first": node("idmapis:appellation.first_name.", "id"),
+    "_app_last": node("idmapis:appellation.last_name.", "id"),
+    "_full_name": f"concat({fstr('first_name')}, ' ', {fstr('name')})",
+    "_birth_ev": node("idmapis:birthevent.", "id"),
+    "_death_ev": node("idmapis:deathevent.", "id"),
+    "_born_role": node("idmapis:born_person.", "id"),
+    "_dec_role": node("idmapis:deceased_person.", "id"),
+    "_birth_span": node("idmapis:birth.timespan.", "id"),
+    "_death_span": node("idmapis:death.timespan.", "id"),
+    "_bio": node("idmapis:text.", "id", sql_lit(".bio")),
+}
 
-    Returns {withcols, scalar_prep, prof_prep, same_prep, prof_sel,
-    same_sel}; everything is an unresolved Column tree over
-    APIS_PERSON_SCHEMA field names.
-    """
-    pid = F.col("id")
-    withcols = {
-        "_pers": node("idmapis:personproxy.", pid),
-        "_app": node("idmapis:appellation.label.", pid),
-        "_app_first": node("idmapis:appellation.first_name.", pid),
-        "_app_last": node("idmapis:appellation.last_name.", pid),
-        "_full_name": F.concat(_fstr(F.col("first_name")), F.lit(" "), _fstr(F.col("name"))),
-        "_birth_ev": node("idmapis:birthevent.", pid),
-        "_death_ev": node("idmapis:deathevent.", pid),
-        "_born_role": node("idmapis:born_person.", pid),
-        "_dec_role": node("idmapis:deceased_person.", pid),
-        "_birth_span": node("idmapis:birth.timespan.", pid),
-        "_death_span": node("idmapis:death.timespan.", pid),
-        "_bio": node("idmapis:text.", pid, ".bio"),
-    }
-    pers = F.col("_pers")
-    app = F.col("_app")
-    app_first = F.col("_app_first")
-    app_last = F.col("_app_last")
-    name, first = F.col("name"), F.col("first_name")
-    full_name = F.col("_full_name")
 
-    E33 = "crm:E33_E41_Linguistic_Appellation"
-    ts = []
-
-    ts += [
-        Template(pers, "rdf:type", F.lit("crm:E21_Person")),
-        Template(pers, "rdf:type", F.lit("idmcore:Person_Proxy")),
-        Template(pers, "rdfs:label", full_name, lang="de"),
-        Template(pers, "owl:sameAs", node(f"{APIS_BASE}/entity/", pid)),
-        Template(app, "rdf:type", F.lit(E33)),
-        Template(app, "rdfs:label", scalar.name_appellation(name, first), lang="de"),
-        Template(pers, "crm:P1_is_identified_by", app),
+def _person_templates() -> list[Template]:
+    """The scalar templates over the _NODES projection."""
+    E33 = sql_lit("crm:E33_E41_Linguistic_Appellation")
+    ts = [
+        Template("_pers", "rdf:type", sql_lit("crm:E21_Person")),
+        Template("_pers", "rdf:type", sql_lit("idmcore:Person_Proxy")),
+        Template("_pers", "rdfs:label", "_full_name", lang="de"),
+        Template("_pers", "owl:sameAs", node(f"{APIS_BASE}/entity/", "id")),
+        Template("_app", "rdf:type", E33),
+        Template("_app", "rdfs:label", scalar.name_appellation("name", "first_name"), lang="de"),
+        Template("_pers", "crm:P1_is_identified_by", "_app"),
     ]
     # component appellations (:553-577)
-    has_first, has_name = first.isNotNull(), name.isNotNull()
+    has_first, has_name = "first_name IS NOT NULL", "name IS NOT NULL"
     ts += [
-        Template(app_first, "rdf:type", F.lit(E33), cond=has_first),
-        Template(app_first, "rdfs:label", first, lang="de", cond=has_first),
-        Template(app, "crm:P148_has_component", app_first, cond=has_first),
-        Template(app_last, "rdf:type", F.lit(E33), cond=has_name),
-        Template(app_last, "rdfs:label", name, lang="de", cond=has_name),
-        Template(app, "crm:P148_has_component", app_last, cond=has_name),
+        Template("_app_first", "rdf:type", E33, cond=has_first),
+        Template("_app_first", "rdfs:label", "first_name", lang="de", cond=has_first),
+        Template("_app", "crm:P148_has_component", "_app_first", cond=has_first),
+        Template("_app_last", "rdf:type", E33, cond=has_name),
+        Template("_app_last", "rdfs:label", "name", lang="de", cond=has_name),
+        Template("_app", "crm:P148_has_component", "_app_last", cond=has_name),
     ]
 
     # birth / death events with time-spans (:578-618; F11 :32-112)
-    for kind, event_label, event_type, link_pred, role_name, ev_prefix in [
-        ("start", "Birth of ", "crm:E67_Birth", "crm:P98_brought_into_life", "born_person", "birthevent."),
-        ("end", "Death of ", "crm:E69_Death", "crm:P100_was_death_of", "deceased_person", "deathevent."),
+    for kind, event_label, event_type, link_pred, role_name, ev, role, span in [
+        ("start", "Birth of ", "crm:E67_Birth", "crm:P98_brought_into_life", "born_person",
+         "_birth_ev", "_born_role", "_birth_span"),
+        ("end", "Death of ", "crm:E69_Death", "crm:P100_was_death_of", "deceased_person",
+         "_death_ev", "_dec_role", "_death_span"),
     ]:
-        cond = F.col(f"{kind}_date").isNotNull()
-        ev = F.col("_birth_ev") if kind == "start" else F.col("_death_ev")
-        role = F.col("_born_role") if kind == "start" else F.col("_dec_role")
-        role_cls = F.lit(f"idmrole:{role_name}")
-        span = F.col("_birth_span") if kind == "start" else F.col("_death_span")
+        cond = f"{kind}_date IS NOT NULL"
+        role_cls = sql_lit(f"idmrole:{role_name}")
         ts += [
-            Template(role, "bioc:inheres_in", pers, cond=cond),
+            Template(role, "bioc:inheres_in", "_pers", cond=cond),
             Template(role, "rdf:type", role_cls, cond=cond),
-            Template(role_cls, "rdfs:subClassOf", F.lit("bioc:Event_Role"), cond=cond),
+            Template(role_cls, "rdfs:subClassOf", sql_lit("bioc:Event_Role"), cond=cond),
             Template(ev, "bioc:had_participant_in_role", role, cond=cond),
-            Template(ev, "rdf:type", F.lit(event_type), cond=cond),
+            Template(ev, "rdf:type", sql_lit(event_type), cond=cond),
             # quirk: birth label untagged, death label @de (:592 vs :613)
-            Template(ev, "rdfs:label", F.concat(F.lit(event_label), full_name),
+            Template(ev, "rdfs:label", f"concat({sql_lit(event_label)}, _full_name)",
                      lang=None if kind == "start" else "de", cond=cond),
             Template(ev, "crm:P4_has_time-span", span, cond=cond),
-            Template(ev, link_pred, pers, cond=cond),
-            Template(span, "rdf:type", F.lit("crm:E52_Time-Span"), cond=cond),
+            Template(ev, link_pred, "_pers", cond=cond),
+            Template(span, "rdf:type", sql_lit("crm:E52_Time-Span"), cond=cond),
         ]
-        bounds = scalar.time_span_bounds(
-            kind, F.col(f"{kind}_date_written"), F.col(f"{kind}_date")
-        )
+        bounds = scalar.time_span_bounds(kind, f"{kind}_date_written", f"{kind}_date")
         for pred, literal in bounds.items():
-            ts.append(Template(span, pred, literal, cond=cond & literal.isNotNull()))
+            ts.append(Template(span, pred, literal, cond=f"{cond} AND ({literal}) IS NOT NULL"))
         if kind == "start":
-            label = scalar.time_span_label(F.col("start_date_written"), F.col("end_date_written"))
-            ts.append(Template(span, "rdfs:label", label, cond=cond & label.isNotNull()))
+            label = scalar.time_span_label("start_date_written", "end_date_written")
+            ts.append(Template(span, "rdfs:label", label, cond=f"{cond} AND ({label}) IS NOT NULL"))
 
     # gender (:631-633) — None/empty guarded, str.capitalize
-    gender_ok = F.col("gender").isNotNull() & (F.length("gender") > 0)
     ts.append(
-        Template(pers, "bioc:has_gender",
-                 F.concat(F.lit("bioc:"), scalar.gender_capitalize(F.col("gender"))),
-                 cond=gender_ok)
+        Template("_pers", "bioc:has_gender",
+                 f"concat('bioc:', {scalar.gender_capitalize('gender')})",
+                 cond="gender IS NOT NULL AND length(gender) > 0")
     )
 
     # bio text links (:634-656) — only when more than one text
-    has_bio = F.size(F.coalesce(F.col("text"), F.array())) > 1
-    bio = F.col("_bio")
+    has_bio = "size(coalesce(`text`, array())) > 1"
     ts += [
-        Template(pers, "idmcore:bio_link", bio, cond=has_bio),
-        Template(bio, "idmcore:full_bio_link", F.col("text").getItem(0).getField("url"), cond=has_bio),
-        Template(bio, "idmcore:short_bio_link", F.col("text").getItem(1).getField("url"), cond=has_bio),
+        Template("_pers", "idmcore:bio_link", "_bio", cond=has_bio),
+        Template("_bio", "idmcore:full_bio_link", "`text`[0].url", cond=has_bio),
+        Template("_bio", "idmcore:short_bio_link", "`text`[1].url", cond=has_bio),
     ]
+    return ts
 
-    # professions (:619-630) — list explode
-    prof_node = node("idmapis:occupation.", F.col("pr.id"))
-    prof_ts = [
-        Template(F.col("pers"), "bioc:has_occupation", prof_node),
-        Template(prof_node, "rdfs:label", F.col("pr.label"), lang="de"),
-        Template(prof_node, "rdfs:subClassOf",
-                 node("idmapis:occupation.", F.col("pr.parent_id")),
-                 cond=F.col("pr.parent_id").isNotNull()),
-        Template(prof_node, "rdfs:subClassOf", F.lit("bioc:Occupation")),
-    ]
 
-    # sameAs list (:634-635)
-    same_ts = [Template(F.col("pers"), "owl:sameAs", F.col("uri"))]
-
-    return {
-        "withcols": withcols,
-        "scalar_prep": prepare_templates(ts),
-        "prof_prep": prepare_templates(prof_ts),
-        "same_prep": prepare_templates(same_ts),
-        "prof_sel": [F.col("_pers").alias("pers"), F.explode("profession").alias("pr")],
-        "same_sel": [F.col("_pers").alias("pers"), F.explode("sameAs").alias("uri")],
-    }
+# professions (:619-630) — list explode
+_OCCUPATION = node("idmapis:occupation.", "pr.id")
+_PROFESSION_TEMPLATES = [
+    Template("pers", "bioc:has_occupation", _OCCUPATION),
+    Template(_OCCUPATION, "rdfs:label", "pr.label", lang="de"),
+    Template(_OCCUPATION, "rdfs:subClassOf", node("idmapis:occupation.", "pr.parent_id"),
+             cond="pr.parent_id IS NOT NULL"),
+    Template(_OCCUPATION, "rdfs:subClassOf", sql_lit("bioc:Occupation")),
+]
 
 
 def render_person(persons: DataFrame) -> DataFrame:
@@ -178,18 +141,17 @@ def render_person(persons: DataFrame) -> DataFrame:
     One narrow pass for scalar templates + two explodes for the
     profession/sameAs list fields, unioned, then distinct.
     """
-    exprs = memo_fixture(persons.sparkSession, ("render_person",), _person_exprs)
-    # Precompute every node URI / shared label ONCE in an explicit
-    # projection: templates then reference plain columns. Without this the
-    # concat chains repeat inside ~45 conditional structs and the
-    # whole-stage-codegen method blows past the JIT huge-method limit
-    # (observed: 10-90s erratic runtimes at sf0.01; ~1s after).
-    persons = persons.withColumns(exprs["withcols"]).localCheckpoint(eager=False)
+    persons = with_nodes(persons, _NODES)
 
-    scalar_triples = explode_prepared(persons, exprs["scalar_prep"])
-    prof_triples = explode_prepared(persons.select(*exprs["prof_sel"]), exprs["prof_prep"])
-    same_triples = explode_prepared(persons.select(*exprs["same_sel"]), exprs["same_prep"])
-
+    scalar_triples = explode_templates(persons, _person_templates())
+    prof_triples = explode_templates(
+        persons.selectExpr("_pers AS pers", "explode(profession) AS pr"), _PROFESSION_TEMPLATES
+    )
+    # sameAs list (:634-635)
+    same_triples = explode_templates(
+        persons.selectExpr("_pers AS pers", "explode(sameAs) AS uri"),
+        [Template("pers", "owl:sameAs", "uri")],
+    )
     return scalar_triples.unionByName(prof_triples).unionByName(same_triples).distinct()
 
 
@@ -199,11 +161,7 @@ def materialize_inverses(triples: DataFrame) -> DataFrame:
     Reference: serialize-time inverse materialization,
     get_data_apis_vanilla.py:1064-1065.
     """
-    inv = (
-        triples.filter(F.col("p") == "bioc:inheres_in")
-        .select(
-            F.col("o").alias("s"), F.lit("bioc:bearer_of").alias("p"),
-            F.col("s").alias("o"), F.lit(None).cast("string").alias("o_lang"),
-        )
+    inv = triples.filter("p = 'bioc:inheres_in'").selectExpr(
+        "o AS s", "'bioc:bearer_of' AS p", "s AS o", "CAST(NULL AS STRING) AS o_lang"
     )
     return triples.unionByName(inv)

@@ -7,6 +7,19 @@ an array of conditional (s, p, o, o_lang) structs per row, drop the NULLs,
 explode — a single narrow pass over the entity DataFrame, fully parallel,
 no UDFs.
 
+Templates are Spark SQL expression text, not Column trees. A Column tree
+costs one Py4J round trip per ``lit``/``col``/``struct``/``when`` node —
+thousands per renderer — while SQL text crosses to the JVM once, in the
+``selectExpr`` that parses it. Constants enter the text only through
+:func:`sql_lit`, which quotes IRIs and labels holding ``'``, ``\\`` or
+``${``. Column references are written as SQL identifiers over the input
+frame's fields.
+
+Templates are still applied in chunks of 12, one ``selectExpr`` and one
+union branch per chunk: a single array over 40+ conditional structs
+compiles to a generated method too large to JIT (and too slow
+interpreted — observed 70 s for 15k entities at sf0.1 vs ~8 s chunked).
+
 rdflib ``Graph.add`` has set semantics (duplicate triples collapse), so
 renderers end with ``.distinct()`` to match observable output.
 
@@ -20,106 +33,51 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+
+def sql_lit(v: str | None) -> str:
+    """Spark SQL string literal equal to ``v`` (None -> a NULL string).
+
+    Backslashes and quotes are escaped for the SQL lexer; ``${`` is split
+    so the parser's variable substitution leaves the text alone.
+    """
+    if v is None:
+        return "CAST(NULL AS STRING)"
+    escaped = v.replace("\\", "\\\\").replace("'", "\\'").replace("${", "$\\{")
+    return f"'{escaped}'"
 
 
 @dataclass
 class Template:
-    """One conditional triple: emitted when ``cond`` is true (None = always)."""
+    """One conditional triple: emitted when ``cond`` is true (None = always).
 
-    s: Column
-    p: Column | str
-    o: Column
-    lang: Column | str | None = None
-    cond: Column | None = None
-    datatype: str | None = None  # e.g. geo:wktLiteral (R10 space primitives)
+    ``s``, ``o`` and ``cond`` are SQL expression text; ``p``, ``lang`` and
+    ``datatype`` (e.g. geo:wktLiteral, R10 space primitives) are constants.
+    """
 
-
-def _lit_or_col(v, default=None) -> Column:
-    if v is None:
-        return F.lit(default).cast("string")
-    return F.lit(v) if isinstance(v, str) else v
+    s: str
+    p: str
+    o: str
+    lang: str | None = None
+    cond: str | None = None
+    datatype: str | None = None
 
 
-def _struct(t: Template, include_datatype: bool) -> Column:
-    p = F.lit(t.p) if isinstance(t.p, str) else t.p
-    fields = [t.s.alias("s"), p.alias("p"), t.o.alias("o"), _lit_or_col(t.lang).alias("o_lang")]
+def _struct(t: Template, include_datatype: bool) -> str:
+    fields = [f"'s', {t.s}", f"'p', {sql_lit(t.p)}", f"'o', {t.o}", f"'o_lang', {sql_lit(t.lang)}"]
     if include_datatype:
-        fields.append(_lit_or_col(t.datatype).alias("o_datatype"))
-    st = F.struct(*fields)
-    if t.cond is not None:
-        st = F.when(t.cond, st)
+        fields.append(f"'o_datatype', {sql_lit(t.datatype)}")
     # a NULL s or o also suppresses the triple (rdflib would crash on None;
     # the reference guards every such case — cond is the explicit guard)
-    return F.when(t.s.isNotNull() & t.o.isNotNull(), st) if t.cond is None else st
+    cond = t.cond if t.cond is not None else f"({t.s}) IS NOT NULL AND ({t.o}) IS NOT NULL"
+    return f"CASE WHEN {cond} THEN named_struct({', '.join(fields)}) END"
 
 
-def template_arrays(
-    templates: list[Template],
-    chunk_size: int = 12,
-    include_datatype: bool = False,
-) -> list[Column]:
-    """Build the per-chunk conditional-struct array Columns for ``templates``.
-
-    Split out from :func:`explode_templates` so renderers can build these
-    Column trees ONCE per SparkContext and reuse them across calls: the
-    trees are pure unresolved expressions over field names (no data, no
-    plan state), but constructing 40+ of them costs thousands of py4j
-    round trips — measured ~1.6 s of driver time per render_person call
-    at any scale (opt r11, guide §1.2 step 2: per-call work).
-    """
-    arrs = []
-    for i in range(0, len(templates), chunk_size):
-        chunk = templates[i : i + chunk_size]
-        arrs.append(F.array_compact(F.array(*[_struct(t, include_datatype) for t in chunk])))
-    return arrs
-
-
-def prepare_templates(
-    templates: list[Template],
-    chunk_size: int = 12,
-    include_datatype: bool = False,
-) -> dict:
-    """Fully prebuild the reusable Column trees for a template set:
-    per-chunk ``explode(...)`` columns plus the output projection.
-    Everything returned is static and session-reusable — callers cache
-    the result per SparkContext and apply it with
-    :func:`explode_prepared` (zero template-construction py4j traffic
-    per call)."""
-    cols = ["s", "p", "o", "o_lang"] + (["o_datatype"] if include_datatype else [])
-    arrs = template_arrays(templates, chunk_size, include_datatype)
-    return {
-        "explodes": [F.explode(arr).alias("t") for arr in arrs],
-        "proj": [F.col(f"t.{c}").alias(c) for c in cols],
-    }
-
-
-def explode_prepared(df: DataFrame, prep: dict) -> DataFrame:
-    """Apply a :func:`prepare_templates` bundle to ``df``."""
-    outs = [df.select(e).select(*prep["proj"]) for e in prep["explodes"]]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def explode_arrays(
-    df: DataFrame, arrs: list[Column], include_datatype: bool = False
-) -> DataFrame:
-    """Explode prebuilt template arrays (:func:`template_arrays`) into
-    (s, p, o, o_lang[, o_datatype]) rows, one union branch per chunk."""
-    cols = ["s", "p", "o", "o_lang"] + (["o_datatype"] if include_datatype else [])
-    outs = [
-        df.select(F.explode(arr).alias("t")).select(
-            *[F.col(f"t.{c}").alias(c) for c in cols]
-        )
-        for arr in arrs
-    ]
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
+def explode_structs(df: DataFrame, structs: list[str]) -> DataFrame:
+    """One row per non-NULL struct of ``structs`` (SQL text), the struct's
+    fields as columns: a single ``selectExpr`` parse."""
+    return df.selectExpr(f"inline(array_compact(array({', '.join(structs)})))")
 
 
 def explode_templates(
@@ -128,26 +86,36 @@ def explode_templates(
     chunk_size: int = 12,
     include_datatype: bool = False,
 ) -> DataFrame:
-    """Apply all templates -> (s, p, o, o_lang[, o_datatype]) rows.
+    """Apply all templates -> (s, p, o, o_lang[, o_datatype]) rows, one
+    union branch per chunk of ``chunk_size``.
 
-    Templates are applied in chunks of ``chunk_size`` per explode, unioned:
-    one mega-expression for 40+ templates generates a method too large to
-    JIT (and too slow interpreted — observed 70s for 15k entities at
-    sf0.1 vs ~8s chunked). The input should be (local)checkpointed or
-    cached by the caller when chunks > 1 so each union branch reads the
-    materialized frame, not a recomputed lineage.
+    The input should be (local)checkpointed or cached by the caller when
+    chunks > 1 so each union branch reads the materialized frame, not a
+    recomputed lineage.
     """
-    return explode_arrays(
-        df, template_arrays(templates, chunk_size, include_datatype), include_datatype
+    out = None
+    for i in range(0, len(templates), chunk_size):
+        chunk = explode_structs(
+            df, [_struct(t, include_datatype) for t in templates[i : i + chunk_size]]
+        )
+        out = chunk if out is None else out.unionByName(chunk)
+    return out
+
+
+def with_nodes(df: DataFrame, nodes: dict[str, str]) -> DataFrame:
+    """Add the ``{name: SQL text}`` node-URI / shared-label columns once,
+    then checkpoint. Templates then reference plain columns: repeating the
+    concat chains inside ~45 conditional structs pushes the generated
+    method past the JIT huge-method limit (observed: 10-90 s erratic
+    runtimes at sf0.01; ~1 s after)."""
+    return df.selectExpr("*", *[f"{e} AS {name}" for name, e in nodes.items()]).localCheckpoint(
+        eager=False
     )
 
 
-def node(prefix: str, *parts: Column | str) -> Column:
-    """URI minting helper: ``prefix`` + parts concatenated.
+def node(prefix: str, *parts: str) -> str:
+    """URI minting helper: ``prefix`` + parts (SQL text, cast to string).
 
     Mirrors the reference's ``idmapis[f"personproxy.{id}"]`` pattern.
     """
-    cols = [F.lit(prefix)]
-    for p in parts:
-        cols.append(F.lit(p) if isinstance(p, str) else p.cast("string"))
-    return F.concat(*cols)
+    return f"concat({', '.join([sql_lit(prefix), *[f'CAST({p} AS STRING)' for p in parts]])})"

@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prosnet_prefect_pipelines_spark.render import namespaces
+from prosnet_prefect_pipelines_spark.render.templates import sql_lit
+
 # N-Triples line: <s> <p> (<uri> | "literal"(@lang|^^<dt>)?) .
 _NT_PATTERN = (
     r'^<([^>]*)> <([^>]*)> (?:<([^>]*)>|"((?:[^"\\]|\\.)*)"'
@@ -27,10 +30,31 @@ _NT_PATTERN = (
 )
 
 
-def _escape(c):
-    return F.regexp_replace(
-        F.regexp_replace(F.regexp_replace(c, r"\\", r"\\\\"), '"', r'\\"'),
-        "\n", r"\\n",
+def _escape(x: str) -> str:
+    """N-Triples string escaping of the SQL expression ``x`` (SQL text)."""
+    for pattern, repl in ((r"\\", r"\\\\"), ('"', r'\\"'), ("\n", r"\\n")):
+        x = f"regexp_replace({x}, {sql_lit(pattern)}, {sql_lit(repl)})"
+    return x
+
+
+def _o_datatype(triples: DataFrame) -> str:
+    # typed literals carry ^^datatype (mutually exclusive with @lang per
+    # the RDF spec); frames without the column serialize as plain/tagged
+    return "o_datatype" if "o_datatype" in triples.columns else "CAST(NULL AS STRING)"
+
+
+def _object_looks_like_uri(o_datatype: str) -> str:
+    return (
+        f"o_lang IS NULL AND {o_datatype} IS NULL AND (startswith(o, 'http') "
+        "OR startswith(o, 'urn:') OR contains(o, ':') AND NOT contains(o, ' '))"
+    )
+
+
+def _literal(o_datatype: str, datatype_term: str) -> str:
+    """Quoted, escaped ``o`` with its @lang or ^^``datatype_term`` suffix."""
+    return (
+        f"""concat('"', {_escape('o')}, '"', CASE WHEN o_lang IS NOT NULL THEN concat('@', o_lang) """
+        f"WHEN {o_datatype} IS NOT NULL THEN concat('^^', {datatype_term}) ELSE '' END)"
     )
 
 
@@ -43,37 +67,18 @@ def _unescape(c):
     return F.regexp_replace(c, "\x00", r"\\")
 
 
-def triples_to_ntriples(triples: DataFrame, object_is_uri: F.Column | None = None) -> DataFrame:
+def triples_to_ntriples(triples: DataFrame, object_is_uri: str | None = None) -> DataFrame:
     """-> one-column DF of N-Triples ``line``s (K4).
 
-    ``object_is_uri``: predicate Column deciding URI vs literal objects;
+    ``object_is_uri``: SQL predicate deciding URI vs literal objects;
     defaults to o_datatype/o_lang being NULL and o looking like a URI/node.
     """
-    o = F.col("o")
-    # typed literals carry ^^<datatype> (mutually exclusive with @lang per
-    # the RDF spec); frames without the column serialize as plain/tagged
-    o_datatype = (
-        F.col("o_datatype") if "o_datatype" in triples.columns
-        else F.lit(None).cast("string")
-    )
+    o_datatype = _o_datatype(triples)
     if object_is_uri is None:
-        object_is_uri = (
-            F.col("o_lang").isNull()
-            & o_datatype.isNull()
-            & (o.startswith("http") | o.startswith("urn:") | o.contains(":") & ~o.contains(" "))
-        )
-    literal = F.concat(
-        F.lit('"'), _escape(o), F.lit('"'),
-        F.when(F.col("o_lang").isNotNull(), F.concat(F.lit("@"), F.col("o_lang")))
-        .when(o_datatype.isNotNull(), F.concat(F.lit("^^<"), o_datatype, F.lit(">")))
-        .otherwise(F.lit("")),
-    )
-    obj = F.when(object_is_uri, F.concat(F.lit("<"), o, F.lit(">"))).otherwise(literal)
-    return triples.select(
-        F.concat(
-            F.lit("<"), F.col("s"), F.lit("> <"), F.col("p"), F.lit("> "), obj, F.lit(" .")
-        ).alias("line")
-    )
+        object_is_uri = _object_looks_like_uri(o_datatype)
+    literal = _literal(o_datatype, f"concat('<', {o_datatype}, '>')")
+    obj = f"CASE WHEN {object_is_uri} THEN concat('<', o, '>') ELSE {literal} END"
+    return triples.selectExpr(f"concat('<', s, '> <', p, '> ', {obj}, ' .') AS line")
 
 
 def ntriples_to_triples(lines: DataFrame, line_col: str = "line") -> DataFrame:
@@ -116,19 +121,13 @@ def write_ntriples(triples: DataFrame, path: str, mode: str = "overwrite") -> No
 _PNAME_RE = r"^[A-Za-z][A-Za-z0-9_-]*:[A-Za-z0-9_.-]+$"
 
 
-def _turtle_uri_term(c: F.Column) -> F.Column:
-    """Compact prefixed name when Turtle-safe and declared, else <uri>."""
-    from prosnet_prefect_pipelines_spark.render import namespaces
-
-    known = None
-    for prefix in namespaces.PREFIXES:
-        if prefix.startswith("urn:"):
-            continue
-        cond = c.startswith(prefix + ":")
-        known = cond if known is None else (known | cond)
-    pname_ok = c.rlike(_PNAME_RE) & known
-    return F.when(pname_ok, c).otherwise(
-        F.concat(F.lit("<"), namespaces.expand(c), F.lit(">"))
+def _turtle_uri_term(x: str) -> str:
+    """Compact prefixed name when Turtle-safe and declared, else <uri>
+    (SQL text over the SQL expression ``x``)."""
+    declared = " OR ".join(f"startswith({x}, {sql_lit(p + ':')})" for p in namespaces.DECLARED)
+    return (
+        f"CASE WHEN {x} RLIKE {sql_lit(_PNAME_RE)} AND ({declared}) THEN {x} "
+        f"ELSE concat('<', {namespaces.expand(x)}, '>') END"
     )
 
 
@@ -137,64 +136,37 @@ def turtle_header() -> str:
     (get_data_apis_vanilla.py:960-1047; serialize at
     get_data_from_apis_instance.py:97-102 — the reference's default
     output format is .ttl)."""
-    from prosnet_prefect_pipelines_spark.render import namespaces
-
-    return "\n".join(
-        f"@prefix {p}: <{uri}> ."
-        for p, uri in namespaces.PREFIXES.items()
-        if not p.startswith("urn:")
-    )
+    return "\n".join(f"@prefix {p}: <{uri}> ." for p, uri in namespaces.DECLARED.items())
 
 
-def triples_to_turtle_blocks(
-    triples: DataFrame, object_is_uri: F.Column | None = None
-) -> DataFrame:
+def triples_to_turtle_blocks(triples: DataFrame, object_is_uri: str | None = None) -> DataFrame:
     """-> one-column DF of subject-grouped Turtle ``block``s:
 
         <subject> p1 o1 ;
             p2 o2 .
 
-    Pure Column expressions end-to-end: object rendering reuses the
-    N-Triples literal logic, predicates/URIs compact to declared prefixed
-    names when Turtle-safe; the per-subject block is one groupBy(s) +
-    array_sort + aggregate fold — a single shuffle on the subject key,
-    embarrassingly parallel at any scale. Deterministic: (p, o) pairs
-    sorted within each block.
+    SQL expressions end-to-end: object rendering reuses the N-Triples
+    literal logic, predicates/URIs compact to declared prefixed names when
+    Turtle-safe; the per-subject block is one groupBy(s) + array_sort +
+    array_join — a single shuffle on the subject key, embarrassingly
+    parallel at any scale. Deterministic: (p, o) pairs sorted within each
+    block. ``object_is_uri`` is an SQL predicate, as in
+    :func:`triples_to_ntriples`.
     """
-    o = F.col("o")
-    o_datatype = (
-        F.col("o_datatype") if "o_datatype" in triples.columns
-        else F.lit(None).cast("string")
-    )
+    o_datatype = _o_datatype(triples)
     if object_is_uri is None:
-        object_is_uri = (
-            F.col("o_lang").isNull()
-            & o_datatype.isNull()
-            & (o.startswith("http") | o.startswith("urn:") | o.contains(":") & ~o.contains(" "))
-        )
-    literal = F.concat(
-        F.lit('"'), _escape(o), F.lit('"'),
-        F.when(F.col("o_lang").isNotNull(), F.concat(F.lit("@"), F.col("o_lang")))
-        .when(o_datatype.isNotNull(), F.concat(F.lit("^^"), _turtle_uri_term(o_datatype)))
-        .otherwise(F.lit("")),
-    )
-    rendered = triples.select(
-        _turtle_uri_term(F.col("s")).alias("subj"),
-        F.concat(
-            _turtle_uri_term(F.col("p")), F.lit(" "),
-            F.when(object_is_uri, _turtle_uri_term(o)).otherwise(literal),
-        ).alias("po"),
+        object_is_uri = _object_looks_like_uri(o_datatype)
+    literal = _literal(o_datatype, _turtle_uri_term(o_datatype))
+    rendered = triples.selectExpr(
+        f"{_turtle_uri_term('s')} AS subj",
+        f"concat({_turtle_uri_term('p')}, ' ', "
+        f"CASE WHEN {object_is_uri} THEN {_turtle_uri_term('o')} ELSE {literal} END) AS po",
     )
     return (
         rendered.groupBy("subj")
-        .agg(F.array_sort(F.collect_set("po")).alias("pos"))
-        .select(
-            F.concat(
-                F.col("subj"), F.lit(" "),
-                F.array_join(F.col("pos"), " ;\n    "),
-                F.lit(" ."),
-            ).alias("block")
-        )
+        .agg(F.expr("array_sort(collect_set(po)) AS pos"))
+        .selectExpr(f"concat(subj, ' ', array_join(pos, {sql_lit(' ;' + chr(10) + '    ')}), ' .')"
+                    " AS block")
     )
 
 

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import gc
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -41,3 +43,35 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@contextmanager
+def py4j_calls():
+    """Count Py4J commands Python sends to the JVM inside the block.
+
+    Yields a one-key dict whose ``"n"`` grows with each ``send_command``
+    on either py4j connection class (classic gateway or pinned-thread
+    client/server). Cyclic GC is paused inside the block: a collection
+    there would add object-release commands for garbage made earlier.
+    """
+    from py4j import clientserver, java_gateway
+
+    counter = {"n": 0}
+    patched = []
+    for cls in (java_gateway.GatewayConnection, clientserver.ClientServerConnection):
+        orig = cls.send_command
+
+        def counting(self, command, _orig=orig):
+            counter["n"] += 1
+            return _orig(self, command)
+
+        cls.send_command = counting
+        patched.append((cls, orig))
+    gc.collect()
+    gc.disable()
+    try:
+        yield counter
+    finally:
+        gc.enable()
+        for cls, orig in patched:
+            cls.send_command = orig

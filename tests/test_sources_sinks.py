@@ -202,13 +202,13 @@ def test_write_turtle_reparses_to_same_triples(spark, tmp_path):
             got |= _parse_turtle(text)
 
     expanded = triples.select(
-        ns_expand(F.col("s")).alias("s"), ns_expand(F.col("p")).alias("p"),
+        F.expr(ns_expand("s")).alias("s"), F.expr(ns_expand("p")).alias("p"),
         F.when(F.col("o_lang").isNull() & F.col("o_datatype").isNull()
                & (F.col("o").startswith("urn:") | F.col("o").startswith("http")
                   | F.col("o").startswith("wd:")),
-               ns_expand(F.col("o"))).otherwise(F.col("o")).alias("o"),
+               F.expr(ns_expand("o"))).otherwise(F.col("o")).alias("o"),
         "o_lang",
-        ns_expand(F.col("o_datatype")).alias("o_datatype"),
+        F.expr(ns_expand("o_datatype")).alias("o_datatype"),
     )
     want = {(r.s, r.p, r.o, r.o_lang, r.o_datatype) for r in expanded.collect()}
     assert got == want
