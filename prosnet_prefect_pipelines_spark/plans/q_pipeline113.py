@@ -49,6 +49,7 @@ from prosnet_prefect_pipelines_spark.plans.q_dedup import (
 )
 from prosnet_prefect_pipelines_spark.plans.q_pipeline33 import _docs_stream
 from prosnet_prefect_pipelines_spark.streaming import neardup as N
+from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 from prosnet_prefect_pipelines_spark.streaming.tuning import (
     run_available_now,
     staged_row_count,
@@ -194,7 +195,7 @@ def q_stream_neardup_monitor(spark, sf_dir):
         # branches; fan the fingerprint out across the executor pool
         fanout=spark.sparkContext.defaultParallelism,
     )
-    out_dir = tempfile.mkdtemp(prefix="nd_monitor_")
+    out_dir = tempfile.mkdtemp(prefix="nd_monitor_", dir=scratch_root(spark))
 
     # Adaptive state partitioning (opt r11, guide §2): AQE cannot
     # coalesce inside Structured Streaming, so the witness state and
@@ -212,8 +213,8 @@ def q_stream_neardup_monitor(spark, sf_dir):
         shuffle_partitions=stream_shuffle_partitions(spark, est_rows, n_batches=1),
     )
 
-    # returned LAZY (out_dir retained for the plan's lifetime — a few KB
-    # of /tmp per replay): the exact-Jaccard verification stays visible
+    # returned LAZY (out_dir lives until the application's scratch root
+    # is removed at exit): the exact-Jaccard verification stays visible
     # in the audited physical plan and executes at collect time, same as
     # every other catalog query. Verification cost must scale with the
     # CANDIDATE set, not the corpus: shingle only documents that appear

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from prosnet_prefect_pipelines_spark.operators import similarity as S
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_similarity import _cos
-from prosnet_prefect_pipelines_spark.streaming.staging import replay_stage
+from prosnet_prefect_pipelines_spark.streaming.staging import replay_stage, scratch_root
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 
 _N_CELLS = 8
@@ -247,7 +247,7 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
         ).alias("cos"),
     )
 
-    out_dir = tempfile.mkdtemp(prefix="ann_monitor_")
+    out_dir = tempfile.mkdtemp(prefix="ann_monitor_", dir=scratch_root(spark))
     w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
     # per-batch output is <= _K rows per query — size the write from
     # that estimate (~5M rows of (long, long, double) per ~128 MB file)

@@ -55,7 +55,7 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline116 import (
 )
 from prosnet_prefect_pipelines_spark.operators.textstats import tokens
 from prosnet_prefect_pipelines_spark.session import memo_fixture
-from prosnet_prefect_pipelines_spark.streaming.staging import replay_stage
+from prosnet_prefect_pipelines_spark.streaming.staging import replay_stage, scratch_root
 from prosnet_prefect_pipelines_spark.streaming.tuning import (
     run_available_now,
     stream_shuffle_partitions,
@@ -252,7 +252,7 @@ def _replay_final_stats(spark, stage):
         "n_chars",
         F.pmod(F.xxhash64("lang", "source"), F.lit(_N_SHARDS)).alias("_skey"),
     )
-    out_dir = tempfile.mkdtemp(prefix="pref_monitor_")
+    out_dir = tempfile.mkdtemp(prefix="pref_monitor_", dir=scratch_root(spark))
     run_available_now(
         scored.groupBy("_skey").applyInPandasWithState(
             _group_stats,

@@ -60,6 +60,7 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline10 import (
 )
 from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import _query_stream
 from prosnet_prefect_pipelines_spark.session import memo_fixture
+from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
 _K = 3
 _EVEN = "vec_id % 2 = 0"
@@ -319,7 +320,7 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
         "qid", "xid", S.adc_cos_lut(_PQ_SUB).alias("adc_cos")
     )
 
-    out_dir = tempfile.mkdtemp(prefix="ann_ivfpq_monitor_")
+    out_dir = tempfile.mkdtemp(prefix="ann_ivfpq_monitor_", dir=scratch_root(spark))
     w = Window.partitionBy("qid").orderBy(
         F.col("adc_cos").desc(), F.col("xid")
     )

@@ -15,11 +15,11 @@ DOUBLE cast it replaced diverged in the last ulp at sf0.1).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
+from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
 
 def _register_views(spark, sf_dir, tables):
@@ -130,30 +130,9 @@ FROM nation GROUP BY n_regionkey
 """
 
 
-def _scratch_root(spark) -> str:
-    """Per-application scratch dir (applicationId-namespaced: concurrent
-    sessions once raced rmtree/read on a shared path), registered for
-    atexit removal so repeated runs don't accumulate dirs in /tmp."""
-    from prosnet_prefect_pipelines_spark.streaming.staging import (
-        private_stage_dir,
-    )
-
-    root = private_stage_dir(f"fmt_{spark.sparkContext.applicationId}")
-    if root not in _SCRATCH_REGISTERED:
-        _SCRATCH_REGISTERED.add(root)
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-    return root
-
-
-_SCRATCH_REGISTERED: set[str] = set()
-
-
 def _roundtrip(spark, sf_dir, fmt: str):
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = os.path.join(_scratch_root(spark), f"nation_{fmt}")
+    out = os.path.join(scratch_root(spark), f"nation_{fmt}")
     nation.write.mode("overwrite").format(fmt).save(out)
     back = spark.read.format(fmt).load(out)
     return back.groupBy("n_regionkey").agg(
@@ -176,7 +155,7 @@ def q_csv_roundtrip(spark, sf_dir):
     (header + explicit schema on the way back in; CSV is the interchange
     format the reference's TSV sources live in)."""
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = os.path.join(_scratch_root(spark), "nation_csv")
+    out = os.path.join(scratch_root(spark), "nation_csv")
     nation.write.mode("overwrite").option("header", True).csv(out)
     back = spark.read.schema(nation.schema).option("header", True).csv(out)
     return back.groupBy("n_regionkey").agg(

@@ -199,23 +199,19 @@ def q_python_datasource_write(spark, sf_dir):
     reader — the write half of the custom-connector story whose read
     half is the paginated_rest source."""
     import shutil
-    import tempfile
     import os
 
     from prosnet_prefect_pipelines_spark.sources.rest_datasource import (
         JsonlSinkDataSource,
     )
 
-    try:
-        spark.dataSource.register(JsonlSinkDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(JsonlSinkDataSource)
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     # namespace by session so concurrent runs (pytest + sweep) can't race
     # each other's rmtree/read on the same scratch dir; atexit-cleaned
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline20 import _scratch_root
+    from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
-    out = os.path.join(_scratch_root(spark), "nation_pyds")
+    out = os.path.join(scratch_root(spark), "nation_pyds")
     shutil.rmtree(out, ignore_errors=True)
     nation.write.format("jsonl_sink").option("path", out).mode("append").save()
     back = spark.read.schema(nation.schema).json(out)
@@ -244,16 +240,15 @@ def q_json_corrupt_audit(spark, sf_dir):
     from the corruption rule."""
     import os
     import shutil
-    import tempfile
 
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     line = F.when(
         F.col("n_nationkey") % 5 == 0,
         F.concat(F.lit('{"oops": '), F.col("n_name")),  # unclosed, bad token
     ).otherwise(F.to_json(F.struct("n_nationkey", "n_name", "n_regionkey")))
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline20 import _scratch_root
+    from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
-    out = os.path.join(_scratch_root(spark), "nation_corrupt")
+    out = os.path.join(scratch_root(spark), "nation_corrupt")
     shutil.rmtree(out, ignore_errors=True)
     nation.select(line.alias("value")).write.mode("overwrite").text(out)
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType

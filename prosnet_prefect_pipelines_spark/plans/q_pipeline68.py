@@ -258,7 +258,7 @@ def q_fixed_width_roundtrip(spark, sf_dir):
     aggregated; the oracle aggregates the source directly, so any
     encode/decode loss hash-diverges. Both directions are pure column
     expressions over the distributed text source (no driver I/O)."""
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline20 import _scratch_root
+    from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
     line = F.concat(
@@ -266,7 +266,7 @@ def q_fixed_width_roundtrip(spark, sf_dir):
         F.rpad(F.col("n_name"), 25, " "),
         F.rpad(F.col("n_regionkey").cast("string"), 4, " "),
     )
-    out = os.path.join(_scratch_root(spark), "nation_fixed_width")
+    out = os.path.join(scratch_root(spark), "nation_fixed_width")
     nation.select(line.alias("value")).write.mode("overwrite").text(out)
     back = spark.read.text(out).select(
         F.trim(F.substring("value", 1, 4)).cast("int").alias("n_nationkey"),

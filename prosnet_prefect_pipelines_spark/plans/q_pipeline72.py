@@ -212,10 +212,10 @@ def q_schema_evolution_roundtrip(spark, sf_dir):
     additive-evolution contract a long-lived lakehouse table depends
     on). The oracle derives the same aggregate from the source rule, so
     any null-fill or row loss hash-diverges."""
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline20 import _scratch_root
+    from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = os.path.join(_scratch_root(spark), "nation_evolution")
+    out = os.path.join(scratch_root(spark), "nation_evolution")
     b1 = nation.filter(F.col("n_nationkey") < 13).select(
         "n_nationkey", "n_regionkey"
     )
@@ -258,11 +258,11 @@ def q_partition_overwrite_dynamic(spark, sf_dir):
     (static mode would truncate them). The read-back aggregate proves
     exactly one partition changed. The idempotent-backfill primitive of
     hive-layout tables."""
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline20 import _scratch_root
+    from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    out = os.path.join(_scratch_root(spark), "nation_dyn_overwrite")
+    out = os.path.join(scratch_root(spark), "nation_dyn_overwrite")
     nation.select("n_nationkey", "n_regionkey").write.mode("overwrite").partitionBy(
         "n_regionkey"
     ).parquet(out)

@@ -270,14 +270,14 @@ def q_manifest_time_travel_diff(spark, sf_dir):
     immutable."""
     import shutil
 
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline20 import _scratch_root
+    from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
     from prosnet_prefect_pipelines_spark.sinks import (
         manifest_commit,
         read_snapshot,
     )
 
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    path = os.path.join(_scratch_root(spark), "nation_timetravel")
+    path = os.path.join(scratch_root(spark), "nation_timetravel")
     shutil.rmtree(path, ignore_errors=True)
     manifest_commit(nation.filter(F.col("n_nationkey") < 15), path)
     manifest_commit(nation.filter(F.col("n_nationkey") >= 15), path)

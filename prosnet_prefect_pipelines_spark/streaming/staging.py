@@ -27,6 +27,7 @@ loser of a publish race discards its build and uses the winner's.
 
 from __future__ import annotations
 
+import atexit
 import getpass
 import hashlib
 import os
@@ -78,6 +79,22 @@ def private_stage_dir(name: str) -> str:
     for write-then-reread patterns (e.g. the WAP gate's staging dir)
     that previously used fixed world-visible /tmp paths."""
     return os.path.join(_private_stage_root(), name)
+
+
+_SCRATCH_REGISTERED: set[str] = set()
+
+
+def scratch_root(spark) -> str:
+    """The per-application scratch directory: namespaced by
+    applicationId (concurrent sessions once raced rmtree/read on a
+    shared path), created on first use and removed at interpreter exit,
+    so repeated runs don't accumulate dirs in /tmp."""
+    root = private_stage_dir(f"app_{spark.sparkContext.applicationId}")
+    if root not in _SCRATCH_REGISTERED:
+        _SCRATCH_REGISTERED.add(root)
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def symlink_stage(source_path: str, name: str) -> str:

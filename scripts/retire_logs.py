@@ -7,8 +7,8 @@ path and re-accumulated at repo root every round (r10 verdict item 3:
 that path: ``retire_scratch_logs()`` moves every root-level ``*.log`` /
 ``*.err`` file into ``artifacts/`` (collision-safe: an existing artifact
 of the same name is never overwritten — the incoming file gets a numeric
-suffix). Invoked by ``bench.py`` at the end of a run and by
-``scripts/explain_audit.py``; runnable standalone:
+suffix). Invoked by ``bench.py`` at the end of a run; runnable
+standalone:
 
     python scripts/retire_logs.py
 """

@@ -65,6 +65,7 @@ SLOW_TESTS = frozenset({
     "test_pipeline98.py::test_mantel_haenszel_two_strata",
     "test_pipeline98.py::test_odds_risk_hand_computed",
     "test_pipelines.py::test_apis_cidoc_pipeline_two_rounds",
+    "test_plan_shapes.py::test_catalog_matches_snapshot",
     "test_sources_sinks.py::test_paginated_rest_datasource_pushdown",
     "test_stats_property.py::test_benford_report_matches_counter",
     "test_stats_property.py::test_bowley_quartiles_match_inverse_ecdf",
