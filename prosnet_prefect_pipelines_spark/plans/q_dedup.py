@@ -64,9 +64,13 @@ jac AS (
 
 
 def _memoized(name, spark, sf_dir, build):
-    """Per-(session, sf) lazy-localCheckpoint memo (session.memo_fixture)."""
+    """Per-(session, sf) eager-localCheckpoint memo (session.memo_fixture).
+    Eager, because a lazy memo's lineage still reads the inner
+    checkpoints of ``minhash_lsh_pairs``/``jaccard_verify``, which are
+    not protected: a sweep before its first execution dropped their
+    blocks (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
     return memo_fixture(
-        spark, (name, sf_dir), lambda: build().localCheckpoint(eager=False)
+        spark, (name, sf_dir), lambda: build().localCheckpoint(eager=True)
     )
 
 

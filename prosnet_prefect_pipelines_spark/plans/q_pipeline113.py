@@ -10,8 +10,9 @@ Structured Streaming pipeline (streaming/neardup.py):
 - stream-static: per-row MinHash band buckets probed against the
   bucket_cap-salted static LSH index (probe explodes across all
   sub-buckets -> recall exact, salt invisible to the oracle);
-- stream-stream: applyInPandasWithState keyed by (band, bucket),
-  state = ids seen, emitting normalized (a < b) pairs — the union over
+- stream-stream: a native stream-stream self inner join on (band,
+  bucket) with a < b, one state row per membership per side — the
+  symmetric hash join emits each colliding pair once, so the union over
   any micro-batch slicing equals the batch self-join answer.
 
 Candidates are then exact-Jaccard verified in batch over the corpus
@@ -25,11 +26,13 @@ Scale notes (100 TB): fingerprinting is per-row map-side work — no
 shuffle, no state — so ingest fingerprint cost is linear and
 embarrassingly parallel; the static probe is an equi-join against an
 index that a duplicate flood cannot skew (bucket_cap bounds every
-join partition); stream-stream state holds id lists per occupied
-bucket (bounded by distinct-bucket occupancy; the PRODUCTION default
-is event-time TTL — stream_state_candidates(event_ttl_ms=~30 days),
-measured state-size-vs-window curve in SCALE.md round-10 — while the
-replay oracle here keeps NoTimeout for exactness). Reference parity: the reference
+join partition); stream-stream state holds one row per membership
+per join side (the PRODUCTION default is event-time TTL —
+stream_state_candidates(event_ttl_ms=~30 days), which keeps a pandas
+emitter for its per-membership eviction; measured state-size-vs-window
+curve in SCALE.md round-10 — while the replay oracle here keeps the
+exact join). The whole monitor, replay and verification, runs in the
+JVM: no Python worker starts. Reference parity: the reference
 re-fetches and re-pushes the full entity window every incremental run
 (prosnet-prefect-pipelines wikidata_index.py:155-180 incremental
 {{INCREMENTAL_DATE}} template rewrite + prefect.yaml:121); this is the
@@ -172,19 +175,19 @@ def _neardup_sink(index, sizes, out_dir):
           covers=["T1", "T2", "J1", "J7"])
 def q_stream_neardup_monitor(spark, sf_dir):
     """Streaming near-dup monitor: map-side MinHash fingerprints, LSH
-    probe against the salted static index + stateful within-stream
-    bucket witness, exact-Jaccard verification, availableNow replay
-    hash-matched against the batch SQL answer.
+    probe against the salted static index + within-stream witness (a
+    native stream-stream self-join), exact-Jaccard verification,
+    availableNow replay hash-matched against the batch SQL answer.
 
-    ONE streaming query (r6 verdict item 1): the stateful witness runs
-    with emit_bands=True, so every micro-batch's output carries both
-    the within-stream pairs (bkey NULL) AND the new band memberships
-    (b NULL); a foreachBatch sink splits them and runs the stream-static
-    probe as a batch join on the SAME micro-batch — documents are
-    fingerprinted once, not once per .start(). State dedup makes the
-    membership passthrough exactly-once across batches, which is
-    probe-equivalent to probing raw stream_bands (re-arrivals were
-    already probed when first seen; candidates are distinct-ed anyway)."""
+    ONE streaming query (r6 verdict item 1): the witness runs with
+    emit_bands=True, so every micro-batch's output carries both the
+    within-stream pairs (bkey NULL) AND the batch's band rows (b NULL);
+    a foreachBatch sink splits them and runs the stream-static probe as
+    a batch join on the SAME micro-batch — documents are fingerprinted
+    in one query, not once per .start(). A re-delivered membership is
+    probed again; candidates are distinct-ed, so the result is the
+    same. Nothing in the replay or the verification runs in a Python
+    worker."""
     import tempfile
 
     index, sizes = _static_index(spark, sf_dir)
@@ -221,7 +224,8 @@ def q_stream_neardup_monitor(spark, sf_dir):
     # in some candidate pair (broadcast semi-join on id — at 100 TB the
     # corpus scan prunes to the handful of near-dup suspects; the full
     # re-shingle it replaces was the old monitor's hidden second corpus
-    # pass).
+    # pass). The touched set is a few hundred documents: the JVM
+    # shingler (mode="expr") costs less than starting a Python worker.
     cands = spark.read.schema("a long, b long").parquet(out_dir).dropDuplicates()
     cand_ids = (
         cands.select(F.col("a").alias("id"))
@@ -229,7 +233,7 @@ def q_stream_neardup_monitor(spark, sf_dir):
         .distinct()
     )
     touched = corpus(spark, sf_dir).join(F.broadcast(cand_ids), "id", "semi")
-    sh = D.shingle_table(touched, "id", "text", k=3)
+    sh = D.shingle_table(touched, "id", "text", k=3, mode="expr")
     return D.jaccard_verify(cands, sh, _THRESHOLD).select(
         "a",
         "b",

@@ -24,7 +24,23 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 
+# the directory holding the package: Python workers must import it too
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _export_package_root() -> None:
+    """Put :data:`PACKAGE_ROOT` first on ``PYTHONPATH``. The JVM inherits
+    this process's environment when it starts and passes ``PYTHONPATH`` to
+    every Python worker it launches, so a worker (a pandas UDF, a Python
+    data source) can import the package whatever the working directory.
+    Has no effect on a JVM that is already running."""
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([PACKAGE_ROOT, *paths])
+
+
 def get_spark(app_name: str = "prosnet_spark", cpus: int | None = None) -> SparkSession:
+    _export_package_root()
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     builder = (

@@ -13,26 +13,36 @@ Structured Streaming pipeline:
    bucket (an explode over the index's n_sub table), so recall stays
    EXACT while a hot bucket becomes n_sub parallel join tasks instead
    of one straggler (``operators/dedup.salted_band_index``).
-2. **Against earlier stream documents** via ``applyInPandasWithState``
-   keyed by a HASH SUPERGROUP of (band, bucket) — most buckets are
-   singletons, so keying by the bucket itself would pay one
-   pandas/Arrow round-trip per ~1-row group; the supergroup amortizes
-   that while a vectorized merge inside the group keeps per-bucket
-   semantics exact. State = (bucket key, id) membership arrays; each
-   micro-batch emits (new x state) + (new x new) candidate pairs per
-   bucket. Pairs are normalized (a < b), so the union over any
-   micro-batch slicing of the input equals the batch self-join
-   answer — which is what makes an exact DuckDB oracle possible under
+2. **Against earlier stream documents** (the within-stream witness,
+   ``stream_state_candidates``). The exact mode is a native
+   stream-stream self inner join on (band, bucket) with ``a < b``: the
+   symmetric hash join keeps one state row per membership per side and
+   emits each colliding pair exactly once — new x old, old x new and
+   new x new, never old x old — so the union over any micro-batch
+   slicing, and across checkpoint restarts, equals the batch self-join
+   answer. That is what makes an exact DuckDB oracle possible under
    availableNow replay (the Dataflow-model claim, verified by hash in
-   plans/q_pipeline113.py).
+   plans/q_pipeline113.py). It runs entirely in the JVM: no Python
+   worker starts.
+
+   The two TTL modes (``ttl_ms``, ``event_ttl_ms``) keep an
+   ``applyInPandasWithState`` emitter keyed by a hash SUPERGROUP of
+   (band, bucket). Their eviction is per MEMBERSHIP: a membership
+   expires on its own clock while its bucket keeps receiving data. A
+   join can only bound a pair by its two event times (a time-range
+   condition), which drops pairs the sweep emits — under the one-batch
+   watermark lag a day-30 document still pairs with a day-0 membership
+   that a 1 h window excludes
+   (``test_event_ttl_eviction_under_available_now``) — and
+   processing-time eviction has no join form at all.
 
 Both paths emit CANDIDATES only; exact-Jaccard verification runs
 downstream (``operators/dedup.jaccard_verify``) against the corpus
 shingle store — in live operation inside foreachBatch, in the bounded
-replay as a batch pass over the collected candidates. State is one id
-list per occupied bucket: it scales with distinct-bucket occupancy, not
-stream length, and a duplicate FLOOD in one bucket is the same hazard
-as the batch self-join — run exact dedup upstream (dedup_funnel_report
+replay as a batch pass over the collected candidates. Witness state is
+one row per (id, band, bucket) membership: it scales with the stream's
+memberships, and a duplicate FLOOD in one bucket is the same hazard as
+the batch self-join — run exact dedup upstream (dedup_funnel_report
 order) or cap the bucket, exactly as documented on minhash_lsh_pairs.
 
 Reference parity: the reference's incremental runs re-fetch and re-push
@@ -46,21 +56,10 @@ the accepted corpus is an index probe, not a re-scan.
 
 from __future__ import annotations
 
-import warnings
 from typing import Iterator
 
 import pandas as pd
-
-# emit_bands frames legitimately carry all-NA columns (b for band rows,
-# bkey for pair rows); pandas warns when pyspark's Arrow serializer
-# concatenates them with empty frames from other groups. Dtypes are
-# pinned explicitly on every yielded frame, so the future behavior
-# change is a no-op here.
-warnings.filterwarnings(
-    "ignore",
-    message="The behavior of DataFrame concatenation with empty or all-NA entries",
-)
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -71,11 +70,6 @@ from prosnet_prefect_pipelines_spark.operators.dedup import (
 )
 
 PAIR_SCHEMA = "a long, b long"
-# Passthrough mode (emit_bands=True): pair rows carry bkey NULL; each NEW
-# membership is re-emitted once as (a=id, b=NULL, bkey) so a downstream
-# foreachBatch can run the stream-static probe on the SAME micro-batch
-# without a second streaming query re-executing the fingerprint scan.
-PAIR_BAND_SCHEMA = "a long, b long, bkey string"
 STATE_SCHEMA = "bkeys array<string>, ids array<long>"
 # event_ttl_ms mode: each membership carries its own event time (epoch
 # ms) so EXPIRED memberships can be swept inside DATA invocations — the
@@ -178,47 +172,40 @@ def _empty_pairs() -> pd.DataFrame:
 def _bucket_pairs_impl(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
-    emit_bands: bool,
     ttl_ms: int | None,
     event_ttl_ms: int | None = None,
 ) -> Iterator[pd.DataFrame]:
-    """Per-SUPERGROUP stateful pair emitter. The group key is a hash
-    shard of (band, bucket), NOT the bucket itself: most LSH buckets
-    are singletons, and one pandas/Arrow round-trip per singleton
-    bucket is the dominant cost at scale (millions of ~1-row groups).
-    A supergroup amortizes that overhead across ~|buckets|/n_groups
-    buckets while keeping the SAME per-bucket semantics — pairs are
-    only emitted between rows sharing the exact (band, bucket), via a
-    vectorized merge on the bucket key inside the group.
+    """Per-SUPERGROUP stateful pair emitter of the TTL modes. The group
+    key is a hash shard of (band, bucket), NOT the bucket itself: most
+    LSH buckets are singletons, and one pandas/Arrow round-trip per
+    singleton bucket is the dominant cost at scale (millions of ~1-row
+    groups). A supergroup amortizes that overhead across
+    ~|buckets|/n_groups buckets while keeping the SAME per-bucket
+    semantics — pairs are only emitted between rows sharing the exact
+    (band, bucket), via a vectorized merge on the bucket key inside the
+    group.
 
     candidates = (new x state) + (new x new), both per bucket key,
-    normalized a < b — order- and batching-insensitive, so the union
-    over any micro-batch slicing equals the batch self-join. State =
-    parallel (bkey, id) arrays; grows by |new memberships| per batch
-    (ids only, never text or signatures).
+    normalized a < b — order- and batching-insensitive, so while nothing
+    is evicted the union over any micro-batch slicing equals the batch
+    self-join. State = parallel (bkey, id) arrays; grows by |new
+    memberships| per batch (ids only, never text or signatures).
 
-    ttl_ms (production knob): with ProcessingTimeTimeout the runtime
-    invokes this function with an empty batch and hasTimedOut=True once
-    the group has seen no data for ttl_ms; the witness state is dropped
-    so continuous ingest holds only the trailing-window memberships
-    (pairs across an eviction boundary are no longer witnessed — the
-    deliberate window/recall trade, see SCALE.md). event_ttl_ms: the
-    EVENT-time twin — the timeout is re-armed to (max batch event time
-    + event_ttl_ms) and fires when the WATERMARK passes it, so eviction
-    follows the data's own clock and, unlike processing-time timeouts,
-    composes with trigger(availableNow) replays (the watermark stops
-    advancing when the data ends, so the query terminates). emit_bands:
-    also re-emit each NEW membership as (id, NULL, bkey) so one
-    streaming query feeds both the stateful witness and a foreachBatch
-    stream-static probe (fingerprints computed once, not per-query)."""
-    if (ttl_ms is not None or event_ttl_ms is not None) and state.hasTimedOut:
+    ttl_ms: with ProcessingTimeTimeout the runtime invokes this function
+    with an empty batch and hasTimedOut=True once the group has seen no
+    data for ttl_ms; the witness state is dropped so continuous ingest
+    holds only the trailing-window memberships (pairs across an eviction
+    boundary are no longer witnessed — the deliberate window/recall
+    trade, see SCALE.md). event_ttl_ms: the EVENT-time twin — expired
+    memberships are swept before pairing, and the timeout is re-armed to
+    (max live event time + event_ttl_ms) and fires when the WATERMARK
+    passes it, so eviction follows the data's own clock and, unlike
+    processing-time timeouts, composes with trigger(availableNow)
+    replays (the watermark stops advancing when the data ends, so the
+    query terminates)."""
+    if state.hasTimedOut:
         state.remove()
-        if emit_bands:
-            yield pd.DataFrame({"a": pd.Series([], dtype="int64"),
-                                "b": pd.Series([], dtype="int64"),
-                                "bkey": pd.Series([], dtype=object)})
-        else:
-            yield _empty_pairs()
+        yield _empty_pairs()
         return
     event = event_ttl_ms is not None
     if state.exists:
@@ -310,40 +297,36 @@ def _bucket_pairs_impl(
             list(seen["bkey"]) + list(new["bkey"]),
             [int(x) for x in seen["id"]] + [int(x) for x in new["id"]],
         ))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-    pairs = (
+        state.setTimeoutDuration(ttl_ms)
+    yield (
         pd.concat(outs, ignore_index=True)[["a", "b"]].astype("int64")
         if outs
         else _empty_pairs()
     )
-    if emit_bands:
-        pairs["bkey"] = pd.Series([None] * len(pairs), dtype=object)
-        bands = pd.DataFrame({
-            "a": new["id"].astype("int64"),
-            "b": pd.array([None] * len(new), dtype="Int64"),
-            "bkey": new["bkey"].astype(object),
-        })
-        yield pd.concat([pairs, bands], ignore_index=True)
-    else:
-        yield pairs
 
 
-def _bucket_pairs(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """NoTimeout pairs-only emitter (the exact-replay-oracle shape);
-    see _bucket_pairs_impl."""
-    yield from _bucket_pairs_impl(pdfs, state, emit_bands=False, ttl_ms=None)
-
-
-def _make_bucket_pairs(
-    emit_bands: bool, ttl_ms: int | None, event_ttl_ms: int | None = None
-):
-    def fn(key, pdfs, state):
-        yield from _bucket_pairs_impl(pdfs, state, emit_bands, ttl_ms,
-                                      event_ttl_ms)
-    return fn
+def _join_candidates(stream_bands: DataFrame, emit_bands: bool) -> DataFrame:
+    """Exact witness: stream-stream self inner join on (band, bucket),
+    a < b. With emit_bands the batch's band rows follow as
+    (a=id, b=NULL, bkey="band|bucket"); pair rows carry bkey NULL."""
+    pairs = (
+        stream_bands.select(F.col("id").alias("a"), "band", "bucket")
+        .join(stream_bands.select(F.col("id").alias("b"), "band", "bucket"),
+              on=["band", "bucket"])
+        .where(F.col("a") < F.col("b"))
+        .select("a", "b")
+    )
+    if not emit_bands:
+        return pairs
+    return pairs.withColumn("bkey", F.lit(None).cast("string")).unionByName(
+        stream_bands.select(
+            F.col("id").alias("a"),
+            F.lit(None).cast("long").alias("b"),
+            F.concat_ws("|", F.col("band").cast("string"), F.col("bucket")).alias(
+                "bkey"
+            ),
+        )
+    )
 
 
 def stream_state_candidates(
@@ -354,33 +337,40 @@ def stream_state_candidates(
     event_ttl_ms: int | None = None,
     watermark_delay: str = "0 seconds",
 ) -> DataFrame:
-    """Within-stream candidate pairs via incremental LSH state: shard
-    the streaming band table into ``n_groups`` hash supergroups of the
-    (band, bucket) key and let the stateful emitter accumulate ids per
-    bucket across micro-batches. n_groups sizes the pandas/Arrow
-    amortization: state per group ~ total bucket memberships /
-    n_groups; scale it with cluster parallelism, not data. Output may
-    repeat a pair across bands — dedupe downstream (state is per-band,
-    so cross-band dedup can't happen inside the operator).
+    """Within-stream candidate pairs (a < b) between documents that share
+    a (band, bucket), witnessed across micro-batches. Output may repeat a
+    pair — across bands, and for a re-delivered membership — so dedupe
+    downstream.
 
-    emit_bands=True additionally re-emits each NEW (id, band, bucket)
-    membership as a (a=id, b=NULL, bkey) row, letting ONE streaming
-    query drive both the witness and a foreachBatch static probe.
-    ttl_ms bounds witness state for continuous ingest: groups idle for
-    ttl_ms of processing time are evicted (ProcessingTimeTimeout); the
-    default NoTimeout keeps the exact replay-oracle semantics.
+    Exact mode (neither TTL set): a native stream-stream self inner join
+    on (band, bucket) with a < b. Its state is one row per membership
+    per side (left and right), kept for the query's lifetime, and the
+    symmetric hash join emits each colliding pair exactly once under any
+    micro-batch slicing and across checkpoint restarts — the exact
+    replay-oracle semantics. emit_bands=True unions the pairs (bkey NULL)
+    with every arriving band row as (a=id, b=NULL, bkey="band|bucket"),
+    letting ONE streaming query drive both the witness and a
+    foreachBatch static probe. n_groups is unused in this mode; the
+    join's state partitions follow ``spark.sql.shuffle.partitions``.
+
+    TTL modes keep the pandas emitter (``_bucket_pairs_impl``) on
+    ``n_groups`` hash supergroups of (band, bucket) (state per group ~
+    total bucket memberships / n_groups; scale it with cluster
+    parallelism, not data), because they evict per membership, which no
+    join condition expresses (see the module docstring). ttl_ms evicts
+    groups idle for ttl_ms of processing time (ProcessingTimeTimeout).
     event_ttl_ms is the event-time twin: stream_bands must carry a
     ``ts`` column (stream_band_table(event_time_col=...)); a watermark
     (``watermark_delay`` behind max event time) drives eviction of
-    buckets whose latest membership is older than event_ttl_ms. Exactly
-    one of ttl_ms / event_ttl_ms may be set.
+    memberships older than event_ttl_ms. Set at most one of ttl_ms /
+    event_ttl_ms; neither combines with emit_bands.
 
     PRODUCTION DEFAULT: event_ttl_ms (a ~30-day window on the 1M-doc
     stress corpus holds ~7% of unbounded state memory with flat wall
     time — the measured curve is in SCALE.md round-10 and
     artifacts/stress_neardup_ttl_r16.log); the exact replay ORACLES
-    keep NoTimeout because exactness requires witnessing across the
-    whole replay, and processing-time ttl_ms remains the
+    keep the exact mode because exactness requires witnessing across
+    the whole replay, and processing-time ttl_ms remains the
     continuous-trigger alternative when wall-clock windows are wanted.
 
     WARNING — ttl_ms is for CONTINUOUS triggers only (the production
@@ -396,6 +386,10 @@ def stream_state_candidates(
     making it the TTL to use when bounded replays must also evict."""
     if ttl_ms is not None and event_ttl_ms is not None:
         raise ValueError("set at most one of ttl_ms / event_ttl_ms")
+    if ttl_ms is None and event_ttl_ms is None:
+        return _join_candidates(stream_bands, emit_bands)
+    if emit_bands:
+        raise ValueError("emit_bands needs the exact witness (no ttl_ms / event_ttl_ms)")
     extra = [F.col("ts")] if event_ttl_ms is not None else []
     keyed = stream_bands.select(
         F.concat_ws("|", F.col("band").cast("string"), F.col("bucket")).alias("bkey"),
@@ -408,14 +402,15 @@ def stream_state_candidates(
     if event_ttl_ms is not None:
         keyed = keyed.withWatermark("ts", watermark_delay)
         timeout = GroupStateTimeout.EventTimeTimeout
-    elif ttl_ms is not None:
-        timeout = GroupStateTimeout.ProcessingTimeTimeout
     else:
-        timeout = GroupStateTimeout.NoTimeout
+        timeout = GroupStateTimeout.ProcessingTimeTimeout
+
+    def emit(_key, pdfs, state):
+        yield from _bucket_pairs_impl(pdfs, state, ttl_ms, event_ttl_ms)
+
     return keyed.groupBy("skey").applyInPandasWithState(
-        _bucket_pairs if not emit_bands and timeout is GroupStateTimeout.NoTimeout
-        else _make_bucket_pairs(emit_bands, ttl_ms, event_ttl_ms),
-        outputStructType=PAIR_BAND_SCHEMA if emit_bands else PAIR_SCHEMA,
+        emit,
+        outputStructType=PAIR_SCHEMA,
         stateStructType=STATE_TS_SCHEMA if event_ttl_ms is not None else STATE_SCHEMA,
         outputMode="append",
         timeoutConf=timeout,

@@ -3,7 +3,8 @@
 Every replay in the package goes through :func:`run_available_now`:
 start the query with ``trigger(availableNow=True)``, wait a bounded
 time, stop and raise on a timeout. It is also the one place that pins
-``spark.sql.shuffle.partitions`` for a replay.
+``spark.sql.shuffle.partitions`` for a replay, and it keeps each finished
+replay's per-batch progress (:func:`replay_progress`).
 
 AQE partition coalescing is unavailable inside Structured Streaming
 (``ResolveWriteToStream`` force-disables it), so a streaming query's
@@ -47,6 +48,8 @@ _ROWS_PER_PARTITION = 2000
 # candidates/batch ran 6 s at 32 partitions = 6.25M/task); below that,
 # task-launch overhead dominates
 _CANDS_PER_PARTITION = 250_000
+# finished replays' progress records, keyed by run_available_now's name
+_PROGRESS: dict[str, list[dict]] = {}
 
 
 # opt r12: the monitors' width ESTIMATES were fed by spark.read.parquet(
@@ -93,6 +96,33 @@ def candidate_fanout(spark, est_cands_per_batch: float) -> int:
     )
 
 
+def _batch_record(p) -> dict:
+    """One micro-batch of a StreamingQueryProgress: input rows, the
+    durationMs phases and each state operator's rows, memory and commit
+    time."""
+    return {
+        "batchId": p["batchId"],
+        "numInputRows": p["numInputRows"],
+        "durationMs": dict(p["durationMs"]),
+        "stateOperators": [
+            {k: op[k] for k in ("operatorName", "numRowsTotal",
+                                "memoryUsedBytes", "commitTimeMs")}
+            for op in p["stateOperators"]
+        ],
+    }
+
+
+def replay_progress(name: str) -> list[dict]:
+    """Per-batch records of the last finished ``run_available_now``
+    replay named ``name`` (``[]`` if none finished): ``batchId``,
+    ``numInputRows``, ``durationMs`` (addBatch, queryPlanning, walCommit,
+    commitOffsets, ...) and ``stateOperators`` (``operatorName``,
+    ``numRowsTotal``, ``memoryUsedBytes``, ``commitTimeMs``). Spark keeps
+    the last ``spark.sql.streaming.numRecentProgressUpdates`` (100)
+    batches of a query."""
+    return _PROGRESS.get(name, [])
+
+
 def run_available_now(
     df,
     *,
@@ -114,7 +144,8 @@ def run_available_now(
     start, so batch work after the replay keeps the session default,
     where AQE coalescing applies). A replay still running after
     ``timeout_s`` is stopped and raises ``RuntimeError``; errors of the
-    query itself propagate."""
+    query itself propagate. A finished replay's progress is kept under
+    ``name`` (:func:`replay_progress`)."""
     spark = df.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
     if shuffle_partitions is not None:
@@ -130,6 +161,7 @@ def run_available_now(
         if not q.awaitTermination(timeout_s):
             q.stop()
             raise RuntimeError(f"{q.name} replay timed out ({timeout_s} s)")
+        _PROGRESS[name] = [_batch_record(p) for p in q.recentProgress]
         return q
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -11,10 +11,9 @@ side) — the adversarial input for LSH candidate generation. Measures:
    so the flood's 1,000 x 1,000 cross pairs ARE the correct answer —
    the salt bounds per-task join width, not the candidate count (the
    contract: run exact_dedup upstream if floods should not be matched);
-4. within-stream supergroup state witness across 4 forced micro-batches
-   (maxFilesPerTrigger=1): wall time + emitted pair count + state group
-   count (n_groups=256 vs the ~2M raw (band, bucket) keys a
-   bucket-keyed design would pay one pandas round-trip each for).
+4. within-stream state witness (the stream-stream self-join) across 4
+   forced micro-batches (maxFilesPerTrigger=1): wall time + emitted pair
+   count + the number of distinct (band, bucket) keys it is keyed by.
 
 Usage: python scripts/stress_neardup.py [n_docs]   # default 1,000,000
 """
@@ -161,15 +160,14 @@ def main() -> None:
             .count()
         )
         print(
-            f"state witness: {n_state:,} pair emissions over 4 micro-batches in "
-            f"{t_state:.1f}s; 256 supergroups amortize {n_buckets:,} raw "
-            f"(band, bucket) keys (~{n_buckets // 256:,} buckets/group/pandas call "
-            f"instead of one Arrow round-trip per bucket)"
+            f"state witness (stream-stream self-join): {n_state:,} pair "
+            f"emissions over 4 micro-batches in {t_state:.1f}s over "
+            f"{n_buckets:,} distinct (band, bucket) keys"
         )
 
         # 5. FUSED monitor (r7): one query pays fingerprinting once —
-        # stateful witness with emit_bands=True, static probe run per
-        # micro-batch inside foreachBatch on the passthrough memberships
+        # witness with emit_bands=True, static probe run per micro-batch
+        # inside foreachBatch on the passthrough memberships
         out_dir = f"/tmp/stress_neardup_fused_{uuid.uuid4().hex[:8]}"
 
         def _sink(batch_df, _bid):

@@ -5,11 +5,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from prosnet_prefect_pipelines_spark.plans import q_pipeline113 as P113
 from prosnet_prefect_pipelines_spark.plans.q_pipeline113 import (
     q_neardup_bucket_skew_report,
     q_neardup_index_merge,
 )
 from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
+from prosnet_prefect_pipelines_spark.streaming.tuning import replay_progress
+
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                 "FlatMapGroupsInPandas", "PythonUDF")
 
 
 def test_index_merge_histogram_accounts_for_every_membership(spark, sf_dir):
@@ -36,3 +41,30 @@ def test_skew_report_order_statistics_sane(spark, sf_dir):
         assert (r.n_over_cap == 0) == (r.members_over_cap == 0)
         if r.n_over_cap:
             assert r.members_over_cap > 32 * r.n_over_cap - 32
+
+
+def test_neardup_monitor_runs_in_the_jvm(spark, sf_dir, monkeypatch):
+    """stream_neardup_monitor starts no Python worker: the replay's last
+    executed plan witnesses with a stream-stream join, not
+    FlatMapGroupsInPandasWithState, and the returned verification plan
+    shingles without a pandas UDF."""
+    run, replays = P113.run_available_now, []
+
+    def spy(df, **kw):
+        replays.append(run(df, **kw))
+        return replays[-1]
+
+    monkeypatch.setattr(P113, "run_available_now", spy)
+    df = P113.q_stream_neardup_monitor(spark, sf_dir)
+
+    (q,) = replays
+    replay_plan = q._jsq.explainInternal(False)
+    assert "StreamingSymmetricHashJoin" in replay_plan
+    assert "FlatMapGroupsInPandasWithState" not in replay_plan
+    result_plan = df._jdf.queryExecution().executedPlan().toString()
+    found = [n for n in _PYTHON_NODES if n in replay_plan + result_plan]
+    assert not found, found
+    ops = {op["operatorName"] for b in replay_progress("stream_neardup_monitor")
+           for op in b["stateOperators"]}
+    assert ops == {"symmetricHashJoin"}
+    assert df.count() > 0

@@ -76,10 +76,25 @@ def test_memoized_corpus_survives_sweep(spark, sf_dir):
     from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
 
     c = corpus(spark, sf_dir)
-    n1 = c.count()  # materializes the lazy fixture checkpoint
+    n1 = c.count()
     sweep_persistent_rdds(spark)
     n2 = corpus(spark, sf_dir).count()  # same memoized frame, post-sweep
     assert n1 == n2 > 0
+
+
+def test_sweep_between_dedup_builds_keeps_memos_readable(spark, sf_dir):
+    """Build dedup_minhash_lsh, sweep, then build and collect
+    dedup_clusters from fresh memos: the q_dedup memos are materialized
+    when they are memoized, so no unexecuted lineage of theirs reads a
+    checkpoint block the sweep dropped (a lazy memo failed here with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    from prosnet_prefect_pipelines_spark.plans import catalog
+
+    qs = catalog.load()[0]
+    reset_memo_fixtures(spark)
+    qs["dedup_minhash_lsh"](spark, sf_dir)
+    sweep_persistent_rdds(spark)
+    assert qs["dedup_clusters"](spark, sf_dir).collect()
 
 
 def test_protection_is_app_scoped(spark):

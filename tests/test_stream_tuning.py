@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.streaming.tuning import (
+    replay_progress,
     run_available_now,
     stream_shuffle_partitions,
 )
@@ -81,6 +82,35 @@ def test_memory_sink_returns_full_table(spark, id_stream):
     assert {(r.p, r["count"]) for r in spark.table(q.name).collect()} == {
         (0, 15), (1, 15)
     }
+
+
+def test_finished_replay_keeps_its_progress(spark, tmp_path):
+    """The runner keeps each finished replay's per-batch record under its
+    name: input rows, durationMs phases and per-operator state rows,
+    memory and commit time. Two files, one micro-batch each, through a
+    stateful dedup."""
+    stage = str(tmp_path / "two")
+    spark.range(20).repartition(2, "id").write.parquet(stage)
+    src = (
+        spark.readStream.schema("id long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    assert replay_progress("two_batches") == []
+    run_available_now(src.dropDuplicates(["id"]), sink="memory", name="two_batches")
+    rec = replay_progress("two_batches")
+    assert [b["batchId"] for b in rec] == [0, 1]
+    assert sum(b["numInputRows"] for b in rec) == 20
+    assert all(b["numInputRows"] > 0 for b in rec)
+    for b in rec:
+        assert {"addBatch", "queryPlanning", "walCommit", "commitOffsets"} <= set(
+            b["durationMs"]
+        )
+        (op,) = b["stateOperators"]
+        assert set(op) == {"operatorName", "numRowsTotal", "memoryUsedBytes",
+                           "commitTimeMs"}
+        assert op["memoryUsedBytes"] > 0 and op["commitTimeMs"] >= 0
+    assert rec[-1]["stateOperators"][0]["numRowsTotal"] == 20
 
 
 def test_timeout_stops_raises_and_restores(spark, id_stream):

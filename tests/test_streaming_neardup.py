@@ -6,9 +6,11 @@ Three claims, each load-bearing for the oracle pairing:
    (bucket-for-bucket) on real corpus text;
 2. the salted static index + all-sub-bucket probe is recall-EXACT:
    candidates match the unsalted band equi-join for any bucket_cap;
-3. the stateful within-stream pair emitter is batching-insensitive —
-   slicing the stream into single-file micro-batches yields the same
-   pair set as one big batch (and both equal the batch self-join).
+3. the within-stream witness is batching-insensitive — slicing the
+   stream into single-file micro-batches yields the same pair set as
+   one big batch (and both equal the batch self-join). The exact mode
+   is a native stream-stream self-join; the TTL modes' pandas emitter
+   keeps the same property while nothing is evicted.
 """
 
 from __future__ import annotations
@@ -79,8 +81,8 @@ def test_salted_probe_recall_exact(spark, docs, cap):
 
 def test_state_pairs_batching_insensitive(spark, docs, tmp_path):
     """One-file-per-trigger replay == single-batch replay == batch
-    self-join: the applyInPandasWithState emitter is order- and
-    slicing-insensitive by construction."""
+    self-join: the symmetric hash self-join emits each colliding pair
+    once, whatever the slicing."""
     import uuid
 
     odd = docs.filter(F.col("id") % 2 == 1)
@@ -147,7 +149,7 @@ def test_jaccard_verify_matches_inline(spark, docs):
 
 
 class _FakeState:
-    """Minimal GroupState stand-in for driving _bucket_pairs directly."""
+    """Minimal GroupState stand-in for driving _bucket_pairs_impl directly."""
 
     def __init__(self, timed_out=False):
         self._v = None
@@ -175,16 +177,19 @@ class _FakeState:
 
 
 def test_bucket_pairs_slicing_invariance_property():
-    """Pure-function property: for random (bucket, id) membership tables
-    and ANY random slicing into micro-batches, the union of emitted
-    pairs equals the batch per-bucket self-join — and state carries the
-    full membership forward."""
+    """Pure-function property of the TTL modes' pandas emitter while no
+    timeout fires: for random (bucket, id) membership tables and ANY
+    random slicing into micro-batches, the union of emitted pairs equals
+    the batch per-bucket self-join — and state carries the full
+    membership forward."""
     import itertools
     import random
 
     import pandas as pd
 
-    from prosnet_prefect_pipelines_spark.streaming.neardup import _bucket_pairs
+    from prosnet_prefect_pipelines_spark.streaming.neardup import (
+        _bucket_pairs_impl,
+    )
 
     rng = random.Random(42)
     for trial in range(25):
@@ -217,47 +222,66 @@ def test_bucket_pairs_slicing_invariance_property():
                 {"bkey": [r[0] for r in batch],
                  "id": pd.Series([r[1] for r in batch], dtype="int64")}
             )
-            for out in _bucket_pairs(("k",), iter([pdf]), state):
+            for out in _bucket_pairs_impl(iter([pdf]), state, ttl_ms=60000):
                 got.update(zip(out["a"].tolist(), out["b"].tolist()))
         assert got == want, f"trial {trial}"
         bkeys, ids = state.get
         assert sorted(zip(bkeys, ids)) == sorted(rows)
 
 
-def test_bucket_pairs_emit_bands_passthrough():
-    """emit_bands=True re-emits each NEW membership exactly once (as
-    (id, NULL, bkey) rows) across batches, alongside the same pairs the
-    plain emitter yields — the contract the fused monitor's foreachBatch
-    static probe depends on."""
-    import pandas as pd
+def test_native_witness_emit_bands_across_batches(spark, tmp_path):
+    """The exact witness over three micro-batches with emit_bands=True:
+    pairs (bkey NULL) are every colliding a < b pair, new x old and
+    new x new, and every arriving membership comes back as one
+    (id, NULL, bkey) row — the contract the fused monitor's foreachBatch
+    static probe depends on. A re-delivered membership, (b0, 2) in the
+    second batch, comes back once more and repeats its pair; both are
+    deduplicated downstream."""
+    import uuid
 
-    from prosnet_prefect_pipelines_spark.streaming.neardup import (
-        _bucket_pairs_impl,
-    )
-
-    state = _FakeState()
+    stage = str(tmp_path / "bands")
     batches = [
-        [("b0", 1), ("b0", 2)],
-        [("b0", 2), ("b1", 3)],  # (b0, 2) re-arrives: must NOT re-emit
-        [("b0", 4)],
+        [(1, 0, "b0"), (2, 0, "b0")],
+        [(2, 0, "b0"), (3, 1, "b1")],
+        [(4, 0, "b0")],
     ]
-    pairs, bands = set(), []
-    for batch in batches:
-        pdf = pd.DataFrame(
-            {"bkey": [r[0] for r in batch],
-             "id": pd.Series([r[1] for r in batch], dtype="int64")}
-        )
-        for out in _bucket_pairs_impl(
-            iter([pdf]), state, emit_bands=True, ttl_ms=None
-        ):
-            p = out[out["bkey"].isna()]
-            pairs.update(zip(p["a"].tolist(), p["b"].tolist()))
-            b = out[out["bkey"].notna()]
-            assert b["b"].isna().all()
-            bands.extend(zip(b["a"].tolist(), b["bkey"].tolist()))
-    assert pairs == {(1, 2), (1, 4), (2, 4)}
-    assert sorted(bands) == [(1, "b0"), (2, "b0"), (3, "b1"), (4, "b0")]
-    assert len(bands) == len(set(bands)), "membership re-emitted"
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, "id long, band int, bucket string").coalesce(
+            1
+        ).write.parquet(f"{stage}/batch={i}")
+    src = (
+        spark.readStream.schema("id long, band int, bucket string")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(stage)
+    )
+    name = "ndn_" + uuid.uuid4().hex[:8]
+    q = (
+        N.stream_state_candidates(src, emit_bands=True)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert len(q.recentProgress) == 3, "expected one micro-batch per file"
+    out = spark.table(name).collect()
+    pairs = sorted((r.a, r.b) for r in out if r.bkey is None)
+    bands = sorted((r.a, r.bkey) for r in out if r.bkey is not None)
+    assert all(r.b is None for r in out if r.bkey is not None)
+    assert pairs == [(1, 2), (1, 2), (1, 4), (2, 4), (2, 4)]
+    assert bands == [(1, "0|b0"), (2, "0|b0"), (2, "0|b0"), (3, "1|b1"),
+                     (4, "0|b0")]
+
+
+def test_emit_bands_needs_the_exact_witness(spark):
+    """emit_bands with a TTL raises: only the exact mode passes band rows
+    through, and each mode has one implementation."""
+    bands = spark.range(1).selectExpr("id", "0 AS band", "'x' AS bucket")
+    for ttl in ({"ttl_ms": 1000}, {"event_ttl_ms": 1000}):
+        with pytest.raises(ValueError, match="emit_bands"):
+            N.stream_state_candidates(bands, emit_bands=True, **ttl)
 
 
 def test_bucket_pairs_ttl_eviction():
@@ -276,7 +300,7 @@ def test_bucket_pairs_ttl_eviction():
              "id": pd.Series([r[1] for r in rows], dtype="int64")}
         )
         got = set()
-        for out in _bucket_pairs_impl(iter([pdf]), state, False, ttl_ms=60000):
+        for out in _bucket_pairs_impl(iter([pdf]), state, ttl_ms=60000):
             got.update(zip(out["a"].tolist(), out["b"].tolist()))
         return got
 
@@ -287,7 +311,7 @@ def test_bucket_pairs_ttl_eviction():
 
     # runtime fires the timeout: empty batch, hasTimedOut=True
     state.hasTimedOut = True
-    outs = list(_bucket_pairs_impl(iter([]), state, False, ttl_ms=60000))
+    outs = list(_bucket_pairs_impl(iter([]), state, ttl_ms=60000))
     assert state.removed and not state.exists
     assert all(len(o) == 0 for o in outs)
 
@@ -504,7 +528,7 @@ def test_bucket_pairs_event_ttl_membership_sweep():
                              for r in rows]).astype("datetime64[ns]"),
         })
         got = set()
-        for out in _bucket_pairs_impl(iter([pdf]), state, False, None,
+        for out in _bucket_pairs_impl(iter([pdf]), state, None,
                                       event_ttl_ms=1000):
             got.update(zip(out["a"].tolist(), out["b"].tolist()))
         return got
