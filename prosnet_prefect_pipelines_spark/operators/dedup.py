@@ -712,7 +712,8 @@ def semdedup(
     pair generation parallelizes across cells.
     """
     from prosnet_prefect_pipelines_spark.operators.similarity import (
-        _argmax_array,
+        assign_cells,
+        centroid_array,
         dot,
         kmeans_centroids,
         norm,
@@ -729,29 +730,10 @@ def semdedup(
         F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("nv"),
     )
-    # per-row argmax over the broadcast centroid array (opt r12):
-    # identical cell selection to the old row_number window per
-    # _argmax_array's note, with NO corpus exchange — the window
-    # shuffled one (id, v, nv, cid, ccos) fan-out per vector
-    carr = cents.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "cv", "ncv"))).alias(
-            "_cents"
-        )
-    )
-    assign = (
-        vecs.join(F.broadcast(carr))
-        .select(
-            "id",
-            "v",
-            "nv",
-            _argmax_array(
-                F.col("_cents"),
-                lambda e: F.round(
-                    dot(F.col("v"), e["cv"]) / (F.col("nv") * e["ncv"]), 6
-                ),
-            ).alias("_am"),
-        )
-        .select("id", "v", "nv", F.col("_am._e.cid").alias("cell"))
+    # per-row nearest centroid over the broadcast centroid array: no
+    # corpus exchange for the assignment
+    assign = assign_cells(vecs, centroid_array(cents)).select(
+        "id", "v", "nv", "cell"
     )
     a = assign.select(
         F.col("id").alias("a_id"), F.col("v").alias("a_v"),

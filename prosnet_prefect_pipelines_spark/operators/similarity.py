@@ -9,6 +9,11 @@
   shuffle on the bucket key; the scale path. Hyperplane coefficients are
   a fixed deterministic function of (plane, dimension) so both engines
   (and reruns) agree.
+- ``nearest_centroids`` / ``assign_cells``: the one nearest-centroid
+  selection — a per-row top-k over a broadcast centroid array, in the
+  oracles' order — behind IVF assignment and probes, the k-means/PQ
+  trainer (``pq_codebooks``, the one Lloyd's loop), the PQ encoder and
+  SemDeDup.
 
 All dot products run as ordered folds over the array (zip_with +
 aggregate on the JVM), cast to double before multiplication; cosines are
@@ -146,74 +151,104 @@ def cosine_topk(
     )
 
 
-def _argmax_row(
-    df: DataFrame, group: list[str], score: str, tie: str, keep: list[str]
-) -> DataFrame:
-    """One row per group: exactly the row ``row_number() OVER
-    (PARTITION BY group ORDER BY score DESC, tie ASC) = 1`` keeps,
-    computed as a partial+final ``max(struct(score, ~tie, ...))``
-    aggregate instead of an Exchange+Sort+Window over the full fan-out
-    (opt r12, guide §2.3/§2.4 — aggregate before you shuffle: the
-    map-side partial max collapses the n_cells-way assignment fan-out
-    to one row per group BEFORE the exchange, and the sort disappears).
-
-    Order-exactness: a DESC sort key is Spark's single total order on
-    the type reversed with NULLS LAST — i.e. exactly the reverse of the
-    ASC order (NULL < -Inf < finite < +Inf < NaN) that struct-field
-    comparison inside ``max`` also uses, so the aggregate picks the
-    identical row for NULL and NaN scores and for ties (the bitwise-NOT
-    tie column turns ``tie ASC`` into a max: ``~x = -x-1`` is strictly
-    decreasing over the whole integral range, negative ids included, and
-    unlike negation cannot overflow at LONG_MIN).
-    """
-    packed = F.max(
-        F.struct(
-            F.col(score).alias("_s"),
-            F.bitwise_not(F.col(tie)).alias("_nt"),
-            *[F.col(c).alias(c) for c in [tie, *keep]],
+def seed_centroids(df: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
+    """-> (cid, cv, ncv): the ``n`` lowest-id vectors as centroids — the
+    deterministic seed every IVF index and every Lloyd's run starts
+    from, so both engines (and reruns) agree. ``ncv`` is the centroid's
+    norm, folded once here instead of once per (vector, centroid)
+    pair."""
+    return (
+        df.select(
+            F.col(id_col).alias("cid"),
+            F.col(vec_col).alias("cv"),
+            norm(F.col(vec_col)).alias("ncv"),
         )
-    ).alias("_am")
-    cols = [F.col(g) for g in group]
-    cols.append(F.col("_am._s").alias(score))
-    cols.append(F.col(f"_am.{tie}").alias(tie))
-    cols += [F.col(f"_am.{c}").alias(c) for c in keep]
-    return df.groupBy(*group).agg(packed).select(*cols)
+        .orderBy("cid")
+        .limit(n)
+    )
 
 
-def _argmax_array(
-    entries: Column, score, tie: Column | str = "cid"
+def centroid_array(cents: DataFrame, key: str | None = None) -> DataFrame:
+    """(cid, cv, ncv) rows -> ONE row holding the whole centroid table
+    as the array column ``_cents`` (one row per ``key`` value when
+    given, e.g. one codebook per PQ subspace), for broadcasting into a
+    (possibly streaming) per-row selection — stream-static joins
+    against a broadcast 1-row frame are append-legal. Array order is
+    pinned by cid for determinism, though ``nearest_centroids``
+    re-ranks anyway. The table is tiny by construction, so it is
+    coalesced to one partition first: the aggregate then needs no
+    exchange of its own."""
+    entries = F.array_sort(F.collect_list(F.struct("cid", "cv", "ncv"))).alias(
+        "_cents"
+    )
+    one = cents.coalesce(1)
+    return one.agg(entries) if key is None else one.groupBy(key).agg(entries)
+
+
+def nearest_centroids(
+    cents_arr: Column, vec: Column, nv: Column, k: int = 1
 ) -> Column:
-    """Per-ROW argmax over an array of candidate structs: returns the
-    struct ``max(struct(score, ~tie, entry))`` would pick, computed by
-    ``array_max`` over ``transform(entries, ...)`` — no fan-out rows,
-    no exchange (opt r12, guide §2.4: the carried-array twin of
-    ``_argmax_row``; a Lloyd assignment pass with this shape shuffles
-    NOTHING, where the fan-out + groupBy(id) form shuffles one
-    payload-bearing row per vector per iteration).
+    """The package's one centroid ranking: the top ``k`` entries of an
+    array<struct<cid, cv, ncv>> (``centroid_array``) for one vector, as
+    array<struct<score, _nt, cid>> best first.
 
-    Order-exactness: ``array_max`` compares structs with the same
-    interpreted total order (NULL < -Inf < finite < +Inf < NaN,
-    field-by-field) that the ``max`` aggregate and a DESC-ordered
-    row_number use, so NULL/NaN scores and tie-breaks select the
-    identical entry (pinned by the degenerate-case test next to
-    ``_argmax_row``'s).
+    Order: score = round(try_divide(dot(vec, cv), nv * ncv), 6) DESC
+    NULLS LAST, ties by cid ASC — the ``row_number() OVER (ORDER BY
+    score DESC, cid)`` order of every DuckDB oracle. Spark compares
+    struct fields in its one total order (NULL < -Inf < finite < +Inf <
+    NaN, -0.0 = 0.0), so a descending sort of (score, ~cid, cid) is
+    exactly that order reversed field by field: a NULL score (zero-norm
+    vector or centroid, via try_divide instead of an ANSI divide-by-zero)
+    ranks last, a NaN score first, and the bitwise-NOT tie key turns
+    cid ASC into a descending key without overflowing at LONG_MIN.
 
-    ``entries`` is an array<struct<...>>; ``score`` is a callable
-    entry -> Column; ``tie`` names the integral entry field whose
-    ASCENDING order breaks score ties (any value: the bitwise-NOT key
-    cannot overflow, see ``_argmax_row``). Returns a struct with fields
-    ``_s`` (the score) and ``_e`` (the winning entry); NULL for an
-    empty/NULL array.
-    """
-    return F.array_max(
-        F.transform(
-            entries,
-            lambda e: F.struct(
-                score(e).alias("_s"),
-                F.bitwise_not(e[tie]).alias("_nt"),
-                e.alias("_e"),
+    A pure per-row expression over a carried array: no fan-out rows,
+    no exchange, no window, legal in an append-mode streaming
+    projection, and plan cost independent of the number of centroids.
+    ``nv`` is the caller's hoisted ``norm(vec)``. For k = 1 the pick is
+    ``array_max`` — the same order in O(cells) instead of a sort."""
+    ranked = F.transform(
+        cents_arr,
+        lambda c: F.struct(
+            F.round(F.try_divide(dot(vec, c["cv"]), nv * c["ncv"]), 6).alias(
+                "score"
             ),
-        )
+            F.bitwise_not(c["cid"]).alias("_nt"),
+            c["cid"].alias("cid"),
+        ),
+    )
+    if k == 1:
+        # array_compact keeps an empty/NULL centroid array empty
+        return F.array_compact(F.array(F.array_max(ranked)))
+    return F.slice(F.sort_array(ranked, asc=False), 1, k)
+
+
+def assign_cells(
+    vecs: DataFrame, carr: DataFrame, k: int = 1, key: str | None = None
+) -> DataFrame:
+    """(id, v, nv, ...) rows + a ``centroid_array`` frame -> the same
+    rows, one per selected centroid, with ``cell`` (its cid),
+    ``cell_rank`` (1 = nearest) and ``ccos`` (its rounded cosine).
+
+    The centroid array is broadcast (crossJoin, or an equi-join on
+    ``key`` for per-key tables such as PQ codebooks) and every row
+    ranks it with ``nearest_centroids`` — a narrow per-row pass over the
+    corpus, batch or streaming."""
+    joined = (
+        vecs.crossJoin(F.broadcast(carr))
+        if key is None
+        else vecs.join(F.broadcast(carr), on=key)
+    )
+    return joined.select(
+        *vecs.columns,
+        F.posexplode(
+            nearest_centroids(F.col("_cents"), F.col("v"), F.col("nv"), k)
+        ).alias("_r", "_c"),
+    ).select(
+        *vecs.columns,
+        F.col("_c.cid").alias("cell"),
+        (F.col("_r") + 1).alias("cell_rank"),
+        F.col("_c.score").alias("ccos"),
     )
 
 
@@ -270,78 +305,31 @@ def auto_planes(n: int, target_bucket: int = 64, floor: int = 4) -> int:
 def ivf_assign(
     df: DataFrame, id_col: str, vec_col: str, n_cells: int = 8, rank_limit: int = 1,
 ) -> DataFrame:
-    """-> (id, v, cell, cell_rank): each vector's ``rank_limit`` nearest
+    """-> (id, v, nv, cell, cell_rank): each vector's ``rank_limit`` nearest
     centroids (rank 1 = the cell it lives in; ranks 2.. = probe cells).
 
-    Centroids are the ``n_cells`` vectors with the smallest ids — a
-    deterministic seed choice so both engines (and reruns) agree;
-    production replaces this with k-means iterations (same assignment
-    join, run to convergence). Assignment = argmax cosine, ties broken
-    by centroid id. The centroid table is tiny and broadcast, so
-    assignment is a single narrow pass over the corpus — no shuffle.
+    Centroids are ``seed_centroids`` (the ``n_cells`` vectors with the
+    smallest ids) — a deterministic seed choice so both engines (and
+    reruns) agree; production replaces this with k-means iterations
+    (same assignment, run to convergence). Assignment is
+    ``assign_cells``: the centroid table broadcast as one array row and
+    ranked per vector by ``nearest_centroids`` (rounded cosine DESC
+    NULLS LAST, cid ASC), so any ``rank_limit`` is a single narrow pass
+    over the corpus — no shuffle, no window.
 
     Deliberately NOT dim-unrolled: the assignment expressions land in
     localCheckpointed / multi-branch consumer plans (ivf_topk, ivf_pq)
     where an unrolled tree multiplies Catalyst optimization cost (see
     ``dot``); the fold is the measured-faster total here.
     """
-    # centroid norms computed once broadcast-side, vector norms once per
-    # row — one fold per (vector, centroid) pair instead of three;
-    # bit-identical to cosine() (same fold + sqrt, same IEEE op order)
-    cents = (
-        df.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cv"),
-            norm(F.col(vec_col)).alias("ncv"),
-        )
-        .orderBy("cid")
-        .limit(n_cells)
-    )
-    scored = df.select(
+    vecs = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         norm(F.col(vec_col)).alias("nv"),
-    ).join(F.broadcast(cents)).select(
-        "id",
-        "v",
-        "nv",
-        "cid",
-        # try_divide: a zero-norm vector or centroid yields a NULL
-        # cosine instead of an ANSI divide-by-zero error; DESC ordering
-        # puts those nulls LAST, and the map-side probe twins
-        # (literal_centroid_probe / centroid_probe_column) coalesce
-        # their negated cosine to +inf so all three assignment paths
-        # rank degenerate vectors identically
-        F.round(
-            F.try_divide(
-                dot(F.col("v"), F.col("cv")), F.col("nv") * F.col("ncv")
-            ),
-            6,
-        ).alias("ccos"),
     )
-    if rank_limit == 1:
-        # argmax aggregate instead of Exchange+Sort+Window (opt r12):
-        # identical row selection per _argmax_row's order-exactness note
-        return _argmax_row(
-            scored, group=["id"], score="ccos", tie="cid", keep=["v", "nv"]
-        ).select(
-            "id",
-            "v",
-            "nv",
-            F.col("cid").alias("cell"),
-            F.lit(1).cast("int").alias("cell_rank"),
-        )
-    w = Window.partitionBy("id").orderBy(F.col("ccos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= rank_limit)
-        .select(
-            "id",
-            "v",
-            "nv",
-            F.col("cid").alias("cell"),
-            F.col("_rn").alias("cell_rank"),
-        )
+    carr = centroid_array(seed_centroids(df, id_col, vec_col, n_cells))
+    return assign_cells(vecs, carr, k=rank_limit).select(
+        "id", "v", "nv", "cell", "cell_rank"
     )
 
 
@@ -551,99 +539,37 @@ def quantize_int8(
     return df.select(F.col(id_col).alias("id"), scale, q)
 
 
-def literal_centroid_probe(
-    vec: Column, nv: Column, cents_rows, nprobe: int = 2
-) -> Column:
-    """array<struct<negc,cid>> of the ``nprobe`` nearest centroids, with
-    the centroid table embedded as LITERALS — a pure per-row expression,
-    so it is legal in an append-mode streaming projection where the
-    window-based ``ivf_assign`` ranking is not (non-time windows are
-    rejected on streaming frames).
-
-    ``cents_rows``: collected Rows with fields (cid, cv, ncv) — IVF
-    centroids are tiny by definition (the index ships them to every
-    worker anyway), so folding them into the plan is the same
-    data movement as a broadcast, minus a join. Ordering matches
-    ``ivf_assign`` exactly: rounded cosine DESC, cid ASC, encoded as an
-    ascending struct sort on (-round(cos, 6), cid). The ``+ 0.0``
-    normalizes IEEE -0.0 to +0.0 (x + 0.0 is exact for every other
-    double) so a cosine that rounds to zero cannot order differently
-    from the SQL twin, where -0.0 and 0.0 compare equal.
-
-    ``nv`` must be the caller's hoisted ``norm(vec)`` (one fold per row,
-    not per centroid); centroid norms arrive precomputed in
-    ``cents_rows`` the same way.
-
-    A zero-norm vector (or centroid) makes the cosine NULL (Spark's
-    Divide returns null on zero divisor); a null struct field sorts
-    FIRST ascending, while ``ivf_assign``'s ``orderBy(ccos DESC)`` puts
-    nulls LAST — so degenerate vectors would silently diverge between
-    the two assignment paths. Coalescing negc to +inf pins null cosines
-    to rank-last on this path too."""
-    entries = [
-        F.struct(
-            F.coalesce(
-                -F.round(
-                    F.try_divide(
-                        dot(vec, F.lit(r.cv)), nv * F.lit(float(r.ncv))
-                    ),
-                    6,
-                ) + F.lit(0.0),
-                F.lit(float("inf")),
-            ).alias("negc"),
-            F.lit(r.cid).alias("cid"),
+def _by_sub(
+    df: DataFrame, id_col: str, vec_col: str, dim: int | None, n_sub: int
+) -> DataFrame:
+    """-> (sub, id, v): each vector's ``n_sub`` equal subvectors as rows
+    (the whole vector as sub 0 when ``n_sub`` is 1, so ``dim`` may be
+    None there)."""
+    if n_sub == 1:
+        return df.select(
+            F.lit(0).alias("sub"),
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
         )
-        for r in cents_rows
-    ]
-    return F.slice(F.array_sort(F.array(*entries)), 1, nprobe)
-
-
-def centroid_probe_column(cents_arr: Column, vec: Column, nv: Column,
-                          nprobe: int = 2) -> Column:
-    """Per-row top-``nprobe`` centroid ranking over a centroid table
-    carried as ONE array column — the large-``n_cells`` twin of
-    ``literal_centroid_probe``.
-
-    The literal variant embeds dim x n_cells literals in the plan, which
-    is right for a handful of seed centroids but makes Catalyst analysis
-    cost grow with the centroid count; here the centroid table is DATA
-    (an array<struct<cid,cv,ncv>> produced by ``centroid_array``,
-    broadcast as a 1-row frame), so the plan is one ``transform`` +
-    ``array_sort`` regardless of whether n_cells is 8 or 25,000 (the
-    SemDeDup-scale regime). Identical IEEE op order and (-round(cos,6),
-    cid) ordering as the literal path — equivalence is unit-tested.
-    Null cosines (zero-norm vector/centroid) coalesce to +inf so they
-    rank LAST, matching ``ivf_assign``'s DESC nulls-last ordering."""
-    return F.slice(
-        F.array_sort(
-            F.transform(
-                cents_arr,
-                lambda c: F.struct(
-                    F.coalesce(
-                        -F.round(
-                            F.try_divide(dot(vec, c["cv"]), nv * c["ncv"]), 6
-                        )
-                        + F.lit(0.0),
-                        F.lit(float("inf")),
-                    ).alias("negc"),
-                    c["cid"].alias("cid"),
-                ),
+    sub_dim = dim // n_sub
+    if sub_dim * n_sub != dim:
+        raise ValueError(f"dim {dim} must divide evenly into n_sub {n_sub}")
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("sub"),
+                        F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(
+                            "v"
+                        ),
+                    )
+                    for s in range(n_sub)
+                ]
             )
-        ),
-        1,
-        nprobe,
-    )
-
-
-def centroid_array(cents: DataFrame) -> DataFrame:
-    """(cid, cv, ncv) rows -> ONE-row frame holding the whole centroid
-    table as an array column, for broadcasting into a (possibly
-    streaming) per-row probe — stream-static joins against a broadcast
-    1-row frame are append-legal. Array order is pinned by cid for
-    determinism, though ``centroid_probe_column`` re-ranks anyway."""
-    return cents.agg(
-        F.array_sort(F.collect_list(F.struct("cid", "cv", "ncv"))).alias("_cents")
-    )
+        ).alias("_sl"),
+    ).select(F.col("_sl.sub").alias("sub"), "id", F.col("_sl.v").alias("v"))
 
 
 def kmeans_centroids(
@@ -653,48 +579,105 @@ def kmeans_centroids(
     n_cells: int = 8,
     iterations: int = 5,
 ) -> DataFrame:
-    """-> (cid, cv): spherical k-means centroids via Lloyd's iterations —
-    the production IVF trainer the seed-centroid shortcut stands in for.
+    """-> (cid, cv): spherical k-means centroids — the production IVF
+    trainer the seed-centroid shortcut stands in for. This is
+    :func:`pq_codebooks`' Lloyd's loop with one subspace (see there)."""
+    return pq_codebooks(
+        df, id_col, vec_col, None, n_sub=1, n_cells=n_cells,
+        iterations=iterations,
+    ).select("cid", "cv")
 
-    Deterministic: init = the ``n_cells`` lowest-id vectors; assignment =
-    argmax rounded cosine with centroid-id tie-break; update = per-cell
-    elementwise mean, L2-normalized (spherical k-means — cosine geometry);
-    a fixed iteration count. Each iteration is one carried-array
-    assignment pass (exchange-FREE: the centroids broadcast as one
-    array row and every vector picks its cell per row, so no
-    payload-bearing corpus shuffle per iteration) + one (cell, dim)
-    aggregation whose shuffle is n_cells x dim, independent of corpus
-    size. Empty cells keep their previous centroid.
+
+def pq_encode(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    n_sub: int = 4,
+    n_cells: int = 4,
+    iterations: int = 1,
+) -> DataFrame:
+    """Product quantization (spherical) -> (id, sub, code, scos): split
+    each vector into ``n_sub`` subspaces, train the per-subspace
+    codebooks (:func:`pq_codebooks`), assign each subvector to its
+    nearest codeword (:func:`pq_encode_with`).
+
+    The ANN compression path beyond int8: storage per vector drops to
+    n_sub code bytes (+ shared codebooks), and asymmetric distance
+    computation scans codes instead of floats. Codebooks are
+    engine-exact (integer-scaled means), so codes — and any index built
+    from them — are reproducible off-Spark.
     """
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    cents = (
-        vecs.orderBy("id")
-        .limit(n_cells)
-        .select(F.col("id").alias("cid"), F.col("v").alias("cv"))
+    return pq_encode_with(
+        df, id_col, vec_col, dim,
+        pq_codebooks(df, id_col, vec_col, dim, n_sub, n_cells, iterations),
+        n_sub,
     )
+
+
+def pq_encode_with(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    codebooks: DataFrame,
+    n_sub: int,
+) -> DataFrame:
+    """Assign every vector's subvectors against ALREADY-TRAINED
+    codebooks -> (id, sub, code, scos): all subspaces ride in ONE frame
+    (one row per subvector) and each row picks its codeword with
+    ``assign_cells`` over its own subspace's broadcast codebook array —
+    one narrow corpus pass, no exchange of corpus rows."""
+    vecs = _by_sub(df, id_col, vec_col, dim, n_sub).withColumn(
+        "nv", norm(F.col("v"))
+    )
+    carr = centroid_array(
+        codebooks.select("sub", "cid", "cv", norm(F.col("cv")).alias("ncv")),
+        key="sub",
+    )
+    return assign_cells(vecs, carr, key="sub").select(
+        "id", "sub", F.col("cell").alias("code"), F.col("ccos").alias("scos")
+    )
+
+
+def pq_codebooks(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int | None,
+    n_sub: int = 4,
+    n_cells: int = 4,
+    iterations: int = 1,
+) -> DataFrame:
+    """Per-subspace PQ codebooks -> (sub, cid, cv, cv_norm2) by spherical
+    k-means — the package's one Lloyd's loop (``kmeans_centroids`` is
+    this loop with ``n_sub`` 1). ``cv_norm2`` is pre-computed because
+    asymmetric-distance search needs the reconstruction's norm,
+    Σ_s ||c_s||², at scoring time.
+
+    Deterministic: init = ``seed_centroids`` (the ``n_cells`` lowest-id
+    vectors, sliced per subspace — the same ids seed every subspace);
+    assignment = ``assign_cells`` (rounded cosine DESC NULLS LAST, cid
+    ASC); update = per-cell elementwise mean, L2-normalized (cosine
+    geometry); a fixed iteration count. Every quantity carries ``sub``
+    in its key, so all subspaces train in ONE loop. Each iteration is
+    one exchange-free assignment pass (each subspace's centroids
+    broadcast as one array row, every subvector picks its cell per row)
+    plus one (sub, cell, dim) aggregation whose shuffle is independent
+    of corpus size. Empty cells keep their previous centroid.
+    """
+    vecs = _by_sub(df, id_col, vec_col, dim, n_sub).withColumn(
+        "nv", norm(F.col("v"))
+    )
+    cents = _by_sub(
+        seed_centroids(df, id_col, vec_col, n_cells), "cid", "cv", dim, n_sub
+    ).select("sub", F.col("id").alias("cid"), F.col("v").alias("cv"))
     for _ in range(iterations):
-        # per-row argmax over the broadcast centroid array instead of a
-        # fan-out join + groupBy(id) aggregate (opt r12): identical row
-        # selection per _argmax_array's note, and the per-iteration
-        # exchange of one (id, ccos, cid, v) row per vector disappears
-        carr = cents.agg(
-            F.array_sort(F.collect_list(F.struct("cid", "cv"))).alias(
-                "_cents"
-            )
+        carr = centroid_array(
+            cents.withColumn("ncv", norm(F.col("cv"))), key="sub"
         )
-        assigned = (
-            vecs.join(F.broadcast(carr))
-            .select(
-                "id",
-                "v",
-                _argmax_array(
-                    F.col("_cents"),
-                    lambda e: F.round(cosine(F.col("v"), e["cv"]), 6),
-                ).alias("_am"),
-            )
-            .select("id", "v", F.col("_am._e.cid").alias("cid"))
-        )
-        # per-cell elementwise mean via posexplode -> (cid, pos) agg.
+        assigned = assign_cells(vecs, carr, key="sub")
+        # per-cell elementwise mean via posexplode -> (sub, cid, pos) agg.
         # Components are scaled to exact integers (round(x*1e9), well
         # under 2^53) so the sum is order-independent AND every engine
         # computes the identical value — a DECIMAL sum is also exact,
@@ -702,29 +685,33 @@ def kmeans_centroids(
         # to double, which flips rounded cosines near .5e-6 boundaries
         # (seen at sf0.001). Integer->double is exact; the two IEEE
         # divisions that follow are correctly rounded everywhere.
-        # empty-cell handling rides INSIDE the aggregation (opt r12): a
-        # zero-weight sentinel row per (cid, pos) from the previous
-        # centroids joins the member rows before the rollup, so the
-        # "empty cells keep their previous centroid" coalesce-join (a
-        # broadcast join + its build job per iteration) disappears.
-        # Exactness: members contribute round(x*1e9) longs with w=1,
-        # the sentinel contributes 0 with w=0 — the long sum and the
-        # member count are bit-identical to the old members-only
-        # aggregation; an empty cell (sum(w)=0) takes the sentinel
-        # component back unchanged and SKIPS the renormalization
-        # (its previous cv is already unit-norm but not exactly 1.0
-        # under refolding, so renormalizing would perturb 1 ulp).
+        # Empty cells ride INSIDE the aggregation: a zero-weight
+        # sentinel row per (sub, cid, pos) from the previous centroids
+        # joins the member rows before the rollup, so no coalesce join
+        # against the previous table is needed. Members contribute
+        # round(x*1e9) longs with w=1, the sentinel 0 with w=0 — the
+        # long sum and member count equal a members-only aggregation.
+        # An empty cell (sum(w)=0, so a NULL mean and norm) takes the
+        # sentinel component back unchanged and SKIPS the
+        # renormalization (its previous cv is unit-norm but not exactly
+        # 1.0 under refolding, so renormalizing would perturb 1 ulp); so
+        # does a cell whose members average to the zero vector, which
+        # has no direction to normalize.
         exploded = assigned.select(
-            "cid", F.posexplode("v").alias("pos", "x"), F.lit(1).alias("w")
+            "sub",
+            F.col("cell").alias("cid"),
+            F.posexplode("v").alias("pos", "x"),
+            F.lit(1).alias("w"),
         ).unionByName(
             cents.select(
-                "cid", F.posexplode("cv").alias("pos", "x"), F.lit(0).alias("w")
+                "sub",
+                "cid",
+                F.posexplode("cv").alias("pos", "x"),
+                F.lit(0).alias("w"),
             )
         )
-        sums = exploded.groupBy("cid", "pos").agg(
-            # CASE guards the empty-cell division (sum(w)=0): the NULL
-            # m is never read (_mem=0 routes to cv_prev below) and the
-            # populated-cell arithmetic is untouched
+        sums = exploded.groupBy("sub", "cid", "pos").agg(
+            # CASE guards the empty-cell division (sum(w)=0)
             F.when(
                 F.sum("w") > 0,
                 F.sum(
@@ -739,17 +726,16 @@ def kmeans_centroids(
             F.max(
                 F.when(F.col("w") == 0, F.col("x").cast("double"))
             ).alias("prev"),
-            F.sum("w").alias("members"),
         )
         cents = (
-            sums.groupBy("cid")
+            sums.groupBy("sub", "cid")
             .agg(
                 F.array_sort(
                     F.collect_list(F.struct("pos", "m", "prev"))
                 ).alias("pm"),
-                F.max("members").alias("_mem"),
             )
             .select(
+                "sub",
                 "cid",
                 F.transform(F.col("pm"), lambda s: s.getField("m")).alias(
                     "cv_raw"
@@ -757,13 +743,13 @@ def kmeans_centroids(
                 F.transform(F.col("pm"), lambda s: s.getField("prev")).alias(
                     "cv_prev"
                 ),
-                "_mem",
             )
             .withColumn("_n", norm(F.col("cv_raw")))
             .select(
+                "sub",
                 "cid",
                 F.when(
-                    F.col("_mem") > 0,
+                    F.col("_n") > 0,
                     F.transform(
                         F.col("cv_raw"),
                         lambda x: (x / F.col("_n")).cast("float"),
@@ -775,215 +761,6 @@ def kmeans_centroids(
                     )
                 )
                 .alias("cv"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return cents
-
-
-def pq_encode(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_sub: int = 4,
-    n_cells: int = 4,
-    iterations: int = 1,
-) -> DataFrame:
-    """Product quantization (spherical) -> (id, sub, code, scos): split
-    each vector into ``n_sub`` subspaces, train a per-subspace codebook
-    with the deterministic k-means trainer, assign each subvector to its
-    nearest centroid (rounded cosine, cid tie-break).
-
-    The ANN compression path beyond int8: storage per vector drops to
-    n_sub code bytes (+ shared codebooks), and asymmetric distance
-    computation scans codes instead of floats. Scale shape: per
-    subspace, training shuffles n_cells x sub_dim aggregates (corpus-
-    size independent) and assignment is one broadcast join — the whole
-    encode is n_sub narrow passes over the corpus. Codebooks are
-    engine-exact (integer-scaled means), so codes — and any index built
-    from them — are reproducible off-Spark.
-    """
-    sub_dim = dim // n_sub
-    assert sub_dim * n_sub == dim, "dim must divide evenly into n_sub"
-    outs = []
-    for s in range(n_sub):
-        sliced = df.select(
-            F.col(id_col).alias("id"),
-            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("v"),
-        )
-        cents = kmeans_centroids(
-            sliced, "id", "v", n_cells=n_cells, iterations=iterations
-        )
-        # argmax aggregate instead of Exchange+Sort+Window (opt r12)
-        outs.append(
-            _argmax_row(
-                sliced.join(F.broadcast(cents)).select(
-                    "id",
-                    "cid",
-                    F.round(cosine(F.col("v"), F.col("cv")), 6).alias("scos"),
-                ),
-                group=["id"], score="scos", tie="cid", keep=[],
-            ).select(
-                "id",
-                F.lit(s).cast("int").alias("sub"),
-                F.col("cid").alias("code"),
-                "scos",
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def pq_encode_with(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    codebooks: DataFrame,
-    n_sub: int,
-) -> DataFrame:
-    """Assign every vector's subvectors against ALREADY-TRAINED
-    codebooks -> (id, sub, code): the encode half of :func:`pq_encode`
-    without retraining. All subspaces ride in ONE frame (posexplode of
-    the sliced subvectors) through one broadcast join on ``sub`` and one
-    (sub, id) window — identical rounded-cosine / cid tie-break
-    semantics as pq_encode's per-subspace loop, in a single corpus pass
-    instead of n_sub sequential branches."""
-    sub_dim = dim // n_sub
-    sliced = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("int").alias("sub"),
-                        F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(
-                            "v"
-                        ),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("_sl"),
-    ).select("id", F.col("_sl.sub").alias("sub"), F.col("_sl.v").alias("v"))
-    # argmax aggregate instead of Exchange+Sort+Window (opt r12)
-    return _argmax_row(
-        sliced.join(F.broadcast(codebooks.select("sub", "cid", "cv")), on="sub")
-        .select(
-            "id",
-            "sub",
-            "cid",
-            F.round(cosine(F.col("v"), F.col("cv")), 6).alias("scos"),
-        ),
-        group=["sub", "id"], score="scos", tie="cid", keep=[],
-    ).select("id", "sub", F.col("cid").alias("code"))
-
-
-def pq_codebooks(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-    n_sub: int = 4,
-    n_cells: int = 4,
-    iterations: int = 1,
-) -> DataFrame:
-    """Per-subspace PQ codebooks -> (sub, cid, cv, cv_norm2): the trained
-    codeword table :func:`pq_encode` assigns against, exposed for
-    asymmetric-distance search (``cv_norm2`` pre-computed because ADC
-    needs the reconstruction's norm, Σ_s ||c_s||², at scoring time).
-
-    All subspaces train in ONE keyed Lloyd's loop (every per-subspace
-    quantity carries ``sub`` in its key), not n_sub sequential
-    :func:`kmeans_centroids` calls: the math per subspace is untouched
-    (independent keys), but the iteration count of cluster round-trips
-    drops n_sub-fold — the sequential form paid one
-    broadcast+window+agg+join chain per subspace per iteration
-    (measured ~6.5 s -> ~2 s for the sf0.1 codebook build).
-    """
-    sub_dim = dim // n_sub
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).cast("int").alias("sub"),
-                        F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(
-                            "v"
-                        ),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("_sl"),
-    ).select("id", F.col("_sl.sub").alias("sub"), F.col("_sl.v").alias("v"))
-    # init = the n_cells lowest-id subvectors PER SUBSPACE (identical to
-    # kmeans_centroids' orderBy(id).limit(n_cells) within each sub)
-    w_init = Window.partitionBy("sub").orderBy("id")
-    cents = (
-        vecs.withColumn("_rn", F.row_number().over(w_init))
-        .filter(F.col("_rn") <= n_cells)
-        .select("sub", F.col("id").alias("cid"), F.col("v").alias("cv"))
-    )
-    for _ in range(iterations):
-        # argmax aggregate instead of Exchange+Sort+Window per iteration
-        # (opt r12): identical row selection per _argmax_row's note
-        assigned = _argmax_row(
-            vecs.join(F.broadcast(cents), on="sub").select(
-                "sub", "id", "v", "cid",
-                F.round(cosine(F.col("v"), F.col("cv")), 6).alias("ccos"),
-            ),
-            group=["sub", "id"], score="ccos", tie="cid", keep=["v"],
-        )
-        # exact integer-scaled per-cell elementwise means — identical
-        # arithmetic to kmeans_centroids, keyed by (sub, cid, pos)
-        sums = (
-            assigned.select("sub", "cid", F.posexplode("v").alias("pos", "x"))
-            .groupBy("sub", "cid", "pos")
-            .agg(
-                (
-                    F.sum(
-                        F.round(F.col("x").cast("double") * F.lit(1e9)).cast(
-                            "long"
-                        )
-                    ).cast("double")
-                    / F.count("*")
-                    / F.lit(1e9)
-                ).alias("m")
-            )
-        )
-        new_cents = (
-            sums.groupBy("sub", "cid")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm")
-            )
-            .select(
-                "sub",
-                "cid",
-                F.transform(F.col("pm"), lambda s: s.getField("m")).alias(
-                    "cv_raw"
-                ),
-            )
-            .withColumn("_n", norm(F.col("cv_raw")))
-            .select(
-                "sub",
-                "cid",
-                F.transform(
-                    F.col("cv_raw"), lambda x: (x / F.col("_n")).cast("float")
-                ).alias("cv"),
-            )
-        )
-        cents = (
-            cents.alias("old")
-            .join(new_cents.alias("new"), on=["sub", "cid"], how="left")
-            .select(
-                "sub",
-                "cid",
-                F.coalesce(F.col("new.cv"), F.col("old.cv")).alias("cv"),
             )
             .localCheckpoint(eager=False)
         )

@@ -8,11 +8,14 @@ cells (assignment = nearest of the 8 lowest-id centroids, the same
 deterministic seed convention as ``ann_ivf_topk``); the odd half
 arrives as a 4-micro-batch stream of queries. Per micro-batch, every
 query vector picks its ``nprobe=2`` nearest cells entirely map-side
-(``similarity.centroid_probe_column`` over the centroid table carried
-as ONE broadcast array row — what an IVF server does: ship the
-centroid table everywhere; plan cost independent of n_cells, so the
-same shape serves the production thousands-of-cells regime), probes
-the static cell index with one
+(``similarity.assign_cells``, the package's one nearest-centroid
+selection, over the centroid table carried as ONE broadcast array row
+— what an IVF server does: ship the centroid table everywhere; plan
+cost independent of n_cells, so the same shape serves the production
+thousands-of-cells regime). The index build uses the same selection
+over the same array, so batch and stream rank every vector — NULL and
+NaN cosines included — identically. Each query then probes the
+static cell index with one
 stream-static equi-join, and ranks its top-5 neighbors inside
 ``foreachBatch`` (legal because a neighbor lives in exactly one cell
 and all of a query's candidates arrive in its own micro-batch — the
@@ -113,14 +116,14 @@ SELECT id, neighbor, cos FROM ranked WHERE rn <= {_K}
 # the static IVF index is a MAINTAINED serving structure, not a per-run
 # rebuild — memoized per (session, sf) like the batch-113 LSH index
 def _ivf_index(spark, sf_dir):
-    """-> (db DataFrame (neighbor, v, nv, cell), cents DataFrame, carr
-    one-row centroid array, db row count).
+    """-> (db DataFrame (neighbor, v, nv, cell), carr one-row centroid
+    array, db row count).
 
     db is the even-half IVF index (home cells only), eagerly
-    checkpointed and sweep-protected; cents is the (cid, cv, ncv)
-    centroid table the probes rank against (carried as data via
-    ``similarity.centroid_array`` so the plan cost is independent of
-    n_cells — the production regime is thousands of cells)."""
+    checkpointed and sweep-protected; carr is the seed centroid table
+    the index and the probes rank against, carried as data
+    (``similarity.centroid_array``) so the plan cost is independent of
+    n_cells — the production regime is thousands of cells."""
     return memo_fixture(
         spark, ("ivf_index", sf_dir), lambda: _build_ivf_index(spark, sf_dir)
     )
@@ -132,29 +135,31 @@ def _build_ivf_index(spark, sf_dir):
         .filter(F.col("vec_id") % 2 == 0)
         .select("vec_id", "embedding")
     )
-    db = (
-        S.ivf_assign(even, "vec_id", "embedding", n_cells=_N_CELLS, rank_limit=1)
-        .select(F.col("id").alias("neighbor"), "v", "nv", "cell")
-        .localCheckpoint(eager=True)
-    )
-    cents = (
-        even.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
-        )
-        .orderBy("cid")
-        .limit(_N_CELLS)
-        .localCheckpoint(eager=True)
-    )
     # the one-row centroid array the stream broadcasts is itself part
-    # of the maintained index: checkpointing it here removes the two
+    # of the maintained index: checkpointing it here removes the
     # collect_list aggregate jobs every micro-batch otherwise re-runs
-    # (opt r11 — the array is rebuilt only when the index is)
-    carr = S.centroid_array(cents).localCheckpoint(eager=True)
+    # (the array is rebuilt only when the index is)
+    carr = S.centroid_array(
+        S.seed_centroids(even, "vec_id", "embedding", _N_CELLS)
+    ).localCheckpoint(eager=True)
+    db = (
+        S.assign_cells(_vectors(even, "neighbor"), carr)
+        .select("neighbor", "v", "nv", "cell")
+        .localCheckpoint(eager=True)
+    )
     # index cardinality cached at build time so the width estimate
-    # adds no job per plan construction (opt r12, same as q118)
-    return db, cents, carr, db.count()
+    # adds no job per plan construction (same as q118)
+    return db, carr, db.count()
+
+
+def _vectors(df, id_name: str = "id"):
+    """(vec_id, embedding) -> (id_name, v, nv): the row shape
+    ``similarity.assign_cells`` ranks."""
+    return df.select(
+        F.col("vec_id").alias(id_name),
+        F.col("embedding").alias("v"),
+        S.norm(F.col("embedding")).alias("nv"),
+    )
 
 
 def _query_stream(spark, sf_dir):
@@ -193,7 +198,7 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
         staged_row_count,
     )
 
-    db, cents, carr, n_db = _ivf_index(spark, sf_dir)
+    db, carr, n_db = _ivf_index(spark, sf_dir)
 
     # a micro-batch is ONE staged file = one partition, and with the
     # index broadcast nothing downstream reshuffles — without fan-out
@@ -223,20 +228,9 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
     # (stream-static, append-legal); plan cost independent of n_cells.
     # carr comes pre-checkpointed from the index cache (no per-batch
     # re-aggregation)
-    probes = src.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("qv"),
-        S.norm(F.col("embedding")).alias("qn"),
-    ).crossJoin(F.broadcast(carr)).select(
-        "id",
-        "qv",
-        "qn",
-        F.explode(
-            S.centroid_probe_column(
-                F.col("_cents"), F.col("qv"), F.col("qn"), nprobe=_NPROBE
-            )
-        ).alias("_probe"),
-    ).select("id", "qv", "qn", F.col("_probe.cid").alias("cell"))
+    probes = S.assign_cells(_vectors(src), carr, k=_NPROBE).select(
+        "id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell"
+    )
     # stream-static equi-join: candidates = query x its probed cells'
     # index entries; halves are parity-disjoint so no self-pair filter
     cands = probes.join(db, on="cell").select(
@@ -307,25 +301,13 @@ def q_ann_index_merge(spark, sf_dir):
     report's occupancy skew motivates). The oracle computes the
     histogram from the single full rebuild; a hash match proves
     merge == rebuild."""
-    _db, cents, _carr, _n = _ivf_index(spark, sf_dir)
-    carr = S.centroid_array(cents)
+    _db, carr, _n = _ivf_index(spark, sf_dir)
 
     def _assign(residue: int):
-        part = (
-            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-            .filter(F.col("vec_id") % 4 == residue)
-            .select("vec_id", "embedding")
+        part = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+            F.col("vec_id") % 4 == residue
         )
-        return part.crossJoin(F.broadcast(carr)).select(
-            F.explode(
-                S.centroid_probe_column(
-                    F.col("_cents"),
-                    F.col("embedding"),
-                    S.norm(F.col("embedding")),
-                    nprobe=1,
-                )
-            ).alias("_p")
-        ).select(F.col("_p.cid").alias("cell"))
+        return S.assign_cells(_vectors(part), carr).select("cell")
 
     merged = _assign(0).unionByName(_assign(2))
     return merged.groupBy("cell").agg(
@@ -337,23 +319,11 @@ def _traffic_report(spark, sf_dir):
     """The per-cell (cell, n_indexed, n_probes, candidate_volume)
     telemetry frame — shared by the report query, the rebalance plan
     and the serving probe's rebalance trigger (streaming/serving.py)."""
-    db, cents, _carr, _n = _ivf_index(spark, sf_dir)
-    odd = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .filter(F.col("vec_id") % 2 == 1)
-        .select("vec_id", "embedding")
+    db, carr, _n = _ivf_index(spark, sf_dir)
+    odd = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("vec_id") % 2 == 1
     )
-    probes = odd.crossJoin(F.broadcast(S.centroid_array(cents))).select(
-        "vec_id",
-        F.explode(
-            S.centroid_probe_column(
-                F.col("_cents"),
-                F.col("embedding"),
-                S.norm(F.col("embedding")),
-                nprobe=_NPROBE,
-            )
-        ).alias("_probe"),
-    ).select(F.col("_probe.cid").alias("cell"))
+    probes = S.assign_cells(_vectors(odd), carr, k=_NPROBE).select("cell")
     occ = db.groupBy("cell").agg(F.count(F.lit(1)).cast("long").alias("n_indexed"))
     tr = probes.groupBy("cell").agg(F.count(F.lit(1)).cast("long").alias("n_probes"))
     return (

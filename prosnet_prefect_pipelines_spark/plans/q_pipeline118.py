@@ -10,9 +10,11 @@ table is indexed ONCE into the maintained IVF-PQ structure
 codes pivoted to one array-carrying row per vector, the exact structure
 the batch query scans); the odd half arrives as the SAME 4-micro-batch
 query stream batch 115 replays (shared replay stage). Per micro-batch,
-each query picks its nearest coarse cell entirely map-side (broadcast
-centroid array, nprobe=1 — ``ivf_pq_topk``'s documented
-simplification), probes the encoded index with one stream-static
+each query picks its nearest coarse cell entirely map-side
+(``similarity.assign_cells`` over the broadcast seed-centroid array,
+nprobe=1 — ``ivf_pq_topk``'s documented simplification; the index
+side's ``pq_index`` assigns and encodes with the same selection),
+probes the encoded index with one stream-static
 equi-join, and is ADC-scored (integer-scaled per-subspace terms,
 ``similarity.adc_cos_lut`` over a per-query lookup table, r12) with
 batch-local exact top-3.
@@ -58,7 +60,10 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline10 import (
     _DOT64,
     _ivfpq_cos64,
 )
-from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import _query_stream
+from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import (
+    _query_stream,
+    _vectors,
+)
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
 
@@ -228,21 +233,11 @@ def _build_pq_serving_index(spark, sf_dir):
     )
     xcodes = xcodes.localCheckpoint(eager=True)
     cbarr_df = S.pq_codebook_array(cbs).localCheckpoint(eager=True)
-    cents = (
-        even.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
-        )
-        .orderBy("cid")
-        .limit(_PQ_CELLS)
-        .localCheckpoint(eager=True)
-    )
     # checkpointed with the index: no per-batch re-aggregation of the
-    # one-row centroid array (opt r11, same as batch 115)
-    carr = S.centroid_array(cents).localCheckpoint(eager=True)
-    # cents is dead once carr is an eager checkpoint: released by the
-    # next sweep rather than kept as a protected fixture
+    # one-row centroid array (same as batch 115)
+    carr = S.centroid_array(
+        S.seed_centroids(even, "vec_id", "embedding", _PQ_CELLS)
+    ).localCheckpoint(eager=True)
     return xcodes, carr, cbarr_df, xcodes.count()
 
 
@@ -279,34 +274,13 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
     src = stream.repartition(fan)
 
     probes = (
-        src.select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("qv"),
-            S.norm(F.col("embedding")).alias("qn"),
-        )
-        .crossJoin(F.broadcast(carr))
-        .select(
-            "qid",
-            "qv",
-            "qn",
-            F.explode(
-                S.centroid_probe_column(
-                    F.col("_cents"), F.col("qv"), F.col("qn"), nprobe=1
-                )
-            ).alias("_probe"),
-        )
-        .select(
-            "qid",
-            "qn",
-            "qv",
-            F.col("_probe.cid").alias("cell"),
-        )
+        S.assign_cells(_vectors(src, "qid"), carr)
         .crossJoin(F.broadcast(cbarr))
         .select(
             "qid",
-            "qn",
+            F.col("nv").alias("qn"),
             "cell",
-            S.pq_query_lut(F.col("qv"), F.col("_cbarr"), 64, _PQ_SUB).alias(
+            S.pq_query_lut(F.col("v"), F.col("_cbarr"), 64, _PQ_SUB).alias(
                 "_qlut"
             ),
         )

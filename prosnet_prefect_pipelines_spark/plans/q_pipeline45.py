@@ -149,31 +149,18 @@ def q_hard_negative_mining(spark, sf_dir):
     come from the anchor's own IVF cell (equi-join on cell id — the
     confusable set, never all pairs), filtered to the semi-hard cosine
     band [0.1, 0.8), top-2 per anchor by hardness. Centroids broadcast
-    for assignment; the per-anchor window is keyed."""
+    as one array row for the per-row assignment; the per-anchor window
+    is keyed."""
     from prosnet_prefect_pipelines_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(_N_CELLS)
-        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
+    carr = S.centroid_array(S.seed_centroids(emb, "vec_id", "embedding", _N_CELLS))
+    vecs = emb.select(
+        "vec_id", F.col("embedding").alias("v"), S.norm(F.col("embedding")).alias("nv")
     )
     scored = (
-        emb.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id",
-            "embedding",
-            "cid",
-            F.round(S.cosine(F.col("embedding"), F.col("cv"), 64), 6).alias("c"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(F.col("c").desc(), "cid")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cid")
+        S.assign_cells(vecs, carr)
+        .select("vec_id", F.col("v").alias("embedding"), F.col("cell").alias("cid"))
         .localCheckpoint(eager=False)  # both sides of the cell self-join
     )
     a = scored.select(

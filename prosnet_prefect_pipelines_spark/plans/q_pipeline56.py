@@ -13,8 +13,9 @@
   tokenizer-budget plan is built from.
 
 Scale notes: centroids aggregate labels x 64 rows (corpus-size
-independent) and broadcast into the scoring joins; the vector-by-
-centroid fanout is N x n_labels narrow rows folded JVM-side; fertility
+independent) and broadcast into the scoring; the confusion audit ranks
+the centroid array per vector, the silhouette's vector-by-centroid
+fanout is N x n_labels narrow rows folded JVM-side; fertility
 is one keyed aggregation with map-side combine. No corpus-sized join
 anywhere.
 """
@@ -22,7 +23,6 @@ anywhere.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.operators import similarity as S
 from prosnet_prefect_pipelines_spark.operators.textstats import tokens
@@ -92,25 +92,21 @@ FROM pred GROUP BY true_label, pred_label
 @register("nearest_centroid_confusion", oracle=CONFUSION_SQL, covers=["A2", "J1", "O6"])
 def q_nearest_centroid_confusion(spark, sf_dir):
     """Label-noise audit: nearest-centroid prediction vs true label,
-    cross-tabulated. Centroids are exact scaled-integer means broadcast
-    into an N x n_labels narrow fanout; the argmax is a per-vector
-    window over n_labels rows."""
+    cross-tabulated. Centroids are exact scaled-integer means, broadcast
+    as one array row; each vector picks its label by the per-row
+    nearest-centroid selection (labels as centroid ids), no window."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    v = emb.select(F.col("vec_id").alias("id"), "label", F.col("embedding").alias("v"))
+    v = emb.select(
+        F.col("vec_id").alias("id"),
+        "label",
+        F.col("embedding").alias("v"),
+        S.norm(F.col("embedding")).alias("nv"),
+    )
     cent = S.label_centroids(emb, "label", "embedding").select(
-        F.col("label").alias("cand"), "cv"
+        F.col("label").alias("cid"), "cv", S.norm(F.col("cv")).alias("ncv")
     )
-    scored = v.crossJoin(F.broadcast(cent)).select(
-        "id",
-        F.col("label").alias("true_label"),
-        "cand",
-        F.round(S.cosine(F.col("v"), F.col("cv"), 64), 6).alias("ccos"),
-    )
-    w = Window.partitionBy("id").orderBy(F.col("ccos").desc(), F.col("cand"))
-    pred = (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("true_label", F.col("cand").alias("pred_label"))
+    pred = S.assign_cells(v, S.centroid_array(cent)).select(
+        F.col("label").alias("true_label"), F.col("cell").alias("pred_label")
     )
     return pred.groupBy(
         F.col("true_label").cast("int").alias("true_label"),
@@ -149,8 +145,8 @@ FROM s GROUP BY true_label
 def q_silhouette_labels(spark, sf_dir):
     """Cluster-separation report: per-label mean simplified silhouette
     (own-centroid distance vs nearest-other-centroid distance). Scores
-    are 6-dp rounded and mean-reduced as exact scaled integers. Same
-    broadcast-centroid fanout as the confusion audit."""
+    are 6-dp rounded and mean-reduced as exact scaled integers. The
+    centroids broadcast into an N x n_labels narrow fanout."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     v = emb.select(F.col("vec_id").alias("id"), "label", F.col("embedding").alias("v"))
     cent = S.label_centroids(emb, "label", "embedding").select(

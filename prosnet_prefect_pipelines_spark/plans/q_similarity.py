@@ -244,20 +244,16 @@ def q_ann_kmeans_cells(spark, sf_dir):
     exactly, so partial-aggregation order can't perturb the centroids
     and both engines compute bit-identical values."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    from pyspark.sql.window import Window
-
     cents = S.kmeans_centroids(
         emb, "vec_id", "embedding", n_cells=4, iterations=2
+    ).select("cid", "cv", S.norm(F.col("cv")).alias("ncv"))
+    vecs = emb.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        S.norm(F.col("embedding")).alias("nv"),
     )
-    vecs = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
-    scored = vecs.join(F.broadcast(cents)).select(
-        "id", "cid", F.round(S.cosine(F.col("v"), F.col("cv"), DIM), 6).alias("ccos")
-    )
-    w = Window.partitionBy("id").orderBy(F.col("ccos").desc(), F.col("cid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("id", F.col("cid").alias("cell"), "ccos")
+    return S.assign_cells(vecs, S.centroid_array(cents)).select(
+        "id", "cell", "ccos"
     )
 
 

@@ -145,10 +145,10 @@ def ann_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
         _K,
         _NPROBE,
         _ivf_index,
+        _vectors,
     )
 
-    db, cents, _carr, _n_db = _ivf_index(spark, sf_dir)
-    carr = S.centroid_array(cents)
+    db, carr, _n_db = _ivf_index(spark, sf_dir)
     odd = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .filter(F.col("vec_id") % 2 == 1)
@@ -158,23 +158,12 @@ def ann_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
 
     def query(src, out_dir):
         cands = (
-            src.repartition(spark.sparkContext.defaultParallelism)
-            .select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("qv"),
-                S.norm(F.col("embedding")).alias("qn"),
+            S.assign_cells(
+                _vectors(src.repartition(spark.sparkContext.defaultParallelism)),
+                carr,
+                k=_NPROBE,
             )
-            .crossJoin(F.broadcast(carr))
-            .select(
-                "id", "qv", "qn",
-                F.explode(
-                    S.centroid_probe_column(
-                        F.col("_cents"), F.col("qv"), F.col("qn"),
-                        nprobe=_NPROBE,
-                    )
-                ).alias("_p"),
-            )
-            .select("id", "qv", "qn", F.col("_p.cid").alias("cell"))
+            .select("id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell")
             .join(db, on="cell")
             .select(
                 "id", "neighbor",
@@ -244,6 +233,7 @@ def ivfpq_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     from pyspark.sql.window import Window
 
     from prosnet_prefect_pipelines_spark.operators import similarity as S
+    from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import _vectors
     from prosnet_prefect_pipelines_spark.plans.q_pipeline118 import (
         _K,
         _PQ_SUB,
@@ -260,30 +250,18 @@ def ivfpq_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
 
     def query(src, out_dir):
         cands = (
-            src.repartition(spark.sparkContext.defaultParallelism)
-            .select(
-                F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qv"),
-                S.norm(F.col("embedding")).alias("qn"),
-            )
-            .crossJoin(F.broadcast(carr))
-            .select(
-                "qid", "qv", "qn",
-                F.explode(
-                    S.centroid_probe_column(
-                        F.col("_cents"), F.col("qv"), F.col("qn"), nprobe=1
-                    )
-                ).alias("_p"),
-            )
-            .select(
-                "qid", "qn", "qv",
-                F.col("_p.cid").alias("cell"),
+            S.assign_cells(
+                _vectors(
+                    src.repartition(spark.sparkContext.defaultParallelism),
+                    "qid",
+                ),
+                carr,
             )
             .crossJoin(F.broadcast(cbarr))
             .select(
-                "qid", "qn", "cell",
+                "qid", F.col("nv").alias("qn"), "cell",
                 S.pq_query_lut(
-                    F.col("qv"), F.col("_cbarr"), 64, _PQ_SUB
+                    F.col("v"), F.col("_cbarr"), 64, _PQ_SUB
                 ).alias("_qlut"),
             )
             .join(F.broadcast(xcodes), on="cell")

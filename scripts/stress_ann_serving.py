@@ -54,29 +54,17 @@ def main() -> None:
 
     t0 = time.time()
     idx_src = vectors(spark, n_index, DIM)
-    cents = (
-        idx_src.limit(n_cells)
-        .select(
-            F.col("id").alias("cid"),
-            F.col("v").alias("cv"),
-            S.norm(F.col("v")).alias("ncv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    carr = S.centroid_array(cents)
+    carr = S.centroid_array(
+        S.seed_centroids(idx_src, "id", "v", n_cells)
+    ).localCheckpoint(eager=True)
     db = (
-        idx_src.crossJoin(F.broadcast(carr))
-        .select(
-            F.col("id").alias("neighbor"),
-            F.col("v"),
-            S.norm(F.col("v")).alias("nv"),
-            F.explode(
-                S.centroid_probe_column(
-                    F.col("_cents"), F.col("v"), S.norm(F.col("v")), nprobe=1
-                )
-            ).alias("_p"),
+        S.assign_cells(
+            idx_src.select(
+                F.col("id").alias("neighbor"), "v", S.norm(F.col("v")).alias("nv")
+            ),
+            carr,
         )
-        .select("neighbor", "v", "nv", F.col("_p.cid").alias("cell"))
+        .select("neighbor", "v", "nv", "cell")
         .localCheckpoint(eager=True)
     )
     n_db = db.count()
@@ -107,19 +95,10 @@ def main() -> None:
         .repartition(spark.sparkContext.defaultParallelism)
     )
     cands = (
-        src.select("id", F.col("v").alias("qv"), S.norm(F.col("v")).alias("qn"))
-        .crossJoin(F.broadcast(carr))
-        .select(
-            "id",
-            "qv",
-            "qn",
-            F.explode(
-                S.centroid_probe_column(
-                    F.col("_cents"), F.col("qv"), F.col("qn"), nprobe=NPROBE
-                )
-            ).alias("_p"),
+        S.assign_cells(
+            src.select("id", "v", S.norm(F.col("v")).alias("nv")), carr, k=NPROBE
         )
-        .select("id", "qv", "qn", F.col("_p.cid").alias("cell"))
+        .select("id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell")
         .join(db, on="cell")
         .select(
             "id",

@@ -3,7 +3,7 @@ candidate-scoring comparison (r12, the r9 verdict's stretch item).
 
 Two measurements back SCALE.md's serving-tier recommendation:
 
-1. PROBE SWEEP — the map-side array probe (`centroid_probe_column`) at
+1. PROBE SWEEP — the map-side array probe (`assign_cells`) at
    n_cells 1024 AND 4096 over 20k dim-64 vectors (extends the round-9
    addendum's 8/128/1024 sweep one production octave): assignment work
    is the honest |rows| x n_cells cosine product, so the 4096 point
@@ -56,34 +56,21 @@ def main() -> None:
     vecs = vectors(spark, n_vecs, DIM).select(
         "id", F.col("v").alias("embedding")
     )
+    probe_vecs = vecs.select(
+        "id", F.col("embedding").alias("v"), S.norm(F.col("embedding")).alias("nv")
+    )
     probe_rows = {}
     for n_cells in (1024, 4096):
-        cents = vecs.limit(n_cells).select(
-            F.col("id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
+        ck = S.seed_centroids(vecs, "id", "embedding", n_cells).localCheckpoint(
+            eager=True
         )
-        ck = cents.localCheckpoint(eager=True)
         protect_checkpoint(ck)
         carr = S.centroid_array(ck)
         times = []
         for _ in range(2):
             sweep_persistent_rdds(spark)
             t0 = time.time()
-            n = (
-                vecs.crossJoin(F.broadcast(carr))
-                .select(
-                    F.explode(
-                        S.centroid_probe_column(
-                            F.col("_cents"),
-                            F.col("embedding"),
-                            S.norm(F.col("embedding")),
-                            nprobe=1,
-                        )
-                    ).alias("_p")
-                )
-                .count()
-            )
+            n = S.assign_cells(probe_vecs, carr).count()
             times.append(round(time.time() - t0, 3))
         probe_rows[str(n_cells)] = {"times_s": times, "assigned": n}
         print(f"# probe n_cells={n_cells}: {times}", file=sys.stderr)
@@ -124,30 +111,19 @@ def main() -> None:
         .localCheckpoint(eager=True)
     )
     protect_checkpoint(queries)
-    cents2 = (
-        idx.limit(n_cells)
-        .select(
-            F.col("id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
-        )
-        .localCheckpoint(eager=True)
+    cents2 = S.seed_centroids(idx, "id", "embedding", n_cells).localCheckpoint(
+        eager=True
     )
     protect_checkpoint(cents2)
     carr = S.centroid_array(cents2)
     probed = (
-        queries.crossJoin(F.broadcast(carr))
-        .select(
-            "qid",
-            "qv",
-            S.norm(F.col("qv")).alias("qn"),
-            F.explode(
-                S.centroid_probe_column(
-                    F.col("_cents"), F.col("qv"), S.norm(F.col("qv")), nprobe=1
-                )
-            ).alias("_p"),
+        S.assign_cells(
+            queries.select(
+                "qid", F.col("qv").alias("v"), S.norm(F.col("qv")).alias("nv")
+            ),
+            carr,
         )
-        .select("qid", "qv", "qn", F.col("_p.cid").alias("cell"))
+        .select("qid", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell")
         .localCheckpoint(eager=True)
     )
     protect_checkpoint(probed)

@@ -1,9 +1,9 @@
 """Round-10 hardening: degenerate-input behavior pinned for the r7
 ADVICE findings.
 
-1. zero-norm vectors: the map-side centroid probes must rank a NULL
-   cosine (Spark Divide-by-zero) LAST, exactly like ``ivf_assign``'s
-   ``ccos DESC`` window ordering — otherwise the monitor==batch and
+1. zero-norm vectors: the map-side centroid probe (the streaming
+   monitor's path) must rank a NULL cosine (try_divide by a zero norm)
+   LAST, exactly like ``ivf_assign`` — otherwise the monitor==batch and
    merge==rebuild invariants silently diverge the day a zero vector
    enters the corpus;
 2. streaming resolver: a null edge endpoint is skipped (mirroring the
@@ -51,18 +51,6 @@ def degenerate_vecs(spark):
     return spark.createDataFrame(rows, "vec_id int, embedding array<double>")
 
 
-def _cents(df, n_cells):
-    return (
-        df.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
-        )
-        .orderBy("cid")
-        .limit(n_cells)
-    )
-
-
 def test_zero_norm_probe_matches_ivf_assign(spark, degenerate_vecs):
     n_cells, nprobe = 2, 2
     want = {
@@ -72,48 +60,24 @@ def test_zero_norm_probe_matches_ivf_assign(spark, degenerate_vecs):
             n_cells=n_cells, rank_limit=nprobe,
         ).collect()
     }
-    cents = _cents(degenerate_vecs, n_cells)
-
     # array-carried probe (the streaming monitor's path)
-    carr = S.centroid_array(cents)
+    carr = S.centroid_array(
+        S.seed_centroids(degenerate_vecs, "vec_id", "embedding", n_cells)
+    )
+    vecs = degenerate_vecs.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        S.norm(F.col("embedding")).alias("nv"),
+    )
     got_arr = {
-        (r.id, r.rank): r.p.cid
-        for r in degenerate_vecs.crossJoin(F.broadcast(carr))
-        .select(
-            F.col("vec_id").alias("id"),
-            F.posexplode(
-                S.centroid_probe_column(
-                    F.col("_cents"),
-                    F.col("embedding"),
-                    S.norm(F.col("embedding")),
-                    nprobe=nprobe,
-                )
-            ).alias("i", "p"),
-        )
-        .select("id", (F.col("i") + 1).alias("rank"), "p")
-        .collect()
+        (r.id, r.cell_rank): r.cell
+        for r in S.assign_cells(vecs, carr, k=nprobe).collect()
     }
     assert got_arr == want
-
-    # literal-embedded probe
-    cents_rows = cents.collect()
-    got_lit = {
-        (r.id, r.rank): r.p.cid
-        for r in degenerate_vecs.select(
-            F.col("vec_id").alias("id"),
-            F.posexplode(
-                S.literal_centroid_probe(
-                    F.col("embedding"),
-                    S.norm(F.col("embedding")),
-                    cents_rows,
-                    nprobe=nprobe,
-                )
-            ).alias("i", "p"),
-        )
-        .select("id", (F.col("i") + 1).alias("rank"), "p")
-        .collect()
-    }
-    assert got_lit == want
+    # the zero centroid (cid 0) scores NULL and ranks last; the zero
+    # query scores NULL everywhere and falls back to the lowest cid
+    assert (want[(1, 1)], want[(1, 2)]) == (1, 0)
+    assert (want[(4, 1)], want[(4, 2)]) == (0, 1)
 
 
 def test_resolver_null_edges_and_int_ids(spark):

@@ -193,54 +193,71 @@ def test_city_index_construction_job_free_after_memo(spark, monkeypatch):
     assert df.count() > 0
 
 
-def test_argmax_row_matches_window_on_null_nan_ties(spark):
-    """Pin the r12 argmax rewrite (VERDICT r11 item 5): _argmax_row must
-    pick exactly the row row_number() OVER (ORDER BY score DESC, tie
-    ASC) = 1 keeps, for every degenerate ordering case across Spark's
-    total double order — NULL scores (zero-norm cosines), NaN scores,
-    +/-Inf, exact ties broken by tie id (negative ids and LONG_MIN
-    included), and all-NULL groups."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("k", [1, 3])
+def test_selector_matches_window_on_null_nan_ties(spark, k):
+    """The one centroid selector (``nearest_centroids`` through the keyed
+    ``assign_cells``) must return exactly the entries, in order, that
+    row_number() OVER (ORDER BY score DESC, cid ASC) <= k keeps, for
+    every degenerate ordering case across Spark's total double order —
+    NULL scores (zero-norm cosines), NaN scores, +/-Inf, exact ties
+    broken by cid (negative ids and LONG_MIN included), -0.0/0.0 ties,
+    and all-NULL groups. k = 1 takes the array_max pick, k = 3 the
+    sorted slice."""
     from pyspark.sql.window import Window
 
-    from prosnet_prefect_pipelines_spark.operators.similarity import _argmax_row
+    from prosnet_prefect_pipelines_spark.operators import similarity as S
 
     nan, inf = float("nan"), float("inf")
+    # each centroid's score against the query [1.0] is cv[0] / ncv
+    # (rounded to 6 dp); ncv = 0 makes the score NULL via try_divide,
+    # and 0.0 / -1.0 is the -0.0 score
     rows = []
-    # group 1: plain max           # group 2: tie -> lowest tie id wins
-    rows += [(1, 10, 0.5, "a"), (1, 11, 0.9, "b"), (1, 12, 0.7, "c")]
-    rows += [(2, 20, 0.4, "d"), (2, 21, 0.4, "e"), (2, 22, 0.1, "f")]
-    # group 3: NULL sorts last under DESC -> non-null wins
-    rows += [(3, 30, None, "g"), (3, 31, 0.0, "h")]
-    # group 4: all NULL -> lowest tie id wins
-    rows += [(4, 40, None, "i"), (4, 41, None, "j")]
+    # group 1: plain max           # group 2: tie -> lowest cid wins
+    rows += [(1, 10, 0.5, 1.0), (1, 11, 0.9, 1.0), (1, 12, 0.7, 1.0)]
+    rows += [(2, 20, 0.4, 1.0), (2, 21, 0.4, 1.0), (2, 22, 0.1, 1.0)]
+    # group 3: NULL ranks last -> non-null wins
+    rows += [(3, 30, 1.0, 0.0), (3, 31, 0.0, 1.0)]
+    # group 4: all NULL -> lowest cid wins
+    rows += [(4, 40, 1.0, 0.0), (4, 41, 1.0, 0.0)]
     # group 5: NaN > +Inf in Spark's total order -> NaN wins
-    rows += [(5, 50, inf, "k"), (5, 51, nan, "l"), (5, 52, 1.0, "m")]
+    rows += [(5, 50, inf, 1.0), (5, 51, nan, 1.0), (5, 52, 1.0, 1.0)]
     # group 6: -Inf beats NULL
-    rows += [(6, 60, -inf, "n"), (6, 61, None, "o")]
-    # group 7: NaN ties -> lowest tie id
-    rows += [(7, 70, nan, "p"), (7, 71, nan, "q")]
+    rows += [(6, 60, -inf, 1.0), (6, 61, 1.0, 0.0)]
+    # group 7: NaN ties -> lowest cid
+    rows += [(7, 70, nan, 1.0), (7, 71, nan, 1.0)]
     # group 8: ties across the full long range -> LONG_MIN wins
-    rows += [(8, -5, 0.3, "r"), (8, -(2**63), 0.3, "s"), (8, 2**63 - 1, 0.3, "t")]
-    df = spark.createDataFrame(
-        rows, "g int, cid long, score double, payload string"
+    rows += [(8, -5, 0.3, 1.0), (8, -(2**63), 0.3, 1.0), (8, 2**63 - 1, 0.3, 1.0)]
+    # group 9: -0.0 (the lower cid) and 0.0 compare equal -> lowest
+    # cid wins
+    rows += [(9, 90, 0.0, -1.0), (9, 91, 0.0, 1.0), (9, 92, -0.5, 1.0)]
+    cents = spark.createDataFrame(
+        [(g, cid, [x], ncv) for g, cid, x, ncv in rows],
+        "g int, cid long, cv array<double>, ncv double",
     )
+    query = F.array(F.lit(1.0))
 
+    score = F.round(
+        F.try_divide(S.dot(query, F.col("cv")), F.lit(1.0) * F.col("ncv")), 6
+    )
     w = Window.partitionBy("g").orderBy(F.col("score").desc(), F.col("cid"))
     want = {
-        (r.g, r.cid, r.payload)
-        for r in df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        (r.g, r.rn, r.cid)
+        for r in cents.withColumn("score", score)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
         .collect()
     }
+    vecs = cents.select("g").distinct().select(
+        "g", F.lit(0).alias("id"), query.alias("v"), F.lit(1.0).alias("nv")
+    )
     got = {
-        (r.g, r.cid, r.payload)
-        for r in _argmax_row(
-            df, group=["g"], score="score", tie="cid", keep=["payload"]
+        (r.g, r.cell_rank, r.cell)
+        for r in S.assign_cells(
+            vecs, S.centroid_array(cents, key="g"), k=k, key="g"
         ).collect()
     }
     assert got == want
-    assert len(got) == 8
+    assert len({g for g, _, _ in got}) == 9
 
 
 def test_jaccard_verify_set_cap_branch_equality(spark):
@@ -333,59 +350,3 @@ def test_jaccard_verify_threshold_filter_both_branches(spark):
             ).collect()
         }
         assert set(got) == {(1, 2)}, got
-
-
-def test_argmax_array_matches_window_on_null_nan_ties(spark):
-    """Pin the r12 carried-array assignment (VERDICT r11 item 7):
-    _argmax_array over an array of candidate entries must pick exactly
-    the entry row_number() OVER (ORDER BY score DESC, tie ASC) = 1
-    keeps, for the same degenerate cases _argmax_row is pinned on —
-    array_max compares structs with the identical interpreted total
-    order (NULL < -Inf < finite < +Inf < NaN)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from prosnet_prefect_pipelines_spark.operators.similarity import (
-        _argmax_array,
-    )
-
-    nan, inf = float("nan"), float("inf")
-    rows = []
-    rows += [(1, 10, 0.5, "a"), (1, 11, 0.9, "b"), (1, 12, 0.7, "c")]
-    rows += [(2, 20, 0.4, "d"), (2, 21, 0.4, "e"), (2, 22, 0.1, "f")]
-    rows += [(3, 30, None, "g"), (3, 31, 0.0, "h")]
-    rows += [(4, 40, None, "i"), (4, 41, None, "j")]
-    rows += [(5, 50, inf, "k"), (5, 51, nan, "l"), (5, 52, 1.0, "m")]
-    rows += [(6, 60, -inf, "n"), (6, 61, None, "o")]
-    rows += [(7, 70, nan, "p"), (7, 71, nan, "q")]
-    # group 8: ties across the full long range -> LONG_MIN wins
-    rows += [(8, -5, 0.3, "r"), (8, -(2**63), 0.3, "s"), (8, 2**63 - 1, 0.3, "t")]
-    df = spark.createDataFrame(
-        rows, "g int, cid long, score double, payload string"
-    )
-
-    w = Window.partitionBy("g").orderBy(F.col("score").desc(), F.col("cid"))
-    want = {
-        (r.g, r.cid, r.payload)
-        for r in df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .collect()
-    }
-    # pack each group into one array row, as the trainer's broadcast
-    # centroid array does, then per-row argmax over the entries
-    packed = df.groupBy("g").agg(
-        F.array_sort(
-            F.collect_list(F.struct("cid", "score", "payload"))
-        ).alias("_entries")
-    )
-    picked = packed.select(
-        "g",
-        _argmax_array(F.col("_entries"), lambda e: e["score"]).alias("_am"),
-    ).select(
-        "g",
-        F.col("_am._e.cid").alias("cid"),
-        F.col("_am._e.payload").alias("payload"),
-    )
-    got = {(r.g, r.cid, r.payload) for r in picked.collect()}
-    assert got == want
-    assert len(got) == 8

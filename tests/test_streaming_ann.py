@@ -2,9 +2,11 @@
 
 Load-bearing claims for the oracle pairing:
 
-1. the literal-centroid probe expression ranks cells identically to
-   the window-based ``ivf_assign`` (same rounded-cosine DESC / cid ASC
-   order) — the map-side streaming assignment IS the batch assignment;
+1. the map-side probe (``assign_cells`` over the broadcast centroid
+   array) ranks cells exactly as a row_number window over the fanned-out
+   (vector, centroid) scores does (rounded-cosine DESC / cid ASC, the
+   oracle's order), and ``ivf_assign`` is that same probe — the
+   map-side streaming assignment IS the batch assignment;
 2. the replay is slicing-insensitive: a query's candidate set is
    complete within its own micro-batch, so 1-file and 4-file replays
    produce the identical top-k table;
@@ -28,82 +30,63 @@ def emb(spark, sf_dir):
     )
 
 
-def test_literal_probe_matches_ivf_assign(spark, emb):
-    even = emb.filter(F.col("vec_id") % 2 == 0)
-    cents_rows = (
-        even.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
+def _row_number_ref(vecs, cents, k):
+    """{(id, rank): (cell, score)}: the oracle-shaped reference — every
+    (vector, centroid) pair scored, then row_number() OVER (PARTITION BY
+    id ORDER BY score DESC, cid) <= k."""
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("id").orderBy(F.col("score").desc(), F.col("cid"))
+    return {
+        (r.id, r.rn): (r.cid, r.score)
+        for r in vecs.crossJoin(cents)
+        .select(
+            "id",
+            "cid",
+            F.round(
+                S.dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv")), 6
+            ).alias("score"),
         )
-        .orderBy("cid")
-        .limit(P._N_CELLS)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
         .collect()
-    )
-    # window path on the even half: ivf_assign derives its centroids
-    # from its own input, which is exactly the monitor's seed set
-    want_even_cents = {
+    }
+
+
+def test_probe_matches_ivf_assign(spark, emb):
+    """ivf_assign over the even half (its own lowest-id seeds, which
+    are exactly the monitor's) equals the row_number reference."""
+    even = emb.filter(F.col("vec_id") % 2 == 0)
+    cents = S.seed_centroids(even, "vec_id", "embedding", P._N_CELLS)
+    want = {
+        key: cell
+        for key, (cell, _score) in _row_number_ref(
+            P._vectors(even), cents, P._NPROBE
+        ).items()
+    }
+    got = {
         (r.id, r.cell_rank): r.cell
         for r in S.ivf_assign(
             even, "vec_id", "embedding", n_cells=P._N_CELLS,
             rank_limit=P._NPROBE,
         ).collect()
     }
-    got_even = {
-        (r.id, r.rank): r.cell
-        for r in even.select(
-            F.col("vec_id").alias("id"),
-            F.posexplode(
-                S.literal_centroid_probe(
-                    F.col("embedding"),
-                    S.norm(F.col("embedding")),
-                    cents_rows,
-                    nprobe=P._NPROBE,
-                )
-            ).alias("pos", "_p"),
-        )
-        .select("id", (F.col("pos") + 1).alias("rank"), F.col("_p.cid").alias("cell"))
-        .collect()
-    }
-    assert got_even == want_even_cents
+    assert got == want
 
 
-def test_array_probe_equals_literal_probe(spark, emb):
-    """centroid_probe_column (centroids as one broadcast array row —
-    the large-n_cells production path) ranks identically to
-    literal_centroid_probe (centroids folded into the plan)."""
+def test_probe_matches_row_number_reference(spark, sf_dir, emb):
+    """The monitor's probe over the maintained index's centroid array
+    picks, ranks and scores every vector's nprobe cells exactly as the
+    row_number reference does."""
+    _db, carr, _n_db = P._ivf_index(spark, sf_dir)
     even = emb.filter(F.col("vec_id") % 2 == 0)
-    cents = even.select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cv"),
-        S.norm(F.col("embedding")).alias("ncv"),
-    ).orderBy("cid").limit(P._N_CELLS)
-    cents_rows = cents.collect()
-    lit = {
-        (r.id, r.pos): (r._p.negc, r._p.cid)
-        for r in emb.select(
-            F.col("vec_id").alias("id"),
-            F.posexplode(
-                S.literal_centroid_probe(
-                    F.col("embedding"), S.norm(F.col("embedding")),
-                    cents_rows, nprobe=P._NPROBE,
-                )
-            ).alias("pos", "_p"),
-        ).collect()
+    cents = S.seed_centroids(even, "vec_id", "embedding", P._N_CELLS)
+    want = _row_number_ref(P._vectors(emb), cents, P._NPROBE)
+    got = {
+        (r.id, r.cell_rank): (r.cell, r.ccos)
+        for r in S.assign_cells(P._vectors(emb), carr, k=P._NPROBE).collect()
     }
-    arr = {
-        (r.id, r.pos): (r._p.negc, r._p.cid)
-        for r in emb.crossJoin(F.broadcast(S.centroid_array(cents))).select(
-            F.col("vec_id").alias("id"),
-            F.posexplode(
-                S.centroid_probe_column(
-                    F.col("_cents"), F.col("embedding"),
-                    S.norm(F.col("embedding")), nprobe=P._NPROBE,
-                )
-            ).alias("pos", "_p"),
-        ).collect()
-    }
-    assert lit == arr
+    assert got == want
 
 
 def test_replay_slicing_insensitive(spark, sf_dir, tmp_path):
@@ -149,19 +132,11 @@ def test_replay_slicing_insensitive(spark, sf_dir, tmp_path):
 def test_monitor_equals_batch_ivf_split(spark, sf_dir, emb):
     """The replayed answer equals the batch IVF top-k over the same
     odd-probes-even-index split, computed without any streaming."""
-    db, cents, _carr, _n_db = P._ivf_index(spark, sf_dir)
+    db, carr, _n_db = P._ivf_index(spark, sf_dir)
     odd = emb.filter(F.col("vec_id") % 2 == 1)
-    probes = odd.crossJoin(F.broadcast(S.centroid_array(cents))).select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("qv"),
-        S.norm(F.col("embedding")).alias("qn"),
-        F.explode(
-            S.centroid_probe_column(
-                F.col("_cents"), F.col("embedding"),
-                S.norm(F.col("embedding")), nprobe=P._NPROBE
-            )
-        ).alias("_p"),
-    ).select("id", "qv", "qn", F.col("_p.cid").alias("cell"))
+    probes = S.assign_cells(P._vectors(odd), carr, k=P._NPROBE).select(
+        "id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell"
+    )
     from pyspark.sql.window import Window
 
     pairs = probes.join(db, on="cell").select(

@@ -162,40 +162,21 @@ def test_ivfpq_monitor_resumes_exactly_once(spark, tmp_path):
     )
     xcodes = xcodes.localCheckpoint(eager=True)
     cbarr = S.pq_codebook_array(_cbs).localCheckpoint(eager=True)
-    cents = (
-        index_src.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
-        ).orderBy("cid").limit(4)
-    )
-    carr = S.centroid_array(cents)
+    carr = S.centroid_array(S.seed_centroids(index_src, "vec_id", "embedding", 4))
     w = Window.partitionBy("qid").orderBy(F.col("adc_cos").desc(), F.col("xid"))
 
     def _cands(src):
+        vecs = src.select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("v"),
+            S.norm(F.col("embedding")).alias("nv"),
+        )
         return (
-            src.select(
-                F.col("vec_id").alias("qid"),
-                F.col("embedding").alias("qv"),
-                S.norm(F.col("embedding")).alias("qn"),
-            )
-            .crossJoin(F.broadcast(carr))
-            .select(
-                "qid", "qv", "qn",
-                F.explode(
-                    S.centroid_probe_column(
-                        F.col("_cents"), F.col("qv"), F.col("qn"), nprobe=1
-                    )
-                ).alias("_p"),
-            )
-            .select(
-                "qid", "qn", "qv",
-                F.col("_p.cid").alias("cell"),
-            )
+            S.assign_cells(vecs, carr)
             .crossJoin(F.broadcast(cbarr))
             .select(
-                "qid", "qn", "cell",
-                S.pq_query_lut(F.col("qv"), F.col("_cbarr"), 64, 4).alias(
+                "qid", F.col("nv").alias("qn"), "cell",
+                S.pq_query_lut(F.col("v"), F.col("_cbarr"), 64, 4).alias(
                     "_qlut"
                 ),
             )

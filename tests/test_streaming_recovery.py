@@ -293,15 +293,18 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
         .select(F.col("id").alias("neighbor"), "v", "nv", "cell")
         .localCheckpoint(eager=True)
     )
-    cents = (
-        index_src.select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cv"),
-            S.norm(F.col("embedding")).alias("ncv"),
-        ).orderBy("cid").limit(4)
-    )
-    carr = S.centroid_array(cents)
+    carr = S.centroid_array(S.seed_centroids(index_src, "vec_id", "embedding", 4))
     w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
+
+    def _probes(src):
+        vecs = src.select(
+            F.col("vec_id").alias("id"),
+            F.col("embedding").alias("v"),
+            S.norm(F.col("embedding")).alias("nv"),
+        )
+        return S.assign_cells(vecs, carr, k=2).select(
+            "id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell"
+        )
 
     def _run():
         schema = spark.read.parquet(stage).schema
@@ -311,21 +314,7 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
             .parquet(stage)
         )
         cands = (
-            src.select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").alias("qv"),
-                S.norm(F.col("embedding")).alias("qn"),
-            )
-            .crossJoin(F.broadcast(carr))
-            .select(
-                "id", "qv", "qn",
-                F.explode(
-                    S.centroid_probe_column(
-                        F.col("_cents"), F.col("qv"), F.col("qn"), nprobe=2
-                    )
-                ).alias("_p"),
-            )
-            .select("id", "qv", "qn", F.col("_p.cid").alias("cell"))
+            _probes(src)
             .join(db, on="cell")
             .select(
                 "id", "neighbor",
@@ -365,20 +354,7 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
     assert new and all(i >= 21 for i, _, _ in new)
     # union over runs == one batch pass over ALL queries vs the index
     batch = (
-        _emb(range(1, 40, 2))
-        .crossJoin(F.broadcast(carr))
-        .select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").alias("qv"),
-            S.norm(F.col("embedding")).alias("qn"),
-            F.explode(
-                S.centroid_probe_column(
-                    F.col("_cents"), F.col("embedding"),
-                    S.norm(F.col("embedding")), nprobe=2
-                )
-            ).alias("_p"),
-        )
-        .select("id", "qv", "qn", F.col("_p.cid").alias("cell"))
+        _probes(_emb(range(1, 40, 2)))
         .join(db, on="cell")
         .select(
             "id", "neighbor",
