@@ -595,40 +595,18 @@ def embedding_cosine_pairs(
     in corpus size + quadratic per bucket. mode='brute' verifies all
     pairs (exactness baseline; verification scale only).
 
-    ``bucket_cap`` (lsh mode) is the hot-bucket skew guard, same
-    mechanism as ``rhp_lsh_topk``: a bucket larger than the cap is
-    salted into ceil(size/cap) sub-buckets by ``id % n_sub``, so one
-    degenerate bucket (zero vectors, a near-duplicate flood) is bounded
-    at ~cap² join work per sub-bucket instead of running quadratic in
-    the flood size. Pairs split across sub-buckets are missed — the
-    standard LSH recall trade, measured in scripts/stress_ann.py.
-    Requires numeric ids (pre-hash string ids, e.g. xxhash64).
+    ``bucket_cap`` (lsh mode) is the hot-bucket skew guard
+    (``similarity.cap_buckets``, shared with ``rhp_lsh_topk``). Pairs
+    split across sub-buckets are missed — the standard LSH recall
+    trade, measured in scripts/stress_ann.py.
     """
     from prosnet_prefect_pipelines_spark.operators import similarity as S
 
-    # norms hoisted to one fold per VECTOR (not two per pair); the
-    # division below is bit-identical to S.cosine (same fold + sqrt
-    # expressions, same IEEE op order — only the evaluation site moves)
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        S.norm(F.col(vec_col)).alias("nv"),
-    )
+    vecs = S.vector_rows(df, id_col, vec_col)
     if mode == "lsh":
         sig = vecs.withColumn("bucket", S.rhp_signature(F.col("v"), dim, planes))
         if bucket_cap is not None:
-            sizes = sig.groupBy("bucket").agg(F.count("*").alias("_bc"))
-            n_sub = F.ceil(F.col("_bc") / F.lit(float(bucket_cap))).cast("long")
-            sig = sig.join(sizes, on="bucket").select(
-                "id",
-                "v",
-                "nv",
-                F.concat(
-                    F.col("bucket"),
-                    F.lit(":"),
-                    F.pmod(F.col("id").cast("long"), n_sub).cast("string"),
-                ).alias("bucket"),
-            )
+            sig = S.cap_buckets(sig, bucket_cap)
         pairs = (
             sig.alias("x")
             .join(sig.alias("y"), on="bucket")
@@ -645,9 +623,8 @@ def embedding_cosine_pairs(
         pairs.select(
             F.col("x.id").alias("a"),
             F.col("y.id").alias("b"),
-            F.round(
-                S.dot(F.col("x.v"), F.col("y.v")) / (F.col("x.nv") * F.col("y.nv")),
-                6,
+            S.cosine(
+                F.col("x.v"), F.col("y.v"), na=F.col("x.nv"), nb=F.col("y.nv")
             ).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
@@ -714,22 +691,19 @@ def semdedup(
     from prosnet_prefect_pipelines_spark.operators.similarity import (
         assign_cells,
         centroid_array,
-        dot,
+        cosine,
         kmeans_centroids,
         norm,
+        vector_rows,
     )
 
     # norms hoisted: one fold per vector / per centroid instead of re-
-    # folding inside every cosine — bit-identical (same fold + sqrt,
-    # same IEEE op order), 3x less fold work in assignment AND pair scan
+    # folding inside every cosine — 3x less fold work in assignment AND
+    # pair scan
     cents = kmeans_centroids(
         df, id_col, vec_col, n_cells=n_cells, iterations=iterations
     ).withColumn("ncv", norm(F.col("cv")))
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("nv"),
-    )
+    vecs = vector_rows(df, id_col, vec_col)
     # per-row nearest centroid over the broadcast centroid array: no
     # corpus exchange for the assignment
     assign = assign_cells(vecs, centroid_array(cents)).select(
@@ -747,9 +721,7 @@ def semdedup(
         a.join(b, "cell")
         .filter(F.col("a_id") < F.col("b_id"))
         .filter(
-            F.round(
-                dot(F.col("a_v"), F.col("b_v")) / (F.col("a_n") * F.col("b_n")), 6
-            )
+            cosine(F.col("a_v"), F.col("b_v"), na=F.col("a_n"), nb=F.col("b_n"))
             >= F.lit(threshold)
         )
         .select(F.col("b_id").alias("id"))

@@ -16,14 +16,15 @@
   SemDeDup.
 
 All dot products run as ordered folds over the array (zip_with +
-aggregate on the JVM), cast to double before multiplication; cosines are
-rounded to 6 dp and ties broken by neighbor id — deterministic,
-engine-independent rankings.
+aggregate on the JVM), cast to double before multiplication. Every
+score is ``cosine`` (or its ADC twins): rounded to 6 dp, NULL when
+either norm is zero. Every neighbor list is ``top_k``: score DESC NULLS
+LAST, ties by neighbor id — deterministic, engine-independent rankings
+in which a zero-norm vector scores NULL and ranks last, as in the
+DuckDB oracles.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -36,9 +37,7 @@ from pyspark.sql.window import Window
 # size and falls back to a shuffled cell equi-join above the threshold
 # (same expressions, same values; only the physical join moves), the
 # q_pipeline115 volume-threshold escalation pattern.
-_PQ_BROADCAST_BYTES = float(
-    os.environ.get("SPARK_GRAFT_PQ_BROADCAST_BYTES", str(256 * 1024 * 1024))
-)
+_PQ_BROADCAST_BYTES = 256 * 1024 * 1024
 
 
 def dot(a: Column, b: Column, dim: int | None = None) -> Column:
@@ -98,8 +97,63 @@ def norm(a: Column, dim: int | None = None) -> Column:
     return F.sqrt(acc)
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
+def vector_rows(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    names: tuple[str, str, str] = ("id", "v", "nv"),
+    dim: int | None = None,
+) -> DataFrame:
+    """-> (id, vector, norm) rows named ``names``: the shape
+    ``assign_cells`` ranks and pair scores read, with the norm folded
+    once per vector for ``cosine(na=, nb=)``."""
+    i, v, n = names
+    return df.select(
+        F.col(id_col).alias(i), F.col(vec_col).alias(v),
+        norm(F.col(vec_col), dim).alias(n),
+    )
+
+
+def _ratio6(num: Column, den: Column) -> Column:
+    """round(num / den, 6), NULL where ``den`` is 0 (try_divide instead
+    of an ANSI DIVIDE_BY_ZERO) — the DuckDB oracles' ``x / 0.0``."""
+    return F.round(F.try_divide(num, den), 6)
+
+
+def cosine(
+    a: Column,
+    b: Column,
+    dim: int | None = None,
+    *,
+    na: Column | None = None,
+    nb: Column | None = None,
+) -> Column:
+    """The package's one cosine score: round(dot(a, b) / (na * nb), 6),
+    NULL when either norm is zero (``top_k`` ranks it last).
+
+    ``na``/``nb`` default to ``norm(a, dim)``/``norm(b, dim)``. Callers
+    scoring pairs pass norms hoisted to one fold per VECTOR instead of
+    two per pair: the same fold + sqrt expressions in the same IEEE op
+    order, so the score is bit-identical wherever they are evaluated."""
+    na = norm(a, dim) if na is None else na
+    nb = norm(b, dim) if nb is None else nb
+    return _ratio6(dot(a, b, dim), na * nb)
+
+
+def top_k(
+    df: DataFrame, by: str | list[str], score: str, tie: str, k: int | Column
+) -> DataFrame:
+    """The package's one neighbor ranking: the best ``k`` rows per
+    ``by`` in the oracles' order, ``score`` DESC NULLS LAST then
+    ``tie`` ASC, with their rank as ``_rn`` (1 = best). ``k`` may be a
+    column (one cut per row group, e.g. a config grid's pool width).
+
+    A ``row_number`` filter, so an integer ``k`` plans as a
+    ``WindowGroupLimit`` ahead of the window's exchange."""
+    w = Window.partitionBy(by).orderBy(
+        F.col(score).desc_nulls_last(), F.col(tie).asc()
+    )
+    return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= k)
 
 
 def cosine_topk(
@@ -114,10 +168,6 @@ def cosine_topk(
     O(n²d). Use ``rhp_lsh_topk`` (auto-scaled buckets) or ``ivf_topk``
     as the default ANN entry points at scale.
     """
-    # norms hoisted to one fold per VECTOR instead of two per PAIR —
-    # bit-identical to cosine() (same fold + sqrt expressions, same IEEE
-    # op order; only the evaluation site moves), 3x less fold work in
-    # the quadratic stage
     from prosnet_prefect_pipelines_spark.session import fan_out
 
     # the pair join is a nested-loop whose parallelism = LEFT-side
@@ -125,30 +175,17 @@ def cosine_topk(
     # O(n^2 d) stage on ONE core (measured 17.6 s -> ~1 s at sf0.1 for
     # mutual_nn_pairs). The fan-out shuffle is |n| rows — nothing next
     # to the quadratic stage it parallelizes.
-    left = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("va"),
-        norm(F.col(vec_col), dim).alias("na"),
-    )
-    right = df.select(
-        F.col(id_col).alias("neighbor"),
-        F.col(vec_col).alias("vb"),
-        norm(F.col(vec_col), dim).alias("nb"),
-    )
+    left = vector_rows(fan_out(df), id_col, vec_col, ("id", "va", "na"), dim)
+    right = vector_rows(df, id_col, vec_col, ("neighbor", "vb", "nb"), dim)
     pairs = left.join(right, F.col("id") != F.col("neighbor"))
     scored = pairs.select(
         "id",
         "neighbor",
-        F.round(
-            dot(F.col("va"), F.col("vb"), dim) / (F.col("na") * F.col("nb")), 6
+        cosine(
+            F.col("va"), F.col("vb"), dim, na=F.col("na"), nb=F.col("nb")
         ).alias("cos"),
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("id", "neighbor", "cos")
-    )
+    return top_k(scored, "id", "cos", "neighbor", k).select("id", "neighbor", "cos")
 
 
 def seed_centroids(df: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
@@ -192,15 +229,15 @@ def nearest_centroids(
     array<struct<cid, cv, ncv>> (``centroid_array``) for one vector, as
     array<struct<score, _nt, cid>> best first.
 
-    Order: score = round(try_divide(dot(vec, cv), nv * ncv), 6) DESC
-    NULLS LAST, ties by cid ASC — the ``row_number() OVER (ORDER BY
-    score DESC, cid)`` order of every DuckDB oracle. Spark compares
-    struct fields in its one total order (NULL < -Inf < finite < +Inf <
-    NaN, -0.0 = 0.0), so a descending sort of (score, ~cid, cid) is
-    exactly that order reversed field by field: a NULL score (zero-norm
-    vector or centroid, via try_divide instead of an ANSI divide-by-zero)
-    ranks last, a NaN score first, and the bitwise-NOT tie key turns
-    cid ASC into a descending key without overflowing at LONG_MIN.
+    Order: score = ``cosine(vec, cv)`` DESC NULLS LAST, ties by cid
+    ASC — the ``row_number() OVER (ORDER BY score DESC, cid)`` order of
+    every DuckDB oracle. Spark compares struct fields in its one total
+    order (NULL < -Inf < finite < +Inf < NaN, -0.0 = 0.0), so a
+    descending sort of (score, ~cid, cid) is exactly that order
+    reversed field by field: a NULL score (zero-norm vector or
+    centroid) ranks last, a NaN score first, and the bitwise-NOT tie
+    key turns cid ASC into a descending key without overflowing at
+    LONG_MIN.
 
     A pure per-row expression over a carried array: no fan-out rows,
     no exchange, no window, legal in an append-mode streaming
@@ -210,9 +247,7 @@ def nearest_centroids(
     ranked = F.transform(
         cents_arr,
         lambda c: F.struct(
-            F.round(F.try_divide(dot(vec, c["cv"]), nv * c["ncv"]), 6).alias(
-                "score"
-            ),
+            cosine(vec, c["cv"], na=nv, nb=c["ncv"]).alias("score"),
             F.bitwise_not(c["cid"]).alias("_nt"),
             c["cid"].alias("cid"),
         ),
@@ -322,11 +357,7 @@ def ivf_assign(
     where an unrolled tree multiplies Catalyst optimization cost (see
     ``dot``); the fold is the measured-faster total here.
     """
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("nv"),
-    )
+    vecs = vector_rows(df, id_col, vec_col)
     carr = centroid_array(seed_centroids(df, id_col, vec_col, n_cells))
     return assign_cells(vecs, carr, k=rank_limit).select(
         "id", "v", "nv", "cell", "cell_rank"
@@ -362,21 +393,12 @@ def ivf_topk(
         .select(
             F.col("x.id").alias("id"),
             F.col("y.id").alias("neighbor"),
-            # norms precomputed once per vector in ivf_assign — one fold
-            # per candidate pair instead of three (bit-identical to
-            # cosine(): same fold + sqrt, same IEEE op order)
-            F.round(
-                dot(F.col("x.v"), F.col("y.v"), dim) / (F.col("x.nv") * F.col("y.nv")),
-                6,
+            cosine(
+                F.col("x.v"), F.col("y.v"), dim, na=F.col("x.nv"), nb=F.col("y.nv")
             ).alias("cos"),
         )
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
-    return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("id", "neighbor", "cos")
-    )
+    return top_k(pairs, "id", "cos", "neighbor", k).select("id", "neighbor", "cos")
 
 
 def rhp_lsh_topk(
@@ -414,14 +436,7 @@ def rhp_lsh_topk(
     """
     if planes is None:
         planes = auto_planes(df.count(), target_bucket)
-    # norm computed once per vector here (one fold), so the within-bucket
-    # pair scoring below is one dot fold per pair instead of three —
-    # bit-identical to cosine() (same fold + sqrt, same IEEE op order)
-    vecs = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("nv"),
-    )
+    vecs = vector_rows(df, id_col, vec_col)
     per_table = [
         F.concat(
             F.lit(f"{t}:"),
@@ -439,21 +454,7 @@ def rhp_lsh_topk(
     )
 
     if bucket_cap is not None:
-        sizes = sig.groupBy("bucket").agg(F.count("*").alias("_bc"))
-        n_sub = F.ceil(F.col("_bc") / F.lit(float(bucket_cap))).cast("long")
-        sig = (
-            sig.join(sizes, on="bucket")
-            .select(
-                "id",
-                "v",
-                "nv",
-                F.concat(
-                    F.col("bucket"),
-                    F.lit(":"),
-                    F.pmod(F.col("id").cast("long"), n_sub).cast("string"),
-                ).alias("bucket"),
-            )
-        )
+        sig = cap_buckets(sig, bucket_cap)
 
     pairs = (
         sig.alias("x")
@@ -466,18 +467,32 @@ def rhp_lsh_topk(
         # one row — identical cos — after the dropDuplicates below.
         .select(
             F.col("x.id").alias("id"), F.col("y.id").alias("neighbor"),
-            F.round(
-                dot(F.col("x.v"), F.col("y.v")) / (F.col("x.nv") * F.col("y.nv")),
-                6,
+            cosine(
+                F.col("x.v"), F.col("y.v"), na=F.col("x.nv"), nb=F.col("y.nv")
             ).alias("cos"),
         )
         .dropDuplicates(["id", "neighbor"])
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
-    return (
-        pairs.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("id", "neighbor", "cos")
+    return top_k(pairs, "id", "cos", "neighbor", k).select("id", "neighbor", "cos")
+
+
+def cap_buckets(sig: DataFrame, bucket_cap: int) -> DataFrame:
+    """The LSH hot-bucket skew guard: every ``bucket`` holding more than
+    ``bucket_cap`` rows is salted into ceil(size/cap) sub-buckets by
+    ``pmod(id, n_sub)``, so one degenerate bucket (zero vectors, a
+    near-duplicate flood) costs ~cap² join work per sub-bucket instead
+    of running quadratic. The size lookup joins on the same bucket key
+    as the self-join that follows — no extra shuffle stage. Needs a
+    numeric ``id`` (pre-hash string ids, e.g. xxhash64)."""
+    sizes = sig.groupBy("bucket").agg(F.count("*").alias("_bc"))
+    n_sub = F.ceil(F.col("_bc") / F.lit(float(bucket_cap))).cast("long")
+    return sig.join(sizes, on="bucket").select(
+        *[c for c in sig.columns if c != "bucket"],
+        F.concat(
+            F.col("bucket"),
+            F.lit(":"),
+            F.pmod(F.col("id").cast("long"), n_sub).cast("string"),
+        ).alias("bucket"),
     )
 
 
@@ -838,9 +853,8 @@ def adc_cos_column(n_sub: int) -> Column:
         for s in range(n_sub)
     )
     xnorm2_s = sum(F.col("_xs").getItem(s)["n2"] for s in range(n_sub))
-    return F.round(
-        (adc_dot_s / F.lit(1e9)) / (F.col("qn") * F.sqrt(xnorm2_s / F.lit(1e9))),
-        6,
+    return _ratio6(
+        adc_dot_s / F.lit(1e9), F.col("qn") * F.sqrt(xnorm2_s / F.lit(1e9))
     )
 
 
@@ -973,11 +987,23 @@ def adc_cos_lut(n_sub: int) -> Column:
         )
         for s in range(n_sub)
     )
-    return F.round(
-        (adc_dot_s / F.lit(1e9))
-        / (F.col("qn") * F.sqrt(F.col("_xn2") / F.lit(1e9))),
-        6,
+    return _ratio6(
+        adc_dot_s / F.lit(1e9), F.col("qn") * F.sqrt(F.col("_xn2") / F.lit(1e9))
     )
+
+
+def pq_index_side(xcodes: DataFrame, n_x: int, n_sub: int) -> DataFrame:
+    """The encoded index side of an IVF-PQ cell join: broadcast while
+    the index fits comfortably on every executor — ``n_x`` rows x
+    (n_sub code positions + one norm long + row overhead); the
+    positional repack shrinks this ~30x vs the codeword-vector form, so
+    far larger indexes stay on the fast broadcast plan. Above
+    ``_PQ_BROADCAST_BYTES`` it is repartitioned on cell for a shuffled
+    equi-join — the 100 TB shape, where neither side is
+    driver-resident."""
+    if n_x * (n_sub * 4 + 8 + 48) <= _PQ_BROADCAST_BYTES:
+        return F.broadcast(xcodes)
+    return xcodes.repartition("cell")
 
 
 def ivf_pq_topk(
@@ -1037,32 +1063,14 @@ def ivf_pq_topk(
             ),
         )
     )
-    # broadcast only while the encoded index fits comfortably on every
-    # executor: |corpus| rows x (n_sub code positions + one norm long +
-    # row overhead) — the r12 positional repack shrinks this ~30x vs
-    # the codeword-vector form, so far larger indexes stay on the fast
-    # broadcast plan. assign is an eager checkpoint, so the row count
-    # is metadata-cheap. Above _PQ_BROADCAST_BYTES the pair stage
-    # becomes a shuffled equi-join on cell — the 100 TB shape, where
-    # neither side is driver-resident.
-    n_x = assign.count()
-    est_xcodes_bytes = n_x * (n_sub * 4 + 8 + 48)
-    xside = (
-        F.broadcast(xcodes)
-        if est_xcodes_bytes <= _PQ_BROADCAST_BYTES
-        else xcodes.repartition("cell")
-    )
+    # assign is an eager checkpoint, so the row count is metadata-cheap
+    xside = pq_index_side(xcodes, assign.count(), n_sub)
     scored = (
         qarr.join(xside, on="cell")
         .filter(F.col("qid") != F.col("xid"))
         .select("qid", "xid", adc_cos_lut(n_sub).alias("adc_cos"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_cos").desc(), F.col("xid"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select("qid", "xid", "adc_cos")
-    )
+    return top_k(scored, "qid", "adc_cos", "xid", k).select("qid", "xid", "adc_cos")
 
 
 def knn_join(
@@ -1092,28 +1100,16 @@ def knn_join(
     exact and deterministic. For large query sets, switch to
     ``ivf_topk``-style cell routing on both sides.
     """
-    # norms hoisted out of the pair stage: one fold per QUERY (broadcast
-    # side, |Q| rows) and one per CORPUS row instead of re-deriving both
-    # inside every cosine — bit-identical (same fold + sqrt expressions,
-    # same IEEE op order; only the evaluation site moves) and 3x less
-    # per-pair arithmetic in the only quadratic stage. r3 benched this
-    # query computing 3 unrolled dim-length chains per PAIR; that was
-    # the knn_join_batch r2->r3 regression residual.
-    q = queries.select(
-        F.col(query_id).alias("qid"),
-        F.col(query_vec).alias("qv"),
-        norm(F.col(query_vec), dim).alias("qn"),
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor"),
-        F.col(corpus_vec).alias("cv"),
-        norm(F.col(corpus_vec), dim).alias("cn"),
-    )
+    # norms hoisted out of the pair stage: one fold per QUERY and one
+    # per CORPUS row — 3x less per-pair arithmetic in the only quadratic
+    # stage (r3 benched 3 unrolled dim-length chains per PAIR here)
+    q = vector_rows(queries, query_id, query_vec, ("qid", "qv", "qn"), dim)
+    c = vector_rows(corpus, corpus_id, corpus_vec, ("neighbor", "cv", "cn"), dim)
     scored = c.join(F.broadcast(q)).select(
         "qid",
         "neighbor",
-        F.round(
-            dot(F.col("qv"), F.col("cv"), dim) / (F.col("qn") * F.col("cn")), 6
+        cosine(
+            F.col("qv"), F.col("cv"), dim, na=F.col("qn"), nb=F.col("cn")
         ).alias("cos"),
     )
 
@@ -1125,11 +1121,8 @@ def knn_join(
             yield pdf.groupby("qid", sort=False).head(k)
 
     partial = scored.mapInPandas(_prune, scored.schema)
-    final = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("neighbor"))
-    return (
-        partial.withColumn("_rn", F.row_number().over(final))
-        .filter(F.col("_rn") <= k)
-        .select(F.col("qid").alias("query_id"), "neighbor", "cos")
+    return top_k(partial, "qid", "cos", "neighbor", k).select(
+        F.col("qid").alias("query_id"), "neighbor", "cos"
     )
 
 

@@ -586,19 +586,33 @@ SELECT qid, xid, cos FROM (
 PQ_RERANK_SQL = _IVFPQ_CTES + _RERANK_TAIL_SQL
 
 
+def _exact_top3(cand, emb, by):
+    """(..., qid, xid) candidates -> the same rows plus ``cos``, their
+    exact cosine on the original vectors (a keyed join per side, never
+    a corpus pass), top-3 per ``by``."""
+    from prosnet_prefect_pipelines_spark.operators.similarity import (
+        cosine,
+        top_k,
+        vector_rows,
+    )
+
+    qv = vector_rows(emb, "vec_id", "embedding", ("qid", "_qv", "_qn"))
+    xv = vector_rows(emb, "vec_id", "embedding", ("xid", "_xv", "_xn"))
+    exact = cand.join(qv, on="qid").join(xv, on="xid").select(
+        *cand.columns,
+        cosine(
+            F.col("_qv"), F.col("_xv"), na=F.col("_qn"), nb=F.col("_xn")
+        ).alias("cos"),
+    )
+    return top_k(exact, by, "cos", "xid", 3)
+
+
 def _rerank_exact_topk(spark, sf_dir, nprobe: int = 1, pool: int | None = None):
     """Shared two-stage retrieval body: ADC candidate pool of width
     ``pool`` from the memoized batch index at the given ``nprobe``,
     re-ranked by exact cosine on the original vectors (the only place
     raw vectors are read after encoding — a |queries| x pool keyed
     join, never a corpus pass), exact top-3 out."""
-    from pyspark.sql.window import Window
-
-    from prosnet_prefect_pipelines_spark.operators.similarity import (
-        dot as _dot,
-        norm as _norm,
-    )
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cand = ivf_pq_topk(
         emb, "vec_id", "embedding", dim=64,
@@ -606,30 +620,7 @@ def _rerank_exact_topk(spark, sf_dir, nprobe: int = 1, pool: int | None = None):
         k=pool or _RERANK_POOL, nprobe=nprobe,
         index=_pq_batch_index(spark, sf_dir),
     ).select("qid", "xid")
-    qv = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("_qv"),
-        _norm(F.col("embedding")).alias("_qn"),
-    )
-    xv = emb.select(
-        F.col("vec_id").alias("xid"),
-        F.col("embedding").alias("_xv"),
-        _norm(F.col("embedding")).alias("_xn"),
-    )
-    exact = cand.join(qv, on="qid").join(xv, on="xid").select(
-        "qid",
-        "xid",
-        F.round(
-            _dot(F.col("_qv"), F.col("_xv")) / (F.col("_qn") * F.col("_xn")),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("xid"))
-    return (
-        exact.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 3)
-        .select("qid", "xid", "cos")
-    )
+    return _exact_top3(cand, emb, "qid").select("qid", "xid", "cos")
 
 
 @register("pq_rerank_topk", oracle=PQ_RERANK_SQL, covers=["O6", "J1", "O1"])
@@ -1351,14 +1342,14 @@ def q_ann_autotune_plan(spark, sf_dir):
     from pyspark.sql.window import Window
 
     from prosnet_prefect_pipelines_spark.operators.similarity import (
-        _PQ_BROADCAST_BYTES,
         adc_cos_lut,
         cosine_topk,
-        dot as _dot,
         ivf_assign,
         norm as _norm,
         pq_codebook_array,
+        pq_index_side,
         pq_query_lut,
+        top_k,
     )
     from prosnet_prefect_pipelines_spark.session import fan_out
 
@@ -1381,15 +1372,8 @@ def q_ann_autotune_plan(spark, sf_dir):
             ),
         )
     )
-    # same size-gated index join as ivf_pq_topk (broadcast while the
-    # positional-codes payload fits; shuffled cell equi-join above)
-    n_x = assign.count()
-    est_xcodes_bytes = n_x * (_PQ_SUB * 4 + 8 + 48)
-    xside = (
-        F.broadcast(xcodes)
-        if est_xcodes_bytes <= _PQ_BROADCAST_BYTES
-        else xcodes.repartition("cell")
-    )
+    # same size-gated index join as ivf_pq_topk
+    xside = pq_index_side(xcodes, assign.count(), _PQ_SUB)
     scored = (
         qarr.join(xside, on="cell")
         .filter(F.col("qid") != F.col("xid"))
@@ -1403,43 +1387,14 @@ def q_ann_autotune_plan(spark, sf_dir):
     adc_counts = cand_all.groupBy("np", "pool").agg(
         F.count(F.lit(1)).cast("long").alias("adc_rows")
     )
-    wpool = Window.partitionBy("np", "pool", "qid").orderBy(
-        F.col("adc_cos").desc(), F.col("xid")
-    )
-    pooled = (
-        cand_all.withColumn("_rn", F.row_number().over(wpool))
-        .filter(F.col("_rn") <= F.col("pool"))
-        .select("np", "pool", "qid", "xid")
-    )
+    pooled = top_k(
+        cand_all, ["np", "pool", "qid"], "adc_cos", "xid", F.col("pool")
+    ).select("np", "pool", "qid", "xid")
     rerank_counts = pooled.groupBy("np", "pool").agg(
         F.count(F.lit(1)).cast("long").alias("rerank_rows")
     )
-    qv = emb.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("_qv"),
-        _norm(F.col("embedding")).alias("_qn2"),
-    )
-    xv = emb.select(
-        F.col("vec_id").alias("xid"),
-        F.col("embedding").alias("_xv"),
-        _norm(F.col("embedding")).alias("_xn"),
-    )
-    reranked = pooled.join(qv, on="qid").join(xv, on="xid").select(
-        "np",
-        "pool",
-        "qid",
-        "xid",
-        F.round(
-            _dot(F.col("_qv"), F.col("_xv")) / (F.col("_qn2") * F.col("_xn")),
-            6,
-        ).alias("cos"),
-    )
-    w3 = Window.partitionBy("np", "pool", "qid").orderBy(
-        F.col("cos").desc(), F.col("xid")
-    )
     approx3 = (
-        reranked.withColumn("_rn", F.row_number().over(w3))
-        .filter(F.col("_rn") <= 3)
+        _exact_top3(pooled, emb, ["np", "pool", "qid"])
         .select(
             F.col("np").alias("a_np"),
             F.col("pool").alias("a_pool"),

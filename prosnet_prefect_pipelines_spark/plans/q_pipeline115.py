@@ -155,11 +155,45 @@ def _build_ivf_index(spark, sf_dir):
 def _vectors(df, id_name: str = "id"):
     """(vec_id, embedding) -> (id_name, v, nv): the row shape
     ``similarity.assign_cells`` ranks."""
-    return df.select(
-        F.col("vec_id").alias(id_name),
-        F.col("embedding").alias("v"),
-        S.norm(F.col("embedding")).alias("nv"),
+    return S.vector_rows(df, "vec_id", "embedding", (id_name, "v", "nv"))
+
+
+def ann_candidates(queries, carr, db):
+    """(id, v, nv) query rows -> (id, neighbor, cos): each query's
+    ``_NPROBE`` nearest cells (``assign_cells`` over the broadcast
+    centroid array ``carr``), one equi-join against the (neighbor, v,
+    nv, cell) index ``db``, every candidate scored by ``cosine``.
+    Batch or streaming: the monitor, its serving probe and
+    scripts/stress_ann_serving.py all build their candidates here."""
+    probes = S.assign_cells(queries, carr, k=_NPROBE).select(
+        "id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell"
     )
+    return probes.join(db, on="cell").select(
+        "id",
+        "neighbor",
+        S.cosine(
+            F.col("qv"), F.col("v"), na=F.col("qn"), nb=F.col("nv")
+        ).alias("cos"),
+    )
+
+
+def topk_sink(out_dir: str, by: str, score: str, tie: str, k: int, n_out: int):
+    """foreachBatch sink appending each micro-batch's ``top_k`` rows
+    (by, tie, score) to ``out_dir`` as ``n_out`` parquet files. Exact
+    per batch for a query stream against a static index: a query id
+    arrives once and all its candidates come from the static side, so
+    its ranking is complete within its own micro-batch."""
+
+    def _sink(batch_df, _batch_id):
+        (
+            S.top_k(batch_df, by, score, tie, k)
+            .select(by, tie, score)
+            .coalesce(n_out)
+            .write.mode("append")
+            .parquet(out_dir)
+        )
+
+    return _sink
 
 
 def _query_stream(spark, sf_dir):
@@ -190,8 +224,6 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
     centroid array, no window, no state), stream-static cell join, per-batch
     exact top-k — availableNow replay hash-matched against the batch
     IVF SQL answer for any micro-batch slicing."""
-    from pyspark.sql.window import Window
-
     from prosnet_prefect_pipelines_spark.streaming.tuning import (
         candidate_fanout,
         run_available_now,
@@ -223,49 +255,27 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
     # tasks per replay, at cluster volumes the estimate restores full
     # width (cap 4x parallelism)
     fan = candidate_fanout(spark, est_cands)
-    src = stream.repartition(fan)
     # the centroid table rides along as ONE broadcast array row
     # (stream-static, append-legal); plan cost independent of n_cells.
     # carr comes pre-checkpointed from the index cache (no per-batch
-    # re-aggregation)
-    probes = S.assign_cells(_vectors(src), carr, k=_NPROBE).select(
-        "id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell"
-    )
-    # stream-static equi-join: candidates = query x its probed cells'
-    # index entries; halves are parity-disjoint so no self-pair filter
-    cands = probes.join(db, on="cell").select(
-        "id",
-        "neighbor",
-        F.round(
-            S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv")), 6
-        ).alias("cos"),
-    )
+    # re-aggregation). Halves are parity-disjoint, so the stream-static
+    # cell join needs no self-pair filter.
+    cands = ann_candidates(_vectors(stream.repartition(fan)), carr, db)
 
     out_dir = tempfile.mkdtemp(prefix="ann_monitor_", dir=scratch_root(spark))
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
     # per-batch output is <= _K rows per query — size the write from
     # that estimate (~5M rows of (long, long, double) per ~128 MB file)
     # instead of a fixed 4 files per batch (guide §6: output file
     # sizing; at bench scale this is 1 file/batch, 16 -> 4 write tasks)
     n_out = max(1, min(fan, int(_K * qry_per_batch // 5_000_000) + 1))
 
-    def _sink(batch_df, _batch_id):
-        # a query's candidates are complete within its own micro-batch
-        # (each odd id arrives exactly once; neighbors come from the
-        # static side), so the per-id ranking is exact batch-locally
-        (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= _K)
-            .select("id", "neighbor", "cos")
-            .coalesce(n_out)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
     # the foreachBatch window exchange runs without AQE coalescing, so
     # pin its partition count to the same adaptive width for the replay
     run_available_now(
-        cands, sink=_sink, name="stream_ann_topk_monitor", shuffle_partitions=fan
+        cands,
+        sink=topk_sink(out_dir, "id", "cos", "neighbor", _K, n_out),
+        name="stream_ann_topk_monitor",
+        shuffle_partitions=fan,
     )
     return spark.read.schema("id long, neighbor long, cos double").parquet(out_dir)
 

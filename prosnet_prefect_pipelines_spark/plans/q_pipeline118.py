@@ -63,6 +63,7 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline10 import (
 from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import (
     _query_stream,
     _vectors,
+    topk_sink,
 )
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 from prosnet_prefect_pipelines_spark.streaming.staging import scratch_root
@@ -241,6 +242,35 @@ def _build_pq_serving_index(spark, sf_dir):
     return xcodes, carr, cbarr_df, xcodes.count()
 
 
+def ivfpq_candidates(queries, carr, cbarr, xcodes):
+    """(qid, v, nv) query rows -> (qid, xid, adc_cos): each query's
+    nearest coarse cell (``assign_cells`` over the broadcast centroid
+    array ``carr``), its ADC lookup table against the broadcast
+    codebook array ``cbarr``, one equi-join against the encoded index
+    ``xcodes`` and the LUT ADC score. Batch or streaming: the monitor
+    and its serving probe build their candidates here.
+
+    Candidate rows carry codes, never raw vectors (the 128x
+    candidate-byte shrink). The index is broadcast, which suits bench
+    scale; past the ``_PQ_BROADCAST_BYTES`` gate the batch path
+    shuffles on cell and the monitor would stage the index as a keyed
+    table instead."""
+    return (
+        S.assign_cells(queries, carr)
+        .crossJoin(F.broadcast(cbarr))
+        .select(
+            "qid",
+            F.col("nv").alias("qn"),
+            "cell",
+            S.pq_query_lut(F.col("v"), F.col("_cbarr"), 64, _PQ_SUB).alias(
+                "_qlut"
+            ),
+        )
+        .join(F.broadcast(xcodes), on="cell")
+        .select("qid", "xid", S.adc_cos_lut(_PQ_SUB).alias("adc_cos"))
+    )
+
+
 @register("stream_ann_ivfpq_monitor", oracle=IVFPQ_MONITOR_SQL,
           covers=["T1", "T3", "J1", "O6"])
 def q_stream_ann_ivfpq_monitor(spark, sf_dir):
@@ -249,8 +279,6 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
     ENCODED index, integer-exact ADC scoring, batch-local exact top-3 —
     availableNow replay hash-matched against the batch IVF-PQ SQL over
     the same even/odd halves for any micro-batch slicing."""
-    from pyspark.sql.window import Window
-
     from prosnet_prefect_pipelines_spark.streaming.tuning import (
         candidate_fanout,
         run_available_now,
@@ -271,52 +299,20 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
     qry_per_batch = staged_row_count(spark, stage) / n_stage_files
     est_cands = qry_per_batch * (n_index / _PQ_CELLS)
     fan = candidate_fanout(spark, est_cands)
-    src = stream.repartition(fan)
-
-    probes = (
-        S.assign_cells(_vectors(src, "qid"), carr)
-        .crossJoin(F.broadcast(cbarr))
-        .select(
-            "qid",
-            F.col("nv").alias("qn"),
-            "cell",
-            S.pq_query_lut(F.col("v"), F.col("_cbarr"), 64, _PQ_SUB).alias(
-                "_qlut"
-            ),
-        )
-    )
-    # stream-static equi-join against the encoded index: candidate rows
-    # carry codes, never raw vectors (the 128x candidate-byte shrink).
-    # Broadcast is bench-appropriate; at index sizes past the
-    # _PQ_BROADCAST_BYTES gate the batch path shuffles on cell and the
-    # monitor would stage the index as a keyed table instead.
-    cands = probes.join(F.broadcast(xcodes), on="cell").select(
-        "qid", "xid", S.adc_cos_lut(_PQ_SUB).alias("adc_cos")
+    cands = ivfpq_candidates(
+        _vectors(stream.repartition(fan), "qid"), carr, cbarr, xcodes
     )
 
     out_dir = tempfile.mkdtemp(prefix="ann_ivfpq_monitor_", dir=scratch_root(spark))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("adc_cos").desc(), F.col("xid")
-    )
     # output sizing from estimated result rows (guide §6), was fixed 4
     n_out = max(1, min(fan, int(_K * qry_per_batch // 5_000_000) + 1))
 
-    def _sink(batch_df, _batch_id):
-        # a query's candidates are complete within its own micro-batch
-        # (each odd id arrives exactly once; candidates are static), so
-        # the per-qid ranking is exact batch-locally
-        (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= _K)
-            .select("qid", "xid", "adc_cos")
-            .coalesce(n_out)
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
     # foreachBatch window exchange runs without AQE coalescing — pin it
     run_available_now(
-        cands, sink=_sink, name="stream_ann_ivfpq_monitor", shuffle_partitions=fan
+        cands,
+        sink=topk_sink(out_dir, "qid", "adc_cos", "xid", _K, n_out),
+        name="stream_ann_ivfpq_monitor",
+        shuffle_partitions=fan,
     )
     return spark.read.schema("qid long, xid long, adc_cos double").parquet(
         out_dir

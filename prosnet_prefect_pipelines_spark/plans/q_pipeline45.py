@@ -26,7 +26,6 @@ per anchor.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.plans.catalog import register
 from prosnet_prefect_pipelines_spark.plans.q_similarity import DOT_FOLD, _cos
@@ -155,9 +154,7 @@ def q_hard_negative_mining(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     carr = S.centroid_array(S.seed_centroids(emb, "vec_id", "embedding", _N_CELLS))
-    vecs = emb.select(
-        "vec_id", F.col("embedding").alias("v"), S.norm(F.col("embedding")).alias("nv")
-    )
+    vecs = S.vector_rows(emb, "vec_id", "embedding", ("vec_id", "v", "nv"))
     scored = (
         S.assign_cells(vecs, carr)
         .select("vec_id", F.col("v").alias("embedding"), F.col("cell").alias("cid"))
@@ -175,13 +172,10 @@ def q_hard_negative_mining(spark, sf_dir):
         .select(
             "anchor",
             "negative",
-            F.round(S.cosine(F.col("ea"), F.col("eb"), 64), 6).alias("cos"),
+            S.cosine(F.col("ea"), F.col("eb"), 64).alias("cos"),
         )
         .filter((F.col("cos") >= 0.1) & (F.col("cos") < 0.8))
     )
-    w = Window.partitionBy("anchor").orderBy(F.col("cos").desc(), "negative")
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("anchor", "negative", "cos", F.col("rn").cast("long").alias("rn"))
+    return S.top_k(pairs, "anchor", "cos", "negative", 2).select(
+        "anchor", "negative", "cos", F.col("_rn").cast("long").alias("rn")
     )

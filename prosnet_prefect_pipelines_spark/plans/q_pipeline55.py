@@ -134,7 +134,7 @@ def q_rrf_fusion(spark, sf_dir):
     qv = F.array(*[F.lit(x) for x in _qvec(0)])
     dense = emb.select(
         F.col("vec_id").alias("id"),
-        F.round(S.cosine(F.col("embedding"), qv, 64), 6).alias("cos"),
+        S.cosine(F.col("embedding"), qv, 64).alias("cos"),
     )
     wd = Window.orderBy(F.col("cos").desc(), F.col("id"))
     denser = (
@@ -211,7 +211,7 @@ def q_ndcg_eval(spark, sf_dir):
     run = qs.crossJoin(emb).select(
         "q",
         "vec_id",
-        F.round(S.cosine(F.col("embedding"), qvec, 64), 6).alias("cos"),
+        S.cosine(F.col("embedding"), qvec, 64).alias("cos"),
         F.when(F.col("label") == F.col("q"), 3).otherwise(0).alias("rel"),
     )
     w = Window.partitionBy("q").orderBy(F.col("cos").desc(), F.col("vec_id"))

@@ -222,9 +222,13 @@ def q_embedding_outliers(spark, sf_dir):
     from prosnet_prefect_pipelines_spark.operators.similarity import cosine
 
     scored = v.join(F.broadcast(cent), on="label").select(
-        "id", "label", F.round(cosine(F.col("v"), F.col("cv"), 64), 6).alias("ccos")
+        "id", "label", cosine(F.col("v"), F.col("cv"), 64).alias("ccos")
     )
-    w = Window.partitionBy("label").orderBy(F.col("ccos"), F.col("id"))
+    # least similar first; a zero-norm member's NULL score sorts last,
+    # as DuckDB's ORDER BY does in either direction
+    w = Window.partitionBy("label").orderBy(
+        F.col("ccos").asc_nulls_last(), F.col("id")
+    )
     return (
         scored.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= 5)

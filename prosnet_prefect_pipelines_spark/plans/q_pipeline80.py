@@ -186,7 +186,7 @@ def q_vector_analogy_topk(spark, sf_dir):
     nearest corpus vectors by ordered-fold cosine (query ids excluded).
     The target is a broadcast single row; scoring is one narrow pass +
     TakeOrdered."""
-    from prosnet_prefect_pipelines_spark.operators.similarity import dot, norm
+    from prosnet_prefect_pipelines_spark.operators.similarity import cosine
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     va = emb.filter(F.col("vec_id") == 1).select(F.col("embedding").alias("a"))
@@ -209,11 +209,7 @@ def q_vector_analogy_topk(spark, sf_dir):
         .crossJoin(F.broadcast(target))
         .select(
             "vec_id",
-            F.round(
-                dot(F.col("t"), F.col("embedding"))
-                / (norm(F.col("t")) * norm(F.col("embedding"))),
-                6,
-            ).alias("cos"),
+            cosine(F.col("t"), F.col("embedding")).alias("cos"),
         )
     )
     return scored.orderBy(F.col("cos").desc(), F.col("vec_id")).limit(3)

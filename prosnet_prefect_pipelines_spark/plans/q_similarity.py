@@ -247,11 +247,7 @@ def q_ann_kmeans_cells(spark, sf_dir):
     cents = S.kmeans_centroids(
         emb, "vec_id", "embedding", n_cells=4, iterations=2
     ).select("cid", "cv", S.norm(F.col("cv")).alias("ncv"))
-    vecs = emb.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        S.norm(F.col("embedding")).alias("nv"),
-    )
+    vecs = S.vector_rows(emb, "vec_id", "embedding")
     return S.assign_cells(vecs, S.centroid_array(cents)).select(
         "id", "cell", "ccos"
     )

@@ -138,14 +138,12 @@ def ann_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     alone, so 'rebuild' here is just the first full replay and
     'serving' is a resumed run paying exactly one new micro-batch of
     probe + cell join + top-k."""
-    from pyspark.sql.window import Window
-
-    from prosnet_prefect_pipelines_spark.operators import similarity as S
     from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import (
         _K,
-        _NPROBE,
         _ivf_index,
         _vectors,
+        ann_candidates,
+        topk_sink,
     )
 
     db, carr, _n_db = _ivf_index(spark, sf_dir)
@@ -154,38 +152,13 @@ def ann_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
 
     def query(src, out_dir):
-        cands = (
-            S.assign_cells(
-                _vectors(src.repartition(spark.sparkContext.defaultParallelism)),
-                carr,
-                k=_NPROBE,
-            )
-            .select("id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell")
-            .join(db, on="cell")
-            .select(
-                "id", "neighbor",
-                F.round(
-                    S.dot(F.col("qv"), F.col("v"))
-                    / (F.col("qn") * F.col("nv")),
-                    6,
-                ).alias("cos"),
-            )
+        width = spark.sparkContext.defaultParallelism
+        return (
+            ann_candidates(_vectors(src.repartition(width)), carr, db),
+            topk_sink(out_dir, "id", "cos", "neighbor", _K, n_out=4),
         )
-
-        def _sink(bdf, _bid):
-            (
-                bdf.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= _K)
-                .select("id", "neighbor", "cos")
-                .coalesce(4)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-
-        return cands, _sink
 
     rebuild_s, serving_s, n_inc, n_out = _serving_protocol(
         spark, "ann", odd, "vec_id", _odd_slices("vec_id"), query,
@@ -230,14 +203,14 @@ def ivfpq_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
     restart story as the raw-vector ANN probe, but candidates are
     n_sub-byte CODES scored by integer-exact ADC — the steady-state
     number a quantized vector server pays per arriving batch."""
-    from pyspark.sql.window import Window
-
-    from prosnet_prefect_pipelines_spark.operators import similarity as S
-    from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import _vectors
+    from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import (
+        _vectors,
+        topk_sink,
+    )
     from prosnet_prefect_pipelines_spark.plans.q_pipeline118 import (
         _K,
-        _PQ_SUB,
         _pq_serving_index,
+        ivfpq_candidates,
     )
 
     xcodes, carr, cbarr, _n_index = _pq_serving_index(spark, sf_dir)
@@ -246,39 +219,15 @@ def ivfpq_serving_probe(spark, sf_dir: str, timeout_s: int = 300) -> dict:
         .filter(F.col("vec_id") % 2 == 1)
         .select("vec_id", "embedding")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("adc_cos").desc(), F.col("xid"))
 
     def query(src, out_dir):
-        cands = (
-            S.assign_cells(
-                _vectors(
-                    src.repartition(spark.sparkContext.defaultParallelism),
-                    "qid",
-                ),
-                carr,
-            )
-            .crossJoin(F.broadcast(cbarr))
-            .select(
-                "qid", F.col("nv").alias("qn"), "cell",
-                S.pq_query_lut(
-                    F.col("v"), F.col("_cbarr"), 64, _PQ_SUB
-                ).alias("_qlut"),
-            )
-            .join(F.broadcast(xcodes), on="cell")
-            .select("qid", "xid", S.adc_cos_lut(_PQ_SUB).alias("adc_cos"))
+        width = spark.sparkContext.defaultParallelism
+        return (
+            ivfpq_candidates(
+                _vectors(src.repartition(width), "qid"), carr, cbarr, xcodes
+            ),
+            topk_sink(out_dir, "qid", "adc_cos", "xid", _K, n_out=4),
         )
-
-        def _sink(bdf, _bid):
-            (
-                bdf.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= _K)
-                .select("qid", "xid", "adc_cos")
-                .coalesce(4)
-                .write.mode("append")
-                .parquet(out_dir)
-            )
-
-        return cands, _sink
 
     rebuild_s, serving_s, n_inc, n_out = _serving_protocol(
         spark, "ivfpq", odd, "vec_id", _odd_slices("vec_id"), query,

@@ -34,12 +34,15 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 from prosnet_prefect_pipelines_spark.operators import similarity as S  # noqa: E402
+from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import (  # noqa: E402
+    _NPROBE as NPROBE,
+    ann_candidates,
+)
 from prosnet_prefect_pipelines_spark.session import get_spark  # noqa: E402
 from stress_ann import vectors  # noqa: E402
 
 DIM = 64
 TARGET_CELL = 2_000  # n_cells = n_index / TARGET_CELL (SCALE.md lever)
-NPROBE = 2
 K = 5
 
 
@@ -59,9 +62,7 @@ def main() -> None:
     ).localCheckpoint(eager=True)
     db = (
         S.assign_cells(
-            idx_src.select(
-                F.col("id").alias("neighbor"), "v", S.norm(F.col("v")).alias("nv")
-            ),
+            S.vector_rows(idx_src, "id", "v", ("neighbor", "v", "nv")),
             carr,
         )
         .select("neighbor", "v", "nv", "cell")
@@ -94,23 +95,7 @@ def main() -> None:
         # ~6 s fanned at 20k queries x 40k index)
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    cands = (
-        S.assign_cells(
-            src.select("id", "v", S.norm(F.col("v")).alias("nv")), carr, k=NPROBE
-        )
-        .select("id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell")
-        .join(db, on="cell")
-        .select(
-            "id",
-            "neighbor",
-            F.round(
-                S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv")), 6
-            ).alias("cos"),
-        )
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
+    cands = ann_candidates(S.vector_rows(src, "id", "v"), carr, db)
     est_cands = (n_queries / k_batches) * NPROBE * target_cell
     print(f"estimated candidate volume per batch: {est_cands:,.0f}", flush=True)
 
@@ -125,10 +110,8 @@ def main() -> None:
                     yield pdf.groupby("id", sort=False).head(K)
 
             bdf = bdf.mapInPandas(_prune, bdf.schema)
-        return (
-            bdf.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= K)
-            .select("id", "neighbor", "cos")
+        return S.top_k(bdf, "id", "cos", "neighbor", K).select(
+            "id", "neighbor", "cos"
         )
 
     def _replay(sink_mode: str) -> None:

@@ -56,9 +56,7 @@ def main() -> None:
     vecs = vectors(spark, n_vecs, DIM).select(
         "id", F.col("v").alias("embedding")
     )
-    probe_vecs = vecs.select(
-        "id", F.col("embedding").alias("v"), S.norm(F.col("embedding")).alias("nv")
-    )
+    probe_vecs = S.vector_rows(vecs, "id", "embedding")
     probe_rows = {}
     for n_cells in (1024, 4096):
         ck = S.seed_centroids(vecs, "id", "embedding", n_cells).localCheckpoint(
@@ -118,9 +116,7 @@ def main() -> None:
     carr = S.centroid_array(cents2)
     probed = (
         S.assign_cells(
-            queries.select(
-                "qid", F.col("qv").alias("v"), S.norm(F.col("qv")).alias("nv")
-            ),
+            S.vector_rows(queries, "qid", "qv", ("qid", "v", "nv")),
             carr,
         )
         .select("qid", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell")
@@ -143,9 +139,8 @@ def main() -> None:
         lambda: probed.join(raw_db, on="cell").select(
             "qid",
             "neighbor",
-            F.round(
-                S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv")),
-                6,
+            S.cosine(
+                F.col("qv"), F.col("v"), na=F.col("qn"), nb=F.col("nv")
             ).alias("cos"),
         ).where(F.col("cos").isNotNull()),
     )

@@ -25,7 +25,6 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.operators import similarity as S
 from prosnet_prefect_pipelines_spark.operators.ranking import pagerank
@@ -64,11 +63,7 @@ def test_zero_norm_probe_matches_ivf_assign(spark, degenerate_vecs):
     carr = S.centroid_array(
         S.seed_centroids(degenerate_vecs, "vec_id", "embedding", n_cells)
     )
-    vecs = degenerate_vecs.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("v"),
-        S.norm(F.col("embedding")).alias("nv"),
-    )
+    vecs = S.vector_rows(degenerate_vecs, "vec_id", "embedding")
     got_arr = {
         (r.id, r.cell_rank): r.cell
         for r in S.assign_cells(vecs, carr, k=nprobe).collect()

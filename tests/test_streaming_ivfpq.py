@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from prosnet_prefect_pipelines_spark.operators import similarity as S
 from prosnet_prefect_pipelines_spark.plans import q_pipeline118 as P
+from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import topk_sink
 
 
 def _publish_file(df, stage: str, name: str) -> None:
@@ -163,26 +164,10 @@ def test_ivfpq_monitor_resumes_exactly_once(spark, tmp_path):
     xcodes = xcodes.localCheckpoint(eager=True)
     cbarr = S.pq_codebook_array(_cbs).localCheckpoint(eager=True)
     carr = S.centroid_array(S.seed_centroids(index_src, "vec_id", "embedding", 4))
-    w = Window.partitionBy("qid").orderBy(F.col("adc_cos").desc(), F.col("xid"))
 
-    def _cands(src):
-        vecs = src.select(
-            F.col("vec_id").alias("qid"),
-            F.col("embedding").alias("v"),
-            S.norm(F.col("embedding")).alias("nv"),
-        )
-        return (
-            S.assign_cells(vecs, carr)
-            .crossJoin(F.broadcast(cbarr))
-            .select(
-                "qid", F.col("nv").alias("qn"), "cell",
-                S.pq_query_lut(F.col("v"), F.col("_cbarr"), 64, 4).alias(
-                    "_qlut"
-                ),
-            )
-            .join(F.broadcast(xcodes), on="cell")
-            .select("qid", "xid", S.adc_cos_lut(4).alias("adc_cos"))
-        )
+    def _cands(df):
+        vecs = S.vector_rows(df, "vec_id", "embedding", ("qid", "v", "nv"))
+        return P.ivfpq_candidates(vecs, carr, cbarr, xcodes)
 
     def _run():
         schema = spark.read.parquet(stage).schema
@@ -192,13 +177,8 @@ def test_ivfpq_monitor_resumes_exactly_once(spark, tmp_path):
             .parquet(stage)
         )
 
-        def _sink(bdf, _bid):
-            (bdf.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= 3)
-                .select("qid", "xid", "adc_cos")
-                .coalesce(1).write.mode("append").parquet(out))
-
-        q = (_cands(src).writeStream.foreachBatch(_sink)
+        sink = topk_sink(out, "qid", "adc_cos", "xid", 3, n_out=1)
+        q = (_cands(src).writeStream.foreachBatch(sink)
              .option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())
         assert q.awaitTermination(120)
@@ -220,12 +200,7 @@ def test_ivfpq_monitor_resumes_exactly_once(spark, tmp_path):
     new = both - first
     assert new and all(i >= 21 for i, _, _ in new)
 
-    batch = (
-        _cands(_emb(range(1, 40, 2)))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 3)
-        .select("qid", "xid", "adc_cos")
-    )
+    batch = S.top_k(_cands(_emb(range(1, 40, 2))), "qid", "adc_cos", "xid", 3)
     want = {(r.qid, r.xid, r.adc_cos) for r in batch.collect()}
     assert both == want
 

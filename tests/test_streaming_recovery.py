@@ -271,9 +271,11 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
     earlier run and (b) serve newly-arrived queries against the same
     index, the union over runs equalling one batch pass over all
     queries."""
-    from pyspark.sql.window import Window
-
     from prosnet_prefect_pipelines_spark.operators import similarity as S
+    from prosnet_prefect_pipelines_spark.plans.q_pipeline115 import (
+        ann_candidates,
+        topk_sink,
+    )
 
     stage = str(tmp_path / "stage")
     ckpt = str(tmp_path / "ckpt")
@@ -294,17 +296,9 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
         .localCheckpoint(eager=True)
     )
     carr = S.centroid_array(S.seed_centroids(index_src, "vec_id", "embedding", 4))
-    w = Window.partitionBy("id").orderBy(F.col("cos").desc(), F.col("neighbor"))
 
-    def _probes(src):
-        vecs = src.select(
-            F.col("vec_id").alias("id"),
-            F.col("embedding").alias("v"),
-            S.norm(F.col("embedding")).alias("nv"),
-        )
-        return S.assign_cells(vecs, carr, k=2).select(
-            "id", F.col("v").alias("qv"), F.col("nv").alias("qn"), "cell"
-        )
+    def _cands(df):
+        return ann_candidates(S.vector_rows(df, "vec_id", "embedding"), carr, db)
 
     def _run():
         schema = spark.read.parquet(stage).schema
@@ -313,25 +307,8 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(stage)
         )
-        cands = (
-            _probes(src)
-            .join(db, on="cell")
-            .select(
-                "id", "neighbor",
-                F.round(
-                    S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv")),
-                    6,
-                ).alias("cos"),
-            )
-        )
-
-        def _sink(bdf, _bid):
-            (bdf.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= 3)
-                .select("id", "neighbor", "cos")
-                .coalesce(1).write.mode("append").parquet(out))
-
-        q = (cands.writeStream.foreachBatch(_sink)
+        sink = topk_sink(out, "id", "cos", "neighbor", 3, n_out=1)
+        q = (_cands(src).writeStream.foreachBatch(sink)
              .option("checkpointLocation", ckpt)
              .outputMode("append").trigger(availableNow=True).start())
         assert q.awaitTermination(120)
@@ -353,18 +330,6 @@ def test_ann_monitor_resumes_exactly_once(spark, tmp_path):
     new = both - first
     assert new and all(i >= 21 for i, _, _ in new)
     # union over runs == one batch pass over ALL queries vs the index
-    batch = (
-        _probes(_emb(range(1, 40, 2)))
-        .join(db, on="cell")
-        .select(
-            "id", "neighbor",
-            F.round(
-                S.dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nv")), 6
-            ).alias("cos"),
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= 3)
-        .select("id", "neighbor", "cos")
-    )
+    batch = S.top_k(_cands(_emb(range(1, 40, 2))), "id", "cos", "neighbor", 3)
     want = {(r.id, r.neighbor, r.cos) for r in batch.collect()}
     assert both == want
