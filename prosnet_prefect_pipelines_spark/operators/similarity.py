@@ -1090,15 +1090,16 @@ def knn_join(
     Scale shape (small query batch x 100 TB corpus): the query set is
     BROADCAST, so the corpus is never shuffled for pair generation — one
     narrow JVM pass scores corpus partitions in place. Top-k is
-    two-phase: an Arrow-batched ``mapInPandas`` prune keeps k candidates
-    per query per batch LOCALLY (a window partitioned by (query,
-    partition-id) would itself exchange the full score matrix), so the
-    only network shuffle carries <= k * n_batches rows per query instead
-    of |corpus| x |queries|; a final per-query window merges partials.
-    Both phases rank by (cos desc, neighbor) — a batch-local top-k is a
-    superset of the global top-k under any batching, so the result is
-    exact and deterministic. For large query sets, switch to
-    ``ivf_topk``-style cell routing on both sides.
+    two-phase inside :func:`top_k`: its ``row_number`` filter plans a
+    partial ``WindowGroupLimit`` that keeps k candidates per query per
+    corpus partition LOCALLY, ahead of the window's exchange, so the only
+    network shuffle carries <= k * n_partitions rows per query instead
+    of |corpus| x |queries|; the final per-query window merges partials.
+    Both phases rank by (cos desc, neighbor) — a partition-local top-k is
+    a superset of the global top-k, so the result is exact and
+    deterministic, and a NaN score ranks first as in every other
+    ranking. For large query sets, switch to ``ivf_topk``-style cell
+    routing on both sides.
     """
     # norms hoisted out of the pair stage: one fold per QUERY and one
     # per CORPUS row — 3x less per-pair arithmetic in the only quadratic
@@ -1112,16 +1113,7 @@ def knn_join(
             F.col("qv"), F.col("cv"), dim, na=F.col("qn"), nb=F.col("cn")
         ).alias("cos"),
     )
-
-    def _prune(batches):
-        for pdf in batches:
-            pdf = pdf.sort_values(
-                ["qid", "cos", "neighbor"], ascending=[True, False, True]
-            )
-            yield pdf.groupby("qid", sort=False).head(k)
-
-    partial = scored.mapInPandas(_prune, scored.schema)
-    return top_k(partial, "qid", "cos", "neighbor", k).select(
+    return top_k(scored, "qid", "cos", "neighbor", k).select(
         F.col("qid").alias("query_id"), "neighbor", "cos"
     )
 

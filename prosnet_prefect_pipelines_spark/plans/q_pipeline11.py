@@ -306,8 +306,8 @@ SELECT query_id, neighbor, cos FROM ranked WHERE rn <= 5
 def q_knn_join_batch(spark, sf_dir):
     """Exact batch KNN join: a small query set (every 101st vector)
     against the rest of the corpus. Queries broadcast, corpus scored in
-    place (never shuffled for pair generation), Arrow-batched local
-    top-k prune before the only wide exchange — see
+    place (never shuffled for pair generation), a partial per-partition
+    top-k in the JVM before the only wide exchange — see
     ``similarity.knn_join`` for the 100 TB analysis.
 
     dim deliberately NOT passed (HOF fold): r3 benched this with

@@ -204,9 +204,10 @@ def q_stream_neardup_monitor(spark, sf_dir):
     # coalesce inside Structured Streaming, so the witness state and
     # every per-batch shuffle were pinned at the session default (cores)
     # regardless of micro-batch size. Derive the count from the staged
-    # corpus instead (~4 band rows per doc, single-batch symlink stage);
-    # at bench scale this lands near the floor, at cluster scale the row
-    # estimate drives it back to full width.
+    # corpus instead (~4 band rows per doc, single-batch symlink stage):
+    # at sf0.01 (~2k band rows) the witness runs on ONE state partition,
+    # 4 state stores a batch; at cluster scale the row estimate drives
+    # it back to full width.
     # memoized estimate (opt r12): no corpus count job per plan build
     est_rows = staged_row_count(spark, f"{sf_dir}/documents.parquet") * 4
     run_available_now(

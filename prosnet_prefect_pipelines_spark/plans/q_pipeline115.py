@@ -250,10 +250,11 @@ def q_stream_ann_topk_monitor(spark, sf_dir):
     # opt r11 (guide §2): derive the replay width from the measured
     # candidate volume instead of pinning it at the core count — the
     # monitor is stateless and compute-bound, so candidates-per-task is
-    # the right unit; at bench scale (~62k cands/batch) the fixed 32-way
-    # fan-out plus the 32-partition window exchange was ~200 near-empty
-    # tasks per replay, at cluster volumes the estimate restores full
-    # width (cap 4x parallelism)
+    # the right unit. The fixed 32-way fan-out plus the 32-partition
+    # window exchange it replaced was ~200 near-empty tasks per replay;
+    # at sf0.01 (~3.9k cands/batch against the 250k-per-task target) the
+    # fan-out and the window both run on one partition, at cluster
+    # volumes the estimate restores full width (cap 4x parallelism)
     fan = candidate_fanout(spark, est_cands)
     # the centroid table rides along as ONE broadcast array row
     # (stream-static, append-legal); plan cost independent of n_cells.

@@ -292,7 +292,8 @@ def q_stream_ann_ivfpq_monitor(spark, sf_dir):
     # (qpb x nprobe=1 x mean cell occupancy), not the core count — the
     # ADC scorer is even cheaper per candidate than the raw-cosine
     # monitor's, so fixed 32-wide fan-out was pure task overhead at
-    # bench volumes; cap 4x parallelism restores cluster width
+    # bench volumes, where the estimate now gives one partition; cap 4x
+    # parallelism restores cluster width
     n_stage_files = max(
         1, len([f for f in os.listdir(stage) if f.endswith(".parquet")])
     )

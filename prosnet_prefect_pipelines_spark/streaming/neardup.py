@@ -308,10 +308,19 @@ def _bucket_pairs_impl(
 def _join_candidates(stream_bands: DataFrame, emit_bands: bool) -> DataFrame:
     """Exact witness: stream-stream self inner join on (band, bucket),
     a < b. With emit_bands the batch's band rows follow as
-    (a=id, b=NULL, bkey="band|bucket"); pair rows carry bkey NULL."""
+    (a=id, b=NULL, bkey="band|bucket"); pair rows carry bkey NULL.
+
+    ``stream_bands`` is hash-repartitioned by (band, bucket) once, with
+    no explicit count, so the exchange takes the replay's pinned
+    ``spark.sql.shuffle.partitions`` — exactly the distribution the
+    join's state partitions require. Both join sides and the emit_bands
+    branch then read ONE exchange (the others plan as
+    ``ReusedExchange``), so each micro-batch is shingled and
+    min-hashed once, not once per branch."""
+    bands = stream_bands.repartition("band", "bucket")
     pairs = (
-        stream_bands.select(F.col("id").alias("a"), "band", "bucket")
-        .join(stream_bands.select(F.col("id").alias("b"), "band", "bucket"),
+        bands.select(F.col("id").alias("a"), "band", "bucket")
+        .join(bands.select(F.col("id").alias("b"), "band", "bucket"),
               on=["band", "bucket"])
         .where(F.col("a") < F.col("b"))
         .select("a", "b")
@@ -319,7 +328,7 @@ def _join_candidates(stream_bands: DataFrame, emit_bands: bool) -> DataFrame:
     if not emit_bands:
         return pairs
     return pairs.withColumn("bkey", F.lit(None).cast("string")).unionByName(
-        stream_bands.select(
+        bands.select(
             F.col("id").alias("a"),
             F.lit(None).cast("long").alias("b"),
             F.concat_ws("|", F.col("band").cast("string"), F.col("bucket")).alias(

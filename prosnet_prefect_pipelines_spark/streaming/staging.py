@@ -23,6 +23,14 @@ safety questions this module answers centrally:
 Publication is atomic (build into a private temp dir, ``os.rename`` into
 place) so concurrent processes never observe a half-written stage; the
 loser of a publish race discards its build and uses the winner's.
+
+Content keying leaves a superseded stage unreachable: once its source is
+regenerated or deleted, no lookup builds its key again. Each published
+stage therefore records its source and that source's fingerprint in a
+``_source`` marker (Spark skips ``_``-prefixed files), and every
+:func:`replay_stage` / :func:`symlink_stage` call first removes the
+stages whose source is gone or no longer matches. Stages without a
+marker are left alone.
 """
 
 from __future__ import annotations
@@ -30,6 +38,7 @@ from __future__ import annotations
 import atexit
 import getpass
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -97,6 +106,41 @@ def scratch_root(spark) -> str:
     return root
 
 
+_MARKER = "_source"
+
+
+def _mark(stage: str, source_path: str, fingerprint: str) -> None:
+    """Record the stage's source and its fingerprint in the ``_source``
+    marker (written to a temp name and renamed, so a concurrent sweep
+    never reads half of it)."""
+    tmp = os.path.join(stage, f"{_MARKER}.{os.getpid()}")
+    with open(tmp, "w") as fh:
+        json.dump({"source": os.path.abspath(source_path),
+                   "fingerprint": fingerprint}, fh)
+    os.replace(tmp, os.path.join(stage, _MARKER))
+
+
+def _sweep_stale_stages(root: str) -> None:
+    """Remove every marked stage under ``root`` whose source no longer
+    exists or no longer has the fingerprint the stage was keyed on."""
+    current: dict[str, str | None] = {}
+    for entry in os.listdir(root):
+        stage = os.path.join(root, entry)
+        try:
+            with open(os.path.join(stage, _MARKER)) as fh:
+                mark = json.load(fh)
+        except (OSError, ValueError):
+            continue  # not a stage, or one that predates the marker
+        src = mark["source"]
+        if src not in current:
+            try:
+                current[src] = source_fingerprint(src)
+            except FileNotFoundError:
+                current[src] = None
+        if current[src] != mark["fingerprint"]:
+            shutil.rmtree(stage, ignore_errors=True)
+
+
 def symlink_stage(source_path: str, name: str) -> str:
     """A one-entry replay stage that just symlinks the source parquet —
     for monitors that replay the source as a single micro-batch. Same
@@ -104,8 +148,12 @@ def symlink_stage(source_path: str, name: str) -> str:
     regenerated source gets a fresh stage dir, so a reused streaming
     checkpoint never silently replays offsets against different data)."""
     root = _private_stage_root()
-    stage = os.path.join(root, f"{name}_{source_fingerprint(source_path)}")
+    _sweep_stale_stages(root)
+    fp = source_fingerprint(source_path)
+    stage = os.path.join(root, f"{name}_{fp}")
     os.makedirs(stage, exist_ok=True)
+    if not os.path.isfile(os.path.join(stage, _MARKER)):
+        _mark(stage, source_path, fp)
     link = os.path.join(stage, os.path.basename(source_path))
     if not os.path.exists(link):
         try:
@@ -133,15 +181,16 @@ def replay_stage(
     to bump ``logic_version`` (or the stage ``name``).
     """
     root = _private_stage_root()
+    _sweep_stale_stages(root)
     deriv = hashlib.sha256(
         (df.schema.simpleString() + "|" + logic_version).encode()
     ).hexdigest()[:8]
-    stage = os.path.join(
-        root, f"{name}_{source_fingerprint(source_path)}_{deriv}"
-    )
+    fp = source_fingerprint(source_path)
+    stage = os.path.join(root, f"{name}_{fp}_{deriv}")
     if not os.path.isdir(stage):
         tmp = tempfile.mkdtemp(prefix=f"{name}_build_", dir=root)
         df.repartition(n_files).write.mode("overwrite").parquet(tmp)
+        _mark(tmp, source_path, fp)
         try:
             os.rename(tmp, stage)
         except OSError:

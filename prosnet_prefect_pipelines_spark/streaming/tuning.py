@@ -20,17 +20,22 @@ cluster).
 
 :func:`stream_shuffle_partitions` (state rows per batch) and
 :func:`candidate_fanout` (ANN candidates per batch) derive the count
-from the *measured* staged input, clamped to a floor that keeps
-multi-core parallelism and a ceiling that scales with the cluster (4x
-default parallelism, or ``SPARK_GRAFT_STREAM_MAX_PARTITIONS`` — the
-cluster-width deployment setting). At bench scale (~1-2k rows/batch)
-this lands at the floor; at 100 TB the per-batch estimate pushes it to
-the ceiling, so a cluster run keeps full-width state partitioning.
+from the *measured* staged input: ``ceil(units / per_partition)``, at
+least 1, under a ceiling that scales with the cluster (4x default
+parallelism, or ``SPARK_GRAFT_STREAM_MAX_PARTITIONS`` — the
+cluster-width deployment setting). There is no core-count floor: a
+partition that holds no rows still opens and commits its state stores
+every batch, so the width follows the estimate down to one partition.
+At bench scale (~2k rows/batch) a replay runs on one partition; at
+100 TB the per-batch estimate pushes it to the ceiling, so a cluster
+run keeps full-width state partitioning.
 
-Measured (r11 opt round, sf0.1 preference monitor, local[32], warm):
-32 state partitions 5.58-5.67 s -> 8 partitions 3.85-4.05 s per replay;
-results bit-identical (hash partitioning of groups only moves rows
-between tasks, never between groups).
+Measured (4-core VM, sf0.01 ``stream_monitor`` perfbench pass, seed 1):
+the near-dup witness at 8 state partitions committed 32 state stores a
+batch for 2.9 s of ``state_commit_ms`` over the pass; at 1 partition,
+4 stores and 0.4 s. Results are identical at any width (hash
+partitioning of groups only moves rows between tasks, never between
+groups).
 """
 
 from __future__ import annotations
@@ -41,7 +46,6 @@ import uuid
 
 from prosnet_prefect_pipelines_spark.session import memo_fixture
 
-_MIN_PARTITIONS = 8
 _ROWS_PER_PARTITION = 2000
 # 250k dim-64 cosines per task keeps tasks ~0.25-1 s at the measured
 # ~1M cands/s/task rate (scripts/stress_ann_serving.py: 200M
@@ -67,7 +71,7 @@ def staged_row_count(spark, path: str) -> int:
 
 def _clamped_partitions(spark, units: float, per_partition: int) -> int:
     """ceil(units / per_partition), clamped to
-    [8, max(4 x defaultParallelism, session default)] — the ceiling
+    [1, max(4 x defaultParallelism, session default)] — the ceiling
     overridable by ``SPARK_GRAFT_STREAM_MAX_PARTITIONS``."""
     default = int(spark.conf.get("spark.sql.shuffle.partitions"))
     cap = int(
@@ -76,7 +80,7 @@ def _clamped_partitions(spark, units: float, per_partition: int) -> int:
             str(max(4 * spark.sparkContext.defaultParallelism, default)),
         )
     )
-    return max(_MIN_PARTITIONS, min(cap, math.ceil(units / per_partition)))
+    return max(1, min(cap, math.ceil(units / per_partition)))
 
 
 def stream_shuffle_partitions(spark, est_rows: int, n_batches: int = 4) -> int:
@@ -98,15 +102,17 @@ def candidate_fanout(spark, est_cands_per_batch: float) -> int:
 
 def _batch_record(p) -> dict:
     """One micro-batch of a StreamingQueryProgress: input rows, the
-    durationMs phases and each state operator's rows, memory and commit
-    time."""
+    durationMs phases and each state operator's rows, memory, commit
+    time and width (shuffle partitions, state store instances)."""
     return {
         "batchId": p["batchId"],
         "numInputRows": p["numInputRows"],
         "durationMs": dict(p["durationMs"]),
         "stateOperators": [
             {k: op[k] for k in ("operatorName", "numRowsTotal",
-                                "memoryUsedBytes", "commitTimeMs")}
+                                "memoryUsedBytes", "commitTimeMs",
+                                "numShufflePartitions",
+                                "numStateStoreInstances")}
             for op in p["stateOperators"]
         ],
     }
@@ -117,7 +123,8 @@ def replay_progress(name: str) -> list[dict]:
     replay named ``name`` (``[]`` if none finished): ``batchId``,
     ``numInputRows``, ``durationMs`` (addBatch, queryPlanning, walCommit,
     commitOffsets, ...) and ``stateOperators`` (``operatorName``,
-    ``numRowsTotal``, ``memoryUsedBytes``, ``commitTimeMs``). Spark keeps
+    ``numRowsTotal``, ``memoryUsedBytes``, ``commitTimeMs``,
+    ``numShufflePartitions``, ``numStateStoreInstances``). Spark keeps
     the last ``spark.sql.streaming.numRecentProgressUpdates`` (100)
     batches of a query."""
     return _PROGRESS.get(name, [])

@@ -50,6 +50,31 @@ def test_nonfinite_centroid_batch_and_stream_agree(spark):
     assert batch == {0: 0, 1: 0, 2: 0, 3: 0}
 
 
+def test_knn_join_ranks_nan_first_like_cosine_topk(spark):
+    """A vector with an infinite component scores NaN against every
+    vector (itself too). ``knn_join`` ranks that NaN first, as
+    ``cosine_topk`` and the oracles do: with its self pairs dropped,
+    ``knn_join(k=3)`` is ``cosine_topk(k=2)`` (each finite query's own
+    1.0 outranks every other finite neighbor here)."""
+    inf = float("inf")
+    df = spark.createDataFrame(
+        [(0, [inf, 1.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.6, 0.8])],
+        "id long, v array<double>",
+    )
+
+    def rows(frame):
+        # NaN != NaN: compare scores by their repr
+        return sorted((r[0], r[1], repr(r[2])) for r in frame.collect())
+
+    knn = S.knn_join(df, df, "id", "v", "id", "v", k=3)
+    assert rows(knn.filter("query_id != neighbor")) == rows(
+        S.cosine_topk(df, "id", "v", k=2)
+    )
+    got = rows(knn)
+    # every query lists the inf vector, scored NaN
+    assert {q for q, n, c in got if n == 0 and c == "nan"} == {0, 1, 2, 3}
+
+
 @pytest.fixture(scope="module")
 def planar(spark):
     """8 non-degenerate 4-d float vectors (two subspaces of 2)."""
@@ -175,7 +200,6 @@ def _sorted(rows) -> list:
 
 _TOPK_CASES = {
     "cosine_topk": (lambda df: S.cosine_topk(df, "id", "v", k=3), "x.id <> y.id", {}),
-    # the knn merge follows a mapInPandas prune that must keep NULLs last too
     "knn_join": (lambda df: S.knn_join(df, df, "id", "v", "id", "v", k=3), "true", {}),
     "ivf_topk": (
         lambda df: S.ivf_topk(df, "id", "v", k=3, n_cells=2),

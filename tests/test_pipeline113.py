@@ -11,7 +11,11 @@ from prosnet_prefect_pipelines_spark.plans.q_pipeline113 import (
     q_neardup_index_merge,
 )
 from prosnet_prefect_pipelines_spark.plans.q_dedup import corpus
-from prosnet_prefect_pipelines_spark.streaming.tuning import replay_progress
+from prosnet_prefect_pipelines_spark.streaming.tuning import (
+    replay_progress,
+    staged_row_count,
+    stream_shuffle_partitions,
+)
 
 _PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                  "FlatMapGroupsInPandas", "PythonUDF")
@@ -43,11 +47,8 @@ def test_skew_report_order_statistics_sane(spark, sf_dir):
             assert r.members_over_cap > 32 * r.n_over_cap - 32
 
 
-def test_neardup_monitor_runs_in_the_jvm(spark, sf_dir, monkeypatch):
-    """stream_neardup_monitor starts no Python worker: the replay's last
-    executed plan witnesses with a stream-stream join, not
-    FlatMapGroupsInPandasWithState, and the returned verification plan
-    shingles without a pandas UDF."""
+def _monitor_replay(spark, sf_dir, monkeypatch):
+    """(the finished replay query, the monitor's result frame)."""
     run, replays = P113.run_available_now, []
 
     def spy(df, **kw):
@@ -56,8 +57,32 @@ def test_neardup_monitor_runs_in_the_jvm(spark, sf_dir, monkeypatch):
 
     monkeypatch.setattr(P113, "run_available_now", spy)
     df = P113.q_stream_neardup_monitor(spark, sf_dir)
-
     (q,) = replays
+    return q, df
+
+
+def test_neardup_replay_is_sized_to_its_batch(spark, sf_dir, monkeypatch):
+    """The witness runs at the width its own estimate asks for (no
+    core-count floor), and each micro-batch is shingled and min-hashed
+    once: both join sides and the emitted band rows read one
+    (band, bucket) exchange."""
+    q, _ = _monitor_replay(spark, sf_dir, monkeypatch)
+    est_rows = staged_row_count(spark, f"{sf_dir}/documents.parquet") * 4
+    width = stream_shuffle_partitions(spark, est_rows, n_batches=1)
+    ops = [op for b in replay_progress("stream_neardup_monitor")
+           for op in b["stateOperators"]]
+    assert ops and {op["numShufflePartitions"] for op in ops} == {width}
+    phys = q._jsq.explainInternal(True).split("== Physical Plan ==")[-1]
+    assert phys.count("Generate posexplode") == 1
+    assert "ReusedExchange" in phys
+
+
+def test_neardup_monitor_runs_in_the_jvm(spark, sf_dir, monkeypatch):
+    """stream_neardup_monitor starts no Python worker: the replay's last
+    executed plan witnesses with a stream-stream join, not
+    FlatMapGroupsInPandasWithState, and the returned verification plan
+    shingles without a pandas UDF."""
+    q, df = _monitor_replay(spark, sf_dir, monkeypatch)
     replay_plan = q._jsq.explainInternal(False)
     assert "StreamingSymmetricHashJoin" in replay_plan
     assert "FlatMapGroupsInPandasWithState" not in replay_plan

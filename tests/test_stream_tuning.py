@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from prosnet_prefect_pipelines_spark.streaming.tuning import (
+    candidate_fanout,
     replay_progress,
     run_available_now,
     stream_shuffle_partitions,
@@ -24,12 +25,22 @@ PKG = os.path.join(
 )
 
 
-def test_small_replay_hits_floor(spark):
-    # bench-scale: ~1-2k rows/batch -> the 8-partition floor
-    assert stream_shuffle_partitions(spark, 5000, 4) == 8
+def test_width_follows_the_estimate(spark, monkeypatch):
+    # no core-count floor: an empty partition still commits its state
+    # stores every batch, so a bench-scale replay (~1.25k rows/batch)
+    # runs on one partition; the cap is pinned above 20 so the
+    # proportional branch runs on any core count
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_PARTITIONS", "64")
+    assert stream_shuffle_partitions(spark, 5000, 4) == 1
+    assert stream_shuffle_partitions(spark, 160_000, 4) == 20
+    assert stream_shuffle_partitions(spark, 0, 4) == 1
+    # ANN fan-out: candidates per batch over a 250k-per-task target
+    assert candidate_fanout(spark, 3_900) == 1
+    assert candidate_fanout(spark, 2_500_001) == 11
+    assert candidate_fanout(spark, 0) == 1
 
 
-def test_large_replay_scales_up_to_cap(spark, monkeypatch):
+def test_large_replay_scales_up_to_cap(spark):
     # 100 TB regime: per-batch rows push the count to the cluster cap
     # (4 x defaultParallelism by default), never below the session value
     cap = max(
@@ -37,10 +48,7 @@ def test_large_replay_scales_up_to_cap(spark, monkeypatch):
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     )
     assert stream_shuffle_partitions(spark, 10_000_000_000, 4) == cap
-    # mid-scale: proportional to rows/batch / target(2000); the cap is
-    # pinned above 20 so the proportional branch runs on any core count
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_MAX_PARTITIONS", "64")
-    assert stream_shuffle_partitions(spark, 160_000, 4) == 20
+    assert candidate_fanout(spark, 1e15) == cap
 
 
 @pytest.fixture()
@@ -108,8 +116,12 @@ def test_finished_replay_keeps_its_progress(spark, tmp_path):
         )
         (op,) = b["stateOperators"]
         assert set(op) == {"operatorName", "numRowsTotal", "memoryUsedBytes",
-                           "commitTimeMs"}
+                           "commitTimeMs", "numShufflePartitions",
+                           "numStateStoreInstances"}
         assert op["memoryUsedBytes"] > 0 and op["commitTimeMs"] >= 0
+        # unpinned: the session width, one store per state partition
+        width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert op["numShufflePartitions"] == op["numStateStoreInstances"] == width
     assert rec[-1]["stateOperators"][0]["numRowsTotal"] == 20
 
 
